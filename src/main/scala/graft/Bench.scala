@@ -192,8 +192,7 @@ object Bench {
     // codec JIT are one-time JVM-global costs; exercise the PNG and GIF
     // paths once, untimed, so m01/m04's first timed run measures the query.
     // (Touching Multimodal also flips ImageIO.setUseCache(false) — the
-    // named, probe-attributed cause of the r12 m01 breach; see
-    // operators/Multimodal.scala and tools/M01Probe.scala.)
+    // measured cause of the r12 m01 breach; see operators/Multimodal.scala.)
     locally {
       import graft.operators.Multimodal
       val png = Multimodal.encodeGrayPng(8, 8, (x, y) => (x * 7 + y * 13) % 256)

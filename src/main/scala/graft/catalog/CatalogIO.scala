@@ -4,6 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.catalog.LayoutCodec.MEntry
+
 /** Data-plane glue between catalogs and Spark.
   *
   * A table's metadata file is a small JSON document recording where the
@@ -538,368 +540,6 @@ object CatalogIO {
     }
   }
 
-  private val NumBucketsRe = """"numBuckets"\s*:\s*(\d+)""".r
-
-  // Metadata fields are parsed with an ITERATIVE scanner, not regexes:
-  // Java regex evaluates repetition groups recursively, and a file
-  // manifest with a few thousand entries overflows the stack. The
-  // scanner walks characters once, honoring string escapes, so a path
-  // containing `"` `\` or `]` round-trips and manifest size is bounded
-  // only by memory.
-
-  /** Position just past `"field"` followed by `:` (whitespace allowed),
-    * or -1. Occurrences inside string values don't qualify (they are
-    * never followed by a bare colon at this nesting in our format). */
-  private def fieldStart(text: String, field: String): Int = {
-    val key = "\"" + field + "\""
-    var i = text.indexOf(key)
-    while (i >= 0) {
-      var j = i + key.length
-      while (j < text.length && text.charAt(j).isWhitespace) j += 1
-      if (j < text.length && text.charAt(j) == ':') return j + 1
-      i = text.indexOf(key, i + 1)
-    }
-    -1
-  }
-
-  /** One JSON string token starting at/after `from` (skips whitespace);
-    * returns (unescaped value, index past the closing quote). */
-  private def scanString(text: String, from: Int): Option[(String, Int)] = {
-    var i = from
-    while (i < text.length && text.charAt(i).isWhitespace) i += 1
-    if (i >= text.length || text.charAt(i) != '"') return None
-    val sb = new StringBuilder
-    i += 1
-    while (i < text.length) {
-      text.charAt(i) match {
-        case '\\' if i + 1 < text.length => sb += text.charAt(i); sb += text.charAt(i + 1); i += 2
-        case '"' => return Some((jsonUnescape(sb.toString), i + 1))
-        case c => sb += c; i += 1
-      }
-    }
-    None
-  }
-
-  private def stringField(text: String, field: String): Option[String] = {
-    val at = fieldStart(text, field)
-    if (at < 0) None else scanString(text, at).map(_._1)
-  }
-
-  /** `Some(values)` when `"field": [...]` is present (possibly empty),
-    * `None` when absent — presence is load-bearing for `dataFiles`. A
-    * malformed array THROWS: a truncated manifest parsed as "fewer
-    * files" would silently shrink the table (and the next append would
-    * bake the loss into every future version). */
-  private def arrayField(text: String, field: String): Option[Seq[String]] = {
-    val at = fieldStart(text, field)
-    if (at < 0) return None
-    var i = at
-    while (i < text.length && text.charAt(i).isWhitespace) i += 1
-    if (i >= text.length || text.charAt(i) != '[') return None
-    i += 1
-    val out = Vector.newBuilder[String]
-    while (true) {
-      while (i < text.length && (text.charAt(i).isWhitespace || text.charAt(i) == ',')) i += 1
-      if (i >= text.length)
-        throw new IllegalStateException(
-          s"Malformed metadata: unterminated '$field' array (truncated file?)")
-      if (text.charAt(i) == ']') return Some(out.result())
-      scanString(text, i) match {
-        case Some((v, next)) => out += v; i = next
-        case None => throw new IllegalStateException(
-          s"Malformed metadata: bad entry in '$field' array at offset $i")
-      }
-    }
-    None // unreachable
-  }
-
-  /** `"field": {"k": "v", ...}` as a string map; empty when absent.
-    * Same strictness as [[arrayField]]. */
-  private def objectField(text: String, field: String): Map[String, String] = {
-    val at = fieldStart(text, field)
-    if (at < 0) return Map.empty
-    var i = at
-    while (i < text.length && text.charAt(i).isWhitespace) i += 1
-    if (i >= text.length || text.charAt(i) != '{') return Map.empty
-    i += 1
-    val out = Map.newBuilder[String, String]
-    while (true) {
-      while (i < text.length && (text.charAt(i).isWhitespace || text.charAt(i) == ',')) i += 1
-      if (i >= text.length)
-        throw new IllegalStateException(
-          s"Malformed metadata: unterminated '$field' object (truncated file?)")
-      if (text.charAt(i) == '}') return out.result()
-      val (k, afterK) = scanString(text, i).getOrElse(throw new IllegalStateException(
-        s"Malformed metadata: bad key in '$field' object at offset $i"))
-      var j = afterK
-      while (j < text.length && text.charAt(j).isWhitespace) j += 1
-      if (j >= text.length || text.charAt(j) != ':')
-        throw new IllegalStateException(
-          s"Malformed metadata: missing ':' in '$field' object at offset $j")
-      val (v, afterV) = scanString(text, j + 1).getOrElse(throw new IllegalStateException(
-        s"Malformed metadata: bad value in '$field' object at offset $j"))
-      out += (k -> v)
-      i = afterV
-    }
-    Map.empty // unreachable
-  }
-
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def jsonUnescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => sb += '\n'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'u' if i + 6 <= s.length =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Top-level metadata field names. Property keys may not collide with
-    * them: the flat field scanner ([[fieldStart]]) is not nesting-aware,
-    * so a property literally named `dataLocation` would shadow the real
-    * field on read. Refused loudly at write time. */
-  private val ReservedFieldNames = Set(
-    "formatVersion", "location", "partitionColumns", "numBuckets",
-    "bucketColumns", "sortColumns", "schemaDdl", "dataFiles",
-    "properties", "dataLocation",
-    "deleteFiles", "deleteFileSeqs", "deleteFileKinds", "dataFileSeqs",
-    "renameFroms", "renameTos", "renameSeqs", "droppedColumns",
-    "dataFileStats", "dataFileSizes", "deleteFileTargets", "commitOp",
-    "deleteFileBlobOffsets", "deleteFileBlobLengths",
-    "dataFileNdv", "manifestChunkFiles", "manifestChunkCounts",
-    "manifestChunkSummaries", "manifestFields", "clusterTransforms",
-    "dataFormat", "dataFileFormats", "hasRelocated", "uuidColumns")
-
-  def metadataJson(tableLocation: String, dataLocation: String,
-      layout: TableLayout = TableLayout("")): String =
-    metadataJsonBody(tableLocation, dataLocation, layout, chunked = None)
-
-  /** [[metadataJson]] with an optional CHUNKED manifest encoding: when
-    * `chunked` is given, the five per-file arrays are replaced by
-    * references to immutable chunk files (`manifestChunkFiles` /
-    * `manifestChunkCounts`, paths relative to the table's `metadata/`
-    * dir) plus `manifestFields` — the tokens naming which optional
-    * per-entry arrays ([[ManifestFieldTokens]]) the chunk columns
-    * reconstruct as present. The JSON then stays O(chunks), not
-    * O(files), no matter how many commits the table accumulates. */
-  private def metadataJsonBody(tableLocation: String, dataLocation: String,
-      layout: TableLayout,
-      chunked: Option[(Seq[ManifestChunk], Seq[String])]): String = {
-    val clash = layout.properties.keySet.intersect(ReservedFieldNames)
-    require(clash.isEmpty,
-      s"property key(s) ${clash.mkString(", ")} collide with reserved " +
-        "metadata field names")
-    def arrBody(vs: Seq[String]): String =
-      s"[${vs.map("\"" + jsonEscape(_) + "\"").mkString(", ")}]"
-    def arr(name: String, vs: Seq[String]): String =
-      if (vs.isEmpty) ""
-      else s"""  "$name": ${arrBody(vs)},\n"""
-    s"""{
-       |  "formatVersion": 1,
-       |  "location": "${jsonEscape(tableLocation)}",
-       |${arr("partitionColumns", layout.partitionColumns)}${
-        layout.numBuckets.map(n => s"""  "numBuckets": $n,\n""").getOrElse("")
-      }${arr("bucketColumns", layout.bucketColumns)}${
-        arr("sortColumns", layout.sortColumns)
-      }${arr("clusterTransforms", layout.clusterTransforms)}${
-        layout.schemaDdl.map(s => s"""  "schemaDdl": "${jsonEscape(s)}",\n""").getOrElse("")
-      }${
-        // the operation that produced this version (round 11 — Iceberg's
-        // snapshot.operation): append/create/overwrite/delete/replace/
-        // metadata. Change-capture readers use it to tell row-preserving
-        // rewrites (replace) from genuine data changes; absent on
-        // pre-round-11 versions (readers then refuse, never guess).
-        layout.commitOp.map(o => s"""  "commitOp": "${jsonEscape(o)}",\n""").getOrElse("")
-      }${
-        // on-disk data format (round 16 — adopted Hive-migration
-        // tables): absent = parquet (every engine-written file); "orc"/
-        // "avro" = a homogeneous adopted layout; "mixed" = per-entry
-        // formats (inline array below, or the chunks' formats column)
-        if (layout.dataFormat == "parquet") ""
-        else s"""  "dataFormat": "${jsonEscape(layout.dataFormat)}",\n"""
-      }${
-        if (chunked.isDefined) ""
-        else layout.dataFileFormats
-          .map(fs => s"""  "dataFileFormats": ${arrBody(fs)},\n""")
-          .getOrElse("")
-      }${
-        // per-file constant fills (round 16 — adopted fill tables);
-        // absent = none. Encoded per entry by [[encodeFills]].
-        if (chunked.isDefined) ""
-        else layout.dataFileFills
-          .filter(_.exists(_.nonEmpty))
-          .map(fs => s"""  "dataFileFills": ${arrBody(fs.map(encodeFills))},\n""")
-          .getOrElse("")
-      }${
-        // ADOPTED uuid layouts (round 20): the binary-to-string
-        // conversion recorded table-level — every data file stores the
-        // 16-byte physical form (adopted files as annotated fixed[16],
-        // engine appends as unannotated BINARY; identical to the
-        // binary read schema), and scans route through the conversion
-        // seam. Compaction materializes the strings and drops this.
-        arr("uuidColumns", layout.uuidColumns)
-      }${
-        // chunked RELOCATED layout (round 19 — adopted object-storage
-        // tables past the inline threshold): the lazy chunk face plans
-        // a basePath-rooted parquet scan, which absolute out-of-root
-        // spellings would break — this flag routes such metadata to the
-        // eager path WITHOUT reading any chunk (the spellings live only
-        // in the chunk entries, invisible to readChunkIndex's JSON scan)
-        if (chunked.isDefined && layout.hasRelocated)
-          "  \"hasRelocated\": true,\n"
-        else ""
-      }${
-        // chunked manifest: references only — entries live in the chunks
-        chunked.map { case (chunks, fields) =>
-          s"""  "manifestChunkFiles": ${arrBody(chunks.map(_.relPath))},\n""" +
-            s"""  "manifestChunkCounts": ${arrBody(chunks.map(_.count.toString))},\n""" +
-            s"""  "manifestChunkSummaries": ${arrBody(chunks.map(_.summary))},\n""" +
-            s"""  "manifestFields": ${arrBody(fields)},\n"""
-        }.getOrElse("")
-      }${
-        // an EMPTY manifest is still a manifest (a committed empty
-        // snapshot) — it must round-trip distinctly from "no manifest"
-        if (chunked.isDefined) ""
-        else layout.dataFiles.map(fs => s"""  "dataFiles": ${arrBody(fs)},\n""").getOrElse("")
-      }${
-        // per-data-file manifest-entry seqs (recorded only while delete
-        // files are live — delete-free tables keep the round-7 format).
-        // Seqs are decimal strings: the metadata scanner tokenizes string
-        // arrays only, and the asymmetry is invisible to readers.
-        if (chunked.isDefined) ""
-        else layout.dataFileSeqs
-          .map(ss => s"""  "dataFileSeqs": ${arrBody(ss.map(_.toString))},\n""")
-          .getOrElse("")
-      }${
-        // per-data-file column stats (round 10 — FileStats.scala), one
-        // encoded string per manifest entry ("" = no stats, unprunable).
-        // Written whenever computed, including all-empty, so a commit
-        // never re-reads footers it has already found unusable.
-        if (chunked.isDefined) ""
-        else layout.dataFileStats
-          .map(ss => s"""  "dataFileStats": ${arrBody(ss)},\n""")
-          .getOrElse("")
-      }${
-        // per-data-file byte sizes (round 11 — Iceberg's
-        // file_size_in_bytes): metadata tables and split planning answer
-        // from the manifest with ZERO filesystem calls. -1 = unknown
-        // (pre-round-11 file whose size was never captured).
-        if (chunked.isDefined) ""
-        else layout.dataFileSizes
-          .map(ss => s"""  "dataFileSizes": ${arrBody(ss.map(_.toString))},\n""")
-          .getOrElse("")
-      }${
-        // per-data-file NDV sketches (round 11 — Ndv.scala; recorded by
-        // analyzeTable, carried forward by the commit funnel)
-        if (chunked.isDefined) ""
-        else layout.dataFileNdv
-          .map(ss => s"""  "dataFileNdv": ${arrBody(ss)},\n""")
-          .getOrElse("")
-      }${
-        // delete files + the versions they committed at — the
-        // merge-on-read state a scan must apply (eq: fileSeq < deleteSeq;
-        // pos: file-addressed). Kinds are written only when a positional
-        // delete exists — all-equality tables keep the round-8 format.
-        if (layout.deleteFiles.isEmpty) ""
-        else s"""  "deleteFiles": ${arrBody(layout.deleteFiles.map(_.path))},\n""" +
-          s"""  "deleteFileSeqs": ${arrBody(layout.deleteFiles.map(_.seq.toString))},\n""" +
-          (if (layout.deleteFiles.forall(_.kind == DeleteKinds.Equality)) ""
-           else s"""  "deleteFileKinds": ${arrBody(layout.deleteFiles.map(_.kind))},\n""") +
-          // per-delete-file addressed data files (pos deletes +
-          // partition-scoped equality deletes, round 17; ';'-joined —
-          // part-file paths never contain ';', enforced at write)
-          (if (layout.deleteFiles.forall(_.targets.isEmpty)) ""
-           else {
-             layout.deleteFiles.flatMap(_.targets).find(_.contains(";")).foreach(t =>
-               throw new IllegalArgumentException(
-                 s"positional-delete target path contains ';': $t"))
-             s"""  "deleteFileTargets": ${arrBody(
-               layout.deleteFiles.map(_.targets.mkString(";")))},\n"""
-           }) +
-          // deletion-vector blob spans (adopted Iceberg v3 tables):
-          // per-delete-file offset/length into the Puffin file, empty
-          // for non-vector kinds
-          (if (layout.deleteFiles.forall(_.kind != DeleteKinds.Vector)) ""
-           else s"""  "deleteFileBlobOffsets": ${arrBody(
-               layout.deleteFiles.map(_.blobOffset.fold("")(_.toString)))},\n""" +
-             s"""  "deleteFileBlobLengths": ${arrBody(
-               layout.deleteFiles.map(_.blobLength.fold("")(_.toString)))},\n""")
-      }${
-        // column renames as three parallel arrays (seq, from, to) — the
-        // name mapping every reader resolves per-file seqs against
-        if (layout.renameOps.isEmpty) ""
-        else s"""  "renameFroms": ${arrBody(layout.renameOps.map(_.from))},\n""" +
-          s"""  "renameTos": ${arrBody(layout.renameOps.map(_.to))},\n""" +
-          s"""  "renameSeqs": ${arrBody(layout.renameOps.map(_.seq.toString))},\n"""
-      }${
-        // tombstones of dropped columns (and their physical ancestors):
-        // re-ADDing one would resurrect stale bytes from pre-drop files,
-        // so ADD COLUMN refuses these until compaction clears them
-        arr("droppedColumns", layout.droppedColumns)
-      }${
-        // commit-scoped properties (e.g. a streaming writer's replay
-        // fence) — atomic with the version because they ARE the version
-        if (layout.properties.isEmpty) ""
-        else layout.properties.toSeq.sorted
-          .map { case (k, v) => s""""${jsonEscape(k)}": "${jsonEscape(v)}"""" }
-          .mkString("  \"properties\": {", ", ", "},\n")
-      }  "dataLocation": "${jsonEscape(dataLocation)}"
-       |}
-       |""".stripMargin
-  }
-
-  // ----- manifest-chunk indirection (round 12) -----
-  //
-  // Iceberg's manifest-list design re-expressed for this metadata: the
-  // version JSON stays a POINTER-SIZED document and the per-file entries
-  // (path, seq, stats, size, NDV) live in immutable CHUNK files under
-  // `metadata/manifests/`. A commit carries every unchanged chunk
-  // forward BY REFERENCE and writes only the entries it adds (plus, at
-  // most, a rewrite of one underfull tail chunk — O(1) amortized), so
-  // commit metadata cost is O(files in this commit), never O(table): at
-  // 10⁶ files the inline format rewrote a multi-hundred-MB JSON on
-  // every streaming micro-batch; chunked, the same append writes one
-  // small chunk and a ~chunk-count-sized JSON. Reads resolve chunks
-  // against the metadata's own `location` field, so a pointer copied
-  // into any catalog backend (Nessie CAS, Glue, JDBC…) keeps resolving.
-
-  /** Tokens naming the OPTIONAL per-entry columns a chunked version's
-    * entries reconstruct as present ([[TableLayout.dataFileSeqs]] /
-    * stats / sizes / NDV). An unknown token on read is corruption — a
-    * column this reader cannot reconstruct, never a default. */
-  private object ManifestFieldTokens {
-    val Seqs = "seqs"; val Stats = "stats"; val Sizes = "sizes"; val Ndv = "ndv"
-    /** Per-entry data-file formats (round 16 — mixed adopted tables). */
-    val Formats = "formats"
-    /** Per-entry constant fills (round 16 — ADOPTED fill tables: the
-      * identity-partition / initial-default values a file must serve
-      * because it physically lacks the column, carried into the
-      * engine's own manifests so imported hive tables stay servable
-      * AFTER adoption makes them SQL-writable). */
-    val Fills = "fills"
-    val All: Set[String] = Set(Seqs, Stats, Sizes, Ndv, Formats, Fills)
-  }
-
   /** JSON codec for one file's constant-fill set — `""` = no fills
     * (the overwhelmingly common entry). Values encode as JSON scalars
     * and decode by the TABLE schema's column type, so the external JVM
@@ -907,8 +547,7 @@ object CatalogIO {
     * decoders produce (what `Literal.create`/`lit` accept). */
   private[catalog] def encodeFills(fills: Seq[(String, Any)]): String = {
     if (fills.isEmpty) return ""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.createObjectNode()
+    val root = LayoutCodec.mapper.createObjectNode()
     fills.foreach { case (c, v) =>
       v match {
         case null => root.putNull(c)
@@ -934,7 +573,7 @@ object CatalogIO {
             "a permissive encoding would only fail on read-back")
       }
     }
-    m.writeValueAsString(root)
+    LayoutCodec.mapper.writeValueAsString(root)
   }
 
   /** The catalyst type at a (possibly dotted — round 17 nested
@@ -985,7 +624,7 @@ object CatalogIO {
       schema: org.apache.spark.sql.types.StructType): Seq[(String, Any)] = {
     if (text.isEmpty) return Seq.empty
     import org.apache.spark.sql.types._
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+    val root = LayoutCodec.mapper.readTree(text)
     import scala.jdk.CollectionConverters._
     root.properties().asScala.iterator.map { e =>
       val c = e.getKey
@@ -1013,6 +652,21 @@ object CatalogIO {
     }.toSeq
   }
 
+  // ----- manifest-chunk indirection (round 12) -----
+  //
+  // Iceberg's manifest-list design re-expressed for this metadata: the
+  // version JSON stays a POINTER-SIZED document and the per-file entries
+  // (path, seq, stats, size, NDV) live in immutable CHUNK files under
+  // `metadata/manifests/`. A commit carries every unchanged chunk
+  // forward BY REFERENCE and writes only the entries it adds (plus, at
+  // most, a rewrite of one underfull tail chunk — O(1) amortized), so
+  // commit metadata cost is O(files in this commit), never O(table): at
+  // 10⁶ files the inline format rewrote a multi-hundred-MB JSON on
+  // every streaming micro-batch; chunked, the same append writes one
+  // small chunk and a ~chunk-count-sized JSON. Reads resolve chunks
+  // against the metadata's own `location` field, so a pointer copied
+  // into any catalog backend (Nessie CAS, Glue, JDBC…) keeps resolving.
+
   /** File count above which a version's manifest is written CHUNKED
     * instead of inline. JVM-wide dial (specs force chunking with 0);
     * the default keeps small tables' metadata a single readable JSON
@@ -1025,103 +679,6 @@ object CatalogIO {
     * next commit's new entries, bounding chunk-count growth under
     * micro-batch append load. */
   @volatile private[graft] var manifestChunkTarget: Int = 4096
-
-  /** One manifest entry, normalized (absent optional columns take the
-    * same defaults the read path applies: seq 0, "" stats/ndv, -1 size)
-    * so reuse comparison is representation-independent. */
-  private final case class MEntry(path: String, seq: Int, stats: String,
-      size: Long, ndv: String, format: String = "parquet",
-      fills: String = "")
-
-  private def entriesOf(l: TableLayout): Vector[MEntry] = {
-    val fs = l.dataFiles.getOrElse(Nil).toVector
-    // materialize each parallel column as an IndexedSeq FIRST: callers
-    // hand in Lists (Seq.fill, ++-built), and positional apply on a
-    // List inside the index loop is O(n) — O(n²) on a 10⁵-entry
-    // manifest, precisely the scale this machinery exists for
-    val seqs = l.dataFileSeqs.map(_.toVector).getOrElse(Vector.fill(fs.size)(0))
-    val stats = l.dataFileStats.map(_.toVector).getOrElse(Vector.fill(fs.size)(""))
-    val sizes = l.dataFileSizes.map(_.toVector).getOrElse(Vector.fill(fs.size)(-1L))
-    val ndv = l.dataFileNdv.map(_.toVector).getOrElse(Vector.fill(fs.size)(""))
-    val fmts = l.dataFileFormats.map(_.toVector)
-      .getOrElse(Vector.fill(fs.size)(l.dataFormat))
-    val fills = l.dataFileFills.map(_.toVector.map(encodeFills))
-      .getOrElse(Vector.fill(fs.size)(""))
-    fs.indices.map(i =>
-      MEntry(fs(i), seqs(i), stats(i), sizes(i), ndv(i), fmts(i),
-        fills(i))).toVector
-  }
-
-  private def chunkJson(ents: Seq[MEntry]): String = {
-    def arrBody(vs: Seq[String]): String =
-      s"[${vs.map("\"" + jsonEscape(_) + "\"").mkString(", ")}]"
-    s"""{
-       |  "manifestChunkFormat": 1,
-       |  "paths": ${arrBody(ents.map(_.path))},
-       |  "seqs": ${arrBody(ents.map(_.seq.toString))},
-       |  "stats": ${arrBody(ents.map(_.stats))},
-       |  "sizes": ${arrBody(ents.map(_.size.toString))},
-       |  "ndv": ${arrBody(ents.map(_.ndv))},
-       |  "formats": ${arrBody(ents.map(_.format))},
-       |  "fills": ${arrBody(ents.map(_.fills))}
-       |}
-       |""".stripMargin
-  }
-
-  /** Parse one chunk file's entries; every malformation throws (a
-    * truncated chunk silently parsed as "fewer files" would shrink the
-    * table — same hardness as the inline arrays). */
-  private def parseChunk(text: String, where: String): Vector[MEntry] = {
-    def col(field: String): Seq[String] =
-      arrayField(text, field).getOrElse(throw new IllegalStateException(
-        s"Malformed manifest chunk: no '$field' array in $where"))
-    val paths = col("paths")
-    def sized(field: String): Seq[String] = {
-      val vs = col(field)
-      if (vs.size != paths.size)
-        throw new IllegalStateException(
-          s"Malformed manifest chunk: '$field' has ${vs.size} entries for " +
-            s"${paths.size} paths in $where")
-      vs
-    }
-    def num[T](field: String, conv: String => T): Seq[T] =
-      sized(field).map { s =>
-        try conv(s)
-        catch { case _: NumberFormatException =>
-          throw new IllegalStateException(
-            s"Malformed manifest chunk: non-integer '$s' in '$field' of $where")
-        }
-      }
-    val seqs = num("seqs", _.toInt)
-    val stats = sized("stats")
-    val sizes = num("sizes", _.toLong)
-    val ndv = sized("ndv")
-    // formats (round 16): absent = a pre-formats chunk, which only a
-    // parquet-only layout could have written — default, not corruption
-    val fmts = arrayField(text, "formats")
-      .map { fs =>
-        if (fs.size != paths.size)
-          throw new IllegalStateException(
-            s"Malformed manifest chunk: 'formats' has ${fs.size} entries " +
-              s"for ${paths.size} paths in $where")
-        fs
-      }
-      .getOrElse(Seq.fill(paths.size)("parquet"))
-    // fills (round 16): absent = a pre-fills chunk (no adopted fill
-    // table could have written one) — default, not corruption
-    val fillsCol = arrayField(text, "fills")
-      .map { fs =>
-        if (fs.size != paths.size)
-          throw new IllegalStateException(
-            s"Malformed manifest chunk: 'fills' has ${fs.size} entries " +
-              s"for ${paths.size} paths in $where")
-        fs
-      }
-      .getOrElse(Seq.fill(paths.size)(""))
-    paths.indices.map(i =>
-      MEntry(paths(i), seqs(i), stats(i), sizes(i), ndv(i), fmts(i),
-        fillsCol(i))).toVector
-  }
 
   /** Chunk plan for `newEntries` given the prior version's chunks:
     * an ordered sequence of reused references (Left) and entry runs to
@@ -1210,11 +767,11 @@ object CatalogIO {
     // parquet machinery on every file refuses upstream).
     val text = layout.dataFiles match {
       case Some(files) if files.size > manifestInlineMax =>
-        val newEntries = entriesOf(layout)
+        val newEntries = LayoutCodec.entriesOf(layout)
         val priorSlices: Seq[(ManifestChunk, Vector[MEntry])] =
           priorLayout.flatMap { pl =>
             pl.manifestChunks.map { chunks =>
-              val pe = entriesOf(pl)
+              val pe = LayoutCodec.entriesOf(pl)
               var off = 0
               chunks.map { c =>
                 val s = pe.slice(off, off + c.count); off += c.count; (c, s)
@@ -1233,24 +790,17 @@ object CatalogIO {
           case Right(ents) =>
             val rel =
               s"manifests/mc-${java.util.UUID.randomUUID().toString.take(12)}.json"
-            cat.writeTextExclusiveAtomic(new Path(metaDir, rel), chunkJson(ents))
+            cat.writeTextExclusiveAtomic(new Path(metaDir, rel),
+              LayoutCodec.chunkJson(ents))
             val summary = summarySchema
               .map(s => FileStats.mergeEnvelopes(ents.map(_.stats), s))
               .getOrElse("")
             ManifestChunk(rel, ents.size, summary)
         }
-        val fields = Seq(
-          layout.dataFileSeqs.map(_ => ManifestFieldTokens.Seqs),
-          layout.dataFileStats.map(_ => ManifestFieldTokens.Stats),
-          layout.dataFileSizes.map(_ => ManifestFieldTokens.Sizes),
-          layout.dataFileNdv.map(_ => ManifestFieldTokens.Ndv),
-          layout.dataFileFormats.map(_ => ManifestFieldTokens.Formats),
-          layout.dataFileFills.filter(_.exists(_.nonEmpty))
-            .map(_ => ManifestFieldTokens.Fills)).flatten
-        metadataJsonBody(tableDir.toString, layout.dataLocation, layout,
-          Some((chunks, fields)))
+        LayoutCodec.metadataJson(tableDir.toString, layout.dataLocation, layout,
+          Some((chunks, LayoutCodec.manifestFields(layout))))
       case _ =>
-        metadataJson(tableDir.toString, layout.dataLocation, layout)
+        LayoutCodec.metadataJson(tableDir.toString, layout.dataLocation, layout)
     }
     cat.writeTextExclusiveAtomic(metaFile, text)
   }
@@ -1338,7 +888,7 @@ object CatalogIO {
     cat.fileSystem.mkdirs(metaDir)
     val metaFile = new Path(metaDir, "v1.metadata.json")
     cat.writeTextExclusiveAtomic(metaFile,
-      metadataJson(dir.toString, dataDir.toString, layout))
+      LayoutCodec.metadataJson(dir.toString, dataDir.toString, layout))
     cat.registerTable(ref, metaFile.toString)
     metaFile.toString
   }
@@ -2245,10 +1795,7 @@ object CatalogIO {
       .foreach { case (d, mtime) =>
         try {
           if (mtime < cutoff) fs.delete(d, false)
-        } catch {
-          case _: java.io.IOException => ()
-          case _: java.io.FileNotFoundException => ()
-        }
+        } catch { case _: java.io.IOException => () }
       }
     OrphanSweepResult(scanned, deleted, bytes)
   }
@@ -3984,314 +3531,24 @@ object CatalogIO {
   def readChunkIndex(metadataLocation: String,
       conf: Configuration = new Configuration()): Option[ChunkIndex] =
     try {
-      val text = readMetadataText(metadataLocation, conf)
-      if (IcebergFormat.isIcebergMetadata(text)) return None
-      for {
-        rels <- arrayField(text, "manifestChunkFiles")
-        counts <- arrayField(text, "manifestChunkCounts")
-          .filter(_.size == rels.size)
-        sums <- arrayField(text, "manifestChunkSummaries")
-          .filter(_.size == rels.size)
-        schemaDdl <- stringField(text, "schemaDdl")
-        dataLoc <- stringField(text, "dataLocation")
-        if arrayField(text, "deleteFiles").forall(_.isEmpty)
-        if arrayField(text, "renameFroms").forall(_.isEmpty)
-        if NumBucketsRe.findFirstMatchIn(text).isEmpty
-        if arrayField(text, "partitionColumns").forall(_.isEmpty)
-        // round 16: the lazy chunk face plans a PARQUET scan — a
-        // non-parquet (adopted orc/avro/mixed) chunked layout must take
-        // the eager path, whose format dispatch serves it correctly
-        if stringField(text, "dataFormat").forall(_ == "parquet")
-        // round 18 (ScaleSmoke `cow` caught it): a chunked ADOPTED FILL
-        // table (a >512-file hive import) must take the eager path too —
-        // the lazy plain-parquet plan would silently serve NULL for
-        // every fill column. The chunk columns carry the fills, and the
-        // metadata records which per-entry fields the chunks hold.
-        if arrayField(text, "manifestFields")
-          .forall(!_.contains(ManifestFieldTokens.Fills))
-        // round 19: chunked RELOCATED layouts (adopted object-storage
-        // tables) take the eager path — the lazy face's basePath-rooted
-        // plan cannot serve out-of-root absolute spellings
-        if """"hasRelocated"\s*:\s*true""".r.findFirstIn(text).isEmpty
-        // round 20: adopted uuid layouts take the eager path — the
-        // lazy plain-parquet plan would read binary fixed[16] columns
-        // with the served STRING schema
-        if arrayField(text, "uuidColumns").forall(_.isEmpty)
-        ints <- scala.util.Try(counts.map(_.toInt)).toOption
-      } yield ChunkIndex(metadataLocation,
-        TableLayout(dataLoc,
-          sortColumns = arrayField(text, "sortColumns").getOrElse(Nil),
-          schemaDdl = Some(schemaDdl), dataFiles = Some(Nil),
-          properties = objectField(text, "properties"),
-          commitOp = stringField(text, "commitOp"),
-          clusterTransforms = arrayField(text, "clusterTransforms").getOrElse(Nil)),
-        rels.lazyZip(ints).lazyZip(sums).map(ManifestChunk(_, _, _)))
+      val root = LayoutCodec.parse(readMetadataText(metadataLocation, conf),
+        metadataLocation)
+      if (IcebergFormat.isIcebergMetadata(root)) None
+      else LayoutCodec.chunkIndex(root, metadataLocation)
     } catch { case _: Exception => None } // unreadable → eager path reports
 
   private def readLayoutImpl(metadataLocation: String, conf: Configuration,
       chunkKeep: Option[ManifestChunk => Boolean]): (TableLayout, Int, Int) = {
-    val text = readMetadataText(metadataLocation, conf)
+    val root = LayoutCodec.parse(readMetadataText(metadataLocation, conf),
+      metadataLocation)
     // a REAL Apache Iceberg metadata.json (the format the reference's
     // users register — CatalogMigrator.java:212-213) is converted into
     // this engine's layout so every scan face serves it natively
-    if (IcebergFormat.isIcebergMetadata(text))
-      return (IcebergFormat.toTableLayout(text, metadataLocation, conf), 0, 0)
-    val dataLoc = stringField(text, "dataLocation")
-      .getOrElse(throw new IllegalStateException(
-        s"No dataLocation in metadata file $metadataLocation"))
-    def arr(field: String): Seq[String] =
-      arrayField(text, field).getOrElse(Nil)
-    // chunked manifest (round 12): entries live in immutable chunk
-    // files under <location>/metadata/, referenced here. Resolved via
-    // the metadata's own `location` field so a pointer copied into any
-    // catalog backend keeps resolving. All-or-nothing: a missing or
-    // malformed chunk throws (a partially-resolved manifest would
-    // silently shrink the table).
-    var chunksSkipped = 0
-    var chunksTotal = 0
-    val chunked: Option[(Seq[ManifestChunk], Vector[MEntry], Set[String])] =
-      arrayField(text, "manifestChunkFiles").map { rels =>
-        val counts = arrayField(text, "manifestChunkCounts")
-          .getOrElse(throw new IllegalStateException(
-            s"Malformed metadata: manifestChunkFiles without " +
-              s"manifestChunkCounts in $metadataLocation"))
-        if (counts.size != rels.size)
-          throw new IllegalStateException(
-            s"Malformed metadata: ${counts.size} manifestChunkCounts for " +
-              s"${rels.size} manifestChunkFiles in $metadataLocation")
-        // summaries (round 14) are optional: absent = pre-summary
-        // metadata, every chunk resolves
-        val summaries = arrayField(text, "manifestChunkSummaries")
-          .map { ss =>
-            if (ss.size != rels.size)
-              throw new IllegalStateException(
-                s"Malformed metadata: ${ss.size} manifestChunkSummaries " +
-                  s"for ${rels.size} manifestChunkFiles in $metadataLocation")
-            ss
-          }
-          .getOrElse(Seq.fill(rels.size)(""))
-        val fields = arrayField(text, "manifestFields").getOrElse(Nil)
-        fields.filterNot(ManifestFieldTokens.All).foreach(f =>
-          throw new IllegalStateException(
-            s"Malformed metadata: unknown manifest field token '$f' in " +
-              s"$metadataLocation — written by a newer format?"))
-        val loc = stringField(text, "location")
-          .getOrElse(throw new IllegalStateException(
-            s"Malformed metadata: chunked manifest without a location in " +
-              s"$metadataLocation"))
-        val metaDir = new Path(loc, "metadata")
-        val refs = rels.lazyZip(counts).lazyZip(summaries).map { (rel, c, sum) =>
-          val n = try c.toInt catch { case _: NumberFormatException =>
-            throw new IllegalStateException(
-              s"Malformed metadata: non-integer manifest chunk count '$c' " +
-                s"in $metadataLocation")
-          }
-          ManifestChunk(rel, n, sum)
-        }
-        // chunk-level pruning (round 14): resolve only the chunks the
-        // caller's predicate can touch — the rest are never even READ
-        val kept = chunkKeep.fold(refs)(f => refs.filter(f))
-        chunksTotal = refs.size
-        chunksSkipped = refs.size - kept.size
-        import scala.collection.parallel.CollectionConverters._
-        val perChunk: Seq[(ManifestChunk, Vector[MEntry])] = kept.par.map { r =>
-          val p = new Path(metaDir, r.relPath).toString
-          r -> parseChunk(readMetadataText(p, conf), p)
-        }.seq
-        perChunk.foreach { case (r, ents) =>
-          if (ents.size != r.count)
-            throw new IllegalStateException(
-              s"Manifest chunk ${r.relPath} holds ${ents.size} entries but " +
-                s"$metadataLocation records ${r.count} — chunk and version " +
-                "disagree")
-        }
-        (refs, perChunk.toVector.flatMap(_._2), fields.toSet)
-      }
-    val inlineDataFiles = arrayField(text, "dataFiles")
-    if (inlineDataFiles.isDefined && chunked.isDefined)
-      throw new IllegalStateException(
-        s"Malformed metadata: both inline dataFiles and manifestChunkFiles " +
-          s"in $metadataLocation")
-    val dataFiles = inlineDataFiles.orElse(chunked.map(_._2.map(_.path)))
-    // parallel arrays are validated hard: a seq list that fell out of
-    // step with its file list would misapply deletes (resurrect or lose
-    // rows), so a mismatch is corruption, not a default
-    def intSeqs(field: String, expected: Option[Int]): Option[Seq[Int]] =
-      arrayField(text, field).map { raw =>
-        expected.filter(_ != raw.size).foreach { n =>
-          throw new IllegalStateException(
-            s"Malformed metadata: '$field' has ${raw.size} entries for $n " +
-              s"parallel entries in $metadataLocation")
-        }
-        raw.map { s =>
-          try s.toInt
-          catch { case _: NumberFormatException =>
-            throw new IllegalStateException(
-              s"Malformed metadata: non-integer '$s' in '$field' of $metadataLocation")
-          }
-        }
-      }
-    val delPaths = arrayField(text, "deleteFiles").getOrElse(Nil)
-    val delSeqs = intSeqs("deleteFileSeqs", Some(delPaths.size))
-    if (delPaths.nonEmpty && delSeqs.isEmpty)
-      throw new IllegalStateException(
-        s"Malformed metadata: deleteFiles without deleteFileSeqs in $metadataLocation")
-    // kinds absent → all equality (the round-8 format); present → must
-    // parallel deleteFiles and carry only known kinds (a kind this
-    // reader doesn't know is a delete it can't apply — corruption, not
-    // a default, or it would resurrect rows)
-    val delKinds = arrayField(text, "deleteFileKinds")
-      .map { ks =>
-        if (ks.size != delPaths.size)
-          throw new IllegalStateException(
-            s"Malformed metadata: 'deleteFileKinds' has ${ks.size} entries for " +
-              s"${delPaths.size} deleteFiles in $metadataLocation")
-        ks.foreach { k =>
-          if (!DeleteKinds.All(k))
-            throw new IllegalStateException(
-              s"Malformed metadata: unknown delete-file kind '$k' in $metadataLocation")
-        }
-        ks
-      }
-      .getOrElse(Seq.fill(delPaths.size)(DeleteKinds.Equality))
-    val delTargets = arrayField(text, "deleteFileTargets")
-      .map { ts =>
-        if (ts.size != delPaths.size)
-          throw new IllegalStateException(
-            s"Malformed metadata: 'deleteFileTargets' has ${ts.size} entries " +
-              s"for ${delPaths.size} deleteFiles in $metadataLocation")
-        ts.map(_.split(';').toSeq.filter(_.nonEmpty))
-      }
-      .getOrElse(Seq.fill(delPaths.size)(Nil))
-    def delLongs(field: String): Seq[Option[Long]] =
-      arrayField(text, field)
-        .map { vs =>
-          if (vs.size != delPaths.size)
-            throw new IllegalStateException(
-              s"Malformed metadata: '$field' has ${vs.size} entries for " +
-                s"${delPaths.size} deleteFiles in $metadataLocation")
-          vs.map(v => if (v.isEmpty) None else Some(
-            try v.toLong
-            catch { case _: NumberFormatException =>
-              throw new IllegalStateException(
-                s"Malformed metadata: non-integer '$v' in '$field' of " +
-                  metadataLocation)
-            }))
-        }
-        .getOrElse(Seq.fill(delPaths.size)(None))
-    val delBlobOffsets = delLongs("deleteFileBlobOffsets")
-    val delBlobLengths = delLongs("deleteFileBlobLengths")
-    val renameFroms = arrayField(text, "renameFroms").getOrElse(Nil)
-    val renameTos = arrayField(text, "renameTos").getOrElse(Nil)
-    val renameSeqs = intSeqs("renameSeqs", Some(renameFroms.size)).getOrElse(Nil)
-    if (renameFroms.size != renameTos.size ||
-        (renameFroms.nonEmpty && renameSeqs.size != renameFroms.size))
-      throw new IllegalStateException(
-        s"Malformed metadata: rename arrays out of step in $metadataLocation")
-    val recordedFormat = stringField(text, "dataFormat")
-    val layout = TableLayout(dataLoc, arr("partitionColumns"),
-      NumBucketsRe.findFirstMatchIn(text).map(_.group(1).toInt),
-      arr("bucketColumns"), arr("sortColumns"),
-      stringField(text, "schemaDdl"),
-      // presence matters: Some(Nil) is a committed empty snapshot,
-      // None is pre-manifest metadata (whole-directory scan)
-      dataFiles,
-      objectField(text, "properties"),
-      deleteFiles = delPaths.lazyZip(delSeqs.getOrElse(Nil)).lazyZip(delKinds)
-        .lazyZip(delTargets.lazyZip(delBlobOffsets).lazyZip(delBlobLengths).toSeq)
-        .map { case (p, s, k, (t, bo, bl)) => DeleteFile(p, s, k, t, bo, bl) },
-      dataFileSeqs = intSeqs("dataFileSeqs", dataFiles.map(_.size)).orElse(
-        chunked.collect { case (_, ents, fields)
-          if fields(ManifestFieldTokens.Seqs) => ents.map(_.seq) }),
-      renameOps = renameSeqs.lazyZip(renameFroms).lazyZip(renameTos)
-        .map((s, f, t) => RenameOp(s, f, t)),
-      droppedColumns = arr("droppedColumns"),
-      dataFileStats = arrayField(text, "dataFileStats").map { ss =>
-        // misaligned stats would prune with the wrong file's envelope —
-        // corruption, same hardness as the seq arrays
-        dataFiles.map(_.size).filter(_ != ss.size).foreach { n =>
-          throw new IllegalStateException(
-            s"Malformed metadata: 'dataFileStats' has ${ss.size} entries for " +
-              s"$n data files in $metadataLocation")
-        }
-        ss
-      }.orElse(chunked.collect { case (_, ents, fields)
-        if fields(ManifestFieldTokens.Stats) => ents.map(_.stats) }),
-      commitOp = stringField(text, "commitOp"),
-      dataFileNdv = arrayField(text, "dataFileNdv").map { ss =>
-        dataFiles.map(_.size).filter(_ != ss.size).foreach { n =>
-          throw new IllegalStateException(
-            s"Malformed metadata: 'dataFileNdv' has ${ss.size} entries for " +
-              s"$n data files in $metadataLocation")
-        }
-        ss
-      }.orElse(chunked.collect { case (_, ents, fields)
-        if fields(ManifestFieldTokens.Ndv) => ents.map(_.ndv) }),
-      dataFileSizes = arrayField(text, "dataFileSizes").map { ss =>
-        // misaligned sizes would split-plan wrong byte ranges —
-        // corruption, same hardness as the stats array
-        dataFiles.map(_.size).filter(_ != ss.size).foreach { n =>
-          throw new IllegalStateException(
-            s"Malformed metadata: 'dataFileSizes' has ${ss.size} entries for " +
-              s"$n data files in $metadataLocation")
-        }
-        ss.map { s =>
-          try s.toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalStateException(
-              s"Malformed metadata: non-integer size '$s' in 'dataFileSizes' " +
-                s"of $metadataLocation")
-          }
-        }
-      }.orElse(chunked.collect { case (_, ents, fields)
-        if fields(ManifestFieldTokens.Sizes) => ents.map(_.size) }),
-      manifestChunks = chunked.map(_._1),
-      clusterTransforms = arr("clusterTransforms"),
-      // round 16: adopted non-parquet layouts — absent = parquet
-      dataFormat = recordedFormat.getOrElse("parquet"),
-      dataFileFormats =
-        if (recordedFormat.contains("mixed")) {
-          val fmts = arrayField(text, "dataFileFormats").map { fs =>
-            dataFiles.map(_.size).filter(_ != fs.size).foreach { n =>
-              throw new IllegalStateException(
-                s"Malformed metadata: 'dataFileFormats' has ${fs.size} " +
-                  s"entries for $n data files in $metadataLocation")
-            }
-            fs
-          }.orElse(chunked.collect { case (_, ents, fields)
-            if fields(ManifestFieldTokens.Formats) => ents.map(_.format) })
-          // a mixed layout without per-entry formats cannot dispatch
-          // readers — corruption, never a guess
-          Some(fmts.getOrElse(throw new IllegalStateException(
-            s"Malformed metadata: dataFormat 'mixed' without " +
-              s"dataFileFormats in $metadataLocation")))
-        } else None,
-      // per-file constant fills (round 16 — adopted fill tables):
-      // decoded by the recorded schema's column types; absent = none
-      dataFileFills = {
-        val encoded: Option[Seq[String]] =
-          arrayField(text, "dataFileFills").map { fs =>
-            dataFiles.map(_.size).filter(_ != fs.size).foreach { n =>
-              throw new IllegalStateException(
-                s"Malformed metadata: 'dataFileFills' has ${fs.size} " +
-                  s"entries for $n data files in $metadataLocation")
-            }
-            fs
-          }.orElse(chunked.collect { case (_, ents, fields)
-            if fields(ManifestFieldTokens.Fills) => ents.map(_.fills) })
-        encoded.filter(_.exists(_.nonEmpty)).map { fs =>
-          val schema = org.apache.spark.sql.types.StructType.fromDDL(
-            stringField(text, "schemaDdl").getOrElse(
-              throw new IllegalStateException(
-                s"Malformed metadata: dataFileFills without a schemaDdl " +
-                  s"in $metadataLocation")))
-          fs.map(decodeFills(_, schema))
-        }
-      },
-      // adopted uuid layouts (round 20): the recorded binary-to-string
-      // conversion columns — every scan face routes through the seam
-      uuidColumns = arr("uuidColumns"))
-    (layout, chunksSkipped, chunksTotal)
+    if (IcebergFormat.isIcebergMetadata(root))
+      (IcebergFormat.toTableLayout(root, metadataLocation, conf, None), 0, 0)
+    else
+      LayoutCodec.decodeLayout(root, metadataLocation, chunkKeep,
+        readMetadataText(_, conf))
   }
 
   /** Resolve a table through its catalog and scan it. */

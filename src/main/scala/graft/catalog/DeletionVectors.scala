@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Iceberg v3 DELETION VECTORS, implemented from the public specs — no
   * Iceberg or RoaringBitmap jars.
@@ -414,18 +414,12 @@ object DeletionVectors {
         off += b.blob.length
         span
       }
-      def esc(s: String): String = s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
       val blobsJson = blobs.zip(spans).map { case (b, (o, l)) =>
         s"""{"type":"$BlobType","fields":[],""" +
           s""""snapshot-id":${b.snapshotId},""" +
           s""""sequence-number":${b.sequenceNumber},""" +
           s""""offset":$o,"length":$l,"properties":{""" +
-          s""""referenced-data-file":"${esc(b.referencedDataFile)}",""" +
+          s""""referenced-data-file":"${LayoutCodec.jsonEscape(b.referencedDataFile)}",""" +
           s""""cardinality":"${b.cardinality}"}}"""
       }.mkString("[", ",", "]")
       val raw =

@@ -74,7 +74,7 @@ object FileStats {
   // Escaping covers the separators, '%', '=' at position 0, and control
   // chars, so any string value round-trips.
 
-  private def esc(s: String): String = {
+  private[catalog] def esc(s: String): String = {
     val sb = new StringBuilder(s.length)
     s.foreach {
       case c @ (',' | ';' | '%' | '=') => sb.append(f"%%${c.toInt}%02x")
@@ -84,7 +84,7 @@ object FileStats {
     sb.toString
   }
 
-  private def unesc(s: String): String = {
+  private[catalog] def unesc(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0
     while (i < s.length) {

@@ -10,6 +10,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.catalog.LayoutCodec.jsonEscape
+
 /** Writer of a REAL Apache Iceberg v2 table (public spec:
   * iceberg.apache.org/spec) — the interop counterpart of
   * [[IcebergFormat]]: parquet data + avro manifests + avro manifest
@@ -1763,13 +1765,12 @@ object IcebergExport {
       fileFormat: String = "parquet",
       avroResults: Option[Seq[graft.sources.AvroWrite.FileResult]] = None,
       treeOverride: Option[IcebergSchemaIds.Tree] = None,
-      partCols: Seq[PartSpecCol] = Nil,
+      partCols: Seq[PartSpecCol],
       /** The spec id this data manifest commits under (round 18 —
         * spec evolution: loaded tables append under their CURRENT
         * spec; fresh exports under 0). */
       specId: Int = 0)
       : (ListEntry, Long, Long) = {
-    import org.apache.spark.sql.functions._
     // IDENTITY partition columns live in the DIRECTORY NAMES, not the
     // files — their values go into the entry's `partition` record, and
     // no footer-derived bound may claim the column exists inside the
@@ -2157,7 +2158,7 @@ object IcebergExport {
         * THAT spec's fields (empty for the unpartitioned auxiliary
         * spec global delete manifests ride — round 16; arbitrary ids
         * since round 18's spec-evolution carry). */
-      specId: Int = 0): Unit = {
+      specId: Int): Unit = {
     w.setMeta("schema", schemaJson)
     w.setMeta("partition-spec", s"[${partSpecFieldsJson(partCols)}]")
     w.setMeta("partition-spec-id", specId.toString)
@@ -2265,7 +2266,7 @@ object IcebergExport {
   /** Iceberg schema JSON (metadata document + manifest `schema`
     * metadata both use this form). */
   private def icebergSchemaJson(fieldIds: Seq[(StructField, Int)],
-      treeOverride: Option[IcebergSchemaIds.Tree] = None): String = {
+      treeOverride: Option[IcebergSchemaIds.Tree]): String = {
     // NESTED types export (round 16): the id tree assigns nested
     // member ids deterministically, shared with the metadata schema
     // and the avro writer — see [[IcebergSchemaIds]]; an append to a
@@ -2331,8 +2332,6 @@ object IcebergExport {
   // primitive type names live in [[IcebergSchemaIds.primName]] (shared
   // with the nested-type renderers since round 16)
 
-  private def esc(s: String): String = IcebergSchemaIds.esc(s)
-
   private def snapshotNode(snapshotId: Long, parent: Option[Long],
       seq: Long, operation: String, manifestList: String,
       firstRowId: Option[Long] = None,
@@ -2340,7 +2339,7 @@ object IcebergExport {
       // strings, as real writers record them) — `added-data-files` /
       // `added-files-size` let streaming admission control budget a
       // micro-batch without walking the snapshot's manifests
-      summaryCounts: Map[String, Long] = Map.empty): String =
+      summaryCounts: Map[String, Long]): String =
     s"""{
        |    "sequence-number": $seq,
        |    "snapshot-id": $snapshotId,${parent.fold("")(p =>
@@ -2348,9 +2347,9 @@ object IcebergExport {
            s"""\n    "first-row-id": $r,""")}
        |    "timestamp-ms": ${System.currentTimeMillis()},
        |    "summary": {"operation": "$operation"${summaryCounts.toSeq
-             .sortBy(_._1).map { case (k, v) => s""", "${esc(k)}": "$v"""" }
+             .sortBy(_._1).map { case (k, v) => s""", "${jsonEscape(k)}": "$v"""" }
              .mkString}},
-       |    "manifest-list": "${esc(manifestList)}",
+       |    "manifest-list": "${jsonEscape(manifestList)}",
        |    "schema-id": 0
        |  }""".stripMargin
 
@@ -2369,7 +2368,7 @@ object IcebergExport {
       minLastColumnId: Int = 0,
       /** Identity partition-spec columns (round 16); empty = the
         * unpartitioned spec. */
-      partCols: Seq[PartSpecCol] = Nil,
+      partCols: Seq[PartSpecCol],
       /** Round 18 (spec evolution): a LOADED table's partition-specs
         * array rendered VERBATIM, with its default-spec-id — prior
         * manifests keep referencing their own spec ids. None =
@@ -2382,11 +2381,11 @@ object IcebergExport {
     val tree = treeOverride.getOrElse(IcebergSchemaIds.of(fieldIds))
     val fields = tree.fields.map(IcebergSchemaIds.fieldJson).mkString(", ")
     // the property VALUE is itself a JSON document → escaped as a string
-    val mapping = esc(IcebergSchemaIds.mappingJson(tree.fields))
+    val mapping = jsonEscape(IcebergSchemaIds.mappingJson(tree.fields))
     s"""{
        |  "format-version": $formatVersion,
        |  "table-uuid": "$uuid",
-       |  "location": "${esc(location)}",
+       |  "location": "${jsonEscape(location)}",
        |  "last-sequence-number": $lastSeq,
        |  "last-updated-ms": ${System.currentTimeMillis()},${nextRowId.fold("")(r =>
            s"""\n  "next-row-id": $r,""")}
@@ -2408,7 +2407,7 @@ object IcebergExport {
        |  "current-snapshot-id": $snapshotId,
        |  "refs": {"main": {"snapshot-id": $snapshotId, "type": "branch"}${
            extraRefs.toSeq.sortBy(_._1).map { case (n, json) =>
-             s""", "${esc(n)}": $json"""
+             s""", "${jsonEscape(n)}": $json"""
            }.mkString}},
        |  "snapshots": [${snapshotsJson.mkString(", ")}],
        |  "snapshot-log": [],
@@ -2567,7 +2566,7 @@ object IcebergExport {
     * `partition-specs` and the manifest `partition-spec` meta value). */
   private def partSpecFieldsJson(cols: Seq[PartSpecCol]): String =
     cols.map(c =>
-      s"""{"name": "${esc(c.specName)}", "transform": "${c.transform}", """ +
+      s"""{"name": "${jsonEscape(c.specName)}", "transform": "${c.transform}", """ +
         s""""source-id": ${c.sourceId}, "field-id": ${c.fieldId}}""")
       .mkString(", ")
 
@@ -2600,7 +2599,7 @@ object IcebergExport {
         case other => throw new IllegalStateException(
           s"unreachable partition type $other")
       }
-      s"""{"name": "${esc(c.specName)}", "type": ["null", $t], """ +
+      s"""{"name": "${jsonEscape(c.specName)}", "type": ["null", $t], """ +
         s""""default": null, "field-id": ${c.fieldId}}"""
     }.mkString(", ")
 

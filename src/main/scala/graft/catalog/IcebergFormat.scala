@@ -77,11 +77,18 @@ import org.apache.spark.sql.types._
   * directory pruning. */
 object IcebergFormat {
 
-  /** Cheap structural sniff: Iceberg TableMetadata carries
-    * `format-version`; this engine's format never does (and always has
-    * `dataLocation`). */
+  /** Structural sniff over a parsed document: Iceberg TableMetadata
+    * carries a top-level `format-version`; this engine's native format
+    * never does (and always records its `dataLocation`). Keys nested in
+    * `properties` or snapshots never count. */
+  def isIcebergMetadata(root: JsonNode): Boolean =
+    root.has("format-version") && !LayoutCodec.isNative(root)
+
+  /** [[isIcebergMetadata]] of a document's text; unparseable text is
+    * not Iceberg metadata. */
   def isIcebergMetadata(text: String): Boolean =
-    text.contains("\"format-version\"") && !text.contains("\"dataLocation\"")
+    scala.util.Try(LayoutCodec.mapper.readTree(text)).toOption
+      .exists(isIcebergMetadata)
 
   /** The metadata.json `refs` map (spec §Table Metadata): branch/tag
     * name → pinned snapshot id — the names real Iceberg writers hand
@@ -179,8 +186,14 @@ object IcebergFormat {
     * history); None reads the current one. */
   def toTableLayout(text: String, metadataLocation: String,
       conf: Configuration,
-      snapshotId: Option[Long] = None): CatalogIO.TableLayout = {
-    val root = new ObjectMapper().readTree(text)
+      snapshotId: Option[Long] = None): CatalogIO.TableLayout =
+    toTableLayout(LayoutCodec.parse(text, metadataLocation), metadataLocation,
+      conf, snapshotId)
+
+  /** [[toTableLayout]] of an already-parsed document. */
+  def toTableLayout(root: JsonNode, metadataLocation: String,
+      conf: Configuration,
+      snapshotId: Option[Long]): CatalogIO.TableLayout = {
     val fv = root.path("format-version").asInt(-1)
     if (fv != 1 && fv != 2 && fv != 3)
       throw new UnsupportedOperationException(
@@ -739,11 +752,11 @@ object IcebergFormat {
       entrySeq: (GenericRecord, Int, Long, String) => Long,
       nameById: Map[Int, String], dataRelSet: Set[String],
       metadataLocation: String, formatVersion: Int,
-      partSpecs: Map[Int, Seq[PartField]] = Map.empty,
+      partSpecs: Map[Int, Seq[PartField]],
       /** canonical partition tuple → (data rel path, data seq) —
         * partition-SCOPED equality deletes resolve their target files
         * here (round 17). */
-      dataByTuple: Map[String, Seq[(String, Long)]] = Map.empty)
+      dataByTuple: Map[String, Seq[(String, Long)]])
       : Seq[CatalogIO.DeleteFile] =
     manifestPaths.filter(_._2 == 1).flatMap { case (mp, _, mseq, specId) =>
       readAvroRecords(new Path(mp), conf).flatMap { entry =>
@@ -931,7 +944,7 @@ object IcebergFormat {
   // ----- schema conversion ------------------------------------------
 
   private def currentSchema(root: JsonNode, where: String,
-      schemaId: Option[Int] = None): JsonNode =
+      schemaId: Option[Int]): JsonNode =
     Option(root.get("schemas")) match {
       case Some(schemas) =>
         val cur = schemaId.getOrElse(root.path("current-schema-id").asInt(0))
@@ -1196,7 +1209,7 @@ object IcebergFormat {
     IcebergSchemaIds.hasVariant(dt)
 
   private def typeToSpark(t: JsonNode, where: String,
-      inCollection: Boolean = false): DataType =
+      inCollection: Boolean): DataType =
     if (t.isTextual) {
       val s = t.asText
       val DecimalRe = """decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)""".r
@@ -1614,8 +1627,7 @@ object IcebergFormat {
     * envelope must not prune. */
   private def statsText(df: GenericRecord,
       fields: Map[String, (Int, JsonNode)], schema: StructType,
-      partOverrides: Seq[(String, Option[String], Option[String], Boolean)]
-        = Seq.empty): String = {
+      partOverrides: Seq[(String, Option[String], Option[String], Boolean)]): String = {
     val rowCount = df.get("record_count").asInstanceOf[Long]
     // identity partition values: lower = upper = the value (every row
     // of the file carries it), used only when the file records no

@@ -2,6 +2,8 @@ package graft.catalog
 
 import org.apache.spark.sql.types._
 
+import graft.catalog.LayoutCodec.jsonEscape
+
 /** Deterministic Iceberg FIELD-ID assignment for an export schema with
   * NESTED types (round 16 — the flat-only export refusal lifted):
   * top-level fields keep the caller's ids (1..n, the round-12
@@ -142,16 +144,11 @@ object IcebergSchemaIds {
       s"Iceberg export does not map catalyst type ${other.catalogString}")
   }
 
-  /** JSON string escape shared with [[IcebergExport]] (one escaper —
-    * the schema JSON and the rest of the metadata must never diverge). */
-  private[catalog] def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-
   /** The field's `type` value in the metadata schema document — a
     * quoted primitive name, or the spec's struct/list/map object. */
   def typeJson(n: Node): String = n match {
     case Prim(dt) => "\"" + primName(dt) + "\""
-    case PrimName(name) => "\"" + esc(name) + "\""
+    case PrimName(name) => "\"" + jsonEscape(name) + "\""
     case Struct(fs) =>
       s"""{"type": "struct", "fields": [${fs.map(fieldJson).mkString(", ")}]}"""
     case Arr(eid, cn, e) =>
@@ -164,7 +161,7 @@ object IcebergSchemaIds {
   }
 
   def fieldJson(f: Field): String =
-    s"""{"id": ${f.id}, "name": "${esc(f.name)}", "required": ${!f.nullable}, """ +
+    s"""{"id": ${f.id}, "name": "${jsonEscape(f.name)}", "required": ${!f.nullable}, """ +
       f.initialDefault.fold("")(d => s""""initial-default": $d, """) +
       f.writeDefault.fold("")(d => s""""write-default": $d, """) +
       s""""type": ${typeJson(f.node)}}"""
@@ -186,7 +183,7 @@ object IcebergSchemaIds {
 
   private def entry(id: Int, name: String, n: Node): String = {
     val kids = childEntries(n)
-    s"""{"field-id": $id, "names": ["${esc(name)}"]""" +
+    s"""{"field-id": $id, "names": ["${jsonEscape(name)}"]""" +
       (if (kids.isEmpty) "}" else s""", "fields": [${kids.mkString(", ")}]}""")
   }
 

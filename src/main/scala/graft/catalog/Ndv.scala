@@ -134,36 +134,13 @@ object Ndv {
   // ---- manifest codec ----------------------------------------------
   //
   // One file's sketches = entries joined by ';', each `col=base64`.
-  // Column names are escaped with the same %xx scheme as FileStats.
-
-  private def esc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    s.foreach {
-      case c @ (',' | ';' | '%' | '=') => sb.append(f"%%${c.toInt}%02x")
-      case c if c < ' ' => sb.append(f"%%${c.toInt}%02x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  // Column names are escaped with FileStats' %xx scheme.
 
   /** Encode per-column sketches (lowercased names) for one manifest
     * entry. */
   def encode(cols: Map[String, Array[Byte]]): String =
     cols.toSeq.sortBy(_._1).map { case (n, regs) =>
-      s"${esc(n)}=${java.util.Base64.getEncoder.encodeToString(regs)}"
+      s"${FileStats.esc(n)}=${java.util.Base64.getEncoder.encodeToString(regs)}"
     }.mkString(";")
 
   /** Decode one manifest entry; None for `""`/unparseable (no NDV). */
@@ -175,7 +152,7 @@ object Ndv {
         require(cut > 0, s"malformed ndv entry: $e")
         val regs = java.util.Base64.getDecoder.decode(e.substring(cut + 1))
         require(regs.length == Registers, s"wrong register count ${regs.length}")
-        unesc(e.substring(0, cut)).toLowerCase -> regs
+        FileStats.unesc(e.substring(0, cut)).toLowerCase -> regs
       }.toMap
     }.toOption
   }

@@ -35,8 +35,8 @@ object Multimodal {
   // FILE under java.io.tmpdir. m01 encodes+decodes 2000 PNGs per run ⇒
   // thousands of temp-file cycles fanned across 32 task threads, making the
   // only query in the bench whose cost rides /tmp I/O weather (r12 verdict
-  // #1: 6.85 s vs 1.04 s floor; tools/M01Probe measured 6.17 s first-run
-  // disk-cache vs 0.64–0.70 s memory-cache, stable across runs). In-memory
+  // #1: 6.85 s vs 1.04 s floor; a first-run A/B measured 6.17 s with the
+  // disk cache vs 0.64–0.70 s in memory, stable across runs). In-memory
   // caching is strictly right here — sources ARE byte arrays already.
   // Module init runs on every JVM that touches a codec (driver and each
   // executor), so the flag flips wherever decode tasks run.

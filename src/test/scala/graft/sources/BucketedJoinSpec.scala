@@ -56,7 +56,7 @@ class BucketedJoinSpec extends AnyFunSuite {
   test("layout metadata round-trips hostile names (quotes, backslashes, brackets)") {
     val hostile = Seq("col\"quote", "col\\back", "col]bracket", "col\ttab")
     val dataLoc = "/tmp/weird \"dir\"\\with]stuff"
-    val json = CatalogIO.metadataJson("/tmp/t", dataLoc,
+    val json = graft.catalog.LayoutCodec.metadataJson("/tmp/t", dataLoc,
       CatalogIO.TableLayout(dataLoc, partitionColumns = hostile,
         numBuckets = Some(4), bucketColumns = Seq("b`tick"),
         sortColumns = Seq("s]x")))

@@ -181,11 +181,14 @@ class StreamMaterializeSpec extends AnyFunSuite {
     StreamMaterialize.commitIngestBatch(spark, cat, ref, batch(2), 1L, "runA", true)
     assert(rows(CatalogIO.readTable(spark, cat, ref)) == Seq("1", "2", "3", "4"))
 
-    // property keys that would shadow top-level metadata fields refuse
-    intercept[IllegalArgumentException] {
-      CatalogIO.commitAppend(spark, cat, ref, batch(5),
-        properties = Map("dataLocation" -> "/tmp/evil"))
-    }
+    // a property key named like a top-level metadata field is a plain
+    // property: it commits and never shadows the real field
+    CatalogIO.commitAppend(spark, cat, ref, batch(5),
+      properties = Map("dataLocation" -> "/tmp/evil"))
+    assert(CatalogIO.currentProperties(cat, ref).get("dataLocation")
+      .contains("/tmp/evil"))
+    assert(rows(CatalogIO.readTable(spark, cat, ref)) ==
+      Seq("1", "2", "3", "4", "5"))
     cat.close()
   }
 
