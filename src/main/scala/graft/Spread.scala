@@ -32,14 +32,26 @@ import org.apache.spark.sql.DataFrame
   */
 object Spread {
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.spread")
+  private val DefaultBytesPerCore = 8L * 1024 * 1024
+  /** Rejected conf values already warned about (one warning each). */
+  private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Per-core input-byte threshold below which a narrow scan is spread. */
   private def bytesPerCore(df: DataFrame): Long =
     df.sparkSession.conf.getOption("spark.graft.spread.bytesPerCore")
       // tolerate a malformed conf value (fall back to the default)
       // rather than throwing NumberFormatException at plan time inside
-      // every spread-wrapped query (round-21 advisor fix)
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(8L * 1024 * 1024)
+      // every spread-wrapped query (round-21 advisor fix), but say so:
+      // a typo ("64m") must not pass silently for the default
+      .flatMap { v =>
+        val parsed = scala.util.Try(v.toLong).toOption
+        if (parsed.isEmpty && warned.add(v))
+          log.warn(s"ignoring spark.graft.spread.bytesPerCore='$v' " +
+            s"(not a whole number of bytes); using $DefaultBytesPerCore")
+        parsed
+      }
+      .getOrElse(DefaultBytesPerCore)
 
   def ifNarrow(df: DataFrame): DataFrame = {
     // streaming plans repartition per micro-batch and have no stable

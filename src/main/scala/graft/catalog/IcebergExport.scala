@@ -1996,18 +1996,32 @@ object IcebergExport {
       // latency × files. Order-independent: results key by file name.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(8, files.length))
+      // Short-circuit: the first decode that yields None or throws sets
+      // `failed`, so decodes not yet started return None at once; the
+      // caller stops waiting at the first None it sees, and shutdownNow()
+      // drops the queue and interrupts the decodes still running. A
+      // failed export pays the in-flight decodes before the scan, not
+      // every footer.
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
       val decoded =
         try {
           val futs = files.map { rel =>
             pool.submit(new java.util.concurrent.Callable[Option[(String, FileExportStats)]] {
               override def call(): Option[(String, FileExportStats)] =
-                decodeOne(rel).map(rel -> _)
+                if (failed.get) None
+                else {
+                  val r =
+                    try decodeOne(rel)
+                    catch { case scala.util.control.NonFatal(_) => None }
+                  if (r.isEmpty) failed.set(true)
+                  r.map(rel -> _)
+                }
             })
           }
-          futs.map(_.get())
-        } finally pool.shutdown()
-      if (decoded.exists(_.isEmpty)) None
-      else Some(decoded.flatten
+          futs.iterator.map(_.get()).takeWhile(_.isDefined).flatten.toVector
+        } finally pool.shutdownNow()
+      if (decoded.size < files.size) None
+      else Some(decoded
         // a 0-row part file has no stats row on the scan path (its
         // groupBy yields nothing), so the footer path must leave it
         // absent too — the manifest entry then carries record_count 0

@@ -144,6 +144,12 @@ final class RestCatalogServer(backing: Catalog,
       * where static tokens are dev-only. */
     oauthCredential: Option[(String, String)] = None) extends AutoCloseable {
   import RestProtocol._
+  RestCatalogServer.init()
+  // one per server, built before the handlers start: a fresh Configuration
+  // re-parses core-default.xml and core-site.xml on first use, once per
+  // response; reads are thread-safe and FileSystem.get caches by scheme
+  // and user
+  private val hadoopConf = new org.apache.hadoop.conf.Configuration()
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   server.setExecutor(pool)
@@ -281,7 +287,7 @@ final class RestCatalogServer(backing: Catalog,
     val metadata: JsonNode =
       try {
         val p = new org.apache.hadoop.fs.Path(loc)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = p.getFileSystem(hadoopConf)
         val in = fs.open(p)
         try mapper.readTree(new String(in.readAllBytes(), StandardCharsets.UTF_8))
         finally in.close()
@@ -385,6 +391,20 @@ final class RestCatalogServer(backing: Catalog,
           s"No route: $method ${x.getRequestURI.getPath}")))
     }
   }
+}
+
+private object RestCatalogServer {
+  // com.sun.net.httpserver leaves TCP_NODELAY off and writes a response's
+  // headers and body as two segments, so under Nagle's algorithm every
+  // body waits for the client's delayed ACK (~40 ms on Linux). The JDK
+  // reads this property once, when sun.net.httpserver.ServerConfig loads
+  // at the first HttpServer.create, so it is set before the first server
+  // starts; a value the user set is kept.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** Runs the initializer above; called before each server is created. */
+  def init(): Unit = ()
 }
 
 /** Client face of the public Iceberg REST catalog protocol — a full

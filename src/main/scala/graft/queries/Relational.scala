@@ -173,6 +173,14 @@ object Relational {
     // value whether produced by `round(sum(decimal), 4) CAST DOUBLE` or
     // by `sum(long) / 10000.0` (both are the nearest double of the same
     // exact rational) — oracle-verified identical at sf0.001/0.01/0.1.
+    // Headroom: the LONG sum wraps silently (non-ANSI) unless
+    // |frame sum| × 10⁴ < 2⁶³, i.e. |frame sum| < ~9.2·10¹⁴; and the
+    // `/ 10000.0` is exact only while |frame sum| × 10⁴ ≤ 2⁵³ (~9·10¹⁵),
+    // i.e. |frame sum| ≤ ~9·10¹¹ — past that the scaled long no longer
+    // fits a double exactly. This ≤3-row frame of l_quantity (TPC-H:
+    // 1..50) sums to at most 150, i.e. 1.5·10⁶ scaled — over 10⁹ times
+    // inside the 2⁵³ bound at any scale factor. A copy of this recipe
+    // with an unbounded frame or a wider column must re-check both.
     Tables(s, dir, "lineitem")
       .select($"l_suppkey", $"l_orderkey", $"l_linenumber", $"l_quantity",
         round($"l_quantity" * 10000).cast(LongType).as("q10k"))

@@ -1626,6 +1626,34 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(CatalogIO.scanMetadataLocation(spark, metaLoc).count() == 300)
   }
 
+  test("an unusable first footer falls back to the scan path's exact stats") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    // part-00000 (first in listing order) holds a 1,500-byte string, a
+    // bound the footer decode refuses as possibly writer-truncated: the
+    // parallel decode stops there (12 files, more than the 8 decoder
+    // threads, so some are still queued) and the export falls back to
+    // the scan. A double column forces the scan path up front for the
+    // reference.
+    val df = (1 to 300).map(i => (i.toLong, if (i == 1) "a" * 1500 else s"n$i"))
+      .toDF("id", "name").repartitionByRange(12, col("id"))
+    val root = Files.createTempDirectory("graft-iceberg").toString
+    val conf = spark.sessionState.newHadoopConf()
+    def stats(metaLoc: String) = {
+      val layout = CatalogIO.readLayout(metaLoc, conf)
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(layout.schemaDdl.get)
+      layout.dataFileStats.get.map { enc =>
+        val d = FileStats.decode(enc, schema).get
+        (d.rowCount, d.cols("id"), d.cols("name"))
+      }.sortBy(_._2.min.get.asInstanceOf[Long])
+    }
+    val fallback = stats(IcebergExport.writeTable(spark, df, s"$root/footer"))
+    val scanned = stats(IcebergExport.writeTable(spark,
+      df.withColumn("x", lit(0.5)), s"$root/scan"))
+    assert(fallback.size == 12 && fallback.map(_._1).sum == 300L)
+    assert(fallback == scanned)
+  }
+
   test("malformed or unsound delete metadata refuses loudly (never resurrects rows)") {
     val dir = s"${Files.createTempDirectory("graft-iceberg").toString}/t4c"
     val metaLoc = IcebergExport.writeTable(spark, sampleDf.coalesce(1), dir)

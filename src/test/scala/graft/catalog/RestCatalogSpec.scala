@@ -2,6 +2,8 @@ package graft.catalog
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -197,6 +199,84 @@ class RestCatalogSpec extends AnyFunSuite {
       cat.createNamespace(Namespace.of("dup"))
       intercept[AlreadyExistsException] { cat.createNamespace(Namespace.of("dup")) }
       assert(!cat.dropTable(TableRef.parse("dup.none")))
+    }
+  }
+
+  /** A small metadata JSON document of its own at a fresh local path. */
+  private def writeDoc(dir: java.nio.file.Path, n: Int): (String, String) = {
+    val doc = s"""{"format-version":2,"table-uuid":"${java.util.UUID.randomUUID()}",""" +
+      s""""location":"file:///w/t$n","last-sequence-number":$n}"""
+    val f = dir.resolve(s"t$n.metadata.json")
+    Files.write(f, doc.getBytes("UTF-8"))
+    (f.toUri.toString, doc)
+  }
+
+  test("round trips do not stall on a delayed ACK (median well under 40 ms)") {
+    // a response's headers and body go out as two writes: with Nagle on,
+    // the body waits for the client's delayed ACK (~40 ms on Linux)
+    val dir = Files.createTempDirectory("graft-rest-lat")
+    withRest(memCfg()) { cfg =>
+      val cat = CatalogFactory.build(cfg)
+      cat.createNamespace(Namespace.of("warm"))
+      def medianMs(calls: Seq[() => Unit]): Double = {
+        val ms = calls.map { call =>
+          val t0 = System.nanoTime(); call(); (System.nanoTime() - t0) / 1e6
+        }.sorted
+        ms(ms.size / 2)
+      }
+      val ns = medianMs((0 until 40).map(i =>
+        () => cat.createNamespace(Namespace.of(s"ns$i"))))
+      val reg = medianMs((0 until 40).map { i =>
+        val loc = writeDoc(dir, i)._1
+        () => cat.registerTable(TableRef(Namespace.of(s"ns$i"), "t"), loc)
+      })
+      assert(ns < 15.0, s"createNamespace median $ns ms")
+      assert(reg < 15.0, s"registerTable median $reg ms")
+    }
+  }
+
+  test("concurrent registers each get their own document back in LoadTableResult") {
+    val dir = Files.createTempDirectory("graft-rest-docs")
+    val backing = CatalogFactory.build(memCfg())
+    backing.createNamespace(Namespace.of("db"))
+    val server = new RestCatalogServer(backing)
+    val http = java.net.http.HttpClient.newHttpClient()
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    def send(req: java.net.http.HttpRequest.Builder): (Int, String) = {
+      val r = http.send(req.build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      (r.statusCode(), r.body())
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val tables = pool.invokeAll((0 until 4).map { w =>
+        new java.util.concurrent.Callable[Seq[(String, String, String)]] {
+          override def call(): Seq[(String, String, String)] =
+            (0 until 25).map { i =>
+              val n = w * 25 + i
+              val (loc, doc) = writeDoc(dir, n)
+              val body = om.createObjectNode()
+              body.put("name", s"t$n"); body.put("metadata-location", loc)
+              val (st, resp) = send(java.net.http.HttpRequest.newBuilder(
+                  java.net.URI.create(s"${server.uri}/v1/graft/namespaces/db/register"))
+                .header("Content-Type", "application/json")
+                .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body.toString)))
+              assert(st == 200, resp)
+              (s"t$n", doc, resp)
+            }
+        }
+      }.asJava).asScala.flatMap(_.get()).toSeq
+      assert(tables.size == 100)
+      tables.foreach { case (name, doc, registered) =>
+        val (st, loaded) = send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"${server.uri}/v1/graft/namespaces/db/tables/$name")))
+        assert(st == 200, loaded)
+        Seq(registered, loaded).foreach(r =>
+          assert(om.readTree(r).get("metadata") == om.readTree(doc), s"$name: $r"))
+      }
+    } finally {
+      pool.shutdownNow()
+      server.close()
     }
   }
 
