@@ -360,7 +360,7 @@ object ScaleSmoke {
         val oneT = (System.nanoTime() - t0) / 1e9
         val after = CatalogIO.readLayout(
           hc.loadTableMetadataLocation(ref), conf)
-        val replaced = before.dataFiles.get.toSet -- after.dataFiles.get.toSet
+        val replaced = before.dataFilePaths.get.toSet -- after.dataFilePaths.get.toSet
         require(after.hasFills, "survivors must keep their fills")
         println(f"[scale] cow x$replicas: one-partition UPDATE replaced " +
           f"${replaced.size} of $total files in $oneT%.1f s " +
@@ -374,8 +374,8 @@ object ScaleSmoke {
         val after2 = CatalogIO.readLayout(
           hc.loadTableMetadataLocation(ref), conf)
         println(f"[scale] cow x$replicas: fill-undecidable UPDATE " +
-          f"replaced ${(after.dataFiles.get.toSet --
-            after2.dataFiles.get.toSet).size} of " +
+          f"replaced ${(after.dataFilePaths.get.toSet --
+            after2.dataFilePaths.get.toSet).size} of " +
           f"${after.dataFiles.get.size} files in $allT%.1f s " +
           "(whole-table COW, doubling as compaction)")
     }
@@ -395,7 +395,6 @@ object ScaleSmoke {
       .select(col("l_orderkey").as("k"), col("l_quantity").as("qty"))
     val meta0 = IcebergExport.writeTable(spark,
       src.repartitionByRange(16, col("k")), s"$dir/store")
-    import spark.implicits._
     val meta1 = IcebergExport.appendDeletes(spark, meta0,
       equality = Some(src.filter(col("k") % 1000 === 0)
         .select(col("k")).distinct()))
@@ -550,7 +549,7 @@ object ScaleSmoke {
       val l = graft.catalog.CatalogIO.readLayout(metaLoc, conf)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(l.schemaDdl.get)
       val perFile = l.absoluteDataFiles.get.zip(
-        l.dataFileStats.get.map(s => graft.catalog.FileStats.decode(s, schema)
+        l.dataFiles.get.map(f => graft.catalog.FileStats.decode(f.stats, schema)
           .map(_.rowCount).getOrElse(throw new IllegalStateException(
             "dv experiment: a file without decodable stats would " +
               "silently shrink the delete set being measured"))))
@@ -626,7 +625,7 @@ object ScaleSmoke {
         f"${(System.nanoTime() - f0) / 1e9}%.2f s (${full(0).getLong(1)} rows)")
       graft.sources.StatsPruning.lastPlanned = None
       val p0 = System.nanoTime()
-      val n = spark.sql(
+      spark.sql(
         s"SELECT SUM(qty) FROM $cat.db.li WHERE k BETWEEN 500000 AND 520000")
         .collect()
       val (skipped, total) = graft.sources.StatsPruning.lastPlanned
@@ -732,7 +731,7 @@ object ScaleSmoke {
       val l0 = graft.catalog.CatalogIO.readLayout(orcMeta, conf)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(l0.schemaDdl.get)
       val perFile = l0.absoluteDataFiles.get.zip(
-        l0.dataFileStats.get.map(s => graft.catalog.FileStats.decode(s, schema)
+        l0.dataFiles.get.map(f => graft.catalog.FileStats.decode(f.stats, schema)
           .map(_.rowCount).getOrElse(throw new IllegalStateException(
             "orc-mor experiment: a file without decodable stats would " +
               "silently shrink the delete set being measured"))))
@@ -789,13 +788,10 @@ object ScaleSmoke {
         import spark.implicits._
         CatalogIO.createTable(spark, cat, ref, Seq((1L, "x")).toDF("id", "v"))
         def inflated(pr: CatalogIO.TableLayout, add: Seq[String]) = pr.copy(
-          dataFiles = Some(pr.dataFiles.get ++ add),
-          dataFileStats = Some(pr.dataFileStats
-            .getOrElse(Seq.fill(pr.dataFiles.get.size)("")) ++
-            Seq.fill(add.size)("")),
-          dataFileSizes = Some(pr.dataFileSizes
-            .getOrElse(Seq.fill(pr.dataFiles.get.size)(-1L)) ++
-            Seq.fill(add.size)(1024L)))
+          dataFiles = Some(pr.dataFiles.get ++
+            add.map(CatalogIO.DataFile(_, size = 1024L))),
+          entryFields = pr.entryFields +
+            LayoutCodec.ManifestFieldTokens.Stats + LayoutCodec.ManifestFieldTokens.Sizes)
         val pr0 = CatalogIO.readLayout(cat.loadTableMetadataLocation(ref), conf)
         CatalogIO.commitMetadataOnly(cat, ref,
           inflated(pr0, (0 until n).map(i => f"part-$i%06d-synth.parquet")))
@@ -858,16 +854,14 @@ object ScaleSmoke {
       val pr0 = CatalogIO.readLayout(cat.loadTableMetadataLocation(ref), conf)
       // entry i covers ids [i*1000, i*1000+999] — the clustered shape
       // (FileStats text form: r,<rows>;c,<col>,=<min>,=<max>,<nulls>)
-      val synth = (0 until n).map(i => f"part-$i%06d-synth.parquet")
-      val synthStats = (0 until n).map(i =>
-        s"r,1000;c,id,=${i * 1000L},=${i * 1000L + 999L},0")
+      val synth = (0 until n).map(i => CatalogIO.DataFile(
+        f"part-$i%06d-synth.parquet",
+        stats = s"r,1000;c,id,=${i * 1000L},=${i * 1000L + 999L},0",
+        size = 1024L))
       CatalogIO.commitMetadataOnly(cat, ref, pr0.copy(
         dataFiles = Some(pr0.dataFiles.get ++ synth),
-        dataFileStats = Some(pr0.dataFileStats
-          .getOrElse(Seq.fill(pr0.dataFiles.get.size)("")) ++ synthStats),
-        dataFileSizes = Some(pr0.dataFileSizes
-          .getOrElse(Seq.fill(pr0.dataFiles.get.size)(-1L)) ++
-          Seq.fill(n)(1024L))))
+        entryFields = pr0.entryFields +
+          LayoutCodec.ManifestFieldTokens.Stats + LayoutCodec.ManifestFieldTokens.Sizes))
       // eager baseline: every chunk parsed
       val t0 = System.nanoTime()
       val full = CatalogIO.readLayout(cat.loadTableMetadataLocation(ref), conf)
@@ -1284,7 +1278,7 @@ object ScaleSmoke {
     * commit). */
   private def renameScale(spark: SparkSession, out: String, replicas: Int): Unit = {
     import graft.catalog.{CatalogIO, HadoopFsCatalog, Namespace, TableRef}
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.col
     val dir = s"/tmp/graft_rename_x$replicas"
     graft.sources.TempCatalog.deleteRecursively(dir)
     val src = spark.read.parquet(s"$out/lineitem.parquet")

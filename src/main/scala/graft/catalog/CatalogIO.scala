@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.catalog.LayoutCodec.MEntry
+import graft.catalog.LayoutCodec.ManifestFieldTokens
 
 /** Data-plane glue between catalogs and Spark.
   *
@@ -165,6 +165,42 @@ object CatalogIO {
     require(count >= 0, "negative manifest-chunk count")
   }
 
+  /** One data file of a manifest version — Iceberg's manifest entry
+    * re-expressed: every per-file fact the version records travels in
+    * the one entry, so no subset, filter or append can attribute one
+    * file's metadata to another.
+    *
+    *  - `path`: relative to the layout's `dataLocation` (or an absolute
+    *    relocated spelling).
+    *  - `seq`: the version the file entered the manifest at — the
+    *    fileSeq < deleteSeq gate and the rename epochs read it.
+    *  - `stats`: encoded [[FileStats]] (`""` = no stats, unprunable).
+    *  - `size`: bytes (-1 = unknown).
+    *  - `ndv`: encoded [[Ndv]] sketches (`""` = none).
+    *  - `format`: the file's on-disk format — parquet, orc or avro.
+    *  - `fills`: the (column → external JVM value) constants the file
+    *    must serve because it physically lacks the column — a v3
+    *    `initial-default` of a column added after the file was written
+    *    (round 14), or an IDENTITY partition value of a Hive-imported
+    *    (`add_files`-shaped) file (round 16). Empty for files that
+    *    contain the column (their own values — including legitimate
+    *    NULLs — pass through). Serialized in the engine's manifests, so
+    *    adopted fill tables stay servable.
+    *  - `lineage`: v3 ROW LINEAGE (`first_row_id`, data sequence
+    *    number) per the spec's inheritance — a row's `_row_id` is its
+    *    file's first id + its position, its
+    *    `_last_updated_sequence_number` the file's data seq.
+    *    `first = None` for files whose snapshot predates the v3 upgrade
+    *    (their rows serve NULL ids).
+    *
+    * Which of seq/stats/size/ndv/lineage a version RECORDS is
+    * [[TableLayout.entryFields]]; a layout read from metadata holds the
+    * defaults above in the fields it does not record. */
+  final case class DataFile(path: String, seq: Int = 0, stats: String = "",
+      size: Long = -1L, ndv: String = "", format: String = "parquet",
+      fills: Seq[(String, Any)] = Nil,
+      lineage: (Option[Long], Long) = (None, 0L))
+
   final case class TableLayout(
       dataLocation: String,
       partitionColumns: Seq[String] = Nil,
@@ -172,16 +208,21 @@ object CatalogIO {
       bucketColumns: Seq[String] = Nil,
       sortColumns: Seq[String] = Nil,
       schemaDdl: Option[String] = None,
-      dataFiles: Option[Seq[String]] = None,
+      dataFiles: Option[Seq[DataFile]] = None,
       properties: Map[String, String] = Map.empty,
       deleteFiles: Seq[DeleteFile] = Nil,
-      dataFileSeqs: Option[Seq[Int]] = None,
+      /** The OPTIONAL per-entry fields this version records
+        * ([[LayoutCodec.ManifestFieldTokens]]: `seqs` — only while
+        * delete files or renames are live —, `stats`, `sizes`, `ndv`,
+        * and the never-serialized `lineage` of v3 Iceberg layouts).
+        * Recorded even for an empty manifest: the commit funnel re-
+        * derives exactly the stats and sizes a version does not record.
+        * Formats are recorded iff `dataFormat == "mixed"`, fills iff
+        * any entry has one. */
+      entryFields: Set[String] = Set.empty,
       renameOps: Seq[RenameOp] = Nil,
       droppedColumns: Seq[String] = Nil,
-      dataFileStats: Option[Seq[String]] = None,
-      dataFileSizes: Option[Seq[Long]] = None,
       commitOp: Option[String] = None,
-      dataFileNdv: Option[Seq[String]] = None,
       /** How THIS version's manifest entries are stored on disk, when
         * chunked (round 12 — Iceberg's manifest-list indirection
         * re-expressed): the version's metadata JSON records chunk-file
@@ -206,42 +247,10 @@ object CatalogIO {
       /** On-disk format of the DATA files (round 14): the engine's own
         * tables are always `parquet`; a converted Apache Iceberg layout
         * may be `orc`, `avro`, or (round 15) `mixed` — per-ENTRY
-        * formats in [[dataFileFormats]], the Hive-migration shape (old
-        * ORC partitions + new parquet appends). Non-parquet layouts are
-        * read-only interop: live deletes, renames, and adoption refuse
-        * there (the MOR/epoch machinery is position-addressed via
-        * parquet's `_metadata.row_index`, which the other sources do
-        * not serve). */
+        * formats in [[DataFile.format]], the Hive-migration shape (old
+        * ORC partitions + new parquet appends). Scans group files by
+        * format and serve one reader stack per group. */
       dataFormat: String = "parquet", // parquet | orc | avro | mixed
-      /** Per-file constant FILLS: parallel to `dataFiles`, each entry
-        * lists the (column → external JVM value) constants that file
-        * must serve because it physically lacks the column — a v3
-        * `initial-default` of a column added after the file was written
-        * (round 14), or an IDENTITY partition value of a Hive-imported
-        * (`add_files`-shaped) file (round 16). Empty for files that
-        * contain the column (their own values — including legitimate
-        * NULLs — pass through). Fills coexist with parquet/ORC/mixed
-        * formats AND live deletes (the MOR scan injects below its
-        * probes); renames and avro refuse. Serialized in the engine's
-        * manifests (inline `dataFileFills` / chunked `fills` column),
-        * so adopted fill tables stay servable. */
-      dataFileFills: Option[Seq[Seq[(String, Any)]]] = None,
-      /** Per-file data formats (round 15, `dataFormat == "mixed"`
-        * only): parallel to `dataFiles`, each entry's manifest
-        * `file_format` lowercased. Scans group files by format and
-        * serve one reader stack per group. */
-      dataFileFormats: Option[Seq[String]] = None,
-      /** v3 ROW LINEAGE (round 16, Iceberg v3 layouts only — never
-        * serialized): parallel to `dataFiles`, each entry's
-        * (`first_row_id`, data sequence number) per the spec's
-        * inheritance — a row's `_row_id` is its file's first id + its
-        * position, its `_last_updated_sequence_number` the file's data
-        * seq. `first = None` for files whose snapshot predates the v3
-        * upgrade (their rows serve NULL ids). Folded into the ONE
-        * manifest walk [[IcebergFormat.toTableLayout]] performs (judge
-        * r15 #3: the lineage triple used to walk the manifests a second
-        * time at plan time). */
-      dataFileLineage: Option[Seq[(Option[Long], Long)]] = None,
       /** Top-level Iceberg `uuid` columns (round 18, conversion-only —
         * never serialized): served as StringType per the public
         * Iceberg-Spark mapping. The parquet files store fixed[16] with
@@ -273,10 +282,6 @@ object CatalogIO {
     require(uuidColumns.isEmpty || dataFormat == "parquet",
       "uuid columns serve parquet layouts; rewrite the column as " +
         "string first")
-    require(dataFileLineage.forall(s => dataFiles.exists(_.size == s.size)),
-      "dataFileLineage must parallel dataFiles one-to-one")
-    require(dataFileFills.forall(s => dataFiles.exists(_.size == s.size)),
-      "dataFileFills must parallel dataFiles one-to-one")
     // fills + DELETES are served (round 16): the MOR machinery injects
     // the constants below its probes. Round 19: fills serve over AVRO
     // entries too (the avro decoder NULL-fills absent fields, so the
@@ -286,10 +291,11 @@ object CatalogIO {
     // injects each slice's constants below its probes and position
     // counter, the same 1:1-row-map argument as parquet/orc. Renames
     // keep refusing.
-    require(dataFileFills.forall(_ => renameOps.isEmpty),
-      "per-file constant fills never coexist with renames")
     /** Any file with a non-empty fill set? (the scan-routing test) */
-    def hasFills: Boolean = dataFileFills.exists(_.exists(_.nonEmpty))
+    @transient lazy val hasFills: Boolean =
+      dataFiles.exists(_.exists(_.fills.nonEmpty))
+    require(renameOps.isEmpty || !hasFills,
+      "per-file constant fills never coexist with renames")
     /** Any layout file spelled ABSOLUTE — a converted Iceberg
       * relocated layout (`write.data.path` / object-storage: data
       * outside the table location). Engine manifests never produce
@@ -298,7 +304,7 @@ object CatalogIO {
       * fills, never directories), and adoption refuses (engine
       * manifests re-root relative spellings). */
     @transient lazy val hasRelocated: Boolean =
-      dataFiles.exists(_.exists(isAbsoluteSpelling)) ||
+      dataFiles.exists(_.exists(f => isAbsoluteSpelling(f.path))) ||
         deleteFiles.exists(d => isAbsoluteSpelling(d.path) ||
           d.targets.exists(isAbsoluteSpelling))
     /** Minimal common-root prefixes of the relocated spellings — one
@@ -307,7 +313,7 @@ object CatalogIO {
       * These are the column-side matching roots the delete-application
       * relativizer accepts in addition to the segment prefixes. */
     @transient lazy val relocatedRoots: Seq[String] = {
-      val abs = (dataFiles.getOrElse(Nil) ++ deleteFiles.map(_.path) ++
+      val abs = (dataFilePaths.getOrElse(Nil) ++ deleteFiles.map(_.path) ++
         deleteFiles.flatMap(_.targets)).filter(isAbsoluteSpelling)
       abs.map(p => p.take(math.max(p.lastIndexOf('/'), 0)))
         .distinct
@@ -341,8 +347,8 @@ object CatalogIO {
       * values come from fills/manifests, never directories. */
     @transient lazy val suppressBasePath: Boolean =
       hasFills || hasRelocated ||
-        (partitionColumns.isEmpty && dataFiles.exists(_.exists(p =>
-          p.split('/').dropRight(1).exists(_.contains('=')))))
+        (partitionColumns.isEmpty && dataFiles.exists(_.exists(f =>
+          f.path.split('/').dropRight(1).exists(_.contains('=')))))
     require(dataFormat == "parquet" || dataFormat == "orc" ||
       dataFormat == "avro" || dataFormat == "mixed",
       s"unsupported data file format '$dataFormat' (parquet, orc, avro, or mixed)")
@@ -360,31 +366,13 @@ object CatalogIO {
     // position-addressed file, graft.sources.AvroMorScan), so every
     // recorded data format now routes a merge-on-read scan and the
     // format gate on deletes is gone.
-    require((dataFormat == "mixed") == dataFileFormats.isDefined,
-      "dataFileFormats accompany exactly the mixed data format")
-    require(dataFileFormats.forall(s => dataFiles.exists(_.size == s.size)),
-      "dataFileFormats must parallel dataFiles one-to-one")
-    require(dataFileFormats.forall(_.forall(f =>
-      f == "parquet" || f == "orc" || f == "avro")),
+    require(dataFormat != "mixed" || dataFiles.exists(_.forall(f =>
+      f.format == "parquet" || f.format == "orc" || f.format == "avro")),
       "per-file formats must each be parquet, orc, or avro")
     require(deleteFiles.isEmpty || dataFiles.isDefined,
       "equality-delete files require a file-manifest version")
     require(renameOps.isEmpty || dataFiles.isDefined,
       "column-rename mappings require a file-manifest version")
-    require(dataFileSeqs.forall(s => dataFiles.exists(_.size == s.size)),
-      "dataFileSeqs must parallel dataFiles one-to-one")
-    // misaligned stats would prune with the WRONG file's envelope and
-    // silently drop matching rows — corruption, not a default
-    require(dataFileStats.forall(s => dataFiles.exists(_.size == s.size)),
-      "dataFileStats must parallel dataFiles one-to-one")
-    // misaligned sizes would split-plan the wrong byte ranges (silent
-    // row loss at read) — same hardness as the stats array
-    require(dataFileSizes.forall(s => dataFiles.exists(_.size == s.size)),
-      "dataFileSizes must parallel dataFiles one-to-one")
-    // misattributed sketches would hand the optimizer another file's
-    // cardinalities — same hardness as the other parallel arrays
-    require(dataFileNdv.forall(s => dataFiles.exists(_.size == s.size)),
-      "dataFileNdv must parallel dataFiles one-to-one")
     /** Seq-gated per-file state (deletes or renames) is live: manifests
       * record per-file seqs while any is. */
     def seqGated: Boolean = deleteFiles.nonEmpty || renameOps.nonEmpty
@@ -411,17 +399,14 @@ object CatalogIO {
         })
       }
     }
+    /** Segment-relative paths of this version's data files. */
+    def dataFilePaths: Option[Seq[String]] = dataFiles.map(_.map(_.path))
+    /** Absolute path of data file `f`. */
+    def absolutePath(f: DataFile): String =
+      new Path(dataLocation, f.path).toString
     /** Absolute paths of this version's data files (manifest versions). */
     def absoluteDataFiles: Option[Seq[String]] =
-      dataFiles.map(_.map(f => new Path(dataLocation, f).toString))
-    /** (absolute path, manifest-entry seq) per data file. Manifests that
-      * predate seq recording default every file to seq 0 — they all
-      * predate any delete file, so every delete applies to them. */
-    def absoluteDataFilesWithSeqs: Option[Seq[(String, Int)]] =
-      dataFiles.map { fs =>
-        val seqs = dataFileSeqs.getOrElse(Seq.fill(fs.size)(0))
-        fs.map(f => new Path(dataLocation, f).toString).zip(seqs)
-      }
+      dataFiles.map(_.map(absolutePath))
     def absoluteDeleteFiles: Seq[(String, Int)] =
       deleteFiles.map(d => (new Path(dataLocation, d.path).toString, d.seq))
     def eqDeleteFiles: Seq[DeleteFile] =
@@ -501,43 +486,29 @@ object CatalogIO {
     def posDeletesFor(relFile: String, fileSeq: Int): Seq[String] =
       posByTarget.getOrElse(relFile, Nil) ++
         untargetedPos.collect { case (p, s) if fileSeq < s => p }
-    /** (absolute path, encoded stats) per data file, when this version
-      * records per-file stats (`""` = no stats for that file). */
-    def absoluteDataFilesWithStats: Option[Seq[(String, String)]] =
-      for { fs <- dataFiles; ss <- dataFileStats } yield
-        fs.map(f => new Path(dataLocation, f).toString).zip(ss)
-    /** (absolute path, encoded NDV sketches) per data file, when this
-      * version records them (`""` = no sketch for that file). */
-    def absoluteDataFilesWithNdv: Option[Seq[(String, String)]] =
-      for { fs <- dataFiles; ss <- dataFileNdv } yield
-        fs.map(f => new Path(dataLocation, f).toString).zip(ss)
+    /** Absolute path → encoded stats of every data file whose stats
+      * this version records (files without usable stats are absent). */
+    def absoluteStats: Map[String, String] =
+      if (!entryFields(ManifestFieldTokens.Stats)) Map.empty
+      else dataFiles.getOrElse(Nil).iterator.filter(_.stats.nonEmpty)
+        .map(f => absolutePath(f) -> f.stats).toMap
     /** (absolute path, size in bytes) per data file when this version
       * records COMPLETE sizes (every entry known) — the contract split
       * planning needs: a single unknown (-1) entry drops the whole
       * manifest back to filesystem listing rather than planning one
       * file's byte range wrong. */
-    def absoluteDataFilesWithSizes: Option[Seq[(String, Long)]] =
-      for { fs <- dataFiles; ss <- dataFileSizes if ss.forall(_ >= 0) } yield
-        fs.map(f => new Path(dataLocation, f).toString).zip(ss)
+    def absoluteSizes: Option[Seq[(String, Long)]] =
+      dataFiles.filter(_ => sizesComplete)
+        .map(_.map(f => (absolutePath(f), f.size)))
+    /** Does this version record a known size for every data file? */
+    def sizesComplete: Boolean = entryFields(ManifestFieldTokens.Sizes) &&
+      dataFiles.exists(_.forall(_.size >= 0))
     /** This layout restricted to the data files in `keep` (segment-
-      * relative paths), every parallel per-file array filtered in
-      * lockstep — a misaligned subset would prune/split/fill with the
-      * WRONG file's metadata. Chunk references are dropped (they
-      * describe the full entry set, not the subset). */
-    def retainDataFiles(keep: Set[String]): TableLayout = {
-      val idx = dataFiles.getOrElse(Nil).zipWithIndex
-        .collect { case (f, i) if keep(f) => i }
-      def sub[T](o: Option[Seq[T]]): Option[Seq[T]] = o.map(s => idx.map(s))
-      copy(dataFiles = sub(dataFiles),
-        dataFileSizes = sub(dataFileSizes),
-        dataFileStats = sub(dataFileStats),
-        dataFileSeqs = sub(dataFileSeqs),
-        dataFileNdv = sub(dataFileNdv),
-        dataFileFills = sub(dataFileFills),
-        dataFileFormats = sub(dataFileFormats),
-        dataFileLineage = sub(dataFileLineage),
+      * relative paths). Chunk references are dropped (they describe the
+      * full entry set, not the subset). */
+    def retainDataFiles(keep: Set[String]): TableLayout =
+      copy(dataFiles = dataFiles.map(_.filter(f => keep(f.path))),
         manifestChunks = None)
-    }
   }
 
   /** JSON codec for one file's constant-fill set — `""` = no fills
@@ -692,14 +663,14 @@ object CatalogIO {
     * forward. An underfull FINAL reused chunk (< target/2) is merged
     * with the tail instead — amortized-O(1) extra writing that stops
     * micro-batch appends accreting one tiny chunk per commit. */
-  private def planChunks(newEntries: Vector[MEntry],
-      prior: Seq[(ManifestChunk, Vector[MEntry])],
-      target: Int): Seq[Either[ManifestChunk, Vector[MEntry]]] = {
+  private def planChunks(newEntries: Vector[DataFile],
+      prior: Seq[(ManifestChunk, Vector[DataFile])],
+      target: Int): Seq[Either[ManifestChunk, Vector[DataFile]]] = {
     val firstIdx = new java.util.HashMap[String, Int](newEntries.size * 2)
     newEntries.iterator.zipWithIndex.foreach { case (e, i) =>
       firstIdx.putIfAbsent(e.path, i)
     }
-    def sliceEq(s: Int, ents: Vector[MEntry]): Boolean = {
+    def sliceEq(s: Int, ents: Vector[DataFile]): Boolean = {
       var k = 0
       while (k < ents.size) {
         if (newEntries(s + k) != ents(k)) return false
@@ -709,7 +680,7 @@ object CatalogIO {
     }
     // parts keep reused chunks' entries alongside, for the tail merge
     val parts = scala.collection.mutable.ArrayBuffer
-      .empty[(Option[ManifestChunk], Vector[MEntry])]
+      .empty[(Option[ManifestChunk], Vector[DataFile])]
     var i = 0
     prior.foreach { case (c, ents) =>
       if (ents.nonEmpty) {
@@ -735,8 +706,8 @@ object CatalogIO {
       }
     }
     // merge adjacent new runs, then split every new run at the target
-    val out = Vector.newBuilder[Either[ManifestChunk, Vector[MEntry]]]
-    var pendingNew = Vector.empty[MEntry]
+    val out = Vector.newBuilder[Either[ManifestChunk, Vector[DataFile]]]
+    var pendingNew = Vector.empty[DataFile]
     def flushNew(): Unit = {
       pendingNew.grouped(target).foreach(g => out += Right(g))
       pendingNew = Vector.empty
@@ -767,11 +738,11 @@ object CatalogIO {
     // parquet machinery on every file refuses upstream).
     val text = layout.dataFiles match {
       case Some(files) if files.size > manifestInlineMax =>
-        val newEntries = LayoutCodec.entriesOf(layout)
-        val priorSlices: Seq[(ManifestChunk, Vector[MEntry])] =
+        val newEntries = LayoutCodec.chunkEntries(layout)
+        val priorSlices: Seq[(ManifestChunk, Vector[DataFile])] =
           priorLayout.flatMap { pl =>
             pl.manifestChunks.map { chunks =>
-              val pe = LayoutCodec.entriesOf(pl)
+              val pe = LayoutCodec.chunkEntries(pl)
               var off = 0
               chunks.map { c =>
                 val s = pe.slice(off, off + c.count); off += c.count; (c, s)
@@ -841,7 +812,7 @@ object CatalogIO {
       partitionBy,
       bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
       Some(df.schema.toDDL),
-      dataFiles = Some(listDataFiles(cat.fileSystem, dataDir)),
+      dataFiles = Some(listDataFiles(cat.fileSystem, dataDir).map(DataFile(_))),
       properties = properties,
       commitOp = Some(CommitOps.Create)), priorLayout = None)
     val metaDir = new Path(dir, "metadata")
@@ -966,7 +937,7 @@ object CatalogIO {
     val layout = TableLayout(dataDir.toString, partitionBy,
       bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
       Some(df.schema.toDDL),
-      dataFiles = Some(listDataFiles(cat.fileSystem, dataDir)),
+      dataFiles = Some(listDataFiles(cat.fileSystem, dataDir).map(DataFile(_))),
       properties = properties)
     commitLayoutAsVersion(cat, ref, n, layout, op)
   }
@@ -1033,68 +1004,52 @@ object CatalogIO {
     // marker (e.g. a stream's replay fence) survives interleaved appends;
     // live delete files carry forward with the appended files seq'd at n,
     // so prior deletes never apply to them (insert-after-delete survives)
-    val (fmt, fmts) = appendedFormats(prior, priorFiles, moved.size)
+    val files = withAdded(priorFiles, moved, n, prior.seqGated)
     val layout = TableLayout(prior.dataLocation, partitionBy,
       bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
       prior.schemaDdl.orElse(Some(df.schema.toDDL)),
-      dataFiles = Some(priorFiles ++ moved),
+      dataFiles = Some(files),
       properties = prior.properties ++ properties,
       deleteFiles = prior.deleteFiles,
-      dataFileSeqs = appendedSeqs(prior, priorFiles, moved.size, n),
+      entryFields = seqFields(prior.seqGated),
       renameOps = prior.renameOps,
       droppedColumns = prior.droppedColumns,
       clusterTransforms = prior.clusterTransforms,
-      dataFormat = fmt, dataFileFormats = fmts,
-      dataFileFills = appendedFills(prior, priorFiles, moved.size),
+      dataFormat = formatOf(files, prior.dataFormat),
       uuidColumns = prior.uuidColumns)
     commitLayoutAsVersion(cat, ref, n, layout, CommitOps.Append, Some(prior))
   }
 
-  /** Constant fills for prior ∪ appended files: prior entries keep
-    * theirs, engine-written files contain every column (fill-free).
-    * None when the prior carries none (the common case). */
-  private def appendedFills(prior: TableLayout, priorFiles: Seq[String],
-      added: Int): Option[Seq[Seq[(String, Any)]]] =
-    if (!prior.hasFills) None
-    else Some(prior.dataFileFills
-      .getOrElse(Seq.fill(priorFiles.size)(Seq.empty)) ++
-      Seq.fill(added)(Seq.empty[(String, Any)]))
+  /** The next version's entries: the `kept` prior entries — each
+    * keeping its seq, format and fills — then `added`, engine-written
+    * parquet files that contain every column (fill-free) seq'd at
+    * version `n`, past every live delete. Seqs matter only while
+    * `gated` (delete files or renames live); otherwise they take the
+    * seq-0 default, which says every file predates any future delete. */
+  private def withAdded(kept: Seq[DataFile], added: Seq[String], n: Int,
+      gated: Boolean): Seq[DataFile] =
+    kept ++ added.map(f => DataFile(f, seq = if (gated) n else 0))
 
-  /** Manifest-entry seqs for prior ∪ (files added at version `n`) —
-    * recorded only while delete files are live (delete-free tables keep
-    * the seq-less round-7 format; their files all predate any future
-    * delete, which the seq-0 default then expresses). */
-  private def appendedSeqs(prior: TableLayout, priorFiles: Seq[String],
-      added: Int, n: Int): Option[Seq[Int]] =
-    if (!prior.seqGated) None
-    else Some(prior.dataFileSeqs.getOrElse(Seq.fill(priorFiles.size)(0)) ++
-      Seq.fill(added)(n))
+  /** The entry fields a commit records before the funnel re-derives
+    * stats, sizes and NDV: seqs only while delete files or renames are
+    * live (delete-free tables keep the seq-less round-7 format). */
+  private def seqFields(gated: Boolean): Set[String] =
+    if (gated) Set(ManifestFieldTokens.Seqs) else Set.empty
 
-  /** (dataFormat, per-entry formats) after appending `added` PARQUET
-    * files to `prior` (round 16 — judge r15 #4): parquet-only tables
-    * keep the formats-free shape; an adopted ORC/avro/mixed table
-    * becomes (or stays) MIXED, its prior entries keeping their recorded
-    * formats — the Hive-migration life cycle (old ORC partitions, new
-    * parquet appends) through the ordinary commit funnel. */
-  private def appendedFormats(prior: TableLayout, priorFiles: Seq[String],
-      added: Int): (String, Option[Seq[String]]) =
-    if (prior.dataFormat == "parquet") ("parquet", None)
-    else {
-      val priorFmts = prior.dataFileFormats
-        .getOrElse(Seq.fill(priorFiles.size)(prior.dataFormat))
-      val all = priorFmts ++ Seq.fill(added)("parquet")
-      val fmt = if (all.distinct.sizeIs == 1) all.head else "mixed"
-      // MIXED + live deletes SERVES since rounds 18/19 (per-format-group
-      // counting-read MOR, avro groups included), so appends onto
-      // delete-live adopted ORC/avro bases commit — the Hive-migration
-      // lifecycle keeps taking INSERT INTO while deletes are live. The
-      // appended files seq at n, PAST the live deletes (insert-after-
-      // delete survives), exactly the homogeneous-append contract.
-      // MIXED + RENAMES serves too (late round 20: per-epoch mixed
-      // composites), so an INSERT after a rename on an adopted ORC/avro
-      // base commits — the appended parquet files seq past the rename
-      // boundary and read under current names.
-      if (fmt == "mixed") (fmt, Some(all)) else (fmt, None)
+  /** The data format `files` share, or `mixed` (round 16 — judge r15
+    * #4): parquet appends onto an adopted ORC/avro table make it MIXED,
+    * its prior entries keeping their formats — the Hive-migration life
+    * cycle (old ORC partitions, new parquet appends) through the
+    * ordinary commit funnel; `ifEmpty` for an empty manifest. MIXED +
+    * live deletes SERVES since rounds 18/19 (per-format-group
+    * counting-read MOR, avro groups included) and MIXED + RENAMES since
+    * late round 20 (per-epoch mixed composites), so appends onto such
+    * bases commit. */
+  private def formatOf(files: Seq[DataFile], ifEmpty: String): String =
+    files.iterator.map(_.format).distinct.take(2).toList match {
+      case Nil => ifEmpty
+      case f :: Nil => f
+      case _ => "mixed"
     }
 
   // ----- staged-file commits (round 8: the native DSv2 BatchWrite) -----
@@ -1155,19 +1110,18 @@ object CatalogIO {
             "retry the whole append")
       // appends cannot change the schema (insert resolution projects onto
       // the table schema), so the prior version's recorded DDL carries over
-      val (fmt, fmts) = appendedFormats(prior, priorFiles, moved.size)
+      val files = withAdded(priorFiles, moved, n, prior.seqGated)
       try return commitLayoutAsVersion(cat, ref, n, TableLayout(prior.dataLocation,
         partitionBy, bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
         prior.schemaDdl.orElse(Some(schemaDdl)),
-        dataFiles = Some(priorFiles ++ moved),
+        dataFiles = Some(files),
         properties = prior.properties,
         deleteFiles = prior.deleteFiles,
-        dataFileSeqs = appendedSeqs(prior, priorFiles, moved.size, n),
+        entryFields = seqFields(prior.seqGated),
         renameOps = prior.renameOps,
         droppedColumns = prior.droppedColumns,
         clusterTransforms = prior.clusterTransforms,
-        dataFormat = fmt, dataFileFormats = fmts,
-        dataFileFills = appendedFills(prior, priorFiles, moved.size),
+        dataFormat = formatOf(files, prior.dataFormat),
         // adopted uuid tables: the DSv2 writer already wrote the staged
         // files in the 16-byte physical form (GraftDataWriter) — the
         // conversion columns carry forward
@@ -1226,7 +1180,7 @@ object CatalogIO {
     commitLayoutAsVersion(cat, ref, n, TableLayout(dataDir.toString,
       partitionBy, bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
       Some(schemaDdl),
-      dataFiles = Some(manifest),
+      dataFiles = Some(manifest.map(DataFile(_))),
       properties = priorProps,
       // a full overwrite replaces DATA; the declared clustering policy
       // carries forward like the commit-scoped properties do
@@ -1259,46 +1213,26 @@ object CatalogIO {
     // to them); the staged replacements are seq'd at n, PAST every live
     // delete — a rewritten file's rows already reflect the deletes its
     // source files carried (the rewrite scanned through them)
-    val priorSeqs = prior.dataFileSeqs.getOrElse(Seq.fill(priorFiles.size)(0))
-    val keptIdx = priorFiles.zipWithIndex
-      .collect { case (f, i) if keepFile(f) => i }
-    val survivors = keptIdx.map(i => (priorFiles(i), priorSeqs(i)))
     val moved = moveIntoSegment(cat.fileSystem, staging,
       new Path(prior.dataLocation), stagedFiles)
-    // survivors keep their FILL sets and FORMATS in lockstep (round 17
-    // — a replace that dropped fills would silently NULL every filled
-    // column of the kept files; a dropped format would read ORC bytes
-    // through the parquet reader); staged replacements are engine
-    // parquet materializing all columns, so they carry neither. An
-    // all-replaced non-parquet table comes out homogeneous parquet —
-    // the COW MERGE/UPDATE/DELETE route for adopted ORC/avro tables.
-    val fills = prior.dataFileFills
-      .filter(_ => prior.hasFills)
-      .map(all => keptIdx.map(all) ++
-        Seq.fill(moved.size)(Seq.empty[(String, Any)]))
-    val (fmt, fmts) =
-      if (prior.dataFormat == "parquet") ("parquet", None)
-      else {
-        val priorFmts = prior.dataFileFormats
-          .getOrElse(Seq.fill(priorFiles.size)(prior.dataFormat))
-        val all = keptIdx.map(priorFmts) ++ Seq.fill(moved.size)("parquet")
-        val f = if (all.isEmpty || all.distinct.sizeIs == 1)
-          all.headOption.getOrElse("parquet") else "mixed"
-        (f, if (f == "mixed") Some(all) else None)
-      }
+    // survivors keep their FILL sets and FORMATS (round 17 — a replace
+    // that dropped fills would silently NULL every filled column of the
+    // kept files; a dropped format would read ORC bytes through the
+    // parquet reader). An all-replaced non-parquet table comes out
+    // homogeneous parquet — the COW MERGE/UPDATE/DELETE route for
+    // adopted ORC/avro tables.
+    val files = withAdded(priorFiles.filter(f => keepFile(f.path)), moved, n,
+      prior.seqGated)
     commitLayoutAsVersion(cat, ref, n, TableLayout(prior.dataLocation,
       partitionBy, bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
       prior.schemaDdl.orElse(Some(schemaDdl)),
-      dataFiles = Some(survivors.map(_._1) ++ moved),
+      dataFiles = Some(files),
       properties = prior.properties,
       deleteFiles = prior.deleteFiles,
-      dataFileSeqs =
-        if (!prior.seqGated) None
-        else Some(survivors.map(_._2) ++ Seq.fill(moved.size)(n)),
+      entryFields = seqFields(prior.seqGated),
       renameOps = prior.renameOps,
       droppedColumns = prior.droppedColumns,
-      dataFileFills = fills,
-      dataFormat = fmt, dataFileFormats = fmts,
+      dataFormat = formatOf(files, "parquet"),
       clusterTransforms = prior.clusterTransforms,
       // survivors keep the 16-byte physical form and the staged COW
       // replacements were written in it too (GraftDataWriter) — the
@@ -1421,18 +1355,14 @@ object CatalogIO {
     // per-entry formats must record it or the scan would read parquet
     // bytes through the wrong decoder (round 19, with the format gate
     // above lifted)
-    val (fmt, fmts) = appendedFormats(prior, priorFiles, moved.size)
+    val files = withAdded(priorFiles, moved, n, deletes.nonEmpty)
     commitLayoutAsVersion(cat, ref, n, prior.copy(
-      dataFiles = Some(priorFiles ++ moved),
+      dataFiles = Some(files),
       deleteFiles = deletes,
-      dataFileSeqs =
-        if (deletes.isEmpty) None
-        else Some(prior.dataFileSeqs.getOrElse(Seq.fill(priorFiles.size)(0)) ++
-          Seq.fill(moved.size)(n)),
-      dataFileStats = None, // re-derived in the funnel (prior ∪ footer reads)
-      dataFileSizes = None, dataFileNdv = None,
-      dataFormat = fmt, dataFileFormats = fmts,
-      dataFileFills = appendedFills(prior, priorFiles, moved.size)),
+      // stats, sizes and NDV are re-derived in the funnel (prior ∪
+      // footer reads)
+      entryFields = seqFields(deletes.nonEmpty),
+      dataFormat = formatOf(files, prior.dataFormat)),
       if (delFile.isDefined) CommitOps.Delete else CommitOps.Append,
       Some(prior))
   }
@@ -1457,21 +1387,11 @@ object CatalogIO {
     val priorFiles = prior.dataFiles.getOrElse(throw new UnsupportedOperationException(
       s"Table $ref v${n - 1} predates file manifests (whole-directory snapshot); " +
         "INSERT OVERWRITE once to upgrade it before manifest-level deletes"))
-    // Vectors first: positional apply on a List inside the index loop
-    // is O(n) — O(n²) on a large manifest (the entriesOf lesson)
-    val pf = priorFiles.toVector
-    val ps = prior.dataFileSeqs.getOrElse(Seq.fill(pf.size)(0)).toVector
-    val pfills = prior.dataFileFills.map(_.toVector)
-    val keepIdx = pf.indices.filter(i => keepFile(pf(i)))
     commitLayoutAsVersion(cat, ref, n, prior.copy(
-      dataFiles = Some(keepIdx.map(pf)),
-      dataFileSeqs =
-        if (!prior.seqGated) None else Some(keepIdx.map(ps)),
-      dataFileStats = None, // re-derived in the funnel (all carried forward)
-      dataFileSizes = None, dataFileNdv = None,
-      // per-file fills filter in LOCKSTEP (round 16 — a misaligned
-      // subset would fill with the wrong file's constants)
-      dataFileFills = pfills.map(fs => keepIdx.map(fs))),
+      dataFiles = Some(priorFiles.filter(f => keepFile(f.path))),
+      // stats, sizes and NDV are re-derived in the funnel (all carried
+      // forward)
+      entryFields = seqFields(prior.seqGated)),
       CommitOps.Delete,
       Some(prior))
   }
@@ -1565,7 +1485,8 @@ object CatalogIO {
         throw new UnsupportedOperationException(
           s"Table $ref v${n - 1} predates file manifests; INSERT OVERWRITE " +
             "once to upgrade it before merge-on-read writes"))
-      val unknown = targets.filterNot(priorFiles.contains)
+      val priorPaths = priorFiles.map(_.path).toSet
+      val unknown = targets.filterNot(priorPaths)
       require(unknown.isEmpty,
         s"positional delete on $ref addresses file(s) not in snapshot " +
           s"v${n - 1}'s manifest: ${unknown.take(3).mkString(", ")}")
@@ -1588,13 +1509,10 @@ object CatalogIO {
       val deletes = prior.deleteFiles :+
         DeleteFile(delRel, n, DeleteKinds.Position, targets)
       commitLayoutAsVersion(cat, ref, n, prior.copy(
-        dataFiles = Some(priorFiles ++ moved),
+        dataFiles = Some(withAdded(priorFiles, moved, n, gated = true)),
         deleteFiles = deletes,
-        dataFileSeqs = Some(prior.dataFileSeqs
-          .getOrElse(Seq.fill(priorFiles.size)(0)) ++ Seq.fill(moved.size)(n)),
-        dataFileStats = None, // re-derived in the funnel
-        dataFileSizes = None, dataFileNdv = None,
-        dataFileFills = appendedFills(prior, priorFiles, moved.size)),
+        // stats, sizes and NDV are re-derived in the funnel
+        entryFields = seqFields(gated = true)),
         CommitOps.Delete,
         Some(prior))
     } finally typed.unpersist()
@@ -2003,8 +1921,9 @@ object CatalogIO {
         f
       }
     if (files.isEmpty || tracked.isEmpty) {
-      val loc = commitMetadataOnly(cat, ref,
-        layout.copy(dataFileNdv = Some(Seq.fill(files.size)(""))),
+      val loc = commitMetadataOnly(cat, ref, layout.copy(
+        dataFiles = Some(files.map(_.copy(ndv = ""))),
+        entryFields = layout.entryFields + ManifestFieldTokens.Ndv),
         expectedBase = Some(base))
       return AnalyzeResult(loc, 0, tracked.map(_.name))
     }
@@ -2049,7 +1968,7 @@ object CatalogIO {
     // table — the same one-spelling-space rule as delete matching
     val prefixes = segmentPrefixes(layout.dataLocation, cat.fileSystem.getConf)
     val relocatedBySpelling: Map[String, String] =
-      files.filter(isAbsoluteSpelling)
+      files.map(_.path).filter(isAbsoluteSpelling)
         .flatMap(f => relocatedSpellingsOf(f).map(_ -> f)).toMap
     def rel(abs: String): String =
       prefixes.collectFirst {
@@ -2060,14 +1979,15 @@ object CatalogIO {
     val byRel: Map[String, Array[Array[Byte]]] =
       perFile.map { case (abs, regs) => rel(abs) -> regs }.toMap
     val lowered = names.map(_.toLowerCase)
-    val encoded = files.map { f =>
+    val sketched = files.map { f =>
       // a file absent from the job's output held zero rows: its empty
       // sketches are a VALID "0 distinct" answer, not a gap
-      val regs = byRel.getOrElse(f, Array.fill(nCols)(Ndv.emptySketch()))
-      Ndv.encode(lowered.zip(regs).toMap)
+      val regs = byRel.getOrElse(f.path, Array.fill(nCols)(Ndv.emptySketch()))
+      f.copy(ndv = Ndv.encode(lowered.zip(regs).toMap))
     }
-    val loc = commitMetadataOnly(cat, ref,
-      layout.copy(dataFileNdv = Some(encoded)), expectedBase = Some(base))
+    val loc = commitMetadataOnly(cat, ref, layout.copy(dataFiles = Some(sketched),
+      entryFields = layout.entryFields + ManifestFieldTokens.Ndv),
+      expectedBase = Some(base))
     AnalyzeResult(loc, files.size, names)
   }
 
@@ -2131,12 +2051,9 @@ object CatalogIO {
     val segment = new Path(layout.dataLocation)
     // manifest-recorded sizes when complete (round 11 — zero filesystem
     // calls); pre-size manifests fall back to one status per entry
-    val sized = layout.dataFileSizes.filter(_.forall(_ >= 0)) match {
-      case Some(sizes) => files.zip(sizes)
-      case None => files.map { f =>
-        (f, fs.getFileStatus(new Path(segment, f)).getLen)
-      }
-    }
+    val sized =
+      if (layout.sizesComplete) files.map(f => (f.path, f.size))
+      else files.map(f => (f.path, fs.getFileStatus(new Path(segment, f.path)).getLen))
     val selected = sized.filter { case (f, len) => select(f, len) }
     if (selected.size <= 1)
       return CompactResult(cat.metadataLocationForVersion(ref, base),
@@ -2146,16 +2063,9 @@ object CatalogIO {
     // un-materialized renames resolve per-epoch physical names (the
     // rewrite output carries the CURRENT names; the manifest replace
     // seqs it at n, past every rename)
-    val selSeqs = layout.dataFileSeqs.map { seqs =>
-      files.zip(seqs).filter { case (f, _) => selectedSet(f) }.map(_._2)
-    }
-    // the subset layout keeps every parallel array aligned (round 16:
-    // per-entry formats included; partial compaction of a non-parquet
-    // table then refuses in commitStagedManifestReplace below)
     val df = scanLayoutWithOptions(spark,
-      layout.retainDataFiles(selectedSet).copy(
-        dataFileSeqs = selSeqs,
-        dataFileStats = None, dataFileSizes = None, dataFileNdv = None),
+      layout.retainDataFiles(selectedSet).copy(entryFields =
+        layout.entryFields.filter(_ == ManifestFieldTokens.Seqs)),
       Map.empty)
     val arranged = (layout.numBuckets, layout.partitionColumns) match {
       case (Some(n), _) =>
@@ -2356,13 +2266,13 @@ object CatalogIO {
     * `""` / -1 (unprunable / unknown-size file), never a failed commit. */
   private def withFileStats(cat: HadoopFsCatalog, ref: TableRef, n: Int,
       layout: TableLayout, priorLayout: Option[TableLayout]): TableLayout = {
-    if (!collectFileStats ||
-        (layout.dataFileStats.isDefined && layout.dataFileSizes.isDefined))
+    import ManifestFieldTokens.{Ndv => NdvField, Sizes, Stats}
+    val both = Set(Stats, Sizes)
+    if (!collectFileStats || both.subsetOf(layout.entryFields))
       return layout
     val files = layout.dataFiles.getOrElse(return layout)
-    if (files.isEmpty) return layout.copy(
-      dataFileStats = layout.dataFileStats.orElse(Some(Nil)),
-      dataFileSizes = layout.dataFileSizes.orElse(Some(Nil)))
+    if (files.isEmpty)
+      return layout.copy(entryFields = layout.entryFields ++ both)
     // sizes are schema-independent; stats need a decodable recorded DDL.
     // uuid columns are EXCLUDED (round 20 — adopted uuid layouts): the
     // files' footer stats are raw 16-byte mins/maxes, which the
@@ -2384,31 +2294,22 @@ object CatalogIO {
         cat.metadataLocationForVersion(ref, n - 1), cat.fileSystem.getConf)).toOption
     }
     val sameSegment = priorOpt.filter(_.dataLocation == layout.dataLocation)
-    val priorStats: Map[String, String] = sameSegment
-      .flatMap(pl => for { pf <- pl.dataFiles; ps <- pl.dataFileStats } yield
-        pf.zip(ps).toMap)
-      .getOrElse(Map.empty)
-    val priorSizes: Map[String, Long] = sameSegment
-      .flatMap(pl => for { pf <- pl.dataFiles; ps <- pl.dataFileSizes } yield
-        pf.zip(ps).filter(_._2 >= 0).toMap)
-      .getOrElse(Map.empty)
-    val needStats = layout.dataFileStats.isEmpty && schemaOpt.isDefined
-    val needSizes = layout.dataFileSizes.isEmpty
+    /** The prior version's entries by path, when it records `field`. */
+    def priorBy(field: String): Map[String, DataFile] = sameSegment
+      .filter(_.entryFields(field))
+      .flatMap(_.dataFiles).getOrElse(Nil).iterator.map(f => f.path -> f).toMap
+    val priorStats = priorBy(Stats)
+    val priorSizes = priorBy(Sizes)
+    val needStats = !layout.entryFields(Stats) && schemaOpt.isDefined
+    val needSizes = !layout.entryFields(Sizes)
     if (!needStats && !needSizes) return layout
     val conf = cat.fileSystem.getConf
-    // per-entry formats (round 16): only PARQUET entries get footer
-    // stat reads — an ORC/avro entry of an adopted layout without
-    // carried stats records "" (unprunable) + a status-call size,
-    // never a parquet-footer parse of non-parquet bytes
-    val formatOf: Int => String = layout.dataFileFormats match {
-      case Some(fs) => val v = fs.toVector; i => v(i)
-      case None => _ => layout.dataFormat
-    }
     import scala.collection.parallel.CollectionConverters._
-    val collected: Seq[(String, Long)] = files.toVector.zipWithIndex.par.map {
-      case (f, i) =>
-      val carriedStat = if (needStats) priorStats.get(f) else None
-      val carriedSize = if (needSizes) priorSizes.get(f) else None
+    val collected: Seq[(String, Long)] = files.toVector.par.map { file =>
+      val f = file.path
+      val carriedStat = if (needStats) priorStats.get(f).map(_.stats) else None
+      val carriedSize = if (needSizes) priorSizes.get(f).map(_.size).filter(_ >= 0)
+        else None
       (carriedStat, carriedSize) match {
         case (Some(st), Some(sz)) => (st, sz)
         case (Some(st), None) if needSizes =>
@@ -2416,7 +2317,11 @@ object CatalogIO {
           val sz = scala.util.Try(cat.fileSystem
             .getFileStatus(new Path(layout.dataLocation, f)).getLen).getOrElse(-1L)
           (st, sz)
-        case _ if needStats && formatOf(i) == "parquet" =>
+        // per-entry formats (round 16): only PARQUET entries get footer
+        // stat reads — an ORC/avro entry of an adopted layout without
+        // carried stats records "" (unprunable) + a status-call size,
+        // never a parquet-footer parse of non-parquet bytes
+        case _ if needStats && file.format == "parquet" =>
           // a new file: the footer open's own file status carries the size
           FileStats.fromFooterWithSize(
             new Path(layout.dataLocation, f), conf, schemaOpt.get)
@@ -2429,22 +2334,17 @@ object CatalogIO {
     }.seq.toVector
     // NDV sketches carry forward like stats; files new since the last
     // analyzeTable get "" (no sketch — never computed on the commit path)
-    val priorNdv: Map[String, String] = sameSegment
-      .flatMap(pl => for { pf <- pl.dataFiles; ps <- pl.dataFileNdv } yield
-        pf.zip(ps).toMap)
-      .getOrElse(Map.empty)
-    val carriedNdv: Option[Seq[String]] =
-      if (layout.dataFileNdv.isDefined) layout.dataFileNdv
-      else if (priorNdv.isEmpty) None
-      else Some(files.map(f => priorNdv.getOrElse(f, "")))
+    val priorNdv = priorBy(NdvField)
+    val carryNdv = !layout.entryFields(NdvField) && priorNdv.nonEmpty
     layout.copy(
-      dataFileStats =
-        if (needStats) Some(collected.map(_._1))
-        else layout.dataFileStats,
-      dataFileSizes =
-        if (needSizes) Some(collected.map(_._2))
-        else layout.dataFileSizes,
-      dataFileNdv = carriedNdv)
+      dataFiles = Some(files.lazyZip(collected).map { case (f, (st, sz)) =>
+        f.copy(stats = if (needStats) st else f.stats,
+          size = if (needSizes) sz else f.size,
+          ndv = if (carryNdv) priorNdv.get(f.path).fold("")(_.ndv) else f.ndv)
+      }),
+      entryFields = layout.entryFields ++ Seq(Stats).filter(_ => needStats) ++
+        Seq(Sizes).filter(_ => needSizes) ++
+        Seq(NdvField).filter(_ => carryNdv))
   }
 
   private def commitLayoutAsVersion(cat: HadoopFsCatalog, ref: TableRef,
@@ -2524,38 +2424,17 @@ object CatalogIO {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(schema))
-    // per-group formats (round 16 — adopted mixed tables): files added
-    // by engine appends are parquet; a from-zero bootstrap's "added"
-    // set is the whole table, whose per-entry formats carry over from
-    // `to` (a flat copy would leave the formats array misaligned with
-    // the subset and trip the layout invariant)
-    val fmtByRel: Map[String, String] =
-      if (to.dataFormat == "parquet") Map.empty
-      else to.dataFiles.getOrElse(Nil).zip(to.dataFileFormats.getOrElse(
-        Seq.fill(to.dataFiles.getOrElse(Nil).size)(to.dataFormat))).toMap
-    // per-file fills restrict in LOCKSTEP with the added subset (round
-    // 20 fix — the flat copy used to carry the FULL fills array and
-    // trip the parallel-arrays invariant on adopted fill tables; a
-    // bootstrap's added set is the whole manifest, engine appends are
-    // fill-free, and walked files absent from `to` were materialized)
-    val fillByRel: Map[String, Seq[(String, Any)]] = to.dataFileFills match {
-      case Some(fills) => to.dataFiles.getOrElse(Nil).zip(fills).toMap
-      case None => Map.empty
-    }
+    // each added entry keeps the format and fills recorded with it
+    // (round 16 — adopted mixed tables; round 20 — adopted fill tables:
+    // a bootstrap's added set is the whole manifest, engine appends are
+    // parquet and fill-free)
     groups.filter(_._2.nonEmpty).map { case (segLoc, added) =>
-      val fmts = added.map { case (f, _) => fmtByRel.getOrElse(f, "parquet") }
-      val (gFmt, gFmts) =
-        if (fmts.distinct.sizeIs == 1) (fmts.head, None)
-        else ("mixed", Some(fmts))
       scanLayoutWithOptions(spark, to.copy(
         dataLocation = segLoc,
-        dataFiles = Some(added.map(_._1)),
-        dataFileSeqs = if (to.seqGated) Some(added.map(_._2)) else None,
+        dataFiles = Some(added),
         deleteFiles = Nil, // all pre-date fromVersion: exempt by seq gate
-        dataFileStats = None, dataFileSizes = None, dataFileNdv = None,
-        dataFileFills = to.dataFileFills.map(_ =>
-          added.map { case (f, _) => fillByRel.getOrElse(f, Seq.empty) }),
-        dataFormat = gFmt, dataFileFormats = gFmts), Map.empty)
+        entryFields = seqFields(to.seqGated),
+        dataFormat = formatOf(added, "parquet")), Map.empty)
     }.reduce(_ unionByName _)
   }
 
@@ -2574,7 +2453,7 @@ object CatalogIO {
   private[graft] def appendsAcrossRewrites(
       cat: Catalog with SupportsTableVersions, ref: TableRef,
       fromVersion: Int, toVersion: Int,
-      conf: Configuration): (TableLayout, Seq[(String, Seq[(String, Int)])]) = {
+      conf: Configuration): (TableLayout, Seq[(String, Seq[DataFile])]) = {
     require(fromVersion <= toVersion,
       s"incremental read range is inverted: v$fromVersion > v$toVersion")
     // bootstrap keeps the plain face's semantics (and its refusals)
@@ -2584,7 +2463,7 @@ object CatalogIO {
     }
     var prev = readLayout(cat.metadataLocationForVersion(ref, fromVersion), conf)
     val bySegment = scala.collection.mutable.LinkedHashMap
-      .empty[String, Vector[(String, Int)]]
+      .empty[String, Vector[DataFile]]
     var to: TableLayout = prev
     (fromVersion + 1 to toVersion).foreach { v =>
       val lv = readLayout(cat.metadataLocationForVersion(ref, v), conf)
@@ -2600,17 +2479,16 @@ object CatalogIO {
               s"Table $ref v$v is marked '${lv.commitOp.get}' but added " +
                 "delete files — metadata is inconsistent; re-sync with a " +
                 "full read")
-          val prevSet = prev.dataFiles.getOrElse(Nil).toSet
+          val prevSet = prev.dataFilePaths.getOrElse(Nil).toSet
           val files = lv.dataFiles.getOrElse(throw new UnsupportedOperationException(
             s"Table $ref v$v predates file manifests; INSERT OVERWRITE once " +
               "to upgrade it before incremental reads"))
-          if (!prevSet.subsetOf(files.toSet))
+          if (!prevSet.subsetOf(files.map(_.path).toSet))
             throw new UnsupportedOperationException(
               s"Table $ref v$v is marked '${lv.commitOp.get}' but the " +
                 "manifest shrank — metadata is inconsistent; re-sync with a " +
                 "full read")
-          val seqs = lv.dataFileSeqs.getOrElse(Seq.fill(files.size)(0))
-          val added = files.zip(seqs).filterNot { case (f, _) => prevSet(f) }
+          val added = files.filterNot(f => prevSet(f.path))
           if (added.nonEmpty)
             bySegment(lv.dataLocation) =
               bySegment.getOrElse(lv.dataLocation, Vector.empty) ++ added
@@ -2629,8 +2507,7 @@ object CatalogIO {
     (to, bySegment.toSeq)
   }
 
-  /** The (to-layout, segment-relative files ∪ seqs ADDED in
-    * (fromVersion, toVersion]) behind [[readAppendsBetween]] and the
+  /** The (to-layout, entries ADDED in (fromVersion, toVersion]) behind [[readAppendsBetween]] and the
     * table stream source — one place owns the append-only checks.
     * `fromVersion = 0` means "from the empty table": every file of
     * `toVersion` is the change set (the stream's full-bootstrap start),
@@ -2639,14 +2516,13 @@ object CatalogIO {
   private[graft] def appendsLayoutBetween(
       cat: Catalog with SupportsTableVersions, ref: TableRef,
       fromVersion: Int, toVersion: Int,
-      conf: Configuration): (TableLayout, Seq[(String, Int)]) = {
+      conf: Configuration): (TableLayout, Seq[DataFile]) = {
     require(fromVersion <= toVersion,
       s"incremental read range is inverted: v$fromVersion > v$toVersion")
     val to = readLayout(cat.metadataLocationForVersion(ref, toVersion), conf)
     val toFiles = to.dataFiles.getOrElse(throw new UnsupportedOperationException(
       s"Table $ref v$toVersion predates file manifests (whole-directory " +
         "snapshot); INSERT OVERWRITE once to upgrade it before incremental reads"))
-    val toSeqs = to.dataFileSeqs.getOrElse(Seq.fill(toFiles.size)(0))
     if (fromVersion == toVersion) return (to, Nil)
     if (fromVersion == 0) {
       if (to.deleteFiles.nonEmpty)
@@ -2654,7 +2530,7 @@ object CatalogIO {
           s"Table $ref carries live row-level delete files; a from-scratch " +
             "incremental bootstrap would resurrect deleted rows — compact " +
             "first to materialize them away")
-      return (to, toFiles.zip(toSeqs))
+      return (to, toFiles)
     }
     val from = readLayout(cat.metadataLocationForVersion(ref, fromVersion), conf)
     val fromFiles = from.dataFiles.getOrElse(throw new UnsupportedOperationException(
@@ -2665,8 +2541,8 @@ object CatalogIO {
         s"Table $ref history v$fromVersion..v$toVersion is not append-only: " +
           "the data segment was replaced (INSERT OVERWRITE or full compaction) " +
           "in the range; re-sync with a full read at the new version")
-    val fromSet = fromFiles.toSet
-    if (!fromSet.subsetOf(toFiles.toSet))
+    val fromSet = fromFiles.map(_.path).toSet
+    if (!fromSet.subsetOf(toFiles.map(_.path).toSet))
       throw new UnsupportedOperationException(
         s"Table $ref history v$fromVersion..v$toVersion is not append-only: " +
           "the file manifest shrank in the range (file-level DELETE or partial " +
@@ -2676,7 +2552,7 @@ object CatalogIO {
         s"Table $ref history v$fromVersion..v$toVersion is not append-only: " +
           "row-level delete files committed in the range; re-sync with a " +
           "full read at v" + toVersion)
-    (to, toFiles.zip(toSeqs).filterNot { case (f, _) => fromSet(f) })
+    (to, toFiles.filterNot(f => fromSet(f.path)))
   }
 
   /** [[readAppendsBetween]] from a persisted cursor to the current
@@ -2729,7 +2605,7 @@ object CatalogIO {
         case "orc" => r.orc(paths: _*)
         case _ => r.parquet(paths: _*)
       }
-    layout.absoluteDataFilesWithSeqs match {
+    layout.dataFiles match {
       case Some(Nil) =>
         // a committed empty snapshot: serve the recorded schema, scan nothing
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -2786,12 +2662,11 @@ object CatalogIO {
       // format's epoch machinery.
       case Some(_) if layout.seqGated && layout.dataFormat == "mixed" =>
         layout.dataFiles.getOrElse(Nil)
-          .zip(layout.dataFileFormats.getOrElse(Nil))
-          .groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (fmt, pairs) =>
+          .groupBy(_.format).toSeq.sortBy(_._1)
+          .map { case (fmt, files) =>
             scanLayoutWithOptions(spark,
-              layout.retainDataFiles(pairs.map(_._1).toSet)
-                .copy(dataFormat = fmt, dataFileFormats = None), options)
+              layout.retainDataFiles(files.map(_.path).toSet)
+                .copy(dataFormat = fmt), options)
           }.reduce(_ unionByName _)
       // delete-live layouts WITH per-file constant fills (round 16 —
       // the partitioned Hive-migration table taking row-level deletes):
@@ -2801,34 +2676,30 @@ object CatalogIO {
       // injects the fills below its probes
       case Some(_) if layout.seqGated && layout.hasFills =>
         graft.sources.MorRead.dataFrame(spark, layout, options)
-      case Some(filesWithSeqs) if layout.seqGated =>
+      case Some(files) if layout.seqGated =>
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           layout.schemaDdl.getOrElse(throw new IllegalStateException(
             s"Seq-gated manifest with no recorded schema at ${layout.dataLocation}")))
-        // rel paths drive pos-delete targeting; parallel to filesWithSeqs
-        val rels = layout.dataFiles.getOrElse(Nil)
-        val relByAbs = rels.zip(filesWithSeqs.map(_._1)).map(_.swap).toMap
         // v3 deletion vectors ride the same join-based application as
         // parquet addresses, exploded per GROUP ([[dvInputsFor]] — each
         // blob decoded exactly once, by the group owning its file); a
         // vector supersedes parquet POSITION deletes for its file
-        val groups = filesWithSeqs
-          .groupBy { case (abs, s) =>
-            val rel = relByAbs(abs)
-            val hasDv = layout.dvFor(rel).isDefined
-            (layout.eqDeletePathsFor(rel, s).sorted,
-              (if (hasDv) Nil else layout.posDeletesFor(rel, s)).sorted,
+        val groups = files
+          .groupBy { f =>
+            val hasDv = layout.dvFor(f.path).isDefined
+            (layout.eqDeletePathsFor(f.path, f.seq).sorted,
+              (if (hasDv) Nil else layout.posDeletesFor(f.path, f.seq)).sorted,
               hasDv,
-              layout.physicalNamesAt(s))
+              layout.physicalNamesAt(f.seq))
           }
-          .toSeq.sortBy(_._2.head._1) // deterministic group order
+          .toSeq.sortBy(g => layout.absolutePath(g._2.head)) // deterministic group order
         groups.map { case ((eqPaths, posPaths, hasDv, physical), fs) =>
           val physSchema = org.apache.spark.sql.types.StructType(
             schema.fields.map(f => f.copy(name = physical.getOrElse(f.name, f.name))))
           val r0 = spark.read.options(options).schema(physSchema)
           val df0 = (if (layout.suppressBasePath) r0
             else r0.option("basePath", layout.dataLocation))
-            .parquet(fs.map(_._1): _*)
+            .parquet(fs.map(layout.absolutePath): _*)
           // row addresses must be captured ON the scan (metadata columns
           // do not survive joins), before any delete application
           val addressed =
@@ -2849,8 +2720,7 @@ object CatalogIO {
           if (posPaths.isEmpty && !hasDv) eqApplied
           else {
             val (dvAddrs, dvCount) =
-              if (hasDv) dvInputsFor(spark, layout, options,
-                fs.map(f => relByAbs(f._1)))
+              if (hasDv) dvInputsFor(spark, layout, options, fs.map(_.path))
               else (None, None)
             applyPositionalDeletes(spark, eqApplied, posPaths,
               layout.dataLocation, options,
@@ -2859,7 +2729,7 @@ object CatalogIO {
               .drop("__graft_file", "__graft_pos")
           }
         }.reduce(_ unionByName _)
-      case Some(filesWithSeqs) if layout.hasFills =>
+      case Some(files) if layout.hasFills =>
         // per-file constant fills (v3 initial-defaults / identity
         // partition values): group files by (fill set, format) — MIXED
         // parquet+orc layouts ride here too (round 16, the partitioned
@@ -2869,11 +2739,8 @@ object CatalogIO {
         // filled file provably lacks the column, so there are no real
         // values to clobber. Catalyst folds filters on the lit()
         // constants, so a partition filter prunes whole groups for free.
-        val fmts: Seq[String] = layout.dataFileFormats.getOrElse(
-          Seq.fill(filesWithSeqs.size)(layout.dataFormat))
-        val groups = filesWithSeqs.map(_._1)
-          .zip(layout.dataFileFills.get).zip(fmts)
-          .groupBy { case ((_, fills), fmt) => (fills, fmt) }.toSeq
+        val groups = files
+          .groupBy(f => (f.fills, f.format)).toSeq
           .sortBy { case ((fills, fmt), _) =>
             (fills.map(_._1).mkString(","), fmt) }
         // read nullable-forced: a REQUIRED column with a default is
@@ -2904,8 +2771,8 @@ object CatalogIO {
         // columns and conflicting when snapshots nest at different
         // depths (imported tree + appended `data/sN/col=v`); the
         // manifest is the single source of truth here
-        groups.map { case ((fills, fmt), triples) =>
-          val paths = triples.map(_._1._1)
+        groups.map { case ((fills, fmt), group) =>
+          val paths = group.map(layout.absolutePath)
           val df0 = fmt match {
             case "orc" => spark.read.options(options).schema(readSchema)
               .orc(paths: _*)
@@ -2914,16 +2781,13 @@ object CatalogIO {
             case "avro" =>
               val keep = paths.toSet
               graft.sources.AvroRead.dataFrame(spark, readSchema,
-                layout.absoluteDataFilesWithSizes.getOrElse(
+                layout.absoluteSizes.getOrElse(
                   throw new IllegalStateException(
                     s"fill layout has avro files but incomplete sizes " +
                       s"at ${layout.dataLocation}"))
                   .filter { case (p, _) => keep(p) },
                 options,
-                layout.absoluteDataFilesWithStats
-                  .map(_.collect { case (p, s) if s.nonEmpty && keep(p) =>
-                    p -> s }.toMap)
-                  .getOrElse(Map.empty))
+                layout.absoluteStats.filter { case (p, _) => keep(p) })
             case _ => spark.read.options(options).schema(readSchema)
               .parquet(paths: _*)
           }
@@ -2941,24 +2805,20 @@ object CatalogIO {
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           layout.schemaDdl.getOrElse(throw new IllegalStateException(
             s"mixed-format layout with no recorded schema at ${layout.dataLocation}")))
-        val absWithFmt = layout.absoluteDataFiles.get
-          .zip(layout.dataFileFormats.get)
-        absWithFmt.groupBy(_._2).toSeq.sortBy(_._1).map { case (fmt, pairs) =>
-          val paths = pairs.map(_._1)
+        layout.dataFiles.get.groupBy(_.format).toSeq.sortBy(_._1)
+          .map { case (fmt, group) =>
+          val paths = group.map(layout.absolutePath)
           fmt match {
             case "avro" =>
               val keep = paths.toSet
               graft.sources.AvroRead.dataFrame(spark, schema,
-                layout.absoluteDataFilesWithSizes.getOrElse(
+                layout.absoluteSizes.getOrElse(
                   throw new IllegalStateException(
                     s"mixed-format layout has avro files but incomplete " +
                       s"sizes at ${layout.dataLocation}"))
                   .filter { case (p, _) => keep(p) },
                 options,
-                layout.absoluteDataFilesWithStats
-                  .map(_.collect { case (p, s) if s.nonEmpty && keep(p) =>
-                    p -> s }.toMap)
-                  .getOrElse(Map.empty))
+                layout.absoluteStats.filter { case (p, _) => keep(p) })
             case fmt2 =>
               val r0 = spark.read.options(options).schema(schema)
               val r1 = if (layout.suppressBasePath) r0
@@ -2977,18 +2837,15 @@ object CatalogIO {
           org.apache.spark.sql.types.StructType.fromDDL(
             layout.schemaDdl.getOrElse(throw new IllegalStateException(
               s"avro layout with no recorded schema at ${layout.dataLocation}"))),
-          layout.absoluteDataFilesWithSizes.getOrElse(
+          layout.absoluteSizes.getOrElse(
             throw new IllegalStateException(
               s"avro layout with incomplete file sizes at ${layout.dataLocation}")),
-          options,
-          layout.absoluteDataFilesWithStats
-            .map(_.collect { case (p, s) if s.nonEmpty => p -> s }.toMap)
-            .getOrElse(Map.empty))
+          options, layout.absoluteStats)
       // uuid layouts (round 18): read the fixed[16] columns as BINARY
       // (the only stock-reader mapping) and serve the canonical string
       // via codegen'd builtins — hex + one regexp + lower, NULL-
       // preserving. Delete/rename/fill combos refuse at the layout.
-      case Some(filesWithSeqs) if layout.uuidColumns.nonEmpty =>
+      case Some(files) if layout.uuidColumns.nonEmpty =>
         val served = org.apache.spark.sql.types.StructType.fromDDL(
           layout.schemaDdl.getOrElse(throw new IllegalStateException(
             s"uuid layout with no recorded schema at ${layout.dataLocation}")))
@@ -3000,13 +2857,13 @@ object CatalogIO {
         val r = spark.read.options(options).schema(physical)
         val df0 = load(if (layout.suppressBasePath) r
           else r.option("basePath", layout.dataLocation),
-          filesWithSeqs.map(_._1))
+          files.map(layout.absolutePath))
         layout.uuidColumns.foldLeft(df0)((d, c) =>
           d.withColumn(c, uuidStringColumn(d.col(c))))
-      case Some(filesWithSeqs) =>
+      case Some(files) =>
         load(if (layout.suppressBasePath) reader
           else reader.option("basePath", layout.dataLocation),
-          filesWithSeqs.map(_._1))
+          files.map(layout.absolutePath))
       case None =>
         load(reader, Seq(layout.dataLocation))
     }
@@ -3209,12 +3066,12 @@ object CatalogIO {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       layout.schemaDdl.getOrElse(throw new IllegalStateException(
         s"manifest with no recorded schema at ${layout.dataLocation}")))
-    val filesWithSeqs = layout.absoluteDataFilesWithSeqs.getOrElse(
+    val files = layout.dataFiles.getOrElse(
       throw new UnsupportedOperationException(
         s"${layout.dataLocation} predates file manifests; INSERT OVERWRITE " +
           "once to upgrade it before positional writes"))
     import org.apache.spark.sql.functions.col
-    if (filesWithSeqs.isEmpty) {
+    if (files.isEmpty) {
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       return empty
@@ -3223,13 +3080,6 @@ object CatalogIO {
         .withColumn("__graft_pos",
           org.apache.spark.sql.functions.lit(null).cast("bigint"))
     }
-    val rels = layout.dataFiles.getOrElse(Nil)
-    val relByAbs = rels.zip(filesWithSeqs.map(_._1)).map(_.swap).toMap
-    val fillsByRel: Map[String, Seq[(String, Any)]] =
-      layout.dataFileFills match {
-        case Some(fills) => rels.zip(fills).toMap
-        case None => Map.empty
-      }
     // fill layouts pass NO basePath (Spark would infer partition
     // columns from the `col=value` directory names and conflict across
     // snapshot depths); `_metadata.file_path` is basePath-independent
@@ -3237,18 +3087,17 @@ object CatalogIO {
       if (!layout.hasFills) schema
       else graft.sources.FillInjection.deepNullable(schema)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val groups = filesWithSeqs
-      .groupBy { case (abs, s) =>
-        val rel = relByAbs(abs)
-        val hasDv = layout.dvFor(rel).isDefined
-        (layout.eqDeletePathsFor(rel, s).sorted,
-          (if (hasDv) Nil else layout.posDeletesFor(rel, s)).sorted,
-          hasDv, fillsByRel.getOrElse(rel, Seq.empty),
+    val groups = files
+      .groupBy { f =>
+        val hasDv = layout.dvFor(f.path).isDefined
+        (layout.eqDeletePathsFor(f.path, f.seq).sorted,
+          (if (hasDv) Nil else layout.posDeletesFor(f.path, f.seq)).sorted,
+          hasDv, f.fills,
           // rename epochs (late round 20): each epoch reads under its
           // own physical names (fills never coexist with renames)
-          layout.physicalNamesAt(s))
+          layout.physicalNamesAt(f.seq))
       }
-      .toSeq.sortBy(_._2.head._1)
+      .toSeq.sortBy(g => layout.absolutePath(g._2.head))
     groups.map { case ((eqPaths, posPaths, hasDv, fills, physMap), fs) =>
       val epochSchema =
         if (physMap.isEmpty) readSchema
@@ -3257,7 +3106,7 @@ object CatalogIO {
       val r = spark.read.options(options).schema(epochSchema)
       val dfPhys = (if (layout.suppressBasePath) r
         else r.option("basePath", layout.dataLocation))
-        .parquet(fs.map(_._1): _*)
+        .parquet(fs.map(layout.absolutePath): _*)
         .withColumn("__graft_file", col("_metadata.file_path"))
         .withColumn("__graft_pos", col("_metadata.row_index"))
       // back to CURRENT names before any predicate or probe sees rows
@@ -3269,8 +3118,7 @@ object CatalogIO {
       }
       val eqApplied = applyEqualityDeletes(spark, df, eqPaths, options)
       val (dvAddrs, dvCount) =
-        if (hasDv) dvInputsFor(spark, layout, options,
-          fs.map(f => relByAbs(f._1)))
+        if (hasDv) dvInputsFor(spark, layout, options, fs.map(_.path))
         else (None, None)
       applyPositionalDeletes(spark, eqApplied, posPaths,
         layout.dataLocation, options,
@@ -3628,11 +3476,11 @@ object CatalogIO {
     // layout invariants; compaction rewrites everything as parquet.
     // v3 row lineage does not survive adoption (the engine's manifests
     // carry no first_row_id) — drop it rather than serve stale ids.
-    val raw = raw0.copy(dataFileLineage = None)
+    val raw = raw0.copy(entryFields = raw0.entryFields - ManifestFieldTokens.Lineage)
     // per-file constant fills SURVIVE adoption (round 16 — the
     // refusal lifted): the engine's manifests serialize them
     // per entry ([[encodeFills]]), every engine scan face consumes
-    // [[TableLayout.dataFileFills]], appends carry them forward with
+    // [[DataFile.fills]], appends carry them forward with
     // new files fill-free, and compaction materializes them away —
     // an imported hive tree becomes a fully SQL-writable table
     // Live-delete tables ADOPT by SEQUENCE REBASE (round 14, judge r13
@@ -3655,14 +3503,14 @@ object CatalogIO {
     val layout =
       if (raw.deleteFiles.isEmpty && raw.renameOps.isEmpty) raw
       else {
-        val maxCarried = (raw.dataFileSeqs.getOrElse(Nil) ++
+        val maxCarried = ((if (raw.entryFields(ManifestFieldTokens.Seqs))
+          raw.dataFiles.getOrElse(Nil).map(_.seq) else Nil) ++
           raw.deleteFiles.map(_.seq) ++ raw.renameOps.map(_.seq)).max
         val shift = maxCarried.toLong + 1L
         def rebase(s: Int): Int = (s - shift).toInt
         raw.copy(
-          dataFileSeqs = raw.dataFileSeqs
-            .orElse(raw.dataFiles.map(fs => Seq.fill(fs.size)(0)))
-            .map(_.map(rebase)),
+          dataFiles = raw.dataFiles.map(_.map(f => f.copy(seq = rebase(f.seq)))),
+          entryFields = raw.entryFields + ManifestFieldTokens.Seqs,
           deleteFiles = raw.deleteFiles.map(d => d.copy(seq = rebase(d.seq))),
           renameOps = raw.renameOps.map(r => r.copy(seq = rebase(r.seq))))
       }
@@ -3789,8 +3637,8 @@ object CatalogIO {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
     if (!skipRewrites) {
-      val fromFiles = fromL.dataFiles.getOrElse(Nil).toSet
-      val toFiles = toL.dataFiles.getOrElse(Nil).toSet
+      val fromFiles = fromL.dataFilePaths.getOrElse(Nil).toSet
+      val toFiles = toL.dataFilePaths.getOrElse(Nil).toSet
       val removed = fromFiles -- toFiles
       if (removed.nonEmpty)
         refuse(s"${removed.size} data file(s) removed/rewritten in between; " +
@@ -3812,8 +3660,8 @@ object CatalogIO {
             val l = IcebergFormat.toTableLayout(text, metadataLocation, conf,
               Some(si.id))
             if (l.deleteFiles.nonEmpty) refuse("live delete files")
-            val prevSet = prev.dataFiles.getOrElse(Nil).toSet
-            val cur = l.dataFiles.getOrElse(Nil).toSet
+            val prevSet = prev.dataFilePaths.getOrElse(Nil).toSet
+            val cur = l.dataFilePaths.getOrElse(Nil).toSet
             if (!prevSet.subsetOf(cur))
               refuse(s"snapshot ${si.id} is marked 'append' but its " +
                 "manifest shrank — metadata is inconsistent")
@@ -3857,7 +3705,7 @@ object CatalogIO {
     * parquet position deletes and un-materialized renames still
     * refuse loudly. Lineage pairs
     * come from the layout's ONE manifest walk
-    * ([[TableLayout.dataFileLineage]], round 16 — the plan-time double
+    * (each entry's [[DataFile.lineage]], round 16 — the plan-time double
     * walk is gone). One scan + a broadcast file-lineage join + the
     * delete anti-joins: scale-identical to a plain MOR read. */
   def scanIcebergLineage(spark: SparkSession,
@@ -3877,10 +3725,10 @@ object CatalogIO {
       refuse(s"${layout.dataFormat} data files")
     if (layout.posDeleteFiles.nonEmpty) refuse("parquet position deletes")
     if (layout.renameOps.nonEmpty) refuse("un-materialized renames")
-    val lineage = layout.dataFileLineage.getOrElse(
+    if (!layout.entryFields(ManifestFieldTokens.Lineage))
       throw new UnsupportedOperationException(
         s"$metadataLocation is not format-version 3; row lineage " +
-          "(_row_id / _last_updated_sequence_number) exists from v3"))
+          "(_row_id / _last_updated_sequence_number) exists from v3")
     // ORC (round 19 — judge r18 #5), AVRO, and MIXED v3 tables (round
     // 20 — judge r19 #2): the join path below captures positions via
     // `_metadata.row_index`, which Spark's file sources expose for
@@ -3978,11 +3826,11 @@ object CatalogIO {
       else {
         val nullable = graft.sources.FillInjection.deepNullable(schema)
           .asInstanceOf[org.apache.spark.sql.types.StructType]
-        files.zip(layout.dataFileFills.get)
-          .groupBy(_._2).toSeq.sortBy(_._1.map(_._1).mkString(" "))
-          .map { case (fills, pairs) =>
+        layout.dataFiles.get
+          .groupBy(_.fills).toSeq.sortBy(_._1.map(_._1).mkString(" "))
+          .map { case (fills, group) =>
             val d0 = tagged(spark.read.schema(widen(nullable))
-              .parquet(pairs.map(_._1): _*))
+              .parquet(group.map(layout.absolutePath): _*))
             fills.foldLeft(d0) { case (d, (c, v)) =>
               applyFillColumn(d, c, v)
             }
@@ -3990,9 +3838,9 @@ object CatalogIO {
       }
     }
     import spark.implicits._
-    val lin = layout.dataFiles.getOrElse(Nil).zip(lineage)
-      .map { case (rel, (first, seq)) =>
-        (rel, first.map(Long.box).orNull: java.lang.Long, seq) }
+    val lin = layout.dataFiles.getOrElse(Nil)
+      .map(f => (f.path, f.lineage._1.map(Long.box).orNull: java.lang.Long,
+        f.lineage._2))
       .toDF("__graft_lin_file", "__graft_first", "__graft_seq")
     val joined = base.join(broadcast(lin),
       col("__graft_file") === col("__graft_lin_file"), "left")

@@ -28,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * footer the write already produced (no data re-read — the footer is a
   * few KB), then carried forward by every later commit that keeps the
   * file (append, compaction survivor, delete-file commit). Storage is one
-  * compact string per manifest entry (`dataFileStats`, parallel to
-  * `dataFiles`); `""` = no stats for that file, which every reader treats
+  * compact string per manifest entry ([[CatalogIO.DataFile.stats]]);
+  * `""` = no stats for that file, which every reader treats
   * as "cannot prune" — the format stays fully backward/forward
   * compatible, and a footer-read failure degrades to an unprunable file,
   * never a failed commit.

@@ -505,7 +505,8 @@ object IcebergExport {
     val v3 = st.formatVersion >= 3
     if (v3) {
       val lay = CatalogIO.readLayout(metadataLocation, conf)
-      require(lay.dataFileLineage.forall(_.forall(_._1.isDefined)),
+      require(!lay.entryFields(LayoutCodec.ManifestFieldTokens.Lineage) ||
+        lay.dataFiles.forall(_.forall(_.lineage._1.isDefined)),
         s"$metadataLocation has data files with UNASSIGNED row ids " +
           "(snapshots predating the v3 upgrade); their rows carry no " +
           "_row_id to preserve — rewrite refused")
@@ -541,7 +542,7 @@ object IcebergExport {
     val rows = rewriteUuidCols.foldLeft(rows0)((d, c) =>
       d.withColumn(c, CatalogIO.uuidBinaryColumn(d.col(c))))
     val totalBytes = CatalogIO.readLayout(metadataLocation, conf)
-      .dataFileSizes.map(_.filter(_ > 0).sum).getOrElse(0L)
+      .dataFiles.getOrElse(Nil).map(_.size).filter(_ > 0).sum
     val parts = math.max(1L,
       math.ceil(totalBytes.toDouble / targetFileBytes).toLong).toInt
     val rel = s"data/rw$seq-${java.util.UUID.randomUUID().toString.take(8)}"

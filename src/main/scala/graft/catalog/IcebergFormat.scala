@@ -10,6 +10,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 
+import graft.catalog.LayoutCodec.ManifestFieldTokens
+
 /** Native reader of APACHE ICEBERG table metadata — the real format the
   * reference's users hold (`CatalogMigrator.java:212-213` registers a
   * genuine Iceberg `metadataFileLocation`; the reference rides
@@ -297,8 +299,7 @@ object IcebergFormat {
       dataLocation = location,
       schemaDdl = Some(sparkSchema.toDDL),
       dataFiles = Some(Nil),
-      dataFileSizes = Some(Nil),
-      dataFileStats = Some(Nil),
+      entryFields = Set(ManifestFieldTokens.Sizes, ManifestFieldTokens.Stats),
       properties = props,
       uuidColumns = uuidCols)
     if (snapshot.isEmpty) return base // no snapshot yet: a committed empty table
@@ -587,7 +588,7 @@ object IcebergFormat {
     // reconstructed). Refusals fire only when a fill is actually
     // NEEDED — a natively-written table (every column materialized)
     // keeps serving deletes/renames/whatever unchanged.
-    val dataFileFills: Option[Seq[Seq[(String, Any)]]] =
+    val fills: Option[Seq[Seq[(String, Any)]]] =
       if (presenceIds.isEmpty) None
       else {
         def refuseWith(what: String): Nothing =
@@ -711,27 +712,27 @@ object IcebergFormat {
         sparkSchema, conf, metadataLocation, rels.map(_._5))
       return base.copy(
         dataFormat = dataFormat,
-        dataFiles = Some(rels.map(_._1)),
-        dataFileSizes = Some(rels.map(_._2)),
-        dataFileStats = Some(rels.map(_._3)),
-        dataFileSeqs = Some(epochSeqs),
-        dataFileFormats =
-          if (dataFormat == "mixed") Some(rels.map(_._5)) else None,
+        dataFiles = Some(rels.lazyZip(epochSeqs).map((r, seq) =>
+          CatalogIO.DataFile(r._1, seq, r._3, r._2, format = r._5))),
+        entryFields = base.entryFields + ManifestFieldTokens.Seqs,
         renameOps = renameOps)
     }
+    // per-file seqs only matter (and are only recorded) while deletes
+    // are live — the gate that decides which deletes apply to which
+    // files; without deletes the layout keeps its pre-round-13 shape
+    val seqsLive = deleteFiles.nonEmpty
     base.copy(
-      dataFiles = Some(rels.map(_._1)),
-      dataFileSizes = Some(rels.map(_._2)),
-      dataFileStats = Some(rels.map(_._3)),
-      // per-file seqs only matter (and are only recorded) while deletes
-      // are live — the gate that decides which deletes apply to which
-      // files; without deletes the layout keeps its pre-round-13 shape
-      dataFileSeqs = if (deleteFiles.isEmpty) None else Some(rels.map(_._4)),
+      dataFiles = Some(rels.indices.map { i =>
+        val r = rels(i)
+        CatalogIO.DataFile(r._1, if (seqsLive) r._4 else 0, r._3, r._2,
+          format = r._5, fills = fills.fold(Seq.empty[(String, Any)])(_(i)),
+          lineage = (r._7, r._8))
+      }),
+      entryFields = base.entryFields ++
+        Seq(ManifestFieldTokens.Seqs).filter(_ => seqsLive) ++
+        Seq(ManifestFieldTokens.Lineage).filter(_ => fv >= 3),
       deleteFiles = deleteFiles,
-      dataFormat = dataFormat,
-      dataFileFills = dataFileFills,
-      dataFileFormats = if (dataFormat == "mixed") Some(perFileFormats) else None,
-      dataFileLineage = if (fv >= 3) Some(rels.map(r => (r._7, r._8))) else None)
+      dataFormat = dataFormat)
   }
 
   /** The `file_path` field id of the spec's positional-delete file
@@ -937,9 +938,9 @@ object IcebergFormat {
   // v3 ROW LINEAGE (round 15, judge r14 item 7; round 16, judge r15
   // #3): the per-file (first_row_id, data seq) reconstruction by the
   // spec's null-default inheritance lives INSIDE [[toTableLayout]]'s
-  // one manifest walk and is served as
-  // [[CatalogIO.TableLayout.dataFileLineage]] — the old `fileLineage`
-  // second walk is gone.
+  // one manifest walk and is served as each entry's
+  // [[CatalogIO.DataFile.lineage]] — the old `fileLineage` second walk
+  // is gone.
 
   // ----- schema conversion ------------------------------------------
 

@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.hadoop.fs.Path
 
-import graft.catalog.CatalogIO.{ChunkIndex, DeleteFile, DeleteKinds,
+import graft.catalog.CatalogIO.{ChunkIndex, DataFile, DeleteFile, DeleteKinds,
   ManifestChunk, RenameOp, TableLayout, decodeFills, encodeFills}
 
 /** The engine's native version-metadata format — one codec for both
@@ -71,7 +71,7 @@ object LayoutCodec {
     * by references to immutable chunk files (`manifestChunkFiles` /
     * `manifestChunkCounts`, paths relative to the table's `metadata/`
     * dir) plus `manifestFields` — the tokens naming which optional
-    * per-entry arrays ([[ManifestFieldTokens]]) the chunk columns
+    * per-entry fields ([[ManifestFieldTokens]]) the chunk columns
     * reconstruct as present. The JSON then stays O(chunks), not
     * O(files), no matter how many commits the table accumulates. */
   private[graft] def metadataJson(tableLocation: String, dataLocation: String,
@@ -80,6 +80,13 @@ object LayoutCodec {
     def arr(name: String, vs: Seq[String]): String =
       if (vs.isEmpty) ""
       else s"""  "$name": ${arrBody(vs)},\n"""
+    val files = layout.dataFiles.getOrElse(Nil)
+    /** One inline per-entry array: written when the version records
+      * the field (`chunked` versions carry entries in the chunks). */
+    def perFile(name: String, recorded: Boolean)(f: DataFile => String): String =
+      if (chunked.isDefined || !recorded) ""
+      else s"""  "$name": ${arrBody(files.map(f))},\n"""
+    def field(token: String): Boolean = layout.entryFields(token)
     s"""{
        |  "formatVersion": 1,
        |  "location": "${jsonEscape(tableLocation)}",
@@ -104,18 +111,11 @@ object LayoutCodec {
         if (layout.dataFormat == "parquet") ""
         else s"""  "dataFormat": "${jsonEscape(layout.dataFormat)}",\n"""
       }${
-        if (chunked.isDefined) ""
-        else layout.dataFileFormats
-          .map(fs => s"""  "dataFileFormats": ${arrBody(fs)},\n""")
-          .getOrElse("")
+        perFile("dataFileFormats", layout.dataFormat == "mixed")(_.format)
       }${
         // per-file constant fills (round 16 — adopted fill tables);
         // absent = none. Encoded per entry by [[encodeFills]].
-        if (chunked.isDefined) ""
-        else layout.dataFileFills
-          .filter(_.exists(_.nonEmpty))
-          .map(fs => s"""  "dataFileFills": ${arrBody(fs.map(encodeFills))},\n""")
-          .getOrElse("")
+        perFile("dataFileFills", layout.hasFills)(f => encodeFills(f.fills))
       }${
         // ADOPTED uuid layouts (round 20): the binary-to-string
         // conversion recorded table-level — every data file stores the
@@ -145,40 +145,27 @@ object LayoutCodec {
       }${
         // an EMPTY manifest is still a manifest (a committed empty
         // snapshot) — it must round-trip distinctly from "no manifest"
-        if (chunked.isDefined) ""
-        else layout.dataFiles.map(fs => s"""  "dataFiles": ${arrBody(fs)},\n""").getOrElse("")
+        perFile("dataFiles", layout.dataFiles.isDefined)(_.path)
       }${
         // per-data-file manifest-entry seqs (recorded only while delete
         // files are live — delete-free tables keep the round-7 format)
-        if (chunked.isDefined) ""
-        else layout.dataFileSeqs
-          .map(ss => s"""  "dataFileSeqs": ${arrBody(ss.map(_.toString))},\n""")
-          .getOrElse("")
+        perFile("dataFileSeqs", field(ManifestFieldTokens.Seqs))(_.seq.toString)
       }${
         // per-data-file column stats (round 10 — FileStats.scala), one
         // encoded string per manifest entry ("" = no stats, unprunable).
         // Written whenever computed, including all-empty, so a commit
         // never re-reads footers it has already found unusable.
-        if (chunked.isDefined) ""
-        else layout.dataFileStats
-          .map(ss => s"""  "dataFileStats": ${arrBody(ss)},\n""")
-          .getOrElse("")
+        perFile("dataFileStats", field(ManifestFieldTokens.Stats))(_.stats)
       }${
         // per-data-file byte sizes (round 11 — Iceberg's
         // file_size_in_bytes): metadata tables and split planning answer
         // from the manifest with ZERO filesystem calls. -1 = unknown
         // (pre-round-11 file whose size was never captured).
-        if (chunked.isDefined) ""
-        else layout.dataFileSizes
-          .map(ss => s"""  "dataFileSizes": ${arrBody(ss.map(_.toString))},\n""")
-          .getOrElse("")
+        perFile("dataFileSizes", field(ManifestFieldTokens.Sizes))(_.size.toString)
       }${
         // per-data-file NDV sketches (round 11 — Ndv.scala; recorded by
         // analyzeTable, carried forward by the commit funnel)
-        if (chunked.isDefined) ""
-        else layout.dataFileNdv
-          .map(ss => s"""  "dataFileNdv": ${arrBody(ss)},\n""")
-          .getOrElse("")
+        perFile("dataFileNdv", field(ManifestFieldTokens.Ndv))(_.ndv)
       }${
         // delete files + the versions they committed at — the
         // merge-on-read state a scan must apply (eq: fileSeq < deleteSeq;
@@ -234,11 +221,13 @@ object LayoutCodec {
 
   // ----- manifest chunks (round 12) -----
 
-  /** Tokens naming the OPTIONAL per-entry columns a chunked version's
-    * entries reconstruct as present ([[TableLayout.dataFileSeqs]] /
-    * stats / sizes / NDV). An unknown token on read is corruption — a
-    * column this reader cannot reconstruct, never a default. */
-  private[catalog] object ManifestFieldTokens {
+  /** Tokens naming the OPTIONAL per-entry fields of a version
+    * ([[TableLayout.entryFields]] — seqs / stats / sizes / NDV); a
+    * chunked version writes the ones its chunk columns reconstruct as
+    * present as `manifestFields`. An unknown token on read is
+    * corruption — a column this reader cannot reconstruct, never a
+    * default. */
+  private[graft] object ManifestFieldTokens {
     val Seqs = "seqs"; val Stats = "stats"; val Sizes = "sizes"; val Ndv = "ndv"
     /** Per-entry data-file formats (round 16 — mixed adopted tables). */
     val Formats = "formats"
@@ -248,46 +237,35 @@ object LayoutCodec {
       * engine's own manifests so imported hive tables stay servable
       * AFTER adoption makes them SQL-writable). */
     val Fills = "fills"
+    /** v3 row lineage of converted Iceberg layouts — in memory only,
+      * never written, so not in [[All]]. */
+    val Lineage = "lineage"
     val All: Set[String] = Set(Seqs, Stats, Sizes, Ndv, Formats, Fills)
   }
 
-  /** The `manifestFields` tokens of `layout`'s present per-entry arrays. */
-  private[catalog] def manifestFields(layout: TableLayout): Seq[String] = Seq(
-    layout.dataFileSeqs.map(_ => ManifestFieldTokens.Seqs),
-    layout.dataFileStats.map(_ => ManifestFieldTokens.Stats),
-    layout.dataFileSizes.map(_ => ManifestFieldTokens.Sizes),
-    layout.dataFileNdv.map(_ => ManifestFieldTokens.Ndv),
-    layout.dataFileFormats.map(_ => ManifestFieldTokens.Formats),
-    layout.dataFileFills.filter(_.exists(_.nonEmpty))
-      .map(_ => ManifestFieldTokens.Fills)).flatten
-
-  /** One manifest entry, normalized (absent optional columns take the
-    * same defaults the read path applies: seq 0, "" stats/ndv, -1 size)
-    * so reuse comparison is representation-independent. */
-  private[graft] final case class MEntry(path: String, seq: Int, stats: String,
-      size: Long, ndv: String, format: String = "parquet",
-      fills: String = "")
-
-  private[catalog] def entriesOf(l: TableLayout): Vector[MEntry] = {
-    val fs = l.dataFiles.getOrElse(Nil).toVector
-    // materialize each parallel column as an IndexedSeq FIRST: callers
-    // hand in Lists (Seq.fill, ++-built), and positional apply on a
-    // List inside the index loop is O(n) — O(n²) on a 10⁵-entry
-    // manifest, precisely the scale this machinery exists for
-    val seqs = l.dataFileSeqs.map(_.toVector).getOrElse(Vector.fill(fs.size)(0))
-    val stats = l.dataFileStats.map(_.toVector).getOrElse(Vector.fill(fs.size)(""))
-    val sizes = l.dataFileSizes.map(_.toVector).getOrElse(Vector.fill(fs.size)(-1L))
-    val ndv = l.dataFileNdv.map(_.toVector).getOrElse(Vector.fill(fs.size)(""))
-    val fmts = l.dataFileFormats.map(_.toVector)
-      .getOrElse(Vector.fill(fs.size)(l.dataFormat))
-    val fills = l.dataFileFills.map(_.toVector.map(encodeFills))
-      .getOrElse(Vector.fill(fs.size)(""))
-    fs.indices.map(i =>
-      MEntry(fs(i), seqs(i), stats(i), sizes(i), ndv(i), fmts(i),
-        fills(i))).toVector
+  /** The `manifestFields` tokens of `layout`'s recorded per-entry fields. */
+  private[catalog] def manifestFields(layout: TableLayout): Seq[String] = {
+    import ManifestFieldTokens._
+    Seq(Seqs, Stats, Sizes, Ndv).filter(layout.entryFields) ++
+      Seq(Formats).filter(_ => layout.dataFormat == "mixed") ++
+      Seq(Fills).filter(_ => layout.hasFills)
   }
 
-  private[graft] def chunkJson(ents: Seq[MEntry]): String =
+  /** `layout`'s entries as a manifest chunk stores them: a field the
+    * version does not record takes the default the reader restores
+    * (seq 0, "" stats/ndv, -1 size), and lineage is never stored — so
+    * chunk reuse compares exactly what is on disk. */
+  private[catalog] def chunkEntries(layout: TableLayout): Vector[DataFile] = {
+    import ManifestFieldTokens._
+    val f = layout.entryFields
+    val mixed = layout.dataFormat == "mixed"
+    layout.dataFiles.getOrElse(Nil).iterator.map(e => DataFile(e.path,
+      if (f(Seqs)) e.seq else 0, if (f(Stats)) e.stats else "",
+      if (f(Sizes)) e.size else -1L, if (f(Ndv)) e.ndv else "",
+      if (mixed) e.format else layout.dataFormat, e.fills)).toVector
+  }
+
+  private[graft] def chunkJson(ents: Seq[DataFile]): String =
     s"""{
        |  "manifestChunkFormat": 1,
        |  "paths": ${arrBody(ents.map(_.path))},
@@ -296,7 +274,7 @@ object LayoutCodec {
        |  "sizes": ${arrBody(ents.map(_.size.toString))},
        |  "ndv": ${arrBody(ents.map(_.ndv))},
        |  "formats": ${arrBody(ents.map(_.format))},
-       |  "fills": ${arrBody(ents.map(_.fills))}
+       |  "fills": ${arrBody(ents.map(e => encodeFills(e.fills)))}
        |}
        |""".stripMargin
 
@@ -343,8 +321,13 @@ object LayoutCodec {
 
   /** Parse one chunk file's entries; every malformation throws (a
     * truncated chunk silently parsed as "fewer files" would shrink the
-    * table — same hardness as the inline arrays). */
-  private[catalog] def parseChunk(text: String, where: String): Vector[MEntry] = {
+    * table — same hardness as the inline arrays). Each entry keeps the
+    * optional `fields` its version records (the rest take their
+    * defaults), its chunk format when `format` is None, and its fills
+    * decoded by `fill`. */
+  private[catalog] def parseChunk(text: String, where: String,
+      fields: Set[String], format: Option[String],
+      fill: String => Seq[(String, Any)]): Vector[DataFile] = {
     val root = parse(text, where)
     def col(field: String): Seq[String] =
       strs(root, field, where).getOrElse(throw new IllegalStateException(
@@ -379,9 +362,15 @@ object LayoutCodec {
     // fills (round 16): absent = a pre-fills chunk (no adopted fill
     // table could have written one) — default, not corruption
     val fillsCol = sizedOpt("fills").getOrElse(Seq.fill(paths.size)(""))
+    import ManifestFieldTokens._
+    def field[T](token: String, col: Seq[T], default: T): Int => T =
+      if (fields(token)) col else _ => default
+    val (seqOf, statsOf, sizeOf, ndvOf) = (field(Seqs, seqs, 0),
+      field(Stats, stats, ""), field(Sizes, sizes, -1L), field(Ndv, ndv, ""))
+    val fillOf = field[String](Fills, fillsCol, "")
     paths.indices.map(i =>
-      MEntry(paths(i), seqs(i), stats(i), sizes(i), ndv(i), fmts(i),
-        fillsCol(i))).toVector
+      DataFile(paths(i), seqOf(i), statsOf(i), sizeOf(i), ndvOf(i),
+        format.getOrElse(fmts(i)), fill(fillOf(i)))).toVector
   }
 
   /** The shallow index of a CHUNKED version `root` for the lazy scan
@@ -452,6 +441,29 @@ object LayoutCodec {
       throw new IllegalStateException(
         s"Malformed metadata: both inline dataFiles and manifestChunkFiles " +
           s"in $metadataLocation")
+    val schemaDdl = string("schemaDdl")
+    val dataFormat = string("dataFormat").getOrElse("parquet") // absent = parquet
+    def mixedWithoutFormats(): Nothing =
+      throw new IllegalStateException(
+        s"Malformed metadata: dataFormat 'mixed' without " +
+          s"dataFileFormats in $metadataLocation")
+    // per-file arrays parallel an INLINE file list; a chunked version
+    // keeps them in its chunks
+    if (inlineDataFiles.isEmpty)
+      Seq("dataFileSeqs", "dataFileStats", "dataFileSizes", "dataFileNdv",
+        "dataFileFormats", "dataFileFills").find(root.has).foreach { f =>
+        throw new IllegalStateException(
+          s"Malformed metadata: '$f' without an inline dataFiles array in " +
+            metadataLocation)
+      }
+    // per-file constant fills (round 16 — adopted fill tables):
+    // decoded by the recorded schema's column types
+    lazy val fillSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      schemaDdl.getOrElse(throw new IllegalStateException(
+        s"Malformed metadata: dataFileFills without a schemaDdl " +
+          s"in $metadataLocation")))
+    def fill(text: String): Seq[(String, Any)] =
+      if (text.isEmpty) Nil else decodeFills(text, fillSchema)
     // chunked manifest (round 12): entries live in immutable chunk
     // files under <location>/metadata/, referenced here. Resolved via
     // the metadata's own `location` field so a pointer copied into any
@@ -460,7 +472,7 @@ object LayoutCodec {
     // silently shrink the table).
     var chunksSkipped = 0
     var chunksTotal = 0
-    val chunked: Option[(Seq[ManifestChunk], Vector[MEntry], Set[String])] =
+    val chunked: Option[(Seq[ManifestChunk], Vector[DataFile], Set[String])] =
       strings("manifestChunkFiles").map { rels =>
         val counts = strings("manifestChunkCounts")
           .getOrElse(throw new IllegalStateException(
@@ -481,7 +493,7 @@ object LayoutCodec {
             ss
           }
           .getOrElse(Seq.fill(rels.size)(""))
-        val fields = arr("manifestFields")
+        val fields = arr("manifestFields").toSet
         fields.filterNot(ManifestFieldTokens.All).foreach(f =>
           throw new IllegalStateException(
             s"Malformed metadata: unknown manifest field token '$f' in " +
@@ -505,9 +517,14 @@ object LayoutCodec {
         chunksTotal = refs.size
         chunksSkipped = refs.size - kept.size
         import scala.collection.parallel.CollectionConverters._
-        val perChunk: Seq[(ManifestChunk, Vector[MEntry])] = kept.par.map { r =>
+        // a mixed layout without per-entry formats cannot dispatch
+        // readers — corruption, never a guess
+        if (dataFormat == "mixed" && !fields.contains(ManifestFieldTokens.Formats))
+          mixedWithoutFormats()
+        val perChunk: Seq[(ManifestChunk, Vector[DataFile])] = kept.par.map { r =>
           val p = new Path(metaDir, r.relPath).toString
-          r -> parseChunk(readText(p), p)
+          r -> parseChunk(readText(p), p, fields,
+            Some(dataFormat).filter(_ != "mixed"), fill)
         }.seq
         perChunk.foreach { case (r, ents) =>
           if (ents.size != r.count)
@@ -516,25 +533,20 @@ object LayoutCodec {
                 s"$metadataLocation records ${r.count} — chunk and version " +
                 "disagree")
         }
-        (refs, perChunk.toVector.flatMap(_._2), fields.toSet)
+        (refs, perChunk.toVector.flatMap(_._2), fields)
       }
-    val dataFiles = inlineDataFiles.orElse(chunked.map(_._2.map(_.path)))
+    val fileCount = inlineDataFiles.map(_.size)
     /** A present per-file array must parallel the file list — a
       * misaligned one would attribute the wrong file's metadata. */
-    def perFile[T](field: String, token: String, fromEntry: MEntry => T)
-        (conv: Vector[String] => Seq[T]): Option[Seq[T]] =
+    def perFile(field: String): Option[Vector[String]] =
       strings(field).map { ss =>
-        dataFiles.map(_.size).filter(_ != ss.size).foreach { n =>
+        fileCount.filter(_ != ss.size).foreach { n =>
           throw new IllegalStateException(
             s"Malformed metadata: '$field' has ${ss.size} entries for " +
               s"$n data files in $metadataLocation")
         }
-        conv(ss)
-      }.orElse(chunked.collect { case (_, ents, fields)
-        if fields(token) => ents.map(fromEntry) })
-    // parallel arrays are validated hard: a seq list that fell out of
-    // step with its file list would misapply deletes (resurrect or lose
-    // rows), so a mismatch is corruption, not a default
+        ss
+      }
     def intSeqs(field: String, expected: Option[Int]): Option[Seq[Int]] =
       strings(field).map { raw =>
         expected.filter(_ != raw.size).foreach { n =>
@@ -600,8 +612,31 @@ object LayoutCodec {
         (renameFroms.nonEmpty && renameSeqs.size != renameFroms.size))
       throw new IllegalStateException(
         s"Malformed metadata: rename arrays out of step in $metadataLocation")
-    val schemaDdl = string("schemaDdl")
-    val recordedFormat = string("dataFormat")
+    // parallel arrays are validated hard: a seq list that fell out of
+    // step with its file list would misapply deletes (resurrect or lose
+    // rows), misaligned stats would prune with the wrong file's
+    // envelope, misaligned sizes would split-plan wrong byte ranges —
+    // corruption, never a default
+    val seqs = intSeqs("dataFileSeqs", fileCount)
+    val stats = perFile("dataFileStats")
+    val sizes = perFile("dataFileSizes").map(_.map { s =>
+      try s.toLong
+      catch { case _: NumberFormatException =>
+        throw new IllegalStateException(
+          s"Malformed metadata: non-integer size '$s' in 'dataFileSizes' " +
+            s"of $metadataLocation")
+      }
+    })
+    val ndv = perFile("dataFileNdv")
+    val formats =
+      if (dataFormat != "mixed" || inlineDataFiles.isEmpty) None
+      else Some(perFile("dataFileFormats").getOrElse(mixedWithoutFormats()))
+    val fills = perFile("dataFileFills").map(_.map(fill))
+    val dataFiles = inlineDataFiles.map(ps => ps.indices.map(i => DataFile(ps(i),
+      seqs.fold(0)(_(i)), stats.fold("")(_(i)), sizes.fold(-1L)(_(i)),
+      ndv.fold("")(_(i)), formats.fold(dataFormat)(_(i)),
+      fills.fold(Seq.empty[(String, Any)])(_(i))))).orElse(chunked.map(_._2))
+    import ManifestFieldTokens._
     val layout = TableLayout(dataLoc, arr("partitionColumns"),
       numBuckets(root, metadataLocation),
       arr("bucketColumns"), arr("sortColumns"),
@@ -613,53 +648,16 @@ object LayoutCodec {
       deleteFiles = delPaths.lazyZip(delSeqs.getOrElse(Nil)).lazyZip(delKinds)
         .lazyZip(delTargets.lazyZip(delBlobOffsets).lazyZip(delBlobLengths).toSeq)
         .map { case (p, s, k, (t, bo, bl)) => DeleteFile(p, s, k, t, bo, bl) },
-      dataFileSeqs = intSeqs("dataFileSeqs", dataFiles.map(_.size)).orElse(
-        chunked.collect { case (_, ents, fields)
-          if fields(ManifestFieldTokens.Seqs) => ents.map(_.seq) }),
+      entryFields = chunked.fold(Seq(seqs -> Seqs, stats -> Stats,
+        sizes -> Sizes, ndv -> Ndv).collect { case (Some(_), t) => t }.toSet)(
+        _._3.intersect(Set(Seqs, Stats, Sizes, Ndv))),
       renameOps = renameSeqs.lazyZip(renameFroms).lazyZip(renameTos)
         .map((s, f, t) => RenameOp(s, f, t)),
       droppedColumns = arr("droppedColumns"),
-      // misaligned stats would prune with the wrong file's envelope —
-      // corruption, same hardness as the seq arrays
-      dataFileStats = perFile("dataFileStats", ManifestFieldTokens.Stats,
-        _.stats)(identity),
       commitOp = string("commitOp"),
-      dataFileNdv = perFile("dataFileNdv", ManifestFieldTokens.Ndv, _.ndv)(identity),
-      // misaligned sizes would split-plan wrong byte ranges —
-      // corruption, same hardness as the stats array
-      dataFileSizes = perFile("dataFileSizes", ManifestFieldTokens.Sizes,
-        _.size)(_.map { s =>
-          try s.toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalStateException(
-              s"Malformed metadata: non-integer size '$s' in 'dataFileSizes' " +
-                s"of $metadataLocation")
-          }
-        }),
       manifestChunks = chunked.map(_._1),
       clusterTransforms = arr("clusterTransforms"),
-      // round 16: adopted non-parquet layouts — absent = parquet
-      dataFormat = recordedFormat.getOrElse("parquet"),
-      dataFileFormats =
-        if (recordedFormat.contains("mixed"))
-          // a mixed layout without per-entry formats cannot dispatch
-          // readers — corruption, never a guess
-          Some(perFile("dataFileFormats", ManifestFieldTokens.Formats,
-            _.format)(identity).getOrElse(throw new IllegalStateException(
-            s"Malformed metadata: dataFormat 'mixed' without " +
-              s"dataFileFormats in $metadataLocation")))
-        else None,
-      // per-file constant fills (round 16 — adopted fill tables):
-      // decoded by the recorded schema's column types; absent = none
-      dataFileFills = perFile("dataFileFills", ManifestFieldTokens.Fills,
-        _.fills)(identity).filter(_.exists(_.nonEmpty)).map { fs =>
-          val schema = org.apache.spark.sql.types.StructType.fromDDL(
-            schemaDdl.getOrElse(
-              throw new IllegalStateException(
-                s"Malformed metadata: dataFileFills without a schemaDdl " +
-                  s"in $metadataLocation")))
-          fs.map(decodeFills(_, schema))
-        },
+      dataFormat = dataFormat,
       // adopted uuid layouts (round 20): the recorded binary-to-string
       // conversion columns — every scan face routes through the seam
       uuidColumns = arr("uuidColumns"))

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * Sketches are computed by an explicit [[CatalogIO.analyzeTable]]
   * action (one distributed pass, like Iceberg's compute-stats — NEVER
   * on the commit path, so writes stay O(new data) with zero extra
-  * read), recorded as a manifest-parallel array (`dataFileNdv`, `""` =
-  * no sketch), and carried forward for surviving files by every later
+  * read), recorded per manifest entry ([[CatalogIO.DataFile.ndv]], `""`
+  * = no sketch), and carried forward for surviving files by every later
   * commit. Files added after the last analyze carry no sketch; scans
   * then report no NDV for the affected columns (estimates are never
   * guessed from partial coverage) until the next analyze.

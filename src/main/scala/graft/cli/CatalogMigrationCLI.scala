@@ -399,7 +399,7 @@ object CatalogMigrationCLI {
       // not silently run
       val layout = CatalogIO.readLayout(cat.loadTableMetadataLocation(ref))
       val files = layout.dataFiles.map(_.size).getOrElse(0)
-      val sketched = layout.dataFileNdv.map(_.count(_.nonEmpty)).getOrElse(0)
+      val sketched = layout.dataFiles.getOrElse(Nil).count(_.ndv.nonEmpty)
       log(s"Would analyze $ref: $files data files " +
         s"($sketched currently carrying NDV sketches); dry run, nothing committed.")
       return
@@ -763,7 +763,7 @@ object CatalogMigrationCLI {
       else MigrationReport.RegisterVerbs
 
     // R6–R8: explicit set / file / regex identifier input
-    var identifiers: Seq[TableRef] = processIdentifiersInput(opts, log)
+    val identifiers: Seq[TableRef] = processIdentifiersInput(opts, log)
     checkAndWarnAboutIdentifiers(opts, identifiers, log)
     val outputDir = validateOutputDir(opts.outputDir)
 

@@ -327,7 +327,16 @@ object Relational {
     // argument as q15): o_totalprice is fixed-point, so the range-frame
     // sum runs over a primitive LONG buffer instead of boxed
     // decimal(38,4); sum·10⁻⁴ is the same correctly-rounded double as
-    // round(sum(decimal), 4) CAST DOUBLE — oracle-verified at all SFs
+    // round(sum(decimal), 4) CAST DOUBLE — oracle-verified at all SFs.
+    // Headroom (q15's two bounds): the LONG sum wraps silently unless
+    // |frame sum| × 10⁴ < 2⁶³, and `/ 10000.0` is exact only while
+    // |frame sum| × 10⁴ ≤ 2⁵³ (~9·10¹⁵). Measured with DuckDB over the
+    // sf0.1 orders: a 31-day frame holds at most 5 rows of one
+    // o_custkey, and max o_totalprice is ~5.0·10⁵, so a frame sum is at
+    // most 5 × 5.0·10⁵ × 10⁴ ≈ 2.5·10¹⁰ scaled — ~3.6·10⁵ times inside
+    // 2⁵³. The frame does not grow with the scale factor: customers
+    // scale with orders (~10 orders per customer at sf0.01 and sf0.1
+    // alike), over the same fixed 1995–2001 date range.
     Tables(s, dir, "orders")
       .withColumn("d", day.cast(LongType))
       .select($"o_custkey", $"o_orderkey", $"d",

@@ -135,7 +135,7 @@ object WriteQueries {
         // with a qty-49+ line. The read back must apply both kinds.
         val conf = spark.sessionState.newHadoopConf()
         val layout2 = graft.catalog.CatalogIO.readLayout(meta2, conf)
-        val file2 = layout2.dataFiles.get.zip(layout2.absoluteDataFiles.get)
+        val file2 = layout2.dataFilePaths.get.zip(layout2.absoluteDataFiles.get)
           .collectFirst { case (rel, abs) if rel.startsWith("data/s2-") => abs }
           .getOrElse(throw new IllegalStateException(
             "w09: snapshot-2 data file not found in layout"))
@@ -258,7 +258,7 @@ object WriteQueries {
         val conf = spark.sessionState.newHadoopConf()
         val layout = graft.catalog.CatalogIO.readLayout(meta2, conf)
         def fileOf(prefix: String): String =
-          layout.dataFiles.get.zip(layout.absoluteDataFiles.get)
+          layout.dataFilePaths.get.zip(layout.absoluteDataFiles.get)
             .collectFirst { case (rel, abs) if rel.startsWith(prefix) => abs }
             .getOrElse(throw new IllegalStateException(
               s"w12: no data file under $prefix"))
@@ -610,7 +610,7 @@ object WriteQueries {
         // the appended file's dead positions, addressed exactly
         val layout2 = graft.catalog.CatalogIO.readLayout(meta2,
           spark.sessionState.newHadoopConf())
-        val appFile = layout2.dataFiles.get.zip(layout2.absoluteDataFiles.get)
+        val appFile = layout2.dataFilePaths.get.zip(layout2.absoluteDataFiles.get)
           .collectFirst { case (rel, abs) if rel.startsWith("data/s") => abs }.get
         val dead = spark.read.parquet(appFile)
           .withColumn("pos", col("_metadata.row_index"))
@@ -1552,14 +1552,14 @@ object WriteQueries {
           s"w21: expected a homogeneous orc layout, got ${layout0.dataFormat}")
         // snapshot 1's file is data/part-*, snapshot 2's data/s2-*
         val byParity: Map[Long, String] =
-          layout0.dataFiles.get.zip(layout0.absoluteDataFiles.get).map {
+          layout0.dataFilePaths.get.zip(layout0.absoluteDataFiles.get).map {
             case (rel, abs) if rel.startsWith("data/part") => 0L -> abs
             case (rel, abs) if rel.startsWith("data/s2-") => 1L -> abs
             case (rel, _) => throw new IllegalStateException(
               s"w21: unexpected data file $rel")
           }.toMap
         require(byParity.size == 2,
-          s"w21: expected 2 one-parity files, got ${layout0.dataFiles.get}")
+          s"w21: expected 2 one-parity files, got ${layout0.dataFilePaths.get}")
         val meta2 = IcebergExport.appendDeletes(spark, meta1,
           positional = Some(
             ((10L to 99L).map(p => (byParity(0L), p)) ++
@@ -1620,13 +1620,13 @@ object WriteQueries {
           s"w33: expected a homogeneous avro layout, got ${layout0.dataFormat}")
         // parity 0 = snapshot 1's file, parity 1 = the appended file
         val firstFiles = CatalogIO.readLayout(metaA, conf)
-          .dataFiles.get.toSet
+          .dataFilePaths.get.toSet
         val byParity: Map[Long, String] =
-          layout0.dataFiles.get.zip(layout0.absoluteDataFiles.get).map {
+          layout0.dataFilePaths.get.zip(layout0.absoluteDataFiles.get).map {
             case (rel, abs) => (if (firstFiles(rel)) 0L else 1L) -> abs
           }.toMap
         require(byParity.size == 2,
-          s"w33: expected 2 one-parity files, got ${layout0.dataFiles.get}")
+          s"w33: expected 2 one-parity files, got ${layout0.dataFilePaths.get}")
         val meta2 = IcebergExport.appendDeletes(spark, meta1,
           positional = Some(
             ((10L to 99L).map(p => (byParity(0L), p)) ++

@@ -142,13 +142,12 @@ private final class AvroMorScanBuilder(spark: SparkSession,
         requested.fields.exists(_.name.equalsIgnoreCase(k.name))))
     val conf = spark.sessionState.newHadoopConf()
     hadoopOpts.foreach { case (k, v) => conf.set(k, v) }
-    AvroMorScan(tableName, layout.dataFiles.getOrElse(Nil).toVector,
-      layout.absoluteDataFilesWithSizes.getOrElse(
+    AvroMorScan(tableName, layout.dataFilePaths.getOrElse(Nil).toVector,
+      layout.absoluteSizes.getOrElse(
         throw new IllegalStateException(
           s"avro merge-on-read table $tableName needs a complete " +
             "file-size manifest (sync-split planning)")).toVector,
-      layout.dataFileSeqs.getOrElse(
-        Seq.fill(layout.dataFiles.map(_.size).getOrElse(0))(0)).toVector,
+      layout.dataFiles.getOrElse(Nil).map(_.seq).toVector,
       layout.deleteFiles.toVector, requested, widened)(
       layout, new SerializableConfiguration(conf), spark, hadoopOpts,
       keyNameMap)
@@ -230,10 +229,7 @@ private[sources] final case class AvroMorScan(tableName: String,
     // per-file constant fills (round 20): each slice carries its own
     // file's constants — injected below the probes task-side
     val fillsByRel: Map[String, Seq[(String, Any)]] =
-      layout.dataFileFills match {
-        case Some(fills) => layout.dataFiles.getOrElse(Nil).zip(fills).toMap
-        case None => Map.empty
-      }
+      layout.dataFiles.getOrElse(Nil).map(f => f.path -> f.fills).toMap
     val parts = rels.indices.flatMap { i =>
       val rel = rels(i)
       val (abs, size) = sized(i)

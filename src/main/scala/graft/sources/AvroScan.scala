@@ -361,11 +361,9 @@ final class GraftAvroTable(spark: SparkSession, tableName: String,
       .fields.map(_.copy(nullable = true))),
     // the helper enforces the complete-sizes contract (a -1 entry would
     // make a slice's pastSync fire immediately — silent row loss)
-    layout.absoluteDataFilesWithSizes.getOrElse(throw new IllegalStateException(
+    layout.absoluteSizes.getOrElse(throw new IllegalStateException(
       s"avro table $tableName has no complete file-size manifest")),
-    layout.absoluteDataFilesWithStats
-      .map(_.collect { case (p, s) if s.nonEmpty => p -> s }.toMap)
-      .getOrElse(Map.empty),
+    layout.absoluteStats,
     hadoopOpts)
 
   override def name(): String = tableName

@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
@@ -12,17 +11,16 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.{FileScan, FileScanBuilder}
 import org.apache.spark.sql.execution.datasources.v2.orc.{OrcScanBuilder, OrcTable}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.catalog.CatalogIO.TableLayout
+import graft.catalog.CatalogIO.{DataFile, TableLayout}
+import graft.catalog.LayoutCodec.ManifestFieldTokens
 
 /** Name-mapping schema evolution through the DSv2 front door (round 9):
   * when a table's metadata carries un-materialized column renames,
@@ -55,14 +53,12 @@ final class GraftEpochTable(spark: SparkSession, tableName: String,
       s"renamed table $tableName has no recorded schema")))
 
   /** (current→physical lowercase name map, that epoch's files). */
-  private val epochs: Seq[(Map[String, String], Seq[String])] =
-    layout.absoluteDataFilesWithSeqs.getOrElse(throw new IllegalStateException(
+  private val epochs: Seq[(Map[String, String], Seq[DataFile])] =
+    layout.dataFiles.getOrElse(throw new IllegalStateException(
       s"renamed table $tableName has no file manifest"))
-      .groupBy { case (_, s) => layout.physicalNamesAt(s) }
-      .toSeq.sortBy(_._2.head._1)
-      .map { case (m, fs) =>
-        (m.map { case (k, v) => k.toLowerCase -> v }, fs.map(_._1))
-      }
+      .groupBy(f => layout.physicalNamesAt(f.seq))
+      .toSeq.sortBy(e => layout.absolutePath(e._2.head))
+      .map { case (m, fs) => (m.map { case (k, v) => k.toLowerCase -> v }, fs) }
 
   /** One stock file table (the layout's format: parquet or ORC) per
     * epoch, with that epoch's physical schema (current schema, names
@@ -72,11 +68,11 @@ final class GraftEpochTable(spark: SparkSession, tableName: String,
     * holds exactly its file subset), else the listing-backed stock
     * table. */
   private val epochTables: Seq[(Map[String, String], Table with SupportsRead)] = {
-    val relByAbs = layout.absoluteDataFiles.getOrElse(Nil)
-      .zip(layout.dataFiles.getOrElse(Nil)).toMap
     val manifestPlanning = spark.conf
       .getOption("spark.graft.manifest.planning").forall(_ == "true")
-    epochs.map { case (m, files) =>
+    epochs.map { case (m, epochFiles) =>
+      val rels = epochFiles.map(_.path)
+      val files = epochFiles.map(layout.absolutePath)
       val physSchema = StructType(currentSchema.fields.map(f =>
         f.copy(name = m.getOrElse(f.name.toLowerCase, f.name))))
       // partition columns never rename (refused at ALTER), so the
@@ -90,7 +86,7 @@ final class GraftEpochTable(spark: SparkSession, tableName: String,
             layout.hasRelocated) None
         else ManifestFileIndex.tableFor(s"$tableName@epoch", spark,
           hadoopOpts, layout, schemaOverride = Some(physSchema),
-          fileSubset = Some(files.map(relByAbs)))
+          fileSubset = Some(rels))
       // AVRO epochs (round 20): the engine's sync-split decoder resolves
       // record fields BY NAME, so handing it the epoch's physical schema
       // reads each file under the names it was written with — rows stay
@@ -102,12 +98,12 @@ final class GraftEpochTable(spark: SparkSession, tableName: String,
       val table =
         if (layout.dataFormat == "avro")
           new GraftAvroTable(spark, s"$tableName@epoch",
-            layout.retainDataFiles(files.map(relByAbs).toSet).copy(
+            layout.retainDataFiles(rels.toSet).copy(
               schemaDdl = Some(physSchema.toDDL), renameOps = Nil),
             hadoopOpts)
         else if (layout.dataFormat == "mixed")
           new GraftMixedFormatTable(spark, s"$tableName@epoch",
-            layout.retainDataFiles(files.map(relByAbs).toSet).copy(
+            layout.retainDataFiles(rels.toSet).copy(
               schemaDdl = Some(physSchema.toDDL), renameOps = Nil),
             hadoopOpts)
         else manifest.getOrElse {
@@ -316,10 +312,10 @@ final class GraftEpochMorTable(spark: SparkSession, tableName: String,
 
   // POSITIONAL deletes and DVs compose with renames (late round 20):
   // position addressing is name-free, and each epoch's sub-layout
-  // carries its own files' positional state in lockstep
-  // (retainDataFiles), so the per-epoch MOR wrapper applies them with
-  // no translation at all. The write face (scanLayoutAddressed) reads
-  // per epoch under physical names and renames back before predicates.
+  // carries its own files' positional state (retainDataFiles), so the
+  // per-epoch MOR wrapper applies them with no translation at all. The
+  // write face (scanLayoutAddressed) reads per epoch under physical
+  // names and renames back before predicates.
   // eq-overflow + renames COMPOSE (late round 20): each epoch's MOR
   // wrapper spills independently over ITS sub-layout, with the spill's
   // data-side key reads and join resolving delete columns through the
@@ -329,26 +325,29 @@ final class GraftEpochMorTable(spark: SparkSession, tableName: String,
   /** (current→physical lowercase map, that epoch's segment-relative
     * files). */
   private val epochs: Seq[(Map[String, String], Seq[String])] =
-    layout.dataFiles.getOrElse(throw new IllegalStateException(
+  {
+    val files = layout.dataFiles.getOrElse(throw new IllegalStateException(
       s"renamed merge-on-read table $tableName has no file manifest"))
-      .zip(layout.dataFileSeqs.getOrElse(throw new IllegalStateException(
-        s"renamed merge-on-read table $tableName has no per-file seqs")))
-      .groupBy { case (_, s) => layout.physicalNamesAt(s) }
-      .toSeq.sortBy(_._2.head._1)
+    if (!layout.entryFields(ManifestFieldTokens.Seqs))
+      throw new IllegalStateException(
+        s"renamed merge-on-read table $tableName has no per-file seqs")
+    files.groupBy(f => layout.physicalNamesAt(f.seq))
+      .toSeq.sortBy(_._2.head.path)
       .map { case (m, fs) =>
-        (m.map { case (k, v) => k.toLowerCase -> v }, fs.map(_._1))
+        (m.map { case (k, v) => k.toLowerCase -> v }, fs.map(_.path))
       }
+  }
 
   private val epochTables: Seq[(Map[String, String], Table with SupportsRead)] = {
     val manifestPlanning = spark.conf
       .getOption("spark.graft.manifest.planning").forall(_ == "true")
     val absByRel = layout.dataFiles.getOrElse(Nil)
-      .zip(layout.absoluteDataFiles.getOrElse(Nil)).toMap
+      .map(f => f.path -> layout.absolutePath(f)).toMap
     epochs.map { case (m, rels) =>
       val physSchema = StructType(currentSchema.fields.map(f =>
         f.copy(name = m.getOrElse(f.name.toLowerCase, f.name))))
       // the epoch SUB-LAYOUT: this epoch's files (deletes + seqs ride
-      // along in lockstep), the PHYSICAL schema, no rename state — the
+      // along), the PHYSICAL schema, no rename state — the
       // inner MOR wrapper sees a plain delete-live table in physical
       // name space
       val subLayout = layout.retainDataFiles(rels.toSet)

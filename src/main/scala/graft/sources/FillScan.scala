@@ -11,7 +11,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
@@ -26,9 +25,9 @@ import graft.catalog.CatalogIO.TableLayout
 
 /** Iceberg v3 `initial-default` columns through the DSv2 front door
   * (round 14): when a converted Iceberg layout carries per-file FILL
-  * sets ([[TableLayout.dataFileFills]] — the constant a pre-addition
-  * data file must serve for a column added after it was written),
-  * [[GraftSparkCatalog.loadTable]] serves a [[GraftFillTable]].
+  * sets ([[graft.catalog.CatalogIO.DataFile.fills]] — the constant a
+  * pre-addition data file must serve for a column added after it was
+  * written), [[GraftSparkCatalog.loadTable]] serves a [[GraftFillTable]].
   *
   * Shape mirrors [[GraftEpochTable]]: files group by their fill set,
   * each group reads through one stock `ParquetScan` (manifest-planned
@@ -88,38 +87,31 @@ final class GraftFillTable(spark: SparkSession, tableName: String,
     * partitioned Hive-migration append shape: an ORC base plus parquet
     * appends, all lacking the partition column). Avro never reaches
     * here (layout invariant: fills + avro refuse upstream). */
-  private val fileFormats: Seq[String] = {
-    val n = layout.absoluteDataFiles.map(_.size).getOrElse(0)
-    layout.dataFileFormats.getOrElse(Seq.fill(n)(layout.dataFormat))
-  }
-
   /** (fill set, format, that group's absolute files) — fill-free groups
     * first. */
   private val groups: Seq[(Seq[(String, Any)], String, Seq[String])] =
-    layout.absoluteDataFiles.getOrElse(throw new IllegalStateException(
+  {
+    val files = layout.dataFiles.getOrElse(throw new IllegalStateException(
       s"fill table $tableName has no file manifest"))
-      .zip(layout.dataFileFills.getOrElse(throw new IllegalStateException(
-        s"fill table $tableName has no fill sets")))
-      .zip(fileFormats)
-      .groupBy { case ((_, fills), fmt) => (fills, fmt) }.toSeq
+    if (!layout.hasFills)
+      throw new IllegalStateException(s"fill table $tableName has no fill sets")
+    files.groupBy(f => (f.fills, f.format)).toSeq
       .sortBy { case ((fills, fmt), _) =>
         (fills.nonEmpty, fills.map(_._1).mkString(","), fmt) }
-      .map { case ((fills, fmt), triples) =>
-        (fills, fmt, triples.map(_._1._1)) }
+      .map { case ((fills, fmt), group) =>
+        (fills, fmt, group.map(layout.absolutePath)) }
+  }
 
   // shared lookups, computed ONCE per table load (not per group — the
   // group count is O(partitions) on imported hive trees)
   private lazy val relByAbs: Map[String, String] =
-    layout.absoluteDataFiles.getOrElse(Nil)
-      .zip(layout.dataFiles.getOrElse(Nil)).toMap
+    layout.dataFiles.getOrElse(Nil).map(f => layout.absolutePath(f) -> f.path).toMap
   private lazy val statsByPath: Map[String, String] = {
     val statsEnabled = spark.conf
       .getOption("spark.graft.stats.pruning").forall(_ == "true")
     if (!statsEnabled) Map.empty
-    else layout.absoluteDataFilesWithStats
-      .map(_.collect { case (p, s) if s.nonEmpty =>
-        new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }.toMap)
-      .getOrElse(Map.empty)
+    else layout.absoluteStats.map { case (p, s) =>
+      new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }
   }
 
   /** ONE group's stock table — invoked LAZILY per group at scan build
@@ -142,15 +134,12 @@ final class GraftFillTable(spark: SparkSession, tableName: String,
     // construction (file list + sizes) and does its own envelope-based
     // stats pruning, so both wraps below are skipped.
     if (fmt == "avro") {
-      val sized = layout.absoluteDataFilesWithSizes.getOrElse(
+      val sized = layout.absoluteSizes.getOrElse(
         throw new IllegalStateException(
           s"fill table $tableName has avro files but no complete " +
             "file-size manifest"))
       val keep = files.toSet
-      val statsByAbs = layout.absoluteDataFilesWithStats
-        .map(_.collect { case (p, s) if s.nonEmpty && keep(p) => p -> s }
-          .toMap)
-        .getOrElse(Map.empty)
+      val statsByAbs = layout.absoluteStats.filter { case (p, _) => keep(p) }
       return new GraftAvroTable(spark, s"$tableName@fill",
         currentSchema, sized.filter { case (p, _) => keep(p) },
         statsByAbs, hadoopOpts)

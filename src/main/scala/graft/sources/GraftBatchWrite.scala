@@ -3,7 +3,6 @@ package graft.sources
 import java.util.UUID
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
@@ -251,7 +250,7 @@ private[sources] object GraftBatchWrite {
       filters: Array[org.apache.spark.sql.sources.Filter]): String => Boolean = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StructField, StructType}
-    val files = prior.dataFiles.get
+    val files = prior.dataFilePaths.get
     if (files.isEmpty) return _ => false
     val rows = files.map(f => Row.fromSeq(f +: partitionDirValues(f, partitionBy)))
     val schema = StructType(StructField("graft_file", StringType) +:

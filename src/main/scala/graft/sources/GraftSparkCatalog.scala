@@ -17,6 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.{Catalog => GraftCatalog, CatalogConfig, CatalogFactory, CatalogIO, Namespace, TableRef}
+import graft.catalog.LayoutCodec.ManifestFieldTokens
 
 /** DataSource V2 adapter (SURVEY §2B E2): surfaces any [[graft.catalog
   * .Catalog]] to Spark SQL as a `TableCatalog with SupportsNamespaces`, so
@@ -243,7 +244,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
     // _last_updated_sequence_number as metadata columns (round 16 —
     // judge r15 #3); queries not naming them plan through `served`
     // unchanged
-    if (layout.dataFileLineage.isDefined)
+    if (layout.entryFields(ManifestFieldTokens.Lineage))
       new GraftLineageTable(served.asInstanceOf[Table with SupportsRead],
         SparkSession.active, ref.toString, layout, hadoopOpts)
     else served
@@ -346,7 +347,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
       else manifestPlanned(table, vLayout) // bucketed history: no SPJ, but zero-listing planning
     // v3 lineage columns are snapshot-scoped, so time travel serves them
     // too (each snapshot's layout carries ITS OWN inheritance)
-    if (vLayout.dataFileLineage.isDefined)
+    if (vLayout.entryFields(ManifestFieldTokens.Lineage))
       new GraftLineageTable(served.asInstanceOf[Table with SupportsRead],
         SparkSession.active, label, vLayout, hadoopOpts)
     else served
@@ -375,9 +376,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
   private def statsMapOf(layout: CatalogIO.TableLayout): Option[Map[String, String]] = {
     val enabled = SparkSession.active.conf
       .getOption("spark.graft.stats.pruning").forall(_ == "true")
-    layout.absoluteDataFilesWithStats
-      .map(_.collect { case (p, s) if s.nonEmpty =>
-        new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }.toMap)
+    Some(layout.absoluteStats.map { case (p, s) =>
+      new org.apache.hadoop.fs.Path(p).toUri.getPath -> s })
       .filter(m => enabled && m.nonEmpty)
   }
 
@@ -416,10 +416,10 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
     val enabled = SparkSession.active.conf
       .getOption("spark.graft.ndv.enabled").forall(_ == "true")
     if (!enabled) Map.empty
-    else layout.absoluteDataFilesWithNdv
-      .map(_.collect { case (p, s) if s.nonEmpty =>
-        new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }.toMap)
-      .getOrElse(Map.empty)
+    else if (!layout.entryFields(ManifestFieldTokens.Ndv)) Map.empty
+    else layout.dataFiles.getOrElse(Nil).collect { case f if f.ndv.nonEmpty =>
+      new org.apache.hadoop.fs.Path(layout.absolutePath(f)).toUri.getPath -> f.ndv
+    }.toMap
   }
 
   /** Scan roots for a layout: manifest versions scan exactly their
@@ -761,7 +761,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
         // fills + renames never coexist (the TableLayout invariant would
         // refuse the commit anyway, but before-side-effect with the fix
         // named beats a generic require message — advisor r16 #1)
-        if (layout.dataFileFills.exists(_.exists(_.exists(f =>
+        if (layout.dataFiles.exists(_.exists(_.fills.exists(f =>
             f._1.equalsIgnoreCase(from) ||
               f._1.toLowerCase.startsWith(from.toLowerCase + ".")))))
           throw new UnsupportedOperationException(
@@ -809,11 +809,11 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
               "partition/bucket/sort layout; rewrite the table under a new " +
               "layout instead")
         // an ADOPTED fill table's manifests key per-file constants by
-        // COLUMN NAME (dataFileFills — identity partition values /
+        // COLUMN NAME (DataFile.fills — identity partition values /
         // initial-defaults); dropping the column would commit a version
         // whose fills no longer decode (every later readLayout throws in
         // decodeFills) — refuse BEFORE the side effect (advisor r16 #1)
-        if (layout.dataFileFills.exists(_.exists(_.exists(f =>
+        if (layout.dataFiles.exists(_.exists(_.fills.exists(f =>
             f._1.equalsIgnoreCase(nm) ||
               f._1.toLowerCase.startsWith(nm.toLowerCase + ".")))))
           throw new UnsupportedOperationException(

@@ -87,7 +87,7 @@ final class GraftWritableTable(read: Table with SupportsRead,
     // adopted ORC/avro/mixed tables take COW row-level operations too
     // (round 17 — the r16 append-only stance narrowed): the scan reads
     // every format, the rewrite output is engine parquet, and the
-    // replace commit threads survivor formats in lockstep (adopted
+    // replace commit keeps each survivor entry's format (adopted
     // layouts record no partition columns, so the replace set is the
     // whole table and the result comes out homogeneous parquet).
     () => new GraftRowLevelOperation(read, SparkSession.active, cat, ref,

@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.catalog.CatalogIO.TableLayout
+import graft.catalog.CatalogIO.{DataFile, TableLayout}
+import graft.catalog.LayoutCodec.ManifestFieldTokens
 
 /** SQL-face v3 ROW LINEAGE (round 16 — judge r15 #3): wraps the table
   * a registered Iceberg v3 pointer resolves to and publishes `_row_id`
@@ -38,9 +39,10 @@ import graft.catalog.CatalogIO.TableLayout
   * The lineage scan mirrors the spec's read semantics (and the library
   * face [[graft.catalog.CatalogIO.scanIcebergLineage]]): `_row_id` =
   * the file's inherited `first_row_id` (from the layout's one manifest
-  * walk — [[TableLayout.dataFileLineage]]) + the row's position in the
-  * file; NULL for files whose snapshot predates the v3 upgrade;
-  * `_last_updated_sequence_number` = the file's data sequence number.
+  * walk — [[graft.catalog.CatalogIO.DataFile.lineage]]) + the row's
+  * position in the file; NULL for files whose snapshot predates the v3
+  * upgrade; `_last_updated_sequence_number` = the file's data sequence
+  * number.
   * Deletion vectors apply (survivors keep their ids), and EQUALITY
   * deletes apply through reader-side key probes gated on the row's
   * file data seq (broadcast-small tuple sets, the MOR probe shape —
@@ -227,8 +229,8 @@ private final class LineageScan(spark: SparkSession, label: String,
   // inner reader below the position counter and the eq probes, exactly
   // like the MOR scan, so survivors keep their ids and eq keys on fill
   // columns compare against the filled values
-  private val lineage = layout.dataFileLineage.getOrElse(
-    refuse("a non-v3 layout (lineage exists from format-version 3)"))
+  if (!layout.entryFields(ManifestFieldTokens.Lineage))
+    refuse("a non-v3 layout (lineage exists from format-version 3)")
 
   // nullable-forced like the fill table: a file lacking a REQUIRED fill
   // column (identity partition value) must still scan — the injected
@@ -376,10 +378,6 @@ private final class LineageScan(spark: SparkSession, label: String,
 
   // per-file formats: the one recorded format for homogeneous layouts,
   // the manifest's per-entry formats for MIXED ones (round 20)
-  private val fileFormats: Seq[String] = {
-    val n = layout.dataFiles.map(_.size).getOrElse(0)
-    layout.dataFileFormats.getOrElse(Seq.fill(n)(layout.dataFormat))
-  }
 
   /** One stock scan per parquet/orc format PRESENT, over only that
     * format's files, pruned to the widened inner schema. Avro files
@@ -397,11 +395,11 @@ private final class LineageScan(spark: SparkSession, label: String,
     // readers (and the avro decoder) serve NULL where a file lacks
     // them (ordinary appends)
     val widened = StructType(physicalTable.fields ++ matFields)
-    layout.absoluteDataFiles.getOrElse(Nil).zip(fileFormats)
-      .filterNot(_._2 == "avro")
-      .groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (fmt, pairs) =>
-        val files = pairs.map(_._1)
+    layout.dataFiles.getOrElse(Nil)
+      .filterNot(_.format == "avro")
+      .groupBy(_.format).toSeq.sortBy(_._1)
+      .map { case (fmt, group) =>
+        val files = group.map(layout.absolutePath)
         val table: Table with SupportsRead =
           if (fmt == "orc")
             org.apache.spark.sql.execution.datasources.v2.orc.OrcTable(
@@ -424,16 +422,8 @@ private final class LineageScan(spark: SparkSession, label: String,
     hadoopOpts.foreach { case (k, v) => conf.set(k, v) }
     val fs = new Path(layout.dataLocation).getFileSystem(conf)
     def qual(s: String): String = fs.makeQualified(new Path(s)).toString
-    val linByRel: Map[String, (Option[Long], Long)] =
-      layout.dataFiles.getOrElse(Nil).zip(lineage).toMap
-    val fillsByRel: Map[String, Seq[(String, Any)]] =
-      layout.dataFileFills match {
-        case Some(fills) => layout.dataFiles.getOrElse(Nil).zip(fills).toMap
-        case None => Map.empty
-      }
-    val relByAbs: Map[String, String] = layout.dataFiles.getOrElse(Nil)
-      .zip(layout.absoluteDataFiles.getOrElse(Nil))
-      .map { case (rel, abs) => qual(abs) -> rel }.toMap
+    val byAbs: Map[String, DataFile] = layout.dataFiles.getOrElse(Nil)
+      .map(f => qual(layout.absolutePath(f)) -> f).toMap
     var idx = -1
     val stock = stockScans.zipWithIndex.flatMap { case ((_, scan), fi) =>
       val slices = scan.toBatch.planInputPartitions()
@@ -443,38 +433,30 @@ private final class LineageScan(spark: SparkSession, label: String,
           // merge the file's slices (they tile it) into one 0..len read
           val whole = fileSlices.minBy(_.start)
             .copy(start = 0L, length = fileSlices.map(_.length).sum)
-          val rel = relByAbs.getOrElse(qual(p), throw new IllegalStateException(
+          val f = byAbs.getOrElse(qual(p), throw new IllegalStateException(
             s"planned file $p is not in the manifest of ${layout.dataLocation}"))
-          val (first, seq) = linByRel(rel)
+          val (first, seq) = f.lineage
           idx += 1
           LineagePartition(FilePartition(idx, Array(whole)), first, seq,
-            fillsByRel.getOrElse(rel, Seq.empty),
-            layout.dvFor(rel), rel, factory = fi): InputPartition
+            f.fills, layout.dvFor(f.path), f.path, factory = fi): InputPartition
         }
     }
     // avro files: one whole-file partition each through the engine's
     // sync-split decoder — record order is the position
-    val avroRels = layout.dataFiles.getOrElse(Nil).zip(fileFormats)
-      .collect { case (rel, "avro") => rel }
+    val avroFiles = layout.dataFiles.getOrElse(Nil).filter(_.format == "avro")
     val avro =
-      if (avroRels.isEmpty) Nil
+      if (avroFiles.isEmpty) Nil
       else {
-        val sizeByRel: Map[String, Long] = {
-          val sized = layout.absoluteDataFilesWithSizes.getOrElse(
-            throw new IllegalStateException(
-              s"$label has avro files but no complete file-size manifest"))
-          layout.dataFiles.getOrElse(Nil).zip(sized.map(_._2)).toMap
-        }
-        val absByRel: Map[String, String] = layout.dataFiles.getOrElse(Nil)
-          .zip(layout.absoluteDataFiles.getOrElse(Nil)).toMap
-        avroRels.sorted.map { rel =>
-          val (first, seq) = linByRel(rel)
+        if (!layout.sizesComplete)
+          throw new IllegalStateException(
+            s"$label has avro files but no complete file-size manifest")
+        avroFiles.sortBy(_.path).map { f =>
+          val (first, seq) = f.lineage
           idx += 1
-          LineagePartition(null, first, seq,
-            fillsByRel.getOrElse(rel, Seq.empty),
-            layout.dvFor(rel), rel, factory = -1,
-            avroFile = Some((absByRel(rel),
-              math.max(sizeByRel(rel), 1L)))): InputPartition
+          LineagePartition(null, first, seq, f.fills,
+            layout.dvFor(f.path), f.path, factory = -1,
+            avroFile = Some((layout.absolutePath(f),
+              math.max(f.size, 1L)))): InputPartition
         }
       }
     (stock ++ avro).toArray

@@ -28,7 +28,7 @@ import graft.catalog.CatalogIO
   * 100 TB that is millions of RPCs before the first task is scheduled
   * (the reference's Iceberg jars plan from manifest `file_size_in_bytes`
   * for exactly this reason). With sizes recorded at commit
-  * ([[CatalogIO.TableLayout.dataFileSizes]]), split planning
+  * ([[CatalogIO.DataFile.size]]), split planning
   * (`FilePartition` packing), partition pruning (values parsed from the
   * manifest's relative paths), and size statistics all answer from
   * metadata already in driver memory. Reading is 100% stock — the same
@@ -140,8 +140,8 @@ object ManifestFileIndex {
     for {
       schema <- schemaOverride.orElse(layout.schemaDdl.flatMap(d =>
         scala.util.Try(StructType.fromDDL(d)).toOption))
-      allSized <- layout.dataFiles.zip(layout.dataFileSizes
-        .filter(_.forall(_ >= 0))).map { case (fs, ss) => fs.zip(ss) }
+      allSized <- layout.dataFiles.filter(_ => layout.sizesComplete)
+        .map(_.map(f => (f.path, f.size)))
       sized = fileSubset.fold(allSized) { keep =>
         val keepSet = keep.toSet
         allSized.filter { case (f, _) => keepSet(f) }

@@ -84,15 +84,6 @@ object MetadataTables {
     }
   }
 
-  /** Per-manifest-entry byte sizes, purely from the metadata (round 11:
-    * the manifest records `dataFileSizes` at commit). Pre-size manifests
-    * report -1 per entry — NO filesystem fallback: a million-file table's
-    * "zero data read" introspection query must never become a
-    * million-entry object-store listing. One `INSERT INTO`/compaction
-    * upgrades the manifest. */
-  private def sizesOf(layout: CatalogIO.TableLayout,
-      files: Seq[String]): Seq[Long] =
-    layout.dataFileSizes.getOrElse(Seq.fill(files.size)(-1L))
 
   /** One row per partition directory of the current manifest —
     * file/row/byte totals, rolled up from the manifest entries, their
@@ -108,20 +99,22 @@ object MetadataTables {
     val files = layout.dataFiles.getOrElse(throw new UnsupportedOperationException(
       s"Table $base predates file manifests (whole-directory snapshot); " +
         "INSERT OVERWRITE once to upgrade it before reading the partitions table"))
-    val stats = layout.dataFileStats.getOrElse(Seq.fill(files.size)(""))
-    val sizes = sizesOf(layout, files)
     def partitionOf(rel: String): String = {
       val cut = rel.lastIndexOf('/')
       if (cut < 0) "<all>" else rel.substring(0, cut)
     }
-    val rows = files.lazyZip(stats).lazyZip(sizes).toSeq
-      .groupBy { case (f, _, _) => partitionOf(f) }
+    // sizes purely from the metadata (round 11): pre-size manifests
+    // read -1 per entry — NO filesystem fallback: a million-file
+    // table's "zero data read" introspection query must never become a
+    // million-entry object-store listing. One `INSERT INTO`/compaction
+    // upgrades the manifest.
+    val rows = files
+      .groupBy(f => partitionOf(f.path))
       .toSeq.sortBy(_._1)
       .map { case (part, entries) =>
-        val rowCounts = entries.map { case (_, st, _) =>
-          schema.flatMap(sc => FileStats.decode(st, sc)).map(_.rowCount) }
-        val bytes = entries.map { case (_, _, sz) =>
-          if (sz >= 0) Some(sz) else None }
+        val rowCounts = entries.map(f =>
+          schema.flatMap(sc => FileStats.decode(f.stats, sc)).map(_.rowCount))
+        val bytes = entries.map(f => if (f.size >= 0) Some(f.size) else None)
         InternalRow(UTF8String.fromString(part), entries.size,
           (if (rowCounts.forall(_.isDefined))
             Long.box(rowCounts.flatten.sum) else null): Any,
@@ -139,10 +132,7 @@ object MetadataTables {
     val files = layout.dataFiles.getOrElse(throw new UnsupportedOperationException(
       s"Table $base predates file manifests (whole-directory snapshot); " +
         "INSERT OVERWRITE once to upgrade it before reading the files table"))
-    val seqs = layout.dataFileSeqs.getOrElse(Seq.fill(files.size)(0))
-    val stats = layout.dataFileStats.getOrElse(Seq.fill(files.size)(""))
-    val sizes = sizesOf(layout, files)
-    val rows = files.lazyZip(seqs).lazyZip(stats).lazyZip(sizes).map { (f, seq, st, size) =>
+    val rows = files.map { case CatalogIO.DataFile(f, seq, st, size, _, _, _, _) =>
       val decoded = schema.flatMap(sc => FileStats.decode(st, sc))
       val summary = decoded.map { d =>
         d.cols.toSeq.sortBy(_._1).map { case (n, c) =>

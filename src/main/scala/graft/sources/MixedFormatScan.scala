@@ -65,31 +65,22 @@ final class GraftMixedFormatTable(spark: SparkSession, tableName: String,
   private val groups: Seq[(String, Seq[String])] =
     layout.dataFiles.getOrElse(throw new IllegalStateException(
       s"mixed-format table $tableName has no file manifest"))
-      .zip(layout.dataFileFormats.getOrElse(throw new IllegalStateException(
-        s"mixed-format table $tableName has no per-file formats")))
-      .groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (fmt, pairs) => (fmt, pairs.map(_._1)) }
+      .groupBy(_.format).toSeq.sortBy(_._1)
+      .map { case (fmt, files) => (fmt, files.map(_.path)) }
 
   private val groupTables: Seq[Table with SupportsRead] = {
     val absOf: Map[String, String] = layout.dataFiles.getOrElse(Nil)
-      .zip(layout.absoluteDataFiles.getOrElse(Nil)).toMap
+      .map(f => f.path -> layout.absolutePath(f)).toMap
     val manifestPlanning = spark.conf
       .getOption("spark.graft.manifest.planning").forall(_ == "true")
     val statsEnabled = spark.conf
       .getOption("spark.graft.stats.pruning").forall(_ == "true")
     // two key spellings: StatsPrunedTable compares by URI path, the
     // avro builder by the absolute manifest path
-    val statsByUriPath: Map[String, String] =
-      if (!statsEnabled) Map.empty
-      else layout.absoluteDataFilesWithStats
-        .map(_.collect { case (p, s) if s.nonEmpty =>
-          new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }.toMap)
-        .getOrElse(Map.empty)
     val statsByAbs: Map[String, String] =
-      if (!statsEnabled) Map.empty
-      else layout.absoluteDataFilesWithStats
-        .map(_.collect { case (p, s) if s.nonEmpty => p -> s }.toMap)
-        .getOrElse(Map.empty)
+      if (!statsEnabled) Map.empty else layout.absoluteStats
+    val statsByUriPath: Map[String, String] = statsByAbs.map { case (p, s) =>
+      new org.apache.hadoop.fs.Path(p).toUri.getPath -> s }
     groups.map { case (fmt, rels) =>
       val abs = rels.map(absOf)
       if (fmt == "avro") {
@@ -99,11 +90,10 @@ final class GraftMixedFormatTable(spark: SparkSession, tableName: String,
         // ever match within the group's files
         if (layout.deleteFiles.nonEmpty)
           new GraftAvroMorTable(spark, s"$tableName@avro",
-            layout.retainDataFiles(rels.toSet)
-              .copy(dataFormat = fmt, dataFileFormats = None), hadoopOpts,
+            layout.retainDataFiles(rels.toSet).copy(dataFormat = fmt), hadoopOpts,
             keyNameMap = keyNameMap)
         else {
-          val sized = layout.absoluteDataFilesWithSizes.getOrElse(
+          val sized = layout.absoluteSizes.getOrElse(
             throw new IllegalStateException(
               s"mixed-format table $tableName has avro files but no " +
                 "complete file-size manifest"))
@@ -138,13 +128,12 @@ final class GraftMixedFormatTable(spark: SparkSession, tableName: String,
         // targets/tuple/seq gates only ever match within the group's
         // files. The MOR wrapper needs the stock FileScanBuilder
         // directly (correctness over the stats wrapper, exactly like
-        // the homogeneous MOR route); the group-restricted layout keeps
-        // per-file FILLS in lockstep (retainDataFiles), which the MOR
+        // the homogeneous MOR route); the group-restricted layout's
+        // entries keep their per-file FILLS (retainDataFiles), which the MOR
         // scan injects below its probes — the partitioned-hive-import
         // base of a mixed delete-live layout (round 20).
         if (layout.deleteFiles.nonEmpty) {
-          val groupLayout = layout.retainDataFiles(rels.toSet)
-            .copy(dataFormat = fmt, dataFileFormats = None)
+          val groupLayout = layout.retainDataFiles(rels.toSet).copy(dataFormat = fmt)
           new GraftMorTable(table, groupLayout, hadoopOpts,
             keyNameMap = keyNameMap)
         } else {

@@ -194,8 +194,7 @@ private final class MorScanBuilder(delegate: FileScanBuilder,
     // the same rule as FillScanBuilder); they re-evaluate above the
     // scan, over the injected constants
     val fillCols: Set[String] =
-      layout.dataFileFills.map(_.flatten.map(_._1.toLowerCase).toSet)
-        .getOrElse(Set.empty)
+      layout.dataFiles.getOrElse(Nil).flatMap(_.fills.map(_._1.toLowerCase)).toSet
     val (fillTouching, safe) = filters.partition(
       _.references.exists(a => fillCols(a.name.toLowerCase)))
     val pushedBack =
@@ -403,23 +402,17 @@ private[sources] object MorScan {
     val schema = StructType.fromDDL(layout.schemaDdl.getOrElse(
       throw new IllegalStateException(
         s"merge-on-read layout without a recorded schema at ${layout.dataLocation}")))
-    val withSeqs = layout.absoluteDataFilesWithSeqs.getOrElse(Nil)
-    val relsOf = layout.dataFiles.getOrElse(Nil)
-    val groups = relsOf.zip(withSeqs)
-      .groupBy { case (rel, (_, s)) =>
-        layout.eqDeletePathsFor(rel, s).sorted
-      }
-      .map { case (k, v) => k -> v.map(_._2) }
+    val groups = layout.dataFiles.getOrElse(Nil)
+      .groupBy(f => layout.eqDeletePathsFor(f.path, f.seq).sorted)
       .filter(_._1.nonEmpty)
       .toSeq.sortBy(_._1.mkString("\u0000"))
     if (groups.isEmpty) return Map.empty
     val fs = new Path(layout.dataLocation).getFileSystem(conf)
     def qual(s: String): String = fs.makeQualified(new Path(s)).toString
-    val relByAbs = layout.dataFiles.getOrElse(Nil)
-      .zip(withSeqs.map(_._1)).map { case (rel, abs) => qual(abs) -> rel }.toMap
+    def absOf(f: graft.catalog.CatalogIO.DataFile): String = qual(layout.absolutePath(f))
     val cacheKey = (layout.dataLocation,
-      layout.eqDeleteFiles.map(d => (d.path, d.seq, d.targets)), withSeqs,
-      keyNameMap)
+      layout.eqDeleteFiles.map(d => (d.path, d.seq, d.targets)),
+      layout.dataFiles.map(_.map(f => (f.path, f.seq))), keyNameMap)
     def computeSpill(spillRoot: Path,
         spillFs: org.apache.hadoop.fs.FileSystem)
         : (Map[String, Seq[String]], () => Unit) = {
@@ -427,12 +420,6 @@ private[sources] object MorScan {
         val bySchema = delPaths
           .groupBy(p => graft.catalog.CatalogIO.DeleteFileFooters.of(p, conf)._1)
           .toSeq.sortBy(_._1.mkString(","))
-        val fillsByRel: Map[String, Seq[(String, Any)]] =
-          layout.dataFileFills match {
-            case Some(fills) =>
-              layout.dataFiles.getOrElse(Nil).zip(fills).toMap
-            case None => Map.empty
-          }
         val data =
           if (layout.dataFormat == "parquet") {
             // fill layouts: sub-group by fill set, inject the constants
@@ -443,15 +430,14 @@ private[sources] object MorScan {
               if (!layout.hasFills) schema
               else FillInjection.deepNullable(schema)
                 .asInstanceOf[StructType]
-            files.groupBy { case (abs, _) =>
-              fillsByRel.getOrElse(relByAbs(qual(abs)), Seq.empty) }
+            files.groupBy(_.fills)
               .toSeq
               .sortBy(_._1.map(t => s"${t._1}=${t._2}").mkString(" "))
               .map { case (fillSet, fsOfFill) =>
                 val r = session.read.options(hadoopOpts).schema(readSchema)
                 val d0 = (if (layout.suppressBasePath) r
                   else r.option("basePath", layout.dataLocation))
-                  .parquet(fsOfFill.map(_._1): _*)
+                  .parquet(fsOfFill.map(layout.absolutePath): _*)
                   .withColumn("__graft_f", col("_metadata.file_path"))
                   .withColumn("__graft_p", col("_metadata.row_index"))
                 fillSet.foldLeft(d0) { case (d, (c, v)) =>
@@ -466,19 +452,17 @@ private[sources] object MorScan {
             // constants); __graft_f matches parquet's _metadata
             // spelling (qualified path string)
             val sizeByAbs: Map[String, Long] =
-              layout.absoluteDataFilesWithSizes.getOrElse(
+              layout.absoluteSizes.getOrElse(
                 throw new IllegalStateException(
                   s"avro eq-overflow degrade over ${layout.dataLocation} " +
                     "needs a complete file-size manifest")).map {
                 case (p, s) => qual(p) -> s
               }.toMap
             avroAddressFrame(session, hadoopOpts,
-              files.map(f => (qual(f._1), sizeByAbs(qual(f._1)))), schema,
+              files.map(f => (absOf(f), sizeByAbs(absOf(f)))), schema,
               bySchema.flatMap(_._1).distinct.map(physKey),
-              fillsByAbs = files.flatMap { f =>
-                val fl = fillsByRel.getOrElse(relByAbs(qual(f._1)), Seq.empty)
-                if (fl.isEmpty) None else Some(qual(f._1) -> fl.toMap)
-              }.toMap)
+              fillsByAbs = files.collect { case f if f.fills.nonEmpty =>
+                absOf(f) -> f.fills.toMap }.toMap)
           } else
             // ORC: addresses from a distributed per-file counting read
             // over orc-core — only this group's delete-KEY columns are
@@ -487,12 +471,10 @@ private[sources] object MorScan {
             // (qualified path string) so the relativization below is
             // shared
             orcAddressFrame(session, hadoopOpts,
-              files.map(f => qual(f._1)), schema,
+              files.map(absOf), schema,
               bySchema.flatMap(_._1).distinct.map(physKey),
-              fillsByAbs = files.flatMap { f =>
-                val fl = fillsByRel.getOrElse(relByAbs(qual(f._1)), Seq.empty)
-                if (fl.isEmpty) None else Some(qual(f._1) -> fl.toMap)
-              }.toMap)
+              fillsByAbs = files.collect { case f if f.fills.nonEmpty =>
+                absOf(f) -> f.fills.toMap }.toMap)
         val matched = bySchema.map { case (cols, paths) =>
           val del = graft.catalog.CatalogIO.readDeleteFiles(session,
             hadoopOpts, paths.distinct, conf)
@@ -535,10 +517,8 @@ private[sources] object MorScan {
               new Path(r.getString(1))).toString)
               .toSeq.sorted
           }
-        files.map { case (abs, _) =>
-          val rel = relByAbs(qual(abs))
-          rel -> sliceByRel.getOrElse(rel, Nil)
-        }.filter(_._2.nonEmpty)
+        files.map(f => f.path -> sliceByRel.getOrElse(f.path, Nil))
+          .filter(_._2.nonEmpty)
       }.toMap
       (mapping, () =>
         try spillFs.delete(spillRoot, true) catch { case _: Exception => () })
@@ -993,12 +973,11 @@ private final class MorScan(private val delegate: FileScan,
     hadoopOpts.foreach { case (k, v) => conf.set(k, v) }
     val fs = new Path(layout.dataLocation).getFileSystem(conf)
     def qual(s: String): String = fs.makeQualified(new Path(s)).toString
-    val withSeqs = layout.absoluteDataFilesWithSeqs.getOrElse(
+    val byPath = layout.dataFiles.getOrElse(
       throw new IllegalStateException(
         s"merge-on-read scan of a manifest-less layout at ${layout.dataLocation}"))
-    val seqByPath = withSeqs.map { case (p, s) => qual(p) -> s }.toMap
-    val relByPath = layout.dataFiles.getOrElse(Nil)
-      .zip(withSeqs.map(_._1)).map { case (rel, abs) => qual(abs) -> rel }.toMap
+      .map(f => qual(layout.absolutePath(f)) -> f).toMap
+    def relByPath(p: String): String = byPath(p).path
     // DEGRADE (round 13, judge r12 item 5): equality tuples past the
     // broadcast threshold are converted to POSITIONAL addresses by a
     // genuine shuffled join at plan time (spillEqualityDeletes — the
@@ -1013,10 +992,10 @@ private final class MorScan(private val delegate: FileScan,
     val slices = delegate.toBatch.planInputPartitions()
       .flatMap(_.asInstanceOf[FilePartition].files)
     def seqOf(pf: org.apache.spark.sql.execution.datasources.PartitionedFile): Int =
-      seqByPath.getOrElse(qual(pf.filePath.toString),
+      byPath.getOrElse(qual(pf.filePath.toString),
         throw new IllegalStateException(
           s"planned file ${pf.filePath} is not in the manifest of " +
-            s"${layout.dataLocation} — cannot apply merge-on-read deletes"))
+            s"${layout.dataLocation} — cannot apply merge-on-read deletes")).seq
     // a live deletion vector supersedes parquet POSITION deletes for
     // its file (Iceberg v3: the writer merged them into the vector);
     // engine eq-overflow spill still applies — it encodes EQUALITY
@@ -1027,13 +1006,8 @@ private final class MorScan(private val delegate: FileScan,
     // per-file constant fills (round 16): identity partition values /
     // initial-defaults of files LACKING the column, injected at the
     // reader seam BELOW the delete probes. Keyed by segment-relative path.
-    val fillsByRel: Map[String, Seq[(String, Any)]] =
-      layout.dataFileFills match {
-        case Some(fills) => layout.dataFiles.getOrElse(Nil).zip(fills).toMap
-        case None => Map.empty
-      }
-    def fillsOf(rel: String): Seq[(String, Any)] =
-      fillsByRel.getOrElse(rel, Seq.empty)
+    def fillsOf(pf: org.apache.spark.sql.execution.datasources.PartitionedFile)
+        : Seq[(String, Any)] = byPath(qual(pf.filePath.toString)).fills
     val byGroup = slices.groupBy { pf =>
       if (eqOverflow) Nil
       else layout.eqDeletePathsFor(
@@ -1052,7 +1026,7 @@ private final class MorScan(private val delegate: FileScan,
       // partition's constants must be uniform for the one-shot
       // injection (fill-free tables have one empty set: unchanged)
       val plainParts = plain
-        .groupBy(pf => fillsOf(relByPath(qual(pf.filePath.toString))))
+        .groupBy(fillsOf)
         .toSeq.sortBy(_._1.map(t => s"${t._1}=${t._2}").mkString(" "))
         .flatMap { case (fills, fsOfFill) =>
           FilePartition.getFilePartitions(session, fsOfFill.toIndexedSeq,
@@ -1080,7 +1054,7 @@ private final class MorScan(private val delegate: FileScan,
             spilledPaths = spilledFor.getOrElse(rel, Nil)
               .distinct.sorted,
             dvBlob = layout.dvFor(rel),
-            fills = fillsOf(rel)): InputPartition
+            fills = fillsOf(first)): InputPartition
         }
       plainParts ++ posParts
     }

@@ -21,6 +21,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.{Catalog, CatalogConfig, CatalogFactory, CatalogIO, IcebergFormat, SupportsTableVersions, TableRef}
+import graft.catalog.LayoutCodec.ManifestFieldTokens
 
 /** Structured Streaming FROM a graft catalog table (round 10): the
   * read twin of [[StreamMaterialize]]'s stream-INTO-table face, and the
@@ -430,10 +431,10 @@ private[streaming] final class GraftTableMicroBatchStream(cfg: CatalogConfig,
     if (latest <= s) return VersionOffset(s)
     val budget = AdmissionBudget.of(limit)
     if (budget.unbounded) return VersionOffset(latest)
-    def filesOf(layout: CatalogIO.TableLayout): Option[Seq[(String, Long)]] =
-      layout.dataFiles.map { fs =>
-        fs.zip(layout.dataFileSizes.getOrElse(Seq.fill(fs.size)(0L)))
-      }
+    def filesOf(layout: CatalogIO.TableLayout): Option[Seq[(String, Long)]] = {
+      val sized = layout.entryFields(ManifestFieldTokens.Sizes)
+      layout.dataFiles.map(_.map(f => (f.path, if (sized) f.size else 0L)))
+    }
     var prevFiles: Set[String] =
       if (s == 0) Set.empty
       else filesOf(CatalogIO.readLayout(
@@ -504,8 +505,7 @@ private[streaming] final class GraftTableMicroBatchStream(cfg: CatalogConfig,
       if (to.dataFormat == "parquet") (_, _) => "parquet"
       else {
         val fmtByRel: Map[String, String] = to.dataFiles.getOrElse(Nil)
-          .zip(to.dataFileFormats.getOrElse(
-            Seq.fill(to.dataFiles.getOrElse(Nil).size)(to.dataFormat))).toMap
+          .map(f => f.path -> f.format).toMap
         (segLoc, f) => fmtByRel.getOrElse(f,
           CatalogIO.FileFormatSniff.of(
             new org.apache.hadoop.fs.Path(segLoc, f).toString, conf))
@@ -520,18 +520,16 @@ private[streaming] final class GraftTableMicroBatchStream(cfg: CatalogConfig,
     // skipRewrites walk serves that were later rewritten away are
     // absent from the map — their rewrite materialized the fills, and
     // engine-appended files never carry any, so empty is correct.
-    val fillsByRel: Map[String, Seq[(String, Any)]] = to.dataFileFills match {
-      case Some(fills) => to.dataFiles.getOrElse(Nil).zip(fills).toMap
-      case None => Map.empty
-    }
+    val fillsByRel: Map[String, Seq[(String, Any)]] =
+      to.dataFiles.getOrElse(Nil).map(f => f.path -> f.fills).toMap
     // adopted uuid layouts (round 20): the conversion seam threads
     // through the per-batch scans — physical binary reads, canonical
     // text above (StreamScans.planGroups)
     val (parts, factory) = StreamScans.planGroups(s"$ref-stream",
       tableSchema, cfg.hadoopConf,
       live.map { case (segLoc, added) =>
-        (segLoc, added.map { case (f, _) =>
-          (f, fmtOf(segLoc, f), fillsByRel.getOrElse(f, Seq.empty)) })
+        (segLoc, added.map(f => (f.path, fmtOf(segLoc, f.path),
+          fillsByRel.getOrElse(f.path, Seq.empty))))
       }, uuidColumns = to.uuidColumns.toSet)
     lastFactory = factory
     parts
@@ -688,8 +686,8 @@ private[streaming] final class IcebergMicroBatchStream(cfg: CatalogConfig,
     if (budget.unbounded) return unboundedEnd
     def filesWithSizes(id: Long): Seq[(String, Long)] = {
       val l = IcebergFormat.toTableLayout(text, loc, conf, Some(id))
-      val fs = l.dataFiles.getOrElse(Nil)
-      fs.zip(l.dataFileSizes.getOrElse(Seq.fill(fs.size)(0L)))
+      val sized = l.entryFields(ManifestFieldTokens.Sizes)
+      l.dataFiles.getOrElse(Nil).map(f => (f.path, if (sized) f.size else 0L))
     }
     // the snapshot just below the first pending one (the anchor), for
     // the manifest-diff fallback; an expired anchor can't be priced —
@@ -781,12 +779,6 @@ private[streaming] final class IcebergMicroBatchStream(cfg: CatalogConfig,
     // values ride the manifest and inject at the reader seam below,
     // the same machinery as the batch faces (initial-defaults ride
     // identically: a fill set is a fill set)
-    def fillsOf(l: graft.catalog.CatalogIO.TableLayout)
-        : Map[String, Seq[(String, Any)]] =
-      l.dataFileFills match {
-        case Some(fills) => l.dataFiles.getOrElse(Nil).zip(fills).toMap
-        case None => Map.empty.withDefaultValue(Seq.empty)
-      }
     // the files this batch serves, each with its manifest file_format.
     // Without skipRewrites (or on a bootstrap from empty): the endpoint
     // manifest diff, refusing any removal. With skipRewrites: a
@@ -798,19 +790,16 @@ private[streaming] final class IcebergMicroBatchStream(cfg: CatalogConfig,
     // `overwrite`/`delete`/unmarked steps refuse loudly.
     val added: Seq[(String, String, Seq[(String, Any)])] =
       if (!skipRewrites || s == 0) {
-        val fromFiles = fromL.flatMap(_.dataFiles).getOrElse(Nil).toSet
+        val fromFiles = fromL.flatMap(_.dataFilePaths).getOrElse(Nil).toSet
         val toFiles = toL.dataFiles.getOrElse(Nil)
-        val removed = fromFiles -- toFiles.toSet
+        val removed = fromFiles -- toFiles.map(_.path)
         if (removed.nonEmpty)
           refuse(s"${removed.size} data file(s) removed/rewritten in the range" +
             (if (skipRewrites) "" else
               "; a row-preserving compaction can be ridden through with " +
                 "skipRewrites=true"))
-        val formats = toL.dataFileFormats
-          .getOrElse(Seq.fill(toFiles.size)(toL.dataFormat))
-        val fm = fillsOf(toL)
-        toFiles.zip(formats).filterNot { case (f, _) => fromFiles(f) }
-          .map { case (f, fmt) => (f, fmt, fm.getOrElse(f, Seq.empty)) }
+        toFiles.filterNot(f => fromFiles(f.path))
+          .map(f => (f.path, f.format, f.fills))
       } else {
         var prev = fromL.get
         val buf = Vector.newBuilder[(String, String, Seq[(String, Any)])]
@@ -819,16 +808,13 @@ private[streaming] final class IcebergMicroBatchStream(cfg: CatalogConfig,
             case Some("append") =>
               val l = layoutOf(si.id)
               if (l.deleteFiles.nonEmpty) refuse("live delete files")
-              val prevSet = prev.dataFiles.getOrElse(Nil).toSet
+              val prevSet = prev.dataFilePaths.getOrElse(Nil).toSet
               val cur = l.dataFiles.getOrElse(Nil)
-              if (!prevSet.subsetOf(cur.toSet))
+              if (!prevSet.subsetOf(cur.map(_.path).toSet))
                 refuse(s"snapshot ${si.id} is marked 'append' but its " +
                   "manifest shrank — metadata is inconsistent")
-              val formats = l.dataFileFormats
-                .getOrElse(Seq.fill(cur.size)(l.dataFormat))
-              val fm = fillsOf(l)
-              buf ++= cur.zip(formats).filterNot { case (f, _) => prevSet(f) }
-                .map { case (f, fmt) => (f, fmt, fm.getOrElse(f, Seq.empty)) }
+              buf ++= cur.filterNot(f => prevSet(f.path))
+                .map(f => (f.path, f.format, f.fills))
               prev = l
             case Some("replace") =>
               val l = layoutOf(si.id)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Per-file constant FILLS over NATIVE avro data files (round 19): the
   * engine's sync-split avro decoder NULL-fills fields absent from a

@@ -59,7 +59,7 @@ class AvroMorSpec extends AnyFunSuite {
       // preserves file order
       val schema = org.apache.spark.sql.types.StructType
         .fromDDL(lay1.schemaDdl.get)
-      val sized = lay1.absoluteDataFilesWithSizes.get
+      val sized = lay1.absoluteSizes.get
         .filter(_._1 == target)
       graft.sources.AvroRead.dataFrame(spark, schema, sized, Map.empty)
         .collect().take(2)

@@ -9,6 +9,7 @@ import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Native Apache Iceberg v2 interop ([[IcebergFormat]] reader +
   * [[IcebergExport]] writer), implemented from the PUBLIC table spec —
@@ -43,7 +44,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(metaLoc.endsWith("v1.metadata.json"))
 
     val layout = CatalogIO.readLayout(metaLoc, spark.sessionState.newHadoopConf())
-    assert(layout.dataFiles.exists(_.size == 3))
+    assert(layout.dataFilePaths.exists(_.size == 3))
     assert(layout.dataFileSizes.exists(ss => ss.size == 3 && ss.forall(_ > 0)),
       "file_size_in_bytes must map to manifest sizes")
     assert(layout.schemaDdl.isDefined)
@@ -114,7 +115,7 @@ class IcebergFormatSpec extends AnyFunSuite {
       val metaLoc = IcebergExport.writeTable(spark, df, dir, fileFormat = "orc")
       val layout = CatalogIO.readLayout(metaLoc, spark.sessionState.newHadoopConf())
       assert(layout.dataFormat == "orc")
-      assert(layout.dataFiles.exists(fs => fs.size == 3 &&
+      assert(layout.dataFilePaths.exists(fs => fs.size == 3 &&
         fs.forall(_.endsWith(".orc"))))
       // DataFrame face: logical content identical to the source
       val got = CatalogIO.scanMetadataLocation(spark, metaLoc)
@@ -987,7 +988,7 @@ class IcebergFormatSpec extends AnyFunSuite {
         .repartition(1).sortWithinPartitions("id"), meta1)
     val layout2 = CatalogIO.readLayout(meta2, conf)
     def fileOf(prefix: String): String =
-      layout2.dataFiles.get.zip(layout2.absoluteDataFiles.get)
+      layout2.dataFilePaths.get.zip(layout2.absoluteDataFiles.get)
         .collectFirst { case (rel, abs) if rel.startsWith(prefix) => abs }.get
     val (file1, file2) = (fileOf("data/part"), fileOf("data/s2-"))
     // snapshot 3: deletion vectors — ids 1..3 (file1 pos 0..2) and
@@ -2394,7 +2395,7 @@ class IcebergFormatSpec extends AnyFunSuite {
       assert(spark.table(s"$cat.db.ad").count() == 300)
       val v1 = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref),
         hc.fileSystem.getConf)
-      assert(v1.dataFiles.exists(_.size == 3))
+      assert(v1.dataFilePaths.exists(_.size == 3))
       assert(v1.dataFileStats.exists(_.forall(_.nonEmpty)),
         "converted Iceberg stats must carry into the adopted manifest")
       // the full write surface works from v2 on
@@ -2597,7 +2598,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(layout.dvDeleteFiles.forall(d =>
       d.blobOffset.isDefined && d.blobLength.isDefined &&
         d.targets.size == 1 && d.rowCount.isDefined))
-    assert(layout.dvFor(layout.dataFiles.get(
+    assert(layout.dvFor(layout.dataFilePaths.get(
       layout.absoluteDataFiles.get.indexOf(fileA))).isDefined)
 
     val dvDeletedIds = idsAt(fileA, 0 to 4) ++ idsAt(fileB, Seq(0))
@@ -3073,7 +3074,7 @@ class IcebergFormatSpec extends AnyFunSuite {
       val cnt = spark.sql(s"SELECT count(*) c FROM $cat.db.pt WHERE k = 2")
         .head.getLong(0)
       assert(cnt == 30)
-      val total = layout.dataFiles.get.size
+      val total = layout.dataFilePaths.get.size
       val k2Files = layout.dataFileFills.get.count(_.exists(f =>
         f._1 == "k" && f._2 == 2))
       assert(k2Files > 0 && k2Files < total)
@@ -3124,8 +3125,8 @@ class IcebergFormatSpec extends AnyFunSuite {
         == df.filter($"k" === 3).agg(
           org.apache.spark.sql.functions.sum("id")).head.getLong(0) + 1002L)
       // incremental append reads over the partitioned chain: only the
-      // appended files' rows serve, WITH their partition fills (the
-      // retainDataFiles lockstep keeps fills aligned)
+      // appended files' rows serve, WITH their partition fills (each
+      // manifest entry carries its own fills)
       def snapOf(meta: String): Long = {
         val p = new Path(meta)
         val in = p.getFileSystem(conf).open(p)
@@ -3171,7 +3172,7 @@ class IcebergFormatSpec extends AnyFunSuite {
       df.schema, Seq("day"))
     val layout = CatalogIO.readLayout(metaLoc, conf)
     assert(layout.hasFills)
-    assert(layout.dataFiles.get.forall(f => !f.startsWith("metadata")),
+    assert(layout.dataFilePaths.get.forall(f => !f.startsWith("metadata")),
       "the metadata dir must never be listed as data")
     val got = CatalogIO.scanMetadataLocation(spark, metaLoc)
     val expect = df.collect().map(r => (r.getLong(0), r.getString(1),

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
 import graft.TestSpark
-import graft.catalog.CatalogIO.{DeleteFile, DeleteKinds, ManifestChunk,
-  RenameOp, TableLayout}
+import graft.catalog.CatalogIO.{DataFile, DeleteFile, DeleteKinds,
+  ManifestChunk, RenameOp, TableLayout}
+import graft.catalog.LayoutCodec.ManifestFieldTokens.{Ndv, Seqs, Sizes, Stats}
 import graft.sources.GraftSparkCatalog
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,19 +42,19 @@ class LayoutCodecSpec extends AnyFunSuite {
       partitionColumns = Seq("p"), numBuckets = Some(4),
       bucketColumns = Seq("id"), sortColumns = Seq("id"),
       schemaDdl = Some("id BIGINT,name STRING,p INT,d DATE"),
-      dataFiles = Some(Seq("p=1/part-00000-a.parquet",
-        "p=1/part \"q\" \\x\t\u00e9\u0001.parquet",
-        "p=2/part-00002-c.parquet")),
-      dataFileSeqs = Some(Seq(1, 2, 3)),
-      dataFileStats = Some(inlineStats),
-      dataFileSizes = Some(Seq(100L, -1L, 300L)),
+      dataFiles = Some(Seq(
+        DataFile("p=1/part-00000-a.parquet", 1, inlineStats(0), 100L, "id=AAAA"),
+        DataFile("p=1/part \"q\" \\x\t\u00e9\u0001.parquet", 2,
+          inlineStats(1), -1L, ""),
+        DataFile("p=2/part-00002-c.parquet", 3, inlineStats(2), 300L,
+          "name=BBBB"))),
+      entryFields = Set(Seqs, Stats, Sizes, Ndv),
       commitOp = Some(CatalogIO.CommitOps.Append),
-      dataFileNdv = Some(Seq("id=AAAA", "", "name=BBBB")),
       clusterTransforms = Seq("days(d)"))),
     Golden("deletes", TableLayout(DataLoc,
       schemaDdl = Some("id BIGINT,name STRING"),
-      dataFiles = Some(Seq("a.parquet", "b.parquet")),
-      dataFileSeqs = Some(Seq(1, 2)),
+      dataFiles = Some(Seq(DataFile("a.parquet", 1), DataFile("b.parquet", 2))),
+      entryFields = Set(Seqs),
       deleteFiles = Seq(
         DeleteFile("_deletes/eq-1.parquet", 2),
         DeleteFile("_deletes/eq-2.parquet", 3, DeleteKinds.Equality,
@@ -66,8 +67,8 @@ class LayoutCodecSpec extends AnyFunSuite {
       commitOp = Some(CatalogIO.CommitOps.Delete))),
     Golden("renames", TableLayout(DataLoc,
       schemaDdl = Some("id BIGINT,label STRING"),
-      dataFiles = Some(Seq("a.parquet", "b.parquet")),
-      dataFileSeqs = Some(Seq(1, 3)),
+      dataFiles = Some(Seq(DataFile("a.parquet", 1), DataFile("b.parquet", 3))),
+      entryFields = Set(Seqs),
       renameOps = Seq(RenameOp(2, "name", "title"),
         RenameOp(3, "title", "label")),
       droppedColumns = Seq("extra", "extra.x"),
@@ -81,30 +82,31 @@ class LayoutCodecSpec extends AnyFunSuite {
       commitOp = Some(CatalogIO.CommitOps.Create))),
     Golden("mixed_fills", TableLayout(DataLoc,
       schemaDdl = Some("id BIGINT,name STRING,p INT,d DATE"),
-      dataFiles = Some(Seq("p=1/a.orc", "p=2/b.parquet", "c.avro")),
+      dataFiles = Some(Seq(
+        DataFile("p=1/a.orc", format = "orc",
+          fills = Seq("p" -> 1, "d" -> LocalDate.of(2024, 1, 2))),
+        DataFile("p=2/b.parquet", format = "parquet",
+          fills = Seq("p" -> 2, "name" -> null)),
+        DataFile("c.avro", format = "avro"))),
       dataFormat = "mixed",
-      dataFileFormats = Some(Seq("orc", "parquet", "avro")),
-      dataFileFills = Some(Seq(
-        Seq("p" -> 1, "d" -> LocalDate.of(2024, 1, 2)),
-        Seq("p" -> 2, "name" -> null),
-        Seq.empty)),
       commitOp = Some(CatalogIO.CommitOps.Append))),
     Golden("uuid", TableLayout(DataLoc,
       schemaDdl = Some("id STRING,v BIGINT"),
-      dataFiles = Some(Seq("a.parquet")),
+      dataFiles = Some(Seq(DataFile("a.parquet"))),
       uuidColumns = Seq("id"),
       commitOp = Some(CatalogIO.CommitOps.Append))),
     Golden("chunked_relocated", TableLayout(DataLoc,
       schemaDdl = Some("id BIGINT,name STRING"),
-      dataFiles = Some(relocatedFiles),
-      dataFileStats = Some(relocatedStats),
-      dataFileSizes = Some(Seq(10L, 20L)),
+      dataFiles = Some(relocatedFiles.indices.map(i =>
+        DataFile(relocatedFiles(i), stats = relocatedStats(i),
+          size = Seq(10L, 20L)(i)))),
+      entryFields = Set(Stats, Sizes),
       commitOp = Some(CatalogIO.CommitOps.Append)),
       chunked = Some((Seq(relocatedChunk), Seq("stats", "sizes")))))
 
   private val chunkEntries = relocatedFiles.indices.map(i =>
-    LayoutCodec.MEntry(relocatedFiles(i), 0, relocatedStats(i),
-      Seq(10L, 20L)(i), "", "parquet", ""))
+    DataFile(relocatedFiles(i), 0, relocatedStats(i), Seq(10L, 20L)(i), "",
+      "parquet"))
 
   private def written(g: Golden): String =
     LayoutCodec.metadataJson(TableLoc, g.layout.dataLocation, g.layout,
@@ -166,6 +168,17 @@ class LayoutCodecSpec extends AnyFunSuite {
     refuses(inline.take(inline.length / 2))
     // dataFileStats one entry short
     refuses(patch(inline, s""", "${inlineStats(2)}"]""", "]"))
+    // dataFileSeqs, dataFileSizes, dataFileNdv one entry short
+    refuses(patch(inline, "\"dataFileSeqs\": [\"1\", \"2\", \"3\"]",
+      "\"dataFileSeqs\": [\"1\", \"2\"]"))
+    refuses(patch(inline, "\"dataFileSizes\": [\"100\", \"-1\", \"300\"]",
+      "\"dataFileSizes\": [\"100\", \"-1\"]"))
+    refuses(patch(inline, ", \"name=BBBB\"]", "]"))
+    // dataFileFormats, dataFileFills one entry short
+    val mixed = golden("mixed_fills")
+    refuses(patch(mixed, "\"dataFileFormats\": [\"orc\", \"parquet\", \"avro\"]",
+      "\"dataFileFormats\": [\"orc\", \"parquet\"]"))
+    refuses(patch(mixed, "null}\", \"\"]", "null}\"]"))
     // unknown delete kind
     refuses(patch(golden("deletes"), "\"deleteFileKinds\": [\"eq\", ",
       "\"deleteFileKinds\": [\"zz\", "))
@@ -235,7 +248,7 @@ class LayoutCodecSpec extends AnyFunSuite {
       val expected = ((1 to 20).map(i => s"$i|r$i") ++ Seq("100|x", "101|y")).sorted
       def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
         df.collect().map(_.mkString("|")).toSeq.sorted
-      assert(layout.dataFiles.exists(_.size >= 3))
+      assert(layout.dataFilePaths.exists(_.size >= 3))
       assert(rows(CatalogIO.readTable(spark, cat, ref)) == expected)
       assert(rows(spark.sql(s"SELECT id, name FROM $name.db.t")) == expected)
     }
@@ -257,7 +270,7 @@ class LayoutCodecSpec extends AnyFunSuite {
         .getBytes(UTF_8))
     assert(IcebergFormat.isIcebergMetadata(CatalogIO.readMetadataText(meta, conf)))
     val layout = CatalogIO.readLayout(meta, conf)
-    assert(layout.dataFiles == CatalogIO.readLayout(meta0, conf).dataFiles)
+    assert(layout.dataFilePaths == CatalogIO.readLayout(meta0, conf).dataFilePaths)
     assert(layout.properties.get("dataLocation").contains("file:/nowhere"))
     assert(CatalogIO.scanMetadataLocation(spark, meta).count() == 30)
   }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.TestSpark
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Manifest-chunk indirection (round 12 — Iceberg's manifest-list
   * design re-expressed): past a file-count threshold, a version's
@@ -56,7 +57,7 @@ class ManifestChunkSpec extends AnyFunSuite {
       assert(!v2.contains("\"dataFiles\""), "chunked versions must not inline the file list")
       val layout = CatalogIO.readLayout(cat.metadataLocationForVersion(ref, 2),
         cat.fileSystem.getConf)
-      assert(layout.dataFiles.exists(_.size == 8))
+      assert(layout.dataFilePaths.exists(_.size == 8))
       assert(layout.dataFileStats.exists(_.size == 8), "stats round-trip through chunks")
       assert(layout.dataFileSizes.exists(ss => ss.size == 8 && ss.forall(_ > 0)),
         "sizes round-trip through chunks")
@@ -113,14 +114,14 @@ class ManifestChunkSpec extends AnyFunSuite {
       CatalogIO.createTable(spark, cat, ref, df(1 to 90, parts = 9))
       val conf = cat.fileSystem.getConf
       val v1 = CatalogIO.readLayout(cat.metadataLocationForVersion(ref, 1), conf)
-      val files = v1.dataFiles.get
+      val files = v1.dataFilePaths.get
       assert(files.size == 9 && v1.manifestChunks.get.size == 3)
       // drop one file from the MIDDLE chunk (index 4)
       val victim = files(4)
       CatalogIO.commitManifestFilter(cat, ref, expectedBase = Some(1),
         keepFile = f => f != victim)
       val v2 = CatalogIO.readLayout(cat.metadataLocationForVersion(ref, 2), conf)
-      assert(v2.dataFiles.get.size == 8 && !v2.dataFiles.get.contains(victim))
+      assert(v2.dataFilePaths.get.size == 8 && !v2.dataFilePaths.get.contains(victim))
       val (c1, c2) = (v1.manifestChunks.get, v2.manifestChunks.get)
       // first chunk untouched → reused; last chunk realigns → reused;
       // middle chunk was punctured → rewritten

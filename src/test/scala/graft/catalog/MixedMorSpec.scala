@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** MIXED-format merge-on-read (round 18 — judge r17 #4): a one-commit
   * UPSERT on a migrated ORC base — parquet inserts + equality deletes

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Per-file NDV sketches (round 11; Ndv.scala + CatalogIO.analyzeTable
   * + StatsPrunedScan.columnStats): the manifest carries mergeable HLL

@@ -64,8 +64,8 @@ class RelocatedLayoutSpec extends AnyFunSuite {
     val metaReloc = relocate(metaStore, s"$base/tbl")
     val layout = CatalogIO.readLayout(metaReloc, conf)
     assert(layout.hasRelocated, "out-of-root files must read as relocated")
-    assert(layout.dataFiles.exists(_.forall(p =>
-      CatalogIO.isAbsoluteSpelling(p))), layout.dataFiles)
+    assert(layout.dataFilePaths.exists(_.forall(p =>
+      CatalogIO.isAbsoluteSpelling(p))), layout.dataFilePaths)
     assert(layout.relocatedRoots.nonEmpty)
 
     // DataFrame face: hash-identical to the co-rooted read
@@ -107,7 +107,7 @@ class RelocatedLayoutSpec extends AnyFunSuite {
         // and reads back as a relocated layout
         val lay0 = CatalogIO.readLayout(adopted, conf)
         assert(lay0.hasRelocated, "adopted manifest must stay relocated")
-        assert(lay0.dataFiles.exists(_.forall(CatalogIO.isAbsoluteSpelling)))
+        assert(lay0.dataFilePaths.exists(_.forall(CatalogIO.isAbsoluteSpelling)))
         val expected0 = hash(spark.range(21, 301)
           .select(col("id"), org.apache.spark.sql.functions
             .concat_ws("-", org.apache.spark.sql.functions.lit("name"),
@@ -121,7 +121,7 @@ class RelocatedLayoutSpec extends AnyFunSuite {
         val lay1 = CatalogIO.readLayout(
           hc.loadTableMetadataLocation(ref), conf)
         assert(lay1.hasRelocated, "prior spellings stay absolute")
-        assert(lay1.dataFiles.exists(_.exists(p =>
+        assert(lay1.dataFilePaths.exists(_.exists(p =>
           !CatalogIO.isAbsoluteSpelling(p))),
           "the insert must land under the engine segment (relative)")
         assert(spark.sql(s"SELECT COUNT(*) FROM $cat.db.ad").collect()
@@ -325,7 +325,7 @@ class RelocatedLayoutSpec extends AnyFunSuite {
     val meta2 = IcebergExport.appendSnapshot(spark, extra, metaReloc)
     val lay2 = CatalogIO.readLayout(meta2, conf)
     assert(lay2.hasRelocated, "prior files keep their absolute spellings")
-    assert(lay2.dataFiles.exists(_.exists(p =>
+    assert(lay2.dataFilePaths.exists(_.exists(p =>
       !CatalogIO.isAbsoluteSpelling(p))),
       "the append must land under the table location (relative spelling)")
     assert(hash(CatalogIO.scanMetadataLocation(spark, meta2)) ==

@@ -60,7 +60,7 @@ class SpecEvolutionSpec extends AnyFunSuite {
     assert(text2.contains("""{"spec-id":0,"fields":[]}"""), text2)
     // prior manifest stays under spec 0, the new one under spec 1
     val specIds = IcebergFormat.toTableLayout(text2, meta2, conf)
-    assert(specIds.dataFiles.exists(_.nonEmpty))
+    assert(specIds.dataFilePaths.exists(_.nonEmpty))
 
     // SQL face via a registered pointer, with a ts pruning predicate
     // (the days tuple's inversion bounds must not mis-prune)
@@ -123,8 +123,8 @@ class SpecEvolutionSpec extends AnyFunSuite {
     val layout = CatalogIO.readLayout(meta2, conf)
     assert(layout.dataFormat == "avro", layout.dataFormat)
     // the appended files land under synthetic ts_day= directories
-    assert(layout.dataFiles.get.exists(_.contains("ts_day=")),
-      layout.dataFiles.get.mkString(", "))
+    assert(layout.dataFilePaths.get.exists(_.contains("ts_day=")),
+      layout.dataFilePaths.get.mkString(", "))
     assert(hash(CatalogIO.scanMetadataLocation(spark, meta2)) ==
       hash(tsDf(1, 120)))
     graft.sources.TempCatalog.withTempHandles(spark, "graft-specevo-avro") {
@@ -183,7 +183,7 @@ class SpecEvolutionSpec extends AnyFunSuite {
       hash(bDf(1, 130)))
     // the appended files landed under SPEC-hash bucket dirs
     val layout = CatalogIO.readLayout(meta2, conf)
-    val newFiles = layout.dataFiles.get.filter(_.contains("name_bucket="))
+    val newFiles = layout.dataFilePaths.get.filter(_.contains("name_bucket="))
     assert(newFiles.nonEmpty)
     def bucketOfName(i: Int): Int = IcebergTransforms.bucketOf(
       IcebergTransforms.hashString(s"name-$i"), 8)

@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Iceberg `uuid` columns (round 18 — judge r17 #5): served as
   * StringType, the public Iceberg-Spark mapping. The data files store

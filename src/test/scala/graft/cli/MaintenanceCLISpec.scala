@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.TestSpark
 import graft.catalog.{CatalogIO, HadoopFsCatalog, TableRef}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** The maintenance subcommands (round 9, judge r7 item 8): `compact` and
   * `expire-versions` give the format's maintenance faces the same
@@ -51,7 +52,7 @@ class MaintenanceCLISpec extends AnyFunSuite {
     val outDir = Files.createTempDirectory("maint-out").toString
     val ref = TableRef.parse("db.t")
     val before = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
-    assert(before.dataFiles.get.size >= 4)
+    assert(before.dataFilePaths.get.size >= 4)
     val preRows = CatalogIO.readTable(spark, hc, ref)
       .collect().map(_.mkString("|")).sorted.toSeq
 
@@ -59,7 +60,7 @@ class MaintenanceCLISpec extends AnyFunSuite {
     assert(code == 0)
     assert(lines.exists(_.matches("Compacted db\\.t: \\d+ data files -> \\d+\\.")))
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
-    assert(after.dataFiles.get.size < before.dataFiles.get.size)
+    assert(after.dataFilePaths.get.size < before.dataFilePaths.get.size)
     assert(CatalogIO.readTable(spark, hc, ref)
       .collect().map(_.mkString("|")).sorted.toSeq == preRows)
     // dual-channel logging: the outcome line is in the shared log file
@@ -266,7 +267,7 @@ class MaintenanceCLISpec extends AnyFunSuite {
       graft.catalog.CatalogIO.readMetadataText(loc, conf))
     assert(anc.last.operation.contains("replace"))
     val layout = graft.catalog.CatalogIO.readLayout(loc, conf)
-    assert(layout.dataFiles.get.size == 1, "rewritten into one file")
+    assert(layout.dataFilePaths.get.size == 1, "rewritten into one file")
     assert(graft.catalog.CatalogIO.scanMetadataLocation(spark, loc)
       .select("k").collect().map(_.getInt(0)).sorted.toSeq == (1 to 20))
     // a graft-format table refuses with the failure named (exit 1)

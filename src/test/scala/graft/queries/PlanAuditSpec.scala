@@ -291,5 +291,14 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q:\n$p")
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
     }
+    // d05's banding tail pins the pair explode's parallelism: a
+    // round-robin exchange over the bucket rows, between the bucket
+    // aggregation and the explode (Banding.bucketedPairs) — without it
+    // AQE coalesces the whole n·(n−1)/2 explode onto one task
+    val d05 = plan("d05_dedup_embed_lsh")
+    val explode = d05.indexOf("posexplode")
+    val pin = d05.indexOf("Exchange RoundRobinPartitioning", explode)
+    assert(explode >= 0 && pin > explode &&
+      d05.indexOf("collect_list", pin) > pin, d05)
   }
 }

@@ -23,7 +23,7 @@ class AvroRegistrySpec extends AnyFunSuite {
     val conf = spark.sessionState.newHadoopConf()
     val layout = graft.catalog.IcebergFormat.toTableLayout(
       graft.catalog.CatalogIO.readMetadataText(meta, conf), meta, conf)
-    val files = layout.absoluteDataFilesWithSizes.get
+    val files = layout.absoluteSizes.get
     val before = AvroTableProvider.registrySize
     val df = AvroRead.dataFrame(spark, schema, files, Map.empty)
     assert(df.count() == 10)

@@ -8,6 +8,7 @@ import graft.TestSpark
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Edge-value round-trip of the native avro Iceberg writer + reader
   * (round 15): every primitive the export writer maps, driven through
@@ -220,7 +221,7 @@ class AvroWriteSpec extends AnyFunSuite {
       m1, fileFormat = "avro")
     val conf = spark.sessionState.newHadoopConf()
     val l2 = CatalogIO.readLayout(m2, conf)
-    assert(l2.dataFormat == "avro" && l2.dataFiles.exists(_.size == 2))
+    assert(l2.dataFormat == "avro" && l2.dataFilePaths.exists(_.size == 2))
     assert(l2.dataFileStats.exists(_.forall(_.nonEmpty)),
       "appended avro files must carry write-pass manifest stats")
     assert(canon(CatalogIO.scanMetadataLocation(spark, m2)) == expected)
@@ -230,7 +231,7 @@ class AvroWriteSpec extends AnyFunSuite {
     // the base file's on-disk encoding)
     val appended = l2.absoluteDataFiles.get
       .find(_.contains("/data/s2-")).getOrElse(
-        fail(s"no s2 appended file in ${l2.dataFiles}"))
+        fail(s"no s2 appended file in ${l2.dataFilePaths}"))
     val rdr = new org.apache.avro.file.DataFileReader(
       new org.apache.avro.mapred.FsInput(
         new org.apache.hadoop.fs.Path(appended), conf),
@@ -336,8 +337,8 @@ class AvroWriteSpec extends AnyFunSuite {
     val lay0 = CatalogIO.readLayout(meta0, conf)
     assert(lay0.dataFormat == "avro" && !lay0.hasFills,
       s"partitioned avro files keep their identity columns: $lay0")
-    assert(lay0.dataFiles.get.forall(_.contains("g=")),
-      s"hive col=value layout expected: ${lay0.dataFiles}")
+    assert(lay0.dataFilePaths.get.forall(_.contains("g=")),
+      s"hive col=value layout expected: ${lay0.dataFilePaths}")
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toString).sorted.toSeq
     assert(rows(CatalogIO.scanMetadataLocation(spark, meta0)) ==

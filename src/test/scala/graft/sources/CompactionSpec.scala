@@ -33,7 +33,7 @@ class CompactionSpec extends AnyFunSuite {
     (1 to 5).foreach(i => spark.sql(s"INSERT INTO $cat.db.t VALUES ($i, 'r$i')"))
     val ref = TableRef.parse("db.t")
     val before = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
-    assert(before.dataFiles.get.size >= 5) // one+ file per append
+    assert(before.dataFilePaths.get.size >= 5) // one+ file per append
     val preRows = spark.table(s"$cat.db.t").collect().map(_.mkString("|")).sorted.toSeq
     val preVersions = hc.listTableVersions(ref)
 
@@ -86,7 +86,7 @@ class CompactionSpec extends AnyFunSuite {
     val ref = TableRef.parse("db.o")
     val preRows = spark.table(s"$cat.db.o").count()
     val frag = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
-    assert(frag.dataFiles.get.size > 4)
+    assert(frag.dataFilePaths.get.size > 4)
 
     val res = CatalogIO.compactTable(spark, hc, ref)
     assert(res.compacted && res.toFiles == 4) // exactly one file per bucket
@@ -122,7 +122,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(res.compacted && res.fromFiles >= 6 && res.toFiles == 2)
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
     // one file per partition VALUE, each under its own partition dir
-    val byDir = after.dataFiles.get.groupBy(_.split("/").dropRight(1).mkString("/"))
+    val byDir = after.dataFilePaths.get.groupBy(_.split("/").dropRight(1).mkString("/"))
     assert(byDir.keySet == Set("part=a", "part=b"))
     assert(byDir.values.forall(_.size == 1))
     assert(spark.table(s"$cat.db.p").where(col("part") === "a").count() == 3)
@@ -142,16 +142,16 @@ class CompactionSpec extends AnyFunSuite {
     val ref = TableRef.parse("db.p")
     val before = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
     val preRows = spark.table(s"$cat.db.p").collect().map(_.mkString("|")).sorted.toSeq
-    val untouchedBefore = before.dataFiles.get.filterNot(_.startsWith("r=eu"))
-    assert(before.dataFiles.get.count(_.startsWith("r=eu")) >= 2)
+    val untouchedBefore = before.dataFilePaths.get.filterNot(_.startsWith("r=eu"))
+    assert(before.dataFilePaths.get.count(_.startsWith("r=eu")) >= 2)
 
     val res = CatalogIO.compactPartitions(spark, hc, ref, _ == "r=eu")
     assert(res.compacted)
 
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
     // eu collapsed to one file; us/ap manifest entries are IDENTICAL paths
-    assert(after.dataFiles.get.count(_.startsWith("r=eu")) == 1)
-    assert(after.dataFiles.get.filterNot(_.startsWith("r=eu")).sorted ==
+    assert(after.dataFilePaths.get.count(_.startsWith("r=eu")) == 1)
+    assert(after.dataFilePaths.get.filterNot(_.startsWith("r=eu")).sorted ==
       untouchedBefore.sorted)
     // same segment tree (no snapshot rewrite), same rows, history intact
     assert(after.dataLocation == before.dataLocation)
@@ -172,15 +172,15 @@ class CompactionSpec extends AnyFunSuite {
     // threshold between the tiny append files and the CTAS file
     val fs = new org.apache.hadoop.fs.Path(before.dataLocation)
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val sizes = before.dataFiles.get.map(f => f -> fs.getFileStatus(
+    val sizes = before.dataFilePaths.get.map(f => f -> fs.getFileStatus(
       new org.apache.hadoop.fs.Path(before.dataLocation + "/" + f)).getLen)
     val big = sizes.maxBy(_._2)
     val res = CatalogIO.compactSmallFiles(spark, hc, ref, smallFileBytes = big._2)
     assert(res.compacted)
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
     // the big file's manifest entry is byte-identical; small ones merged to 1
-    assert(after.dataFiles.get.contains(big._1))
-    assert(after.dataFiles.get.size == 2)
+    assert(after.dataFilePaths.get.contains(big._1))
+    assert(after.dataFilePaths.get.size == 2)
     assert(spark.table(s"$cat.db.t").count() == preRows)
   }
 
@@ -201,7 +201,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(res.compacted && res.toFiles <= 4) // at most one file per bucket
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
     // every compacted file carries a bucket id in its name
-    assert(after.dataFiles.get.forall(f =>
+    assert(after.dataFilePaths.get.forall(f =>
       org.apache.spark.sql.execution.datasources.BucketingUtils
         .getBucketId(f.split('/').last).isDefined))
     assert(spark.table(s"$cat.db.b").collect().map(_.mkString("|")).sorted.toSeq == preRows)
@@ -213,7 +213,7 @@ class CompactionSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, v STRING) USING parquet")
     spark.sql(s"INSERT INTO $cat.db.t SELECT 1, 'a'") // single task -> one file
     val ref = TableRef.parse("db.t")
-    assert(CatalogIO.readLayout(hc.loadTableMetadataLocation(ref)).dataFiles.get.size == 1)
+    assert(CatalogIO.readLayout(hc.loadTableMetadataLocation(ref)).dataFilePaths.get.size == 1)
     // <=1 selected file: no-op, no version churn
     val versions = hc.listTableVersions(ref)
     val res = CatalogIO.compactPartitions(spark, hc, ref, _ => true)

@@ -56,7 +56,7 @@ class HiddenPartitionSpec extends AnyFunSuite {
         spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/db/ev/metadata/v2.metadata.json",
         spark.sessionState.newHadoopConf())
       assert(layout.clusterTransforms == Seq("days(ts)"))
-      val total = layout.dataFiles.get.size
+      val total = layout.dataFilePaths.get.size
       assert(total >= 3, s"expected a multi-file table, got $total files")
 
       // one-day predicate: every file whose ts envelope misses the day
@@ -94,7 +94,7 @@ class HiddenPartitionSpec extends AnyFunSuite {
         spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/db/doc/metadata/v2.metadata.json",
         spark.sessionState.newHadoopConf())
       assert(layout.clusterTransforms == Seq("truncate(4,name)"))
-      val total = layout.dataFiles.get.size
+      val total = layout.dataFilePaths.get.size
       assert(total >= 3)
       StatsPruning.lastPlanned = None
       val n = spark.sql(

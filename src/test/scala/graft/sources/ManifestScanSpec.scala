@@ -7,6 +7,7 @@ import graft.catalog.{CatalogIO, HadoopFsCatalog, TableRef}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Manifest-planned scans (round 11, ManifestScan.scala): split
   * planning, partition discovery and size statistics served purely from
@@ -65,7 +66,7 @@ class ManifestScanSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE $cat.db.t USING parquet AS " +
       "SELECT id AS k, concat('x', id) AS s FROM range(0, 20000)")
     val layout = CatalogIO.readLayout(hc.loadTableMetadataLocation(TableRef.parse("db.t")))
-    val sized = layout.dataFiles.get.zip(layout.dataFileSizes.get)
+    val sized = layout.dataFilePaths.get.zip(layout.dataFileSizes.get)
     assert(sized.nonEmpty && sized.forall(_._2 > 0))
     val df = withPlanning(on = true)(spark.table(s"$cat.db.t"))
     val scan = scanOf(df)

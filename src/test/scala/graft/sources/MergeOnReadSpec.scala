@@ -47,7 +47,7 @@ class MergeOnReadSpec extends AnyFunSuite {
 
     val after = layoutOf(hc, ref)
     // delete-file-only commit: identical data-file manifest, one delete file
-    assert(after.dataFiles == before.dataFiles)
+    assert(after.dataFilePaths == before.dataFilePaths)
     assert(after.deleteFiles.size == 1)
     // DSv2 SQL scan applies the tuples
     assert(rowsOf(s"$cat.db.t") == Seq("1|a", "3|c"))
@@ -132,7 +132,7 @@ class MergeOnReadSpec extends AnyFunSuite {
 
     val after = layoutOf(hc, ref)
     // prior data files all survive in the manifest; the batch only adds
-    assert(before.dataFiles.get.forall(after.dataFiles.get.contains))
+    assert(before.dataFilePaths.get.forall(after.dataFilePaths.get.contains))
     assert(after.deleteFiles.size == 1)
     assert(rowsOf(s"$cat.db.t") == Seq("1|a", "2|B!", "3|c", "7|g"))
     // a doubled feed is refused before anything commits
@@ -211,8 +211,8 @@ class MergeOnReadSpec extends AnyFunSuite {
     // no data file written or removed — the segment tree is untouched;
     // only the manifest shrank (expiry reclaims the dropped partition)
     assert(segAfter == segBefore)
-    assert(after.dataFiles.get.size < before.dataFiles.get.size)
-    assert(after.dataFiles.get.forall(f => !f.startsWith("r=eu")))
+    assert(after.dataFilePaths.get.size < before.dataFilePaths.get.size)
+    assert(after.dataFilePaths.get.forall(f => !f.startsWith("r=eu")))
     assert(rowsOf(s"$cat.db.p") == Seq("3|us", "4|ap"))
     // time travel still serves the dropped partition
     assert(spark.sql(s"SELECT * FROM $cat.db.p VERSION AS OF 2").count() == 4)
@@ -229,8 +229,8 @@ class MergeOnReadSpec extends AnyFunSuite {
     val after = layoutOf(hc, ref)
     assert(rowsOf(s"$cat.db.p") == Seq("1|eu", "3|us", "4|ap"))
     // only the eu partition's file was replaced: us/ap files carry over
-    val kept = before.dataFiles.get.filterNot(_.startsWith("r=eu"))
-    assert(kept.forall(after.dataFiles.get.contains))
+    val kept = before.dataFilePaths.get.filterNot(_.startsWith("r=eu"))
+    assert(kept.forall(after.dataFilePaths.get.contains))
   }
 
   test("session-catalog attach refuses while deletes are live; expiry leaves MOR state readable") {

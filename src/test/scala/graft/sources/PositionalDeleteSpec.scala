@@ -53,7 +53,7 @@ class PositionalDeleteSpec extends AnyFunSuite {
       col("k") % 10 === 3 && col("k") < 150)
     val after = layoutOf(hc)
     // O(matched) commit shape: data files untouched, ONE pos delete
-    assert(after.dataFiles.get == before.dataFiles.get)
+    assert(after.dataFilePaths.get == before.dataFilePaths.get)
     assert(after.posDeleteFiles.size == 1 && after.eqDeleteFiles.isEmpty)
     // targets recorded: the matched rows live in the first two slices
     assert(after.posDeleteFiles.head.targets.nonEmpty)
@@ -71,12 +71,12 @@ class PositionalDeleteSpec extends AnyFunSuite {
 
   test("UPDATE WHERE hides old copies and appends rewritten rows") {
     val (cat, hc) = fixture()
-    val filesBefore = layoutOf(hc).dataFiles.get
+    val filesBefore = layoutOf(hc).dataFilePaths.get
     MergeOps.updateWhereMergeOnRead(spark, hc, TableRef.parse("db.t"),
       col("k") >= 295, Map("s" -> lit("updated"), "v" -> (col("v") + 1000)))
     val after = layoutOf(hc)
     assert(after.posDeleteFiles.size == 1)
-    assert(after.dataFiles.get.size > filesBefore.size, "rewritten copies appended")
+    assert(after.dataFilePaths.get.size > filesBefore.size, "rewritten copies appended")
     val rows = spark.sql(s"SELECT k, s, v FROM $cat.db.t WHERE k >= 290 ORDER BY k")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
     assert(rows == (290L to 294L).map(k => (k, s"x$k", k * 1.5)) ++

@@ -39,7 +39,7 @@ class RenameColumnSpec extends AnyFunSuite {
 
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
     // metadata-only: identical manifest, a recorded rename op
-    assert(after.dataFiles == before.dataFiles)
+    assert(after.dataFilePaths == before.dataFilePaths)
     assert(after.renameOps.map(r => (r.from, r.to)) == Seq(("val", "label")))
     assert(spark.table(s"$cat.db.t").columns.toSeq == Seq("k", "label"))
     // pre-rename files serve their bytes under the new name
@@ -370,7 +370,7 @@ class RenameColumnSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE $cat.db.t ALTER COLUMN d TYPE DECIMAL(10,4)")
 
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
-    assert(after.dataFiles == before.dataFiles) // metadata-only
+    assert(after.dataFilePaths == before.dataFilePaths) // metadata-only
     val t = spark.table(s"$cat.db.t")
     assert(t.schema.map(_.dataType.catalogString).toSeq ==
       Seq("bigint", "double", "decimal(10,4)"))

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.TestSpark
 import graft.catalog.{CatalogIO, FileStats, HadoopFsCatalog, TableRef}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** Manifest file stats + scan-time file skipping (round 10;
   * FileStats.scala / StatsPruning.scala — the engine's face of Iceberg's
@@ -68,7 +69,7 @@ class StatsPruningSpec extends AnyFunSuite {
   test("every commit records per-file stats; appends carry prior files' stats forward") {
     val (_, hc) = fixture()
     val layout = layoutOf(hc)
-    val files = layout.dataFiles.get
+    val files = layout.dataFilePaths.get
     assert(files.size == 3)
     val stats = layout.dataFileStats.get
     assert(stats.size == 3 && stats.forall(_.nonEmpty))
@@ -86,8 +87,8 @@ class StatsPruningSpec extends AnyFunSuite {
     assert(sNulls == Seq(0L, 0L, 1000L))
     // carry-forward: the v3 append re-recorded v2's file stats verbatim
     val v2 = CatalogIO.readLayout(hc.metadataLocationForVersion(TableRef.parse("db.t"), 3))
-    val byFile = layout.dataFiles.get.zip(stats).toMap
-    v2.dataFiles.get.zip(v2.dataFileStats.get).foreach { case (f, s) =>
+    val byFile = layout.dataFilePaths.get.zip(stats).toMap
+    v2.dataFilePaths.get.zip(v2.dataFileStats.get).foreach { case (f, s) =>
       assert(byFile(f) == s, s"stats for $f changed across the append")
     }
   }
@@ -145,7 +146,7 @@ class StatsPruningSpec extends AnyFunSuite {
     val (cat, hc) = fixture()
     CatalogIO.compactTable(spark, hc, TableRef.parse("db.t"))
     val layout = layoutOf(hc)
-    assert(layout.dataFileStats.get.size == layout.dataFiles.get.size)
+    assert(layout.dataFileStats.get.size == layout.dataFilePaths.get.size)
     assert(layout.dataFileStats.get.exists(_.nonEmpty))
     // the rewritten file spans the full k range — a mid-range filter
     // stays correct whether or not anything is prunable now
@@ -282,7 +283,7 @@ class StatsPruningSpec extends AnyFunSuite {
     CatalogIO.createTable(spark, hc, ref, batch(0), bucketBy = Some((4, Seq("k"))))
     CatalogIO.commitAppend(spark, hc, ref, batch(1000), bucketBy = Some((4, Seq("k"))))
     val layout = layoutOf(hc)
-    val files = layout.dataFiles.get.size
+    val files = layout.dataFilePaths.get.size
     assert(files >= 8 && layout.dataFileStats.get.forall(_.nonEmpty))
     val q = s"SELECT count(*), sum(k) FROM $name.db.t WHERE w >= 1500"
     spark.conf.set("spark.graft.stats.pruning", "false")
@@ -316,7 +317,7 @@ class StatsPruningSpec extends AnyFunSuite {
         i.toLong, "graft.stream.lastBatch.statsSpec", dedupeReplays = true)
     }
     val layout = layoutOf(hc)
-    assert(layout.dataFileStats.get.size == layout.dataFiles.get.size)
+    assert(layout.dataFileStats.get.size == layout.dataFilePaths.get.size)
     assert(layout.dataFileStats.get.forall(_.nonEmpty))
     spark.conf.set("spark.graft.stats.pruning", "true")
     StatsPruning.lastPlanned = None

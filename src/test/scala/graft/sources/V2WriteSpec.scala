@@ -6,6 +6,7 @@ import graft.TestSpark
 import graft.catalog.{CatalogIO, HadoopFsCatalog, IcebergExport, TableRef}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.catalog.LayoutColumns._
 
 /** SQL writes through the DSv2 catalog: CTAS / INSERT OVERWRITE /
   * INSERT INTO run as versioned snapshot commits — every write extends
@@ -121,7 +122,7 @@ class V2WriteSpec extends AnyFunSuite {
     // both appends landed in ONE segment tree, under partition dirs
     val l = CatalogIO.readLayout(
       hc.loadTableMetadataLocation(TableRef.parse("db.pa")))
-    assert(l.dataFiles.get.count(_.startsWith("region=eu/")) == 2, l.dataFiles)
+    assert(l.dataFilePaths.get.count(_.startsWith("region=eu/")) == 2, l.dataFilePaths)
     // partition filter prunes to the eu files only
     val q = spark.table(s"$cat.db.pa").filter(col("region") === "eu")
     assert(q.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
@@ -374,7 +375,7 @@ class V2WriteSpec extends AnyFunSuite {
     val l3 = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
     // same segment, same exact files — evolution rewrote NOTHING
     assert(l3.dataLocation == l2.dataLocation)
-    assert(l3.dataFiles == l2.dataFiles)
+    assert(l3.dataFilePaths == l2.dataFilePaths)
     assert(l3.schemaDdl.get.contains("tag"))
     // existing rows read the new column as null
     assert(spark.table(s"$cat.db.ev").collect().map(_.mkString("|")).sorted.toSeq ==
@@ -677,9 +678,9 @@ class V2WriteSpec extends AnyFunSuite {
     // files (no rewrite anywhere), replaced partition's old files gone
     // from the manifest (but still on disk for the prior version)
     assert(after.dataLocation == before.dataLocation)
-    val untouched = before.dataFiles.get.filterNot(_.startsWith("region=eu/"))
-    assert(untouched.forall(after.dataFiles.get.contains), after.dataFiles)
-    assert(!after.dataFiles.get.exists(before.dataFiles.get.filter(_.startsWith("region=eu/")).toSet))
+    val untouched = before.dataFilePaths.get.filterNot(_.startsWith("region=eu/"))
+    assert(untouched.forall(after.dataFilePaths.get.contains), after.dataFilePaths)
+    assert(!after.dataFilePaths.get.exists(before.dataFilePaths.get.filter(_.startsWith("region=eu/")).toSet))
     assert(spark.sql(s"SELECT * FROM $cat.db.dyn VERSION AS OF 2").count() == 3)
   }
 
@@ -783,7 +784,7 @@ class V2WriteSpec extends AnyFunSuite {
     val afterTimes = mtimes(after)
     untouched.foreach(f => assert(afterTimes.get(f).contains(beforeTimes(f)), f))
     // the eu partition's pre-update file left the manifest
-    assert(!after.dataFiles.get.exists(before.dataFiles.get
+    assert(!after.dataFilePaths.get.exists(before.dataFilePaths.get
       .filter(_.startsWith("region=eu/")).toSet))
     assert(spark.table(s"$cat.db.gp").collect().map(_.mkString("|")).sorted.toSeq ==
       Seq("1|A|eu", "2|b|us", "3|c|ap"))
@@ -804,7 +805,7 @@ class V2WriteSpec extends AnyFunSuite {
          |SELECT id, CASE id % 3 WHEN 0 THEN 'eu' WHEN 1 THEN 'us' ELSE 'ap' END
          |FROM range(200)""".stripMargin)
     val l = CatalogIO.readLayout(hc.loadTableMetadataLocation(TableRef.parse("db.cl")))
-    val byDir = l.dataFiles.get.groupBy(f => f.take(f.lastIndexOf('/')))
+    val byDir = l.dataFilePaths.get.groupBy(f => f.take(f.lastIndexOf('/')))
     assert(byDir.keySet == Set("region=eu", "region=us", "region=ap"), byDir.keySet)
     byDir.foreach { case (dir, files) =>
       assert(files.size == 1, s"$dir wrote ${files.size} files — distribution not applied")
@@ -1145,7 +1146,7 @@ class V2WriteSpec extends AnyFunSuite {
         (0 until 50).sum + (100 until 120).sum + (200 until 210).sum)
       val again = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref),
         spark.sessionState.newHadoopConf())
-      assert(again.dataFileFormats.get.size == again.dataFiles.get.size)
+      assert(again.dataFileFormats.get.size == again.dataFilePaths.get.size)
       assert(again.dataFileFormats.get.count(_ == "orc") == 1)
     } finally CatalogIO.manifestInlineMax = saved
   }
@@ -1215,8 +1216,8 @@ class V2WriteSpec extends AnyFunSuite {
     CatalogIO.adoptIcebergTable(spark, hc, ref, meta)
     val conf = spark.sessionState.newHadoopConf()
     val before = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref), conf)
-    assert(before.hasFills && before.dataFiles.get.size >= 64)
-    val k7Before = before.dataFiles.get.zip(before.dataFileFills.get)
+    assert(before.hasFills && before.dataFilePaths.get.size >= 64)
+    val k7Before = before.dataFilePaths.get.zip(before.dataFileFills.get)
       .collect { case (f, fills) if fills.exists(p =>
         p._1 == "k" && p._2 == 7) => f }.toSet
     assert(k7Before.nonEmpty)
@@ -1226,12 +1227,12 @@ class V2WriteSpec extends AnyFunSuite {
     val after = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref), conf)
     // MANIFEST DIFF: exactly the k=7 partition's files left; every
     // other file survived with its path (and fills) intact
-    val beforeSet = before.dataFiles.get.toSet
-    val afterSet = after.dataFiles.get.toSet
+    val beforeSet = before.dataFilePaths.get.toSet
+    val afterSet = after.dataFilePaths.get.toSet
     val removed = beforeSet -- afterSet
     assert(removed == k7Before,
       s"the replace set must be exactly the k=7 files: removed=$removed")
-    val survivors = after.dataFiles.get.zip(after.dataFileFills.get)
+    val survivors = after.dataFilePaths.get.zip(after.dataFileFills.get)
       .filter { case (f, _) => beforeSet(f) }
     assert(survivors.size == beforeSet.size - k7Before.size)
     assert(survivors.forall(_._2.nonEmpty),

@@ -137,7 +137,7 @@ class StreamMaterializeSpec extends AnyFunSuite {
     val l1 = CatalogIO.readLayout(cat.metadataLocationForVersion(ref, 1))
     val l2 = CatalogIO.readLayout(cat.metadataLocationForVersion(ref, 2))
     assert(l2.dataLocation == l1.dataLocation)
-    assert(l1.dataFiles.get.toSet.subsetOf(l2.dataFiles.get.toSet))
+    assert(l1.dataFilePaths.get.toSet.subsetOf(l2.dataFilePaths.get.toSet))
     // v1 time-travels to the first batch alone
     assert(CatalogIO.readTableVersion(spark, cat, ref, 1).count() ==
       batchNation.count())
@@ -259,7 +259,7 @@ class StreamMaterializeSpec extends AnyFunSuite {
     val l = CatalogIO.readLayout(cat.loadTableMetadataLocation(ref))
     // the append kept the partition spec AND landed under partition dirs
     assert(l.partitionColumns == Seq("region"))
-    assert(l.dataFiles.get.count(_.startsWith("region=eu/")) == 2, l.dataFiles)
+    assert(l.dataFilePaths.get.count(_.startsWith("region=eu/")) == 2, l.dataFilePaths)
     assert(rows(CatalogIO.readTable(spark, cat, ref)) ==
       Seq("1|eu", "2|us", "3|eu", "4|ap"))
     cat.close()
