@@ -376,6 +376,14 @@ object CatalogIO {
     /** Seq-gated per-file state (deletes or renames) is live: manifests
       * record per-file seqs while any is. */
     def seqGated: Boolean = deleteFiles.nonEmpty || renameOps.nonEmpty
+    /** This version's file manifest, or the one refusal every
+      * manifest-dependent operation gives a pre-manifest version
+      * (whole-directory snapshot): `subject` names the table (and
+      * version), `purpose` what the upgrade would enable. */
+    def manifestFiles(subject: String, purpose: String): Seq[DataFile] =
+      dataFiles.getOrElse(throw new UnsupportedOperationException(
+        s"$subject predates file manifests (whole-directory snapshot); " +
+          s"INSERT OVERWRITE once to upgrade it before $purpose"))
     @transient private lazy val currentNames: Seq[String] =
       schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL)
         .map(_.fieldNames.toSeq).getOrElse(Nil)
@@ -792,8 +800,7 @@ object CatalogIO {
     // sortBy only materializes through the bucketed writer; recording it
     // for an unbucketed layout would put a sort order in the metadata
     // that the files don't have
-    require(sortBy.isEmpty || bucketBy.isDefined,
-      "sortBy requires bucketBy (Spark sorts within buckets)")
+    requireSortInBuckets(bucketBy, sortBy)
     val dir = cat.tableDir(ref)
     val dataDir = new Path(dir, "data")
     // An earlier create that crashed before its pointer commit leaves
@@ -877,6 +884,12 @@ object CatalogIO {
     else false
   }
 
+  /** [[writeData]] following `layout`'s partition/bucket/sort spec. */
+  private def writeData(spark: SparkSession, dataDir: Path, df: DataFrame,
+      layout: TableLayout): Unit =
+    writeData(spark, dataDir, df, layout.partitionColumns,
+      layout.numBuckets.map(n => (n, layout.bucketColumns)), layout.sortColumns)
+
   private def writeData(spark: SparkSession, dataDir: Path, df: DataFrame,
       partitionBy: Seq[String], bucketBy: Option[(Int, Seq[String])],
       sortBy: Seq[String]): Unit = bucketBy match {
@@ -931,7 +944,8 @@ object CatalogIO {
       expectedBase: Option[Int] = None,
       properties: Map[String, String] = Map.empty,
       op: String = CommitOps.Overwrite): String = {
-    val n = nextVersionNumber(cat, ref, bucketBy, sortBy, expectedBase)
+    requireSortInBuckets(bucketBy, sortBy)
+    val n = nextVersionNumber(cat, ref, expectedBase)
     val dataDir = versionDataDir(cat, ref, n)
     writeData(spark, dataDir, df, partitionBy, bucketBy, sortBy)
     val layout = TableLayout(dataDir.toString, partitionBy,
@@ -950,30 +964,22 @@ object CatalogIO {
     * rows' files and one metadata file, never a snapshot rewrite. Prior
     * versions keep reading exactly their own (smaller) file lists out of
     * the same tree — file-level snapshot isolation. Appended files
-    * follow the recorded layout (partition dirs / bucket-id names), so
-    * directory pruning and storage-partitioned joins hold across
-    * appends. A full overwrite starts a fresh segment directory and a
-    * one-write manifest — the format's natural compaction.
+    * follow the prior version's recorded layout (partition dirs /
+    * bucket-id names), so directory pruning and storage-partitioned
+    * joins hold across appends. A full overwrite starts a fresh segment
+    * directory and a one-write manifest — the format's natural
+    * compaction.
     *
-    * Crash-safety: staged files live in a committer-private `stage-*`
-    * dir; files moved into the segment before a crash are orphans that
-    * NO manifest references (invisible to every reader — manifests are
-    * exact file lists). Race handling is [[commitVersion]]'s: the
-    * expectedBase gate plus the create-exclusive metadata write. */
+    * The rows are written to a committer-private `stage-*` dir and
+    * committed through [[commitStagedAppend]]'s path, which owns the
+    * crash and race story. */
   def commitAppend(spark: SparkSession, cat: HadoopFsCatalog, ref: TableRef,
-      df: DataFrame, partitionBy: Seq[String] = Nil,
-      bucketBy: Option[(Int, Seq[String])] = None,
-      sortBy: Seq[String] = Nil,
-      expectedBase: Option[Int] = None,
+      df: DataFrame, expectedBase: Option[Int] = None,
       properties: Map[String, String] = Map.empty): String = {
-    val n = nextVersionNumber(cat, ref, bucketBy, sortBy, expectedBase)
-    val prior = readLayout(cat.metadataLocationForVersion(ref, n - 1),
-      cat.fileSystem.getConf)
-    val priorFiles = prior.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $ref v${n - 1} predates file manifests (whole-directory snapshot); " +
-        "INSERT OVERWRITE once to upgrade it before appending"))
+    val base = manifestBase(cat, ref, expectedBase, "appending")
+    val prior = base.prior
     val staging = new Path(cat.tableDir(ref),
-      s"stage-v$n-${java.util.UUID.randomUUID().toString.take(8)}")
+      s"stage-v${base.n}-${java.util.UUID.randomUUID().toString.take(8)}")
     // adopted uuid tables (round 20): appended rows arrive in the
     // SERVED string form; the files store the 16-byte physical form
     // (unannotated BINARY — what the binary read schema serves) so the
@@ -981,54 +987,35 @@ object CatalogIO {
     val dfPhys = prior.uuidColumns
       .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
       .foldLeft(df)((d, c) => d.withColumn(c, uuidBinaryColumn(d.col(c))))
-    writeData(spark, staging, dfPhys, partitionBy, bucketBy, sortBy)
-    // Re-check the base immediately before the staged files enter the
-    // SHARED segment tree: a rival commit during our (long) data write
-    // would make the metadata write below lose anyway, but by then our
-    // files would sit in the live segment as permanent orphans. Losing
-    // HERE costs only the committer-private staging dir, which we can
-    // still reclaim. (A rival landing inside the move→metadata window
-    // still orphans — that residue is what sweepOrphanFiles collects.)
-    expectedBase.foreach { base =>
-      cat.latestTableVersion(ref).filter(_ != base).foreach { latest =>
-        cat.fileSystem.delete(staging, true)
-        throw new CommitConflictException(
-          s"Concurrent commit on $ref: this append read snapshot v$base but " +
-            s"the table is now at v$latest; retry the read-modify-write")
-      }
-    }
-    val moved = moveIntoSegment(cat.fileSystem, staging, new Path(prior.dataLocation))
-    // appends cannot change the schema (insert resolution projects onto
-    // the table schema), so the prior version's recorded DDL carries
-    // over; properties carry forward with the overlay applied, so a
-    // marker (e.g. a stream's replay fence) survives interleaved appends;
-    // live delete files carry forward with the appended files seq'd at n,
-    // so prior deletes never apply to them (insert-after-delete survives)
-    val files = withAdded(priorFiles, moved, n, prior.seqGated)
-    val layout = TableLayout(prior.dataLocation, partitionBy,
-      bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
-      prior.schemaDdl.orElse(Some(df.schema.toDDL)),
-      dataFiles = Some(files),
-      properties = prior.properties ++ properties,
-      deleteFiles = prior.deleteFiles,
-      entryFields = seqFields(prior.seqGated),
-      renameOps = prior.renameOps,
-      droppedColumns = prior.droppedColumns,
-      clusterTransforms = prior.clusterTransforms,
-      dataFormat = formatOf(files, prior.dataFormat),
-      uuidColumns = prior.uuidColumns)
-    commitLayoutAsVersion(cat, ref, n, layout, CommitOps.Append, Some(prior))
+    writeData(spark, staging, dfPhys, prior)
+    appendStaged(cat, ref, staging, df.schema.toDDL, None, expectedBase,
+      properties, base)
   }
 
-  /** The next version's entries: the `kept` prior entries — each
-    * keeping its seq, format and fills — then `added`, engine-written
-    * parquet files that contain every column (fill-free) seq'd at
-    * version `n`, past every live delete. Seqs matter only while
-    * `gated` (delete files or renames live); otherwise they take the
-    * seq-0 default, which says every file predates any future delete. */
-  private def withAdded(kept: Seq[DataFile], added: Seq[String], n: Int,
-      gated: Boolean): Seq[DataFile] =
-    kept ++ added.map(f => DataFile(f, seq = if (gated) n else 0))
+  /** What a manifest commit derives from: the version `n` it writes and
+    * version n−1's layout `prior`, whose file manifest is `files`. */
+  private final case class ManifestBase(n: Int, prior: TableLayout,
+      files: Seq[DataFile]) {
+    /** Version n: `prior` carried forward with the `kept` prior entries
+      * (each keeping its seq, format and fills), then `added` — engine-
+      * written parquet files holding every column — and `deletes` as the
+      * live delete files. Everything else (schema, partition/bucket/sort
+      * layout, properties, renames, clustering, uuid conversion) is
+      * version n−1's, as an Iceberg snapshot inherits the table metadata
+      * and changes only its manifests. Added files are seq'd at n, past
+      * every live delete; seqs matter only while deletes or renames are
+      * live, otherwise they take the seq-0 default. The written layout's
+      * `manifestChunks` go stale here, which is safe: the serializer
+      * trusts them only on the PRIOR layout. */
+    def next(kept: Seq[DataFile], added: Seq[String],
+        deletes: Seq[DeleteFile] = prior.deleteFiles,
+        ifEmpty: String = prior.dataFormat): TableLayout = {
+      val gated = deletes.nonEmpty || prior.renameOps.nonEmpty
+      val entries = kept ++ added.map(f => DataFile(f, seq = if (gated) n else 0))
+      prior.copy(dataFiles = Some(entries), deleteFiles = deletes,
+        entryFields = seqFields(gated), dataFormat = formatOf(entries, ifEmpty))
+    }
+  }
 
   /** The entry fields a commit records before the funnel re-derives
     * stats, sizes and NDV: seqs only while delete files or renames are
@@ -1052,6 +1039,17 @@ object CatalogIO {
       case _ => "mixed"
     }
 
+  /** The one entry of every manifest commit: resolves `n` (the
+    * existence and `expectedBase` gates) and reads version n−1's layout
+    * once, refusing a pre-manifest base before anything is written. */
+  private def manifestBase(cat: HadoopFsCatalog, ref: TableRef,
+      expectedBase: Option[Int], purpose: String): ManifestBase = {
+    val n = nextVersionNumber(cat, ref, expectedBase)
+    val prior = readLayout(cat.metadataLocationForVersion(ref, n - 1),
+      cat.fileSystem.getConf)
+    ManifestBase(n, prior, prior.manifestFiles(s"Table $ref v${n - 1}", purpose))
+  }
+
   // ----- staged-file commits (round 8: the native DSv2 BatchWrite) -----
   //
   // The native write path ([[graft.sources.GraftWrite]]) has EXECUTORS
@@ -1065,73 +1063,82 @@ object CatalogIO {
   // survives any interleaved SQL write.
 
   /** Staged APPEND: drain `staging` into the current segment tree and
-    * commit prior-manifest ∪ moved as the next version — the staged-file
-    * face of [[commitAppend]] (same O(new-data) shape, same crash story:
-    * files moved before a crash are unreferenced orphans, invisible to
-    * every manifest reader). The base is the latest version at commit
-    * time — an append derives nothing from what it read, so a rival
-    * commit landing between the version resolution and the metadata
-    * write is RETRIED against the fresh latest (bounded attempts): the
-    * moved files are position-independent manifest entries, so only the
+    * commit prior-manifest ∪ moved as the next version. Crash-safety:
+    * files moved before a crash are orphans that NO manifest references
+    * (invisible to every reader — manifests are exact file lists).
+    *
+    * `expectedBase` is [[commitVersion]]'s read-modify-write guard, and
+    * it is re-checked immediately before the staged files enter the
+    * SHARED segment tree: a rival commit during a (long) data write
+    * would make the metadata write lose anyway, but by then the files
+    * would sit in the live segment as permanent orphans. Losing there
+    * costs only the committer-private staging dir. (A rival landing
+    * inside the move→metadata window still orphans — that residue is
+    * what sweepOrphanFiles collects.) Without a pinned base the base is
+    * the latest version at commit time — an append derives nothing from
+    * what it read, so a rival commit landing before the metadata write
+    * is RETRIED against the fresh latest (bounded attempts): the moved
+    * files are position-independent manifest entries, so only the
     * metadata step repeats — unless the rival replaced the segment
     * itself (full overwrite), which strands the moved files as orphans
-    * and surfaces the conflict honestly.
+    * and surfaces the conflict honestly. `properties` overlay the
+    * carried-forward ones (e.g. a stream's replay fence).
     *
     * `stagedFiles`, when given, is the AUTHORITY on what this commit
     * produced (the write tasks' commit messages): exactly those
     * segment-relative paths are moved and recorded — a zombie task's
     * extra file in the staging dir is deleted with it, never committed. */
   def commitStagedAppend(cat: HadoopFsCatalog, ref: TableRef, staging: Path,
-      schemaDdl: String, partitionBy: Seq[String] = Nil,
-      bucketBy: Option[(Int, Seq[String])] = None,
-      sortBy: Seq[String] = Nil,
-      stagedFiles: Option[Seq[String]] = None): String = {
-    val n0 = nextVersionNumber(cat, ref, bucketBy, sortBy, expectedBase = None)
-    val first = readLayout(cat.metadataLocationForVersion(ref, n0 - 1),
-      cat.fileSystem.getConf)
-    if (first.dataFiles.isEmpty)
-      throw new UnsupportedOperationException(
-        s"Table $ref v${n0 - 1} predates file manifests (whole-directory snapshot); " +
-          "INSERT OVERWRITE once to upgrade it before appending")
-    val segment = first.dataLocation
+      schemaDdl: String, stagedFiles: Option[Seq[String]] = None,
+      expectedBase: Option[Int] = None,
+      properties: Map[String, String] = Map.empty): String =
+    appendStaged(cat, ref, staging, schemaDdl, stagedFiles, expectedBase,
+      properties, manifestBase(cat, ref, expectedBase, "appending"))
+
+  /** [[commitStagedAppend]] from an already-resolved `first` base: its
+    * first attempt reuses the layout read to find the segment. */
+  private def appendStaged(cat: HadoopFsCatalog, ref: TableRef, staging: Path,
+      schemaDdl: String, stagedFiles: Option[Seq[String]],
+      expectedBase: Option[Int], properties: Map[String, String],
+      first: ManifestBase): String = {
+    val segment = first.prior.dataLocation
+    expectedBase.foreach { pinned =>
+      cat.latestTableVersion(ref).filter(_ != pinned).foreach { latest =>
+        cat.fileSystem.delete(staging, true)
+        throw new CommitConflictException(
+          s"Concurrent commit on $ref: this append read snapshot v$pinned but " +
+            s"the table is now at v$latest; retry the read-modify-write")
+      }
+    }
     val moved = moveIntoSegment(cat.fileSystem, staging, new Path(segment), stagedFiles)
     var attempt = 0
+    var base = first
     while (true) {
-      val n = nextVersionNumber(cat, ref, bucketBy, sortBy, expectedBase = None)
-      val prior = readLayout(cat.metadataLocationForVersion(ref, n - 1),
-        cat.fileSystem.getConf)
-      val priorFiles = prior.dataFiles.getOrElse(throw new UnsupportedOperationException(
-        s"Table $ref v${n - 1} predates file manifests (whole-directory snapshot); " +
-          "INSERT OVERWRITE once to upgrade it before appending"))
+      val prior = base.prior
       if (prior.dataLocation != segment)
         throw new CommitConflictException(
           s"Concurrent overwrite on $ref: this append staged files into segment " +
             s"$segment but the table now lives in ${prior.dataLocation}; " +
             "retry the whole append")
       // appends cannot change the schema (insert resolution projects onto
-      // the table schema), so the prior version's recorded DDL carries over
-      val files = withAdded(priorFiles, moved, n, prior.seqGated)
-      try return commitLayoutAsVersion(cat, ref, n, TableLayout(prior.dataLocation,
-        partitionBy, bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
-        prior.schemaDdl.orElse(Some(schemaDdl)),
-        dataFiles = Some(files),
-        properties = prior.properties,
-        deleteFiles = prior.deleteFiles,
-        entryFields = seqFields(prior.seqGated),
-        renameOps = prior.renameOps,
-        droppedColumns = prior.droppedColumns,
-        clusterTransforms = prior.clusterTransforms,
-        dataFormat = formatOf(files, prior.dataFormat),
-        // adopted uuid tables: the DSv2 writer already wrote the staged
-        // files in the 16-byte physical form (GraftDataWriter) — the
-        // conversion columns carry forward
-        uuidColumns = prior.uuidColumns),
+      // the table schema), so the prior version's recorded DDL carries
+      // over; live delete files carry forward with the appended files
+      // seq'd at n, so prior deletes never apply to them (insert-after-
+      // delete survives). Adopted uuid tables: the staged files are in
+      // the 16-byte physical form (GraftDataWriter, or commitAppend's
+      // conversion) — the conversion columns carry forward.
+      val layout = base.next(base.files, moved).copy(
+        schemaDdl = prior.schemaDdl.orElse(Some(schemaDdl)),
+        properties = prior.properties ++ properties)
+      try return commitLayoutAsVersion(cat, ref, base.n, layout,
         CommitOps.Append, Some(prior))
       catch {
         case e: CommitConflictException =>
           attempt += 1
-          if (attempt >= 5) throw e // moved files remain reclaimable orphans
+          // moved files remain reclaimable orphans
+          if (expectedBase.isDefined || attempt >= 5) throw e
       }
+      base = manifestBase(cat, ref, None, "appending")
     }
     throw new IllegalStateException("unreachable")
   }
@@ -1156,7 +1163,8 @@ object CatalogIO {
     // resolving n would let a rival's property update — e.g. a streaming
     // replay-fence advance — land in between and be silently dropped
     // from the carried set.)
-    val n = nextVersionNumber(cat, ref, bucketBy, sortBy, expectedBase)
+    requireSortInBuckets(bucketBy, sortBy)
+    val n = nextVersionNumber(cat, ref, expectedBase)
     val fs = cat.fileSystem
     val priorForCarry = readLayout(cat.metadataLocationForVersion(ref, n - 1),
       fs.getConf)
@@ -1198,46 +1206,29 @@ object CatalogIO {
     * segment-relative paths (partition dirs included). */
   private[graft] def commitStagedManifestReplace(cat: HadoopFsCatalog,
       ref: TableRef, staging: Path, schemaDdl: String,
-      partitionBy: Seq[String], bucketBy: Option[(Int, Seq[String])],
-      sortBy: Seq[String], expectedBase: Option[Int],
-      keepFile: String => Boolean,
+      expectedBase: Option[Int], keepFile: String => Boolean,
       stagedFiles: Option[Seq[String]] = None,
       op: String = CommitOps.Overwrite): String = {
-    val n = nextVersionNumber(cat, ref, bucketBy, sortBy, expectedBase)
-    val prior = readLayout(cat.metadataLocationForVersion(ref, n - 1),
-      cat.fileSystem.getConf)
-    val priorFiles = prior.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $ref v${n - 1} predates file manifests (whole-directory snapshot); " +
-        "INSERT OVERWRITE once to upgrade it before a partition-level overwrite"))
-    // survivors keep their manifest-entry seqs (live deletes still apply
-    // to them); the staged replacements are seq'd at n, PAST every live
-    // delete — a rewritten file's rows already reflect the deletes its
-    // source files carried (the rewrite scanned through them)
+    val base = manifestBase(cat, ref, expectedBase, "a partition-level overwrite")
+    val prior = base.prior
     val moved = moveIntoSegment(cat.fileSystem, staging,
       new Path(prior.dataLocation), stagedFiles)
-    // survivors keep their FILL sets and FORMATS (round 17 — a replace
-    // that dropped fills would silently NULL every filled column of the
-    // kept files; a dropped format would read ORC bytes through the
-    // parquet reader). An all-replaced non-parquet table comes out
-    // homogeneous parquet — the COW MERGE/UPDATE/DELETE route for
-    // adopted ORC/avro tables.
-    val files = withAdded(priorFiles.filter(f => keepFile(f.path)), moved, n,
-      prior.seqGated)
-    commitLayoutAsVersion(cat, ref, n, TableLayout(prior.dataLocation,
-      partitionBy, bucketBy.map(_._1), bucketBy.map(_._2).getOrElse(Nil), sortBy,
-      prior.schemaDdl.orElse(Some(schemaDdl)),
-      dataFiles = Some(files),
-      properties = prior.properties,
-      deleteFiles = prior.deleteFiles,
-      entryFields = seqFields(prior.seqGated),
-      renameOps = prior.renameOps,
-      droppedColumns = prior.droppedColumns,
-      dataFormat = formatOf(files, "parquet"),
-      clusterTransforms = prior.clusterTransforms,
-      // survivors keep the 16-byte physical form and the staged COW
-      // replacements were written in it too (GraftDataWriter) — the
-      // conversion carries
-      uuidColumns = prior.uuidColumns), op, Some(prior))
+    // survivors keep their manifest-entry seqs (live deletes still apply
+    // to them), FILL sets and FORMATS (round 17 — a replace that dropped
+    // fills would silently NULL every filled column of the kept files; a
+    // dropped format would read ORC bytes through the parquet reader);
+    // the staged replacements are seq'd at n, PAST every live delete — a
+    // rewritten file's rows already reflect the deletes its source files
+    // carried (the rewrite scanned through them). An all-replaced
+    // non-parquet table comes out homogeneous parquet — the COW
+    // MERGE/UPDATE/DELETE route for adopted ORC/avro tables. Survivors
+    // keep the 16-byte uuid form and the staged COW replacements were
+    // written in it too (GraftDataWriter) — the conversion carries.
+    val layout = base.next(base.files.filter(f => keepFile(f.path)), moved,
+      ifEmpty = "parquet")
+    commitLayoutAsVersion(cat, ref, base.n,
+      layout.copy(schemaDdl = prior.schemaDdl.orElse(Some(schemaDdl))),
+      op, Some(prior))
   }
 
   // ----- merge-on-read commits (round 8: equality-delete files) -----
@@ -1265,9 +1256,9 @@ object CatalogIO {
       expectedBase: Option[Int] = None): String = {
     require(newRows.isDefined || deleteTuples.isDefined,
       "merge-on-read commit needs new rows, delete tuples, or both")
-    val n = nextVersionNumber(cat, ref, None, Nil, expectedBase)
+    val base = manifestBase(cat, ref, expectedBase, "merge-on-read writes")
+    val (n, prior) = (base.n, base.prior)
     val fs = cat.fileSystem
-    val prior = readLayout(cat.metadataLocationForVersion(ref, n - 1), fs.getConf)
     // EQUALITY-keyed merge-on-read serves EVERY recorded data format
     // (rounds 17-19): the counting-read MOR machinery reads parquet,
     // ORC, and (round 19) the engine's sync-split avro decoder; mixed
@@ -1285,9 +1276,6 @@ object CatalogIO {
     // probe keys translated to each epoch's physical spellings
     // (graft.sources.GraftEpochMorTable). Positional MOR writes keep
     // refusing under renames (commitPositionalMergeOnRead).
-    val priorFiles = prior.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $ref v${n - 1} predates file manifests (whole-directory snapshot); " +
-        "INSERT OVERWRITE once to upgrade it before merge-on-read writes"))
     val schema = prior.schemaDdl
       .map(org.apache.spark.sql.types.StructType.fromDDL)
       .getOrElse(throw new UnsupportedOperationException(
@@ -1335,34 +1323,26 @@ object CatalogIO {
         .filter(c => rows0.columns.exists(_.equalsIgnoreCase(c)))
         .foldLeft(rows0)((d, c) =>
           d.withColumn(c, uuidBinaryColumn(d.col(c))))
-      writeData(spark, staging, rows, prior.partitionColumns,
-        prior.numBuckets.map(b => (b, prior.bucketColumns)), prior.sortColumns)
-      // same pre-move base re-check as commitAppend: losing the race here
+      writeData(spark, staging, rows, prior)
+      // same pre-move base re-check as commitStagedAppend: losing the race here
       // costs only committer-private files, never live-segment orphans
-      expectedBase.foreach { base =>
-        cat.latestTableVersion(ref).filter(_ != base).foreach { latest =>
+      expectedBase.foreach { pinned =>
+        cat.latestTableVersion(ref).filter(_ != pinned).foreach { latest =>
           fs.delete(staging, true)
           delFile.foreach(f => fs.delete(new Path(segment, f), false))
           throw new CommitConflictException(
-            s"Concurrent commit on $ref: this merge read snapshot v$base but " +
+            s"Concurrent commit on $ref: this merge read snapshot v$pinned but " +
               s"the table is now at v$latest; retry the read-modify-write")
         }
       }
       moveIntoSegment(fs, staging, segment)
     }.getOrElse(Nil)
-    val deletes = prior.deleteFiles ++ delFile.map(DeleteFile(_, n))
     // an upsert's parquet rows beside an ORC/avro base go MIXED — the
     // per-entry formats must record it or the scan would read parquet
     // bytes through the wrong decoder (round 19, with the format gate
     // above lifted)
-    val files = withAdded(priorFiles, moved, n, deletes.nonEmpty)
-    commitLayoutAsVersion(cat, ref, n, prior.copy(
-      dataFiles = Some(files),
-      deleteFiles = deletes,
-      // stats, sizes and NDV are re-derived in the funnel (prior ∪
-      // footer reads)
-      entryFields = seqFields(deletes.nonEmpty),
-      dataFormat = formatOf(files, prior.dataFormat)),
+    commitLayoutAsVersion(cat, ref, n, base.next(base.files, moved,
+      deletes = prior.deleteFiles ++ delFile.map(DeleteFile(_, n))),
       if (delFile.isDefined) CommitOps.Delete else CommitOps.Append,
       Some(prior))
   }
@@ -1374,9 +1354,8 @@ object CatalogIO {
     * table is one JSON write, no data touched. */
   private[graft] def commitManifestFilter(cat: HadoopFsCatalog, ref: TableRef,
       expectedBase: Option[Int], keepFile: String => Boolean): String = {
-    val n = nextVersionNumber(cat, ref, None, Nil, expectedBase)
-    val prior = readLayout(cat.metadataLocationForVersion(ref, n - 1),
-      cat.fileSystem.getConf)
+    val base = manifestBase(cat, ref, expectedBase, "manifest-level deletes")
+    val prior = base.prior
     // adopted non-parquet tables are APPEND-only (round 16): deletes
     // refuse rather than filter a format-parallel manifest
     if (prior.dataFormat != "parquet")
@@ -1384,16 +1363,9 @@ object CatalogIO {
         s"$ref is an adopted ${prior.dataFormat}-format table: DELETE is " +
           "not supported — append (INSERT INTO) or compact fully to " +
           "parquet first")
-    val priorFiles = prior.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $ref v${n - 1} predates file manifests (whole-directory snapshot); " +
-        "INSERT OVERWRITE once to upgrade it before manifest-level deletes"))
-    commitLayoutAsVersion(cat, ref, n, prior.copy(
-      dataFiles = Some(priorFiles.filter(f => keepFile(f.path))),
-      // stats, sizes and NDV are re-derived in the funnel (all carried
-      // forward)
-      entryFields = seqFields(prior.seqGated)),
-      CommitOps.Delete,
-      Some(prior))
+    commitLayoutAsVersion(cat, ref, base.n,
+      base.next(base.files.filter(f => keepFile(f.path)), Nil),
+      CommitOps.Delete, Some(prior))
   }
 
   /** Write `tuples` as ONE parquet delete file under the segment's
@@ -1449,9 +1421,9 @@ object CatalogIO {
       cat: HadoopFsCatalog, ref: TableRef,
       addresses: DataFrame, newRows: Option[DataFrame],
       expectedBase: Int): String = {
-    val n = nextVersionNumber(cat, ref, None, Nil, Some(expectedBase))
+    val base = manifestBase(cat, ref, Some(expectedBase), "merge-on-read writes")
+    val (n, prior) = (base.n, base.prior)
     val fs = cat.fileSystem
-    val prior = readLayout(cat.metadataLocationForVersion(ref, n - 1), fs.getConf)
     // adopted non-parquet tables take no merge-on-read state (round 16)
     if (prior.dataFormat != "parquet")
       throw new UnsupportedOperationException(
@@ -1481,11 +1453,7 @@ object CatalogIO {
       targets.find(_.contains(";")).foreach(t =>
         throw new IllegalArgumentException(
           s"positional-delete target path contains ';': $t"))
-      val priorFiles = prior.dataFiles.getOrElse(
-        throw new UnsupportedOperationException(
-          s"Table $ref v${n - 1} predates file manifests; INSERT OVERWRITE " +
-            "once to upgrade it before merge-on-read writes"))
-      val priorPaths = priorFiles.map(_.path).toSet
+      val priorPaths = base.files.map(_.path).toSet
       val unknown = targets.filterNot(priorPaths)
       require(unknown.isEmpty,
         s"positional delete on $ref addresses file(s) not in snapshot " +
@@ -1494,8 +1462,7 @@ object CatalogIO {
       val moved = newRows.map { rows =>
         val staging = new Path(cat.tableDir(ref),
           s"stage-v$n-${java.util.UUID.randomUUID().toString.take(8)}")
-        writeData(spark, staging, rows, prior.partitionColumns,
-          prior.numBuckets.map(b => (b, prior.bucketColumns)), prior.sortColumns)
+        writeData(spark, staging, rows, prior)
         // same pre-move base re-check as commitMergeOnRead
         cat.latestTableVersion(ref).filter(_ != expectedBase).foreach { latest =>
           fs.delete(staging, true)
@@ -1506,15 +1473,10 @@ object CatalogIO {
         }
         moveIntoSegment(fs, staging, segment)
       }.getOrElse(Nil)
-      val deletes = prior.deleteFiles :+
-        DeleteFile(delRel, n, DeleteKinds.Position, targets)
-      commitLayoutAsVersion(cat, ref, n, prior.copy(
-        dataFiles = Some(withAdded(priorFiles, moved, n, gated = true)),
-        deleteFiles = deletes,
-        // stats, sizes and NDV are re-derived in the funnel
-        entryFields = seqFields(gated = true)),
-        CommitOps.Delete,
-        Some(prior))
+      commitLayoutAsVersion(cat, ref, n, base.next(base.files, moved,
+        deletes = prior.deleteFiles :+
+          DeleteFile(delRel, n, DeleteKinds.Position, targets)),
+        CommitOps.Delete, Some(prior))
     } finally typed.unpersist()
   }
 
@@ -1760,10 +1722,8 @@ object CatalogIO {
     val (base, layout) = latestVersionLayout(cat, ref).getOrElse(
       throw new NoSuchTableException(
         s"Table $ref has no local version history to compact"))
-    val files = layout.absoluteDataFiles.getOrElse(
-      throw new UnsupportedOperationException(
-        s"Table $ref v$base predates file manifests (whole-directory " +
-          "snapshot); INSERT OVERWRITE once to upgrade it before compacting"))
+    val files = layout.manifestFiles(s"Table $ref v$base", "compacting")
+      .map(layout.absolutePath)
     // ≤1 file with no seq-gated state is already compact; live equality-
     // delete files and un-materialized column renames force the rewrite
     // regardless — compaction is what MATERIALIZES them (the scan below
@@ -1834,10 +1794,8 @@ object CatalogIO {
         s"Table $ref is bucketed: bucket hashing dictates file membership, " +
           "so range clustering cannot hold — use the layout's sortBy for " +
           "within-bucket ordering instead")
-    val files = layout.absoluteDataFiles.getOrElse(
-      throw new UnsupportedOperationException(
-        s"Table $ref v$base predates file manifests (whole-directory " +
-          "snapshot); INSERT OVERWRITE once to upgrade it before clustering"))
+    val files = layout.manifestFiles(s"Table $ref v$base", "clustering")
+      .map(layout.absolutePath)
     val fs = cat.fileSystem
     val cur = readTableVersion(spark, cat, ref, base, fs.getConf)
     clusterBy.foreach { c =>
@@ -1886,10 +1844,7 @@ object CatalogIO {
     val (base, layout) = latestVersionLayout(cat, ref).getOrElse(
       throw new NoSuchTableException(
         s"Table $ref has no local version history to analyze"))
-    val files = layout.dataFiles.getOrElse(
-      throw new UnsupportedOperationException(
-        s"Table $ref predates file manifests; INSERT OVERWRITE once to " +
-          "upgrade it before analyze"))
+    val files = layout.manifestFiles(s"Table $ref", "analyze")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       layout.schemaDdl.getOrElse(throw new UnsupportedOperationException(
         s"Table $ref has no recorded schema; INSERT OVERWRITE once to " +
@@ -2027,10 +1982,7 @@ object CatalogIO {
     val (base, layout) = latestVersionLayout(cat, ref).getOrElse(
       throw new NoSuchTableException(
         s"Table $ref has no local version history to compact"))
-    val files = layout.dataFiles.getOrElse(
-      throw new UnsupportedOperationException(
-        s"Table $ref v$base predates file manifests (whole-directory " +
-          "snapshot); INSERT OVERWRITE once to upgrade it before compacting"))
+    val files = layout.manifestFiles(s"Table $ref v$base", "compacting")
     if (layout.deleteFiles.nonEmpty)
       throw new UnsupportedOperationException(
         s"$ref has ${layout.deleteFiles.size} live equality-delete file(s); " +
@@ -2079,13 +2031,9 @@ object CatalogIO {
     }
     val staging = new Path(cat.tableDir(ref),
       s"compact-stage-${java.util.UUID.randomUUID().toString.take(8)}")
-    writeData(spark, staging, arranged, layout.partitionColumns,
-      layout.numBuckets.map(n => (n, layout.bucketColumns)), layout.sortColumns)
+    writeData(spark, staging, arranged, layout)
     val loc = commitStagedManifestReplace(cat, ref, staging, ddl,
-      layout.partitionColumns,
-      layout.numBuckets.map(n => (n, layout.bucketColumns)),
-      layout.sortColumns, expectedBase = Some(base),
-      keepFile = f => !selectedSet(f),
+      expectedBase = Some(base), keepFile = f => !selectedSet(f),
       op = CommitOps.Replace)
     val toFiles = readLayout(loc, fs.getConf).dataFiles.map(_.size).getOrElse(0)
     CompactResult(loc, files.size, toFiles, compacted = true)
@@ -2203,7 +2151,7 @@ object CatalogIO {
     * null). The caller builds the new layout from the prior one. */
   private[graft] def commitMetadataOnly(cat: HadoopFsCatalog, ref: TableRef,
       layout: TableLayout, expectedBase: Option[Int] = None): String = {
-    val n = nextVersionNumber(cat, ref, None, Nil, expectedBase)
+    val n = nextVersionNumber(cat, ref, expectedBase)
     // resolve the prior layout so a metadata-only commit on a CHUNKED
     // table (rename, set-props…) carries every chunk forward by
     // reference instead of rewriting the whole manifest
@@ -2214,16 +2162,20 @@ object CatalogIO {
     commitLayoutAsVersion(cat, ref, n, layout, CommitOps.Metadata, prior)
   }
 
-  /** Shared preamble of every version commit: existence check, layout
-    * invariants, the expectedBase conflict gate, and the next version
-    * number. */
+  /** The layout invariant of the faces that define a NEW layout
+    * ([[createTable]], [[commitVersion]], [[commitStagedSnapshot]]);
+    * manifest commits carry the prior version's layout forward. */
+  private def requireSortInBuckets(bucketBy: Option[(Int, Seq[String])],
+      sortBy: Seq[String]): Unit =
+    require(sortBy.isEmpty || bucketBy.isDefined,
+      "sortBy requires bucketBy (Spark sorts within buckets)")
+
+  /** Shared preamble of every version commit: existence check, the
+    * expectedBase conflict gate, and the next version number. */
   private def nextVersionNumber(cat: HadoopFsCatalog, ref: TableRef,
-      bucketBy: Option[(Int, Seq[String])], sortBy: Seq[String],
       expectedBase: Option[Int]): Int = {
     if (!cat.tableExists(ref))
       throw new NoSuchTableException(s"Table does not exist: $ref")
-    require(sortBy.isEmpty || bucketBy.isDefined,
-      "sortBy requires bucketBy (Spark sorts within buckets)")
     val latest = cat.latestTableVersion(ref).getOrElse(
       throw new IllegalStateException(
         s"Table $ref has no local metadata history to version " +
@@ -2243,12 +2195,6 @@ object CatalogIO {
     new Path(cat.tableDir(ref),
       s"data-v$n-${java.util.UUID.randomUUID().toString.take(8)}")
 
-  /** Final two steps of every commit: create-exclusive metadata write
-    * (the same-version-number race gate) + atomic pointer flip. A loss
-    * at the exclusive write surfaces as [[CommitConflictException]] —
-    * the same retryable signal as the expectedBase gate, so callers
-    * handle both interleavings (rival seen before the commit, rival
-    * winning during it) with one catch. */
   /** Commit-side per-file stats collection kill-switch (JVM-wide;
     * specs flip it to model pre-stats metadata). */
   @volatile private[graft] var collectFileStats: Boolean = true
@@ -2347,6 +2293,12 @@ object CatalogIO {
         Seq(NdvField).filter(_ => carryNdv))
   }
 
+  /** Final two steps of every commit: create-exclusive metadata write
+    * (the same-version-number race gate) + atomic pointer flip. A loss
+    * at the exclusive write surfaces as [[CommitConflictException]] —
+    * the same retryable signal as the expectedBase gate, so callers
+    * handle both interleavings (rival seen before the commit, rival
+    * winning during it) with one catch. */
   private def commitLayoutAsVersion(cat: HadoopFsCatalog, ref: TableRef,
       n: Int, layout0: TableLayout, op: String,
       priorLayout: Option[TableLayout] = None): String = {
@@ -2480,9 +2432,7 @@ object CatalogIO {
                 "delete files — metadata is inconsistent; re-sync with a " +
                 "full read")
           val prevSet = prev.dataFilePaths.getOrElse(Nil).toSet
-          val files = lv.dataFiles.getOrElse(throw new UnsupportedOperationException(
-            s"Table $ref v$v predates file manifests; INSERT OVERWRITE once " +
-              "to upgrade it before incremental reads"))
+          val files = lv.manifestFiles(s"Table $ref v$v", "incremental reads")
           if (!prevSet.subsetOf(files.map(_.path).toSet))
             throw new UnsupportedOperationException(
               s"Table $ref v$v is marked '${lv.commitOp.get}' but the " +
@@ -2520,9 +2470,7 @@ object CatalogIO {
     require(fromVersion <= toVersion,
       s"incremental read range is inverted: v$fromVersion > v$toVersion")
     val to = readLayout(cat.metadataLocationForVersion(ref, toVersion), conf)
-    val toFiles = to.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $ref v$toVersion predates file manifests (whole-directory " +
-        "snapshot); INSERT OVERWRITE once to upgrade it before incremental reads"))
+    val toFiles = to.manifestFiles(s"Table $ref v$toVersion", "incremental reads")
     if (fromVersion == toVersion) return (to, Nil)
     if (fromVersion == 0) {
       if (to.deleteFiles.nonEmpty)
@@ -2533,9 +2481,8 @@ object CatalogIO {
       return (to, toFiles)
     }
     val from = readLayout(cat.metadataLocationForVersion(ref, fromVersion), conf)
-    val fromFiles = from.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $ref v$fromVersion predates file manifests (whole-directory " +
-        "snapshot); INSERT OVERWRITE once to upgrade it before incremental reads"))
+    val fromFiles = from.manifestFiles(s"Table $ref v$fromVersion",
+      "incremental reads")
     if (to.dataLocation != from.dataLocation)
       throw new UnsupportedOperationException(
         s"Table $ref history v$fromVersion..v$toVersion is not append-only: " +
@@ -3066,10 +3013,7 @@ object CatalogIO {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       layout.schemaDdl.getOrElse(throw new IllegalStateException(
         s"manifest with no recorded schema at ${layout.dataLocation}")))
-    val files = layout.dataFiles.getOrElse(
-      throw new UnsupportedOperationException(
-        s"${layout.dataLocation} predates file manifests; INSERT OVERWRITE " +
-          "once to upgrade it before positional writes"))
+    val files = layout.manifestFiles(layout.dataLocation, "positional writes")
     import org.apache.spark.sql.functions.col
     if (files.isEmpty) {
       val empty = spark.createDataFrame(

@@ -110,14 +110,7 @@ object CatalogMigrationCLI {
         2
       case Right(opts) =>
         val logFile = Paths.get(opts.outputDir).resolve("catalog_migration.log")
-        val log: String => Unit = line => {
-          out(line)
-          try {
-            Files.createDirectories(logFile.getParent)
-            Files.writeString(logFile, line + System.lineSeparator(),
-              java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-          } catch { case _: Exception => () }
-        }
+        val log = dualLog(logFile, out)
         // R22: engine (slf4j) lines — register/delete failure reasons —
         // also land in catalog_migration.log, like the reference's
         // root-logger file appender (logback.xml:20-45)
@@ -130,6 +123,19 @@ object CatalogMigrationCLI {
         }
         finally detachEngineLog()
     }
+  }
+
+  /** Dual-channel logging: every line goes to `out` and is appended to
+    * `logFile`; a failed file write never fails the run. */
+  private def dualLog(logFile: Path,
+      out: String => Unit): String => Unit = line => {
+    out(line)
+    try {
+      Files.createDirectories(logFile.getParent)
+      Files.writeString(logFile, line + System.lineSeparator(),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+    } catch { case _: Exception => () }
   }
 
   // ----- table-maintenance subcommands (round 9: judge r7 item 8) -----
@@ -146,16 +152,8 @@ object CatalogMigrationCLI {
         out(usage)
         2
       case Right(opts) =>
-        val logFile = Paths.get(opts.outputDir).resolve("catalog_migration.log")
-        val log: String => Unit = line => {
-          out(line)
-          try {
-            Files.createDirectories(logFile.getParent)
-            Files.writeString(logFile, line + System.lineSeparator(),
-              java.nio.file.StandardOpenOption.CREATE,
-              java.nio.file.StandardOpenOption.APPEND)
-          } catch { case _: Exception => () }
-        }
+        val log = dualLog(
+          Paths.get(opts.outputDir).resolve("catalog_migration.log"), out)
         try executeMaintenance(opts, log)
         catch {
           case e: Exception =>
@@ -167,16 +165,6 @@ object CatalogMigrationCLI {
   private def parseMaintenance(args: Seq[String]): Either[String, MaintOpts] = {
     var o = MaintOpts(args.head)
     var rest = args.tail.toList
-    def props(v: String): Either[String, Map[String, String]] = {
-      val parsed = v.split(',').filter(_.nonEmpty).toSeq.map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, value) => Right(k.trim -> value.trim)
-          case _ => Left(s"Malformed catalog property '$kv' (expected key=value)")
-        }
-      }
-      parsed.collectFirst { case Left(e) => e }
-        .toLeft(parsed.collect { case Right(p) => p }.toMap)
-    }
     def long(name: String, v: String): Either[String, Long] =
       v.toLongOption.filter(_ > 0).toRight(s"$name expects a positive integer, got '$v'")
     while (rest.nonEmpty) {
@@ -685,24 +673,25 @@ object CatalogMigrationCLI {
     }
   }
 
+  /** A `k=v,k2=v2` property list. Malformed entries (no '=') must
+    * surface as the exit-2 argument-error path, not a MatchError crash. */
+  private def props(v: String): Either[String, Map[String, String]] = {
+    val parsed = v.split(',').filter(_.nonEmpty).toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, value) => Right(k.trim -> value.trim)
+        case _ => Left(s"Malformed catalog property '$kv' (expected key=value)")
+      }
+    }
+    parsed.collectFirst { case Left(e) => e }
+      .toLeft(parsed.collect { case Right(p) => p }.toMap)
+  }
+
   private def parse(args: Seq[String]): Either[String, Opts] = {
     val cmd = args.head
     if (cmd != "migrate" && cmd != "register")
       return Left(s"Unknown command: $cmd")
     var o = Opts(cmd)
     var rest = args.tail.toList
-    // Malformed entries (no '=') must surface as the exit-2 argument-error
-    // path, not a MatchError crash.
-    def props(v: String): Either[String, Map[String, String]] = {
-      val parsed = v.split(',').filter(_.nonEmpty).toSeq.map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, value) => Right(k.trim -> value.trim)
-          case _ => Left(s"Malformed catalog property '$kv' (expected key=value)")
-        }
-      }
-      parsed.collectFirst { case Left(e) => e }
-        .toLeft(parsed.collect { case Right(p) => p }.toMap)
-    }
     while (rest.nonEmpty) {
       rest match {
         case "--source-catalog-type" :: v :: t => o = o.copy(sourceType = v); rest = t

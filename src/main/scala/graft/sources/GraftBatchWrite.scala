@@ -149,8 +149,7 @@ private[sources] object GraftBatchWrite {
       case Some((base, prior)) if partitionOnly && prior.dataFiles.isDefined =>
         val keep = survivingPartitionFiles(spark, ref, prior, partitionBy, filters)
         CatalogIO.commitStagedManifestReplace(cat, ref, staging, schemaDdl,
-          partitionBy, bucketBy, sortBy, Some(base), keep,
-          stagedFiles = Some(stagedFiles))
+          Some(base), keep, stagedFiles = Some(stagedFiles))
       case _ =>
         val keep = GraftWriteSupport.keepPredicate(ref, filters)
         val (cur, base) = GraftWriteSupport.currentSnapshot(spark, cat, ref, hadoopOpts)
@@ -182,9 +181,7 @@ private[sources] object GraftBatchWrite {
     * prefixes, so no filter evaluation is needed at all. */
   private[sources] def commitDynamicOverwrite(cat: HadoopFsCatalog,
       ref: TableRef, staging: Path, schemaDdl: String,
-      partitionBy: Seq[String], bucketBy: Option[(Int, Seq[String])],
-      sortBy: Seq[String], hadoopOpts: Map[String, String],
-      stagedFiles: Seq[String]): String = {
+      partitionBy: Seq[String], stagedFiles: Seq[String]): String = {
     require(partitionBy.nonEmpty,
       s"dynamic partition overwrite needs a partitioned table: $ref")
     // the replaced set derives from the COMMITTED files' partition dirs
@@ -192,7 +189,6 @@ private[sources] object GraftBatchWrite {
     // dir must neither widen the replaced set nor ride into the manifest
     val replacedDirs = stagedFiles.map(partitionPrefix).toSet
     CatalogIO.commitStagedManifestReplace(cat, ref, staging, schemaDdl,
-      partitionBy, bucketBy, sortBy,
       expectedBase = cat.listTableVersions(ref).lastOption,
       keepFile = f => !replacedDirs.contains(partitionPrefix(f)),
       stagedFiles = Some(stagedFiles))
@@ -211,8 +207,7 @@ private[sources] object GraftBatchWrite {
     * rewrite) — nothing was read, so nothing is replaced and staged
     * files simply append (safe no-op for an empty batch). */
   private[sources] def commitReplace(cat: HadoopFsCatalog, ref: TableRef,
-      staging: Path, schemaDdl: String, partitionBy: Seq[String],
-      bucketBy: Option[(Int, Seq[String])], sortBy: Seq[String],
+      staging: Path, schemaDdl: String,
       base: Option[Int], scanned: Option[Set[String]],
       hadoopOpts: Map[String, String], stagedFiles: Seq[String]): String = {
     val conf = new org.apache.hadoop.conf.Configuration()
@@ -220,10 +215,7 @@ private[sources] object GraftBatchWrite {
     val baseLoc = base.map(cat.metadataLocationForVersion(ref, _))
       .getOrElse(cat.loadTableMetadataLocation(ref))
     val prior = CatalogIO.readLayout(baseLoc, conf)
-    if (prior.dataFiles.isEmpty)
-      throw new UnsupportedOperationException(
-        s"Table $ref predates file manifests (whole-directory snapshot); " +
-          "INSERT OVERWRITE once to upgrade it before row-level SQL writes")
+    prior.manifestFiles(s"Table $ref", "row-level SQL writes")
     val segment = new Path(prior.dataLocation)
     val fs = segment.getFileSystem(conf)
     val segPrefix = fs.makeQualified(segment).toString
@@ -235,8 +227,7 @@ private[sources] object GraftBatchWrite {
       q.stripPrefix(segPrefix).stripPrefix("/")
     }
     CatalogIO.commitStagedManifestReplace(cat, ref, staging, schemaDdl,
-      partitionBy, bucketBy, sortBy, expectedBase = base,
-      keepFile = f => !replacedRel.contains(f),
+      expectedBase = base, keepFile = f => !replacedRel.contains(f),
       stagedFiles = Some(stagedFiles))
   }
 
@@ -380,22 +371,21 @@ private[sources] final class GraftWrite(spark: SparkSession,
     mode match {
       case Append =>
         CatalogIO.commitStagedAppend(cat, ref, staging, ddl,
-          partitionBy, bucketBy, sortBy, stagedFiles = Some(committed))
+          stagedFiles = Some(committed))
       case Truncate =>
         CatalogIO.commitStagedSnapshot(cat, ref, staging, ddl,
           partitionBy, bucketBy, sortBy, expectedBase = None,
           stagedFiles = Some(committed))
       case Replace(base, scanned) =>
         GraftBatchWrite.commitReplace(cat, ref, staging, ddl,
-          partitionBy, bucketBy, sortBy, base, scanned.result(), hadoopOpts,
-          stagedFiles = committed)
+          base, scanned.result(), hadoopOpts, stagedFiles = committed)
       case ByFilter(filters) =>
         GraftBatchWrite.commitOverwriteByFilter(spark, cat, ref, staging,
           filters, ddl, partitionBy, bucketBy, sortBy, hadoopOpts,
           stagedFiles = committed)
       case DynamicOverwrite =>
         GraftBatchWrite.commitDynamicOverwrite(cat, ref, staging, ddl,
-          partitionBy, bucketBy, sortBy, hadoopOpts, stagedFiles = committed)
+          partitionBy, stagedFiles = committed)
     }
     ()
   }

@@ -769,10 +769,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
               "per-file constant fill (identity partition value / " +
               "initial-default); compact the table (materializing the " +
               "fills) first")
-        if (layout.dataFiles.isEmpty)
-          throw new UnsupportedOperationException(
-            s"$catalogName: $ref predates file manifests; INSERT OVERWRITE " +
-              "once to upgrade it before renaming columns")
+        layout.manifestFiles(s"$catalogName: $ref", "renaming columns")
         if (!priorSuffixShaped)
           throw new UnsupportedOperationException(
             s"$catalogName: $ref's legacy schema interleaves partition " +
@@ -820,10 +817,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
             s"$catalogName: cannot drop $nm — $ref serves it as a per-file " +
               "constant fill (identity partition value / initial-default); " +
               "compact the table (materializing the fills) first")
-        if (layout.dataFiles.isEmpty)
-          throw new UnsupportedOperationException(
-            s"$catalogName: $ref predates file manifests; INSERT OVERWRITE " +
-              "once to upgrade it before dropping columns")
+        layout.manifestFiles(s"$catalogName: $ref", "dropping columns")
         // tombstone the current name; the column's pre-rename physical
         // ancestors stay shadowed through the (now-inert) rename entries,
         // which no current column resolves through

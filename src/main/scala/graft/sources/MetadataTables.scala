@@ -96,9 +96,7 @@ object MetadataTables {
     val layout = CatalogIO.readLayout(metaLoc, conf)
     val schema = layout.schemaDdl.flatMap(d =>
       scala.util.Try(StructType.fromDDL(d)).toOption)
-    val files = layout.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $base predates file manifests (whole-directory snapshot); " +
-        "INSERT OVERWRITE once to upgrade it before reading the partitions table"))
+    val files = layout.manifestFiles(s"Table $base", "reading the partitions table")
     def partitionOf(rel: String): String = {
       val cut = rel.lastIndexOf('/')
       if (cut < 0) "<all>" else rel.substring(0, cut)
@@ -129,9 +127,7 @@ object MetadataTables {
     val layout = CatalogIO.readLayout(metaLoc, conf)
     val schema = layout.schemaDdl.flatMap(d =>
       scala.util.Try(StructType.fromDDL(d)).toOption)
-    val files = layout.dataFiles.getOrElse(throw new UnsupportedOperationException(
-      s"Table $base predates file manifests (whole-directory snapshot); " +
-        "INSERT OVERWRITE once to upgrade it before reading the files table"))
+    val files = layout.manifestFiles(s"Table $base", "reading the files table")
     val rows = files.map { case CatalogIO.DataFile(f, seq, st, size, _, _, _, _) =>
       val decoded = schema.flatMap(sc => FileStats.decode(st, sc))
       val summary = decoded.map { d =>

@@ -110,10 +110,10 @@ object StreamMaterialize {
   /** One micro-batch of [[appendStream]] — factored out so the fence
     * semantics are testable deterministically (replay = same batch id
     * again; new run = different fence key). One metadata read serves
-    * the fence check, the layout (appends must follow the table's
-    * recorded partition/bucket spec, like the SQL INSERT path), and the
-    * commit's base version (a zombie driver racing a live one loses at
-    * the conflict gate instead of double-appending). */
+    * the fence check and the commit's base version (a zombie driver
+    * racing a live one loses at the conflict gate instead of
+    * double-appending); the append follows the table's recorded
+    * partition/bucket spec on its own, like the SQL INSERT path. */
   private[graft] def commitIngestBatch(spark: SparkSession,
       cat: HadoopFsCatalog, ref: TableRef, batch: DataFrame, batchId: Long,
       fenceKey: String, dedupeReplays: Boolean): Unit = {
@@ -141,13 +141,9 @@ object StreamMaterialize {
                 if CatalogIO.reclaimAbortedCreate(cat, ref) =>
               CatalogIO.createTable(spark, cat, ref, pinned, properties = fence)
             }
-          case Some((base, layout)) =>
+          case Some((base, _)) =>
             CatalogIO.commitAppend(spark, cat, ref, pinned,
-              partitionBy = layout.partitionColumns,
-              bucketBy = layout.numBuckets.map(n => (n, layout.bucketColumns)),
-              sortBy = layout.sortColumns,
-              expectedBase = Some(base),
-              properties = fence)
+              expectedBase = Some(base), properties = fence)
         }
       }
     } finally pinned.unpersist()

@@ -3771,7 +3771,7 @@ class IcebergFormatSpec extends AnyFunSuite {
       val staging = new Path(Files.createTempDirectory("graft-rfill-st")
         .toString)
       CatalogIO.commitStagedManifestReplace(hc, ref, staging,
-        before.schemaDdl.get, Nil, None, Nil,
+        before.schemaDdl.get,
         expectedBase = hc.listTableVersions(ref).lastOption,
         keepFile = _ => true, stagedFiles = Some(Nil))
       val after = CatalogIO.readLayout(

@@ -81,8 +81,7 @@ class IncrementalReadSpec extends AnyFunSuite {
     val ref = TableRef.parse("db.t")
     CatalogIO.createTable(spark, hc, ref, batch(0, 10),
       partitionBy = Seq("s"))                                  // v1
-    CatalogIO.commitAppend(spark, hc, ref, batch(100, 3),
-      partitionBy = Seq("s"))                                  // v2
+    CatalogIO.commitAppend(spark, hc, ref, batch(100, 3))     // v2
     // file-level DELETE (manifest shrink) — drop one partition's files
     CatalogIO.commitManifestFilter(hc, ref, expectedBase = None,
       keepFile = f => !f.contains("s=v100"))                   // v3

@@ -35,6 +35,25 @@ class PartitionedWriteSpec extends AnyFunSuite {
     assert(dayDirs.toLong == days)
   }
 
+  test("an append without layout arguments keeps the table's partitioning") {
+    import graft.catalog.{CatalogIO, HadoopFsCatalog, Namespace, TableRef}
+    import spark.implicits._
+    val hc = new HadoopFsCatalog("pappend",
+      Files.createTempDirectory("part-append-wh").toString)
+    hc.createNamespace(Namespace.of("db"))
+    val ref = TableRef.parse("db.t")
+    CatalogIO.createTable(spark, hc, ref,
+      Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("k", "p"), partitionBy = Seq("p"))
+    CatalogIO.commitAppend(spark, hc, ref, Seq((4L, "a"), (5L, "b")).toDF("k", "p"))
+    val layout = CatalogIO.readLayout(hc.loadTableMetadataLocation(ref))
+    assert(layout.partitionColumns == Seq("p"))
+    assert(layout.dataFiles.get.forall(_.path.startsWith("p=")), layout.dataFiles)
+    // the partition filter counts the rows of both commits
+    val t = CatalogIO.readTable(spark, hc, ref)
+    assert(t.filter(col("p") === "a").count() == 3)
+    assert(t.filter(col("p") === "b").count() == 2)
+  }
+
   test("partitioned catalog table is pruned through the DSv2 catalog read path") {
     import graft.catalog.{CatalogConfig, CatalogFactory, CatalogIO, HadoopFsCatalog, TableRef}
     val wh = Files.createTempDirectory("part-wh").toString

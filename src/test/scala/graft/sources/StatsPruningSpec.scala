@@ -281,7 +281,7 @@ class StatsPruningSpec extends AnyFunSuite {
     def batch(wLo: Int): org.apache.spark.sql.DataFrame =
       spark.sql(s"SELECT id % 1000 AS k, id + $wLo AS w FROM range(0, 1000)")
     CatalogIO.createTable(spark, hc, ref, batch(0), bucketBy = Some((4, Seq("k"))))
-    CatalogIO.commitAppend(spark, hc, ref, batch(1000), bucketBy = Some((4, Seq("k"))))
+    CatalogIO.commitAppend(spark, hc, ref, batch(1000))
     val layout = layoutOf(hc)
     val files = layout.dataFilePaths.get.size
     assert(files >= 8 && layout.dataFileStats.get.forall(_.nonEmpty))
