@@ -2523,319 +2523,42 @@ object CatalogIO {
     scanLayoutWithOptions(spark, layout, Map.empty)
 
   /** [[scanLayout]] with reader options (the Hadoop-conf overlay of the
-    * DSv2 / MergeOps faces), applying the layout's seq-gated state:
-    *
-    *  - live equality-delete files (merge-on-read): data files are
-    *    grouped by the delete files that apply to them (fileSeq <
-    *    deleteSeq — files appended after a delete committed are exempt,
-    *    so a re-inserted key stays visible), each group is anti-joined
-    *    against its delete tuples;
-    *  - un-materialized column renames: each group is read with the
-    *    PHYSICAL names its manifest seq implies (rename preserves
-    *    position and type, so `toDF(currentNames)` serves the rows
-    *    as-is — no data conversion);
-    *
-    * and the groups union back together. Typically two groups: pre-
-    * change files and post-change appends. */
+    * DSv2 / MergeOps faces). A layout that needs a special reader —
+    * live deletes, un-materialized renames, per-file fills, uuid
+    * columns, avro or mixed data files — reads through the SAME DSv2
+    * table the SQL face plans ([[graft.sources.LayoutTables.reader]]),
+    * so both faces apply one implementation of the layout's state.
+    * Everything else is a plain parquet/ORC read of the manifest's
+    * files (the directory for pre-manifest versions). */
   private[graft] def scanLayoutWithOptions(spark: SparkSession,
-      layout: TableLayout, options: Map[String, String]): DataFrame = {
-    def reader = {
-      val r = spark.read.options(options)
-      layout.schemaDdl.fold(r)(ddl => r.schema(ddl))
-    }
-    // format dispatch (round 14): ORC layouts (converted Iceberg tables
-    // with ORC data files) read through Spark's ORC source; they are
-    // delete-free and rename-free by TableLayout's invariant, so the
-    // seq-gated branch below never sees one
-    def load(r: org.apache.spark.sql.DataFrameReader, paths: Seq[String]) =
-      layout.dataFormat match {
-        case "orc" => r.orc(paths: _*)
-        case _ => r.parquet(paths: _*)
-      }
-    layout.dataFiles match {
-      case Some(Nil) =>
-        // a committed empty snapshot: serve the recorded schema, scan nothing
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          layout.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"Empty manifest with no recorded schema at ${layout.dataLocation}")))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      // ORC + live deletes (round 16): the join-based application below
-      // captures row addresses via `_metadata.row_index`, which Spark's
-      // file sources expose for PARQUET only — ORC layouts route through
-      // the DSv2 merge-on-read machinery instead (whole-file counting
-      // reads, the exact scan the SQL face plans), so both faces share
-      // one delete-application implementation for ORC. Rename-only ORC
-      // layouts (no deletes — the combination refuses upstream) route
-      // to the SAME epoch machinery the SQL face plans, for the same
-      // reason: the per-group read below is spark.read.parquet-shaped.
-      // uuid + live deletes (late round 19): the SAME DSv2 scan the SQL
-      // face plans — the MOR wrapper inside the conversion seam, binary
-      // probe space — via the registry bridge (the join path below
-      // reads the served STRING schema, which the binary files refuse)
-      case Some(_) if layout.seqGated && layout.uuidColumns.nonEmpty =>
-        graft.sources.MorTableProvider.loadDataFrame(spark,
-          new graft.sources.GraftUuidTable(spark,
-            s"graft-uuid-mor-df(${layout.deleteFiles.size} deletes)",
-            layout, options))
-      case Some(_) if layout.seqGated && layout.dataFormat == "orc" =>
-        if (layout.deleteFiles.nonEmpty && layout.renameOps.nonEmpty)
-          // renames + deletes (round 20): per-epoch MOR composition
-          graft.sources.EpochMorRead.dataFrame(spark, layout, options)
-        else if (layout.deleteFiles.nonEmpty)
-          graft.sources.MorRead.dataFrame(spark, layout, options)
-        else graft.sources.EpochRead.dataFrame(spark, layout, options)
-      // AVRO + live deletes (round 19 — judge r18 #4): the SAME DSv2
-      // counting-read scan the SQL face plans (AvroMorScan), via the
-      // registry bridge — `_metadata.row_index` is parquet-only, and
-      // the engine's avro decoder is the only avro reader here.
-      // Rename-only avro layouts (round 20) ride the SAME epoch
-      // machinery the SQL face plans (the avro decoder resolves fields
-      // by name per epoch); renames + deletes on avro refuses inside
-      // the epoch-MOR composition with compaction named.
-      case Some(_) if layout.seqGated && layout.dataFormat == "avro" =>
-        if (layout.deleteFiles.nonEmpty && layout.renameOps.nonEmpty)
-          graft.sources.EpochMorRead.dataFrame(spark, layout, options)
-        else if (layout.deleteFiles.nonEmpty)
-          graft.sources.AvroMorRead.dataFrame(spark, layout, options)
-        else graft.sources.EpochRead.dataFrame(spark, layout, options)
-      // MIXED + live deletes (round 18 — the one-commit Flink upsert
-      // on a migrated ORC base): split into per-format restricted
-      // layouts and recurse — each group rides this function's own
-      // parquet/orc delete machinery; targets/tuple/seq gates only
-      // ever match within the owning group's files. Mixed + RENAMES
-      // rides the same recursion (late round 20): each format
-      // sub-layout keeps the rename ops and routes through its own
-      // format's epoch machinery.
-      case Some(_) if layout.seqGated && layout.dataFormat == "mixed" =>
-        layout.dataFiles.getOrElse(Nil)
-          .groupBy(_.format).toSeq.sortBy(_._1)
-          .map { case (fmt, files) =>
-            scanLayoutWithOptions(spark,
-              layout.retainDataFiles(files.map(_.path).toSet)
-                .copy(dataFormat = fmt), options)
-          }.reduce(_ unionByName _)
-      // delete-live layouts WITH per-file constant fills (round 16 —
-      // the partitioned Hive-migration table taking row-level deletes):
-      // the parquet join path below reads all files in one pass, where
-      // a per-file constant cannot be threaded — route through the
-      // SAME DSv2 merge-on-read machinery the SQL face plans, which
-      // injects the fills below its probes
-      case Some(_) if layout.seqGated && layout.hasFills =>
-        graft.sources.MorRead.dataFrame(spark, layout, options)
-      case Some(files) if layout.seqGated =>
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          layout.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"Seq-gated manifest with no recorded schema at ${layout.dataLocation}")))
-        // v3 deletion vectors ride the same join-based application as
-        // parquet addresses, exploded per GROUP ([[dvInputsFor]] — each
-        // blob decoded exactly once, by the group owning its file); a
-        // vector supersedes parquet POSITION deletes for its file
-        val groups = files
-          .groupBy { f =>
-            val hasDv = layout.dvFor(f.path).isDefined
-            (layout.eqDeletePathsFor(f.path, f.seq).sorted,
-              (if (hasDv) Nil else layout.posDeletesFor(f.path, f.seq)).sorted,
-              hasDv,
-              layout.physicalNamesAt(f.seq))
-          }
-          .toSeq.sortBy(g => layout.absolutePath(g._2.head)) // deterministic group order
-        groups.map { case ((eqPaths, posPaths, hasDv, physical), fs) =>
-          val physSchema = org.apache.spark.sql.types.StructType(
-            schema.fields.map(f => f.copy(name = physical.getOrElse(f.name, f.name))))
-          val r0 = spark.read.options(options).schema(physSchema)
-          val df0 = (if (layout.suppressBasePath) r0
-            else r0.option("basePath", layout.dataLocation))
-            .parquet(fs.map(layout.absolutePath): _*)
-          // row addresses must be captured ON the scan (metadata columns
-          // do not survive joins), before any delete application
-          val addressed =
-            if (posPaths.isEmpty && !hasDv) df0
-            else df0
-              .withColumn("__graft_file", org.apache.spark.sql.functions
-                .col("_metadata.file_path"))
-              .withColumn("__graft_pos", org.apache.spark.sql.functions
-                .col("_metadata.row_index"))
-          // rename back to the current names — per-column, so the
-          // address capture's extra __graft_* columns ride along (late
-          // round 20: positional deletes and DVs COMPOSE with renames;
-          // position addressing is name-free)
-          val df = physical.foldLeft(addressed) { case (d, (cur, phys)) =>
-            if (cur == phys) d else d.withColumnRenamed(phys, cur)
-          }
-          val eqApplied = applyEqualityDeletes(spark, df, eqPaths, options)
-          if (posPaths.isEmpty && !hasDv) eqApplied
-          else {
-            val (dvAddrs, dvCount) =
-              if (hasDv) dvInputsFor(spark, layout, options, fs.map(_.path))
-              else (None, None)
-            applyPositionalDeletes(spark, eqApplied, posPaths,
-              layout.dataLocation, options,
-              extraAddresses = dvAddrs, extraCount = dvCount,
-              relocatedRoots = layout.relocatedRoots)
-              .drop("__graft_file", "__graft_pos")
-          }
-        }.reduce(_ unionByName _)
-      case Some(files) if layout.hasFills =>
-        // per-file constant fills (v3 initial-defaults / identity
-        // partition values): group files by (fill set, format) — MIXED
-        // parquet+orc layouts ride here too (round 16, the partitioned
-        // Hive-migration append shape); each group reads under the full
-        // schema (absent columns surface as NULL) and the fill
-        // OVERWRITES the column with the constant — sound because a
-        // filled file provably lacks the column, so there are no real
-        // values to clobber. Catalyst folds filters on the lit()
-        // constants, so a partition filter prunes whole groups for free.
-        val groups = files
-          .groupBy(f => (f.fills, f.format)).toSeq
-          .sortBy { case ((fills, fmt), _) =>
-            (fills.map(_._1).mkString(","), fmt) }
-        // read nullable-forced: a REQUIRED column with a default is
-        // physically absent from pre-addition files, and the strict
-        // schema would refuse the scan the fill exists to serve
-        val nullableSchema = graft.sources.FillInjection.deepNullable(
-          org.apache.spark.sql.types.StructType
-            .fromDDL(layout.schemaDdl.getOrElse(throw new IllegalStateException(
-              s"fill layout with no recorded schema at ${layout.dataLocation}"))))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        // uuid + fills (round 19): the files store fixed[16] (binary
-        // to the stock reader) — read the uuid columns as BINARY and
-        // convert to the canonical string ABOVE the group read, before
-        // the fills fold. Round 20: a uuid column may itself BE a fill
-        // column — its files lack it (binary read → NULL, conversion
-        // NULL-preserving) and the fold below overwrites with the
-        // canonical-string fill value, which is already in served form
-        val readSchema =
-          if (layout.uuidColumns.isEmpty) nullableSchema
-          else org.apache.spark.sql.types.StructType(
-            nullableSchema.fields.map(f =>
-              if (layout.uuidColumns.contains(f.name) &&
-                  f.dataType == org.apache.spark.sql.types.StringType)
-                f.copy(dataType = org.apache.spark.sql.types.BinaryType)
-              else f))
-        // NO basePath: a basePath makes Spark infer partition columns
-        // from `col=value` directory names — double-serving the fill
-        // columns and conflicting when snapshots nest at different
-        // depths (imported tree + appended `data/sN/col=v`); the
-        // manifest is the single source of truth here
-        groups.map { case ((fills, fmt), group) =>
-          val paths = group.map(layout.absolutePath)
-          val df0 = fmt match {
-            case "orc" => spark.read.options(options).schema(readSchema)
-              .orc(paths: _*)
-            // avro fills (round 19): the engine's sync-split reader
-            // NULL-fills absent fields; constants overwrite below
-            case "avro" =>
-              val keep = paths.toSet
-              graft.sources.AvroRead.dataFrame(spark, readSchema,
-                layout.absoluteSizes.getOrElse(
-                  throw new IllegalStateException(
-                    s"fill layout has avro files but incomplete sizes " +
-                      s"at ${layout.dataLocation}"))
-                  .filter { case (p, _) => keep(p) },
-                options,
-                layout.absoluteStats.filter { case (p, _) => keep(p) })
-            case _ => spark.read.options(options).schema(readSchema)
-              .parquet(paths: _*)
-          }
-          val converted = layout.uuidColumns.foldLeft(df0)((d, c) =>
-            d.withColumn(c, uuidStringColumn(d.col(c))))
-          fills.foldLeft(converted) { case (d, (c, v)) =>
-            applyFillColumn(d, c, v)
-          }
-        }.reduce(_ unionByName _)
-      case Some(_) if layout.dataFormat == "mixed" =>
-        // mixed parquet/orc/avro (round 15): one reader per format
-        // group over that group's manifest slice, unioned — the same
-        // grouping the DSv2 face plans ([[graft.sources
-        // .GraftMixedFormatTable]])
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          layout.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"mixed-format layout with no recorded schema at ${layout.dataLocation}")))
-        layout.dataFiles.get.groupBy(_.format).toSeq.sortBy(_._1)
-          .map { case (fmt, group) =>
-          val paths = group.map(layout.absolutePath)
-          fmt match {
-            case "avro" =>
-              val keep = paths.toSet
-              graft.sources.AvroRead.dataFrame(spark, schema,
-                layout.absoluteSizes.getOrElse(
-                  throw new IllegalStateException(
-                    s"mixed-format layout has avro files but incomplete " +
-                      s"sizes at ${layout.dataLocation}"))
-                  .filter { case (p, _) => keep(p) },
-                options,
-                layout.absoluteStats.filter { case (p, _) => keep(p) })
-            case fmt2 =>
-              val r0 = spark.read.options(options).schema(schema)
-              val r1 = if (layout.suppressBasePath) r0
-                else r0.option("basePath", layout.dataLocation)
-              if (fmt2 == "orc") r1.orc(paths: _*) else r1.parquet(paths: _*)
-          }
-        }.reduce(_ unionByName _)
-      case Some(_) if layout.dataFormat == "avro" =>
-        // avro has no Spark DataFrameReader face in this environment —
-        // the engine's own reader decodes records task-side
-        // ([[graft.sources.AvroRead]]); the sizes helper enforces the
-        // complete-sizes contract (a -1 size would silently drop rows).
-        // Round 15: this face is the SAME DSv2 scan as the SQL face, so
-        // sync-marker splits and manifest-bounds pruning apply here too.
-        graft.sources.AvroRead.dataFrame(spark,
-          org.apache.spark.sql.types.StructType.fromDDL(
-            layout.schemaDdl.getOrElse(throw new IllegalStateException(
-              s"avro layout with no recorded schema at ${layout.dataLocation}"))),
-          layout.absoluteSizes.getOrElse(
-            throw new IllegalStateException(
-              s"avro layout with incomplete file sizes at ${layout.dataLocation}")),
-          options, layout.absoluteStats)
-      // uuid layouts (round 18): read the fixed[16] columns as BINARY
-      // (the only stock-reader mapping) and serve the canonical string
-      // via codegen'd builtins — hex + one regexp + lower, NULL-
-      // preserving. Delete/rename/fill combos refuse at the layout.
-      case Some(files) if layout.uuidColumns.nonEmpty =>
-        val served = org.apache.spark.sql.types.StructType.fromDDL(
-          layout.schemaDdl.getOrElse(throw new IllegalStateException(
-            s"uuid layout with no recorded schema at ${layout.dataLocation}")))
-        val physical = org.apache.spark.sql.types.StructType(
-          served.fields.map(f =>
-            if (layout.uuidColumns.contains(f.name))
-              f.copy(dataType = org.apache.spark.sql.types.BinaryType)
-            else f))
-        val r = spark.read.options(options).schema(physical)
-        val df0 = load(if (layout.suppressBasePath) r
-          else r.option("basePath", layout.dataLocation),
-          files.map(layout.absolutePath))
-        layout.uuidColumns.foldLeft(df0)((d, c) =>
-          d.withColumn(c, uuidStringColumn(d.col(c))))
-      case Some(files) =>
-        load(if (layout.suppressBasePath) reader
-          else reader.option("basePath", layout.dataLocation),
-          files.map(layout.absolutePath))
+      layout: TableLayout, options: Map[String, String]): DataFrame =
+    if (layout.dataFiles.contains(Nil)) {
+      // a committed empty snapshot: serve the recorded schema, scan nothing
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        layout.schemaDdl.getOrElse(throw new IllegalStateException(
+          s"Empty manifest with no recorded schema at ${layout.dataLocation}")))
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    } else graft.sources.LayoutTables.reader(spark,
+        s"graft-df(${layout.dataLocation})", layout, options) match {
+      case Some(t) => graft.sources.MorTableProvider.loadDataFrame(spark, t)
       case None =>
-        load(reader, Seq(layout.dataLocation))
+        val r0 = spark.read.options(options)
+        val r = layout.schemaDdl.fold(r0)(r0.schema)
+        val (rooted, paths) = layout.absoluteDataFiles match {
+          case Some(files) => (if (layout.suppressBasePath) r
+            else r.option("basePath", layout.dataLocation), files)
+          case None => (r, Seq(layout.dataLocation))
+        }
+        layout.dataFormat match {
+          case "orc" => rooted.orc(paths: _*)
+          case _ => rooted.parquet(paths: _*)
+        }
     }
-  }
 
-  /** Canonical uuid text of a 16-byte fixed value column (8-4-4-4-12
-    * lowercase hex), NULL-preserving — codegen'd builtins only.
-    * Round 20 (advisor): non-16-byte values RAISE instead of slipping
-    * through as undashed hex — the regexp used to no-op silently when
-    * `hex(c)` was not exactly 32 chars, turning a corrupt physical
-    * value into a plausible-looking string. */
-  private[graft] def uuidStringColumn(
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{concat, hex, length, lit, lower, raise_error, regexp_replace, when}
-    when(c.isNull, lit(null).cast(org.apache.spark.sql.types.StringType))
-      .otherwise(when(length(c) === 16,
-        lower(regexp_replace(hex(c),
-          "^(.{8})(.{4})(.{4})(.{4})(.{12})$", "$1-$2-$3-$4-$5")))
-        .otherwise(raise_error(concat(
-          lit("uuid column value is not 16 bytes: 0x"), hex(c)))
-          .cast(org.apache.spark.sql.types.StringType)))
-  }
-
-  /** Inverse of [[uuidStringColumn]] for the WRITE faces of adopted
-    * uuid tables (round 20): the served canonical uuid text → the
+  /** Inverse of the read-side uuid conversion ([[graft.sources
+    * .GraftUuidTable]]) for the WRITE faces of adopted uuid tables
+    * (round 20): the served canonical uuid text → the
     * 16-byte physical form. NULL-preserving; a value that is not a
     * canonical uuid spelling RAISES per row — `unhex` alone would
     * silently null malformed input, losing the row's key. Codegen'd
@@ -2852,19 +2575,6 @@ object CatalogIO {
           .cast(org.apache.spark.sql.types.BinaryType)))
   }
 
-  /** Anti-join `data` against each delete file's key tuples — the
-    * DataFrame face of merge-on-read. The delete file's parquet schema
-    * IS its equality column set; files sharing a column set are unioned
-    * and applied as ONE anti join (null-safe per column, so a deleted
-    * NULL key deletes NULL-keyed rows — the tuples came from
-    * rows/conditions where that is the meaning).
-    *
-    * The broadcast hint is applied only while the tuple count (footer
-    * counts, no data read) stays under `spark.graft.mor.maxDeleteTuples`
-    * — the same threshold that makes the DSv2 scan REFUSE. Past it this
-    * face falls back to a shuffled anti join instead of refusing,
-    * because it is compaction's own read path: the escape hatch the
-    * refusal message points at must itself work at any delete size. */
   /** A file's on-disk format, resolved from its MAGIC bytes (parquet
     * files open with `PAR1`, ORC with `ORC`) and cached JVM-wide: read
     * sites often receive bare paths (task-side partitions, layout path
@@ -2941,7 +2651,19 @@ object CatalogIO {
     }.reduce(_ unionByName _)
   }
 
-  private[graft] def applyEqualityDeletes(spark: SparkSession,
+  /** Anti-join `data` against each delete file's key tuples — the
+    * equality-delete half of the address read ([[scanLayoutAddressed]]).
+    * The delete file's schema IS its equality column set; files sharing
+    * a column set are unioned and applied as ONE anti join (null-safe
+    * per column, so a deleted NULL key deletes NULL-keyed rows — the
+    * tuples came from rows/conditions where that is the meaning).
+    *
+    * The broadcast hint is applied only while the tuple count (footer
+    * counts, no data read) stays under `spark.graft.mor.maxDeleteTuples`
+    * — the threshold past which the DSv2 scan degrades. Past it this
+    * join is shuffled instead, so a positional write works at any
+    * delete size. */
+  private def applyEqualityDeletes(spark: SparkSession,
       data: DataFrame, deletePaths: Seq[String],
       options: Map[String, String]): DataFrame = {
     if (deletePaths.isEmpty) return data
@@ -3071,10 +2793,6 @@ object CatalogIO {
     }.reduce(_ unionByName _)
   }
 
-  /** Segment-relative form of an absolute data-file path column,
-    * matching every absolute spelling the readers can produce for the
-    * segment (qualified, raw, URI). A path matching NO prefix raises at
-    * execution — a silent mismatch here would resurrect deleted rows. */
   /** Every absolute spelling a reader can produce for files under
     * `dataLocation` (qualified, raw, URI), each with a trailing slash —
     * ONE definition of the path-spelling contract, shared by the
@@ -3129,6 +2847,10 @@ object CatalogIO {
     (canon +: variants).distinct
   }
 
+  /** Segment-relative form of an absolute data-file path column,
+    * matching every absolute spelling the readers can produce for the
+    * segment (qualified, raw, URI). A path matching NO prefix raises at
+    * execution — a silent mismatch here would resurrect deleted rows. */
   private[graft] def relativizeFileColumn(
       fileCol: org.apache.spark.sql.Column, dataLocation: String,
       conf: Configuration,
@@ -3159,21 +2881,13 @@ object CatalogIO {
     }
   }
 
-  /** Anti-join `data` (which must carry materialized `__graft_file` /
-    * `__graft_pos` address columns — see [[scanLayoutWithOptions]])
-    * against the positional delete files' (`_file`, `_pos`) addresses.
-    * Address equality runs in segment-RELATIVE path space on both
-    * sides, so absolute-path spelling differences can only fail loudly
-    * (raise_error in [[relativizeFileColumn]]), never resurrect rows.
-    * Broadcast below the shared tuple threshold, shuffled past it —
-    * this is compaction's own read path, so it must work at any size. */
   /** The table's DELETION VECTORS exploded to address rows
     * (`__graft_del_file` segment-relative, `__graft_del_pos`) — the
-    * DataFrame-face form of the v3 bitmaps, for the join-based delete
-    * application (compaction / positional-write reads). Decode runs
-    * DISTRIBUTED: one task per vector (flatMap over the blob spans),
-    * so no bitmap is ever enumerated on the driver. Returns None when
-    * the layout carries no vectors. */
+    * DataFrame form of the v3 bitmaps, for the join-based readers (the
+    * address read, the parquet lineage read, the export's vector
+    * merge). Decode runs DISTRIBUTED: one task per vector (flatMap over
+    * the blob spans), so no bitmap is ever enumerated on the driver.
+    * Returns None when the layout carries no vectors. */
   private[graft] def dvAddressFrame(spark: SparkSession,
       layout: TableLayout, options: Map[String, String],
       onlyTargets: Option[Set[String]] = None): Option[DataFrame] = {
@@ -3221,12 +2935,19 @@ object CatalogIO {
     (dvAddressFrame(spark, layout, options, Some(keep)), count)
   }
 
-  private[graft] def applyPositionalDeletes(spark: SparkSession,
+  /** Anti-join `data` (which must carry materialized `__graft_file` /
+    * `__graft_pos` address columns — see [[scanLayoutAddressed]])
+    * against the positional delete files' (`_file`, `_pos`) addresses
+    * plus any deletion-vector addresses. Address equality runs in
+    * segment-RELATIVE path space on both sides, so absolute-path
+    * spelling differences can only fail loudly (raise_error in
+    * [[relativizeFileColumn]]), never resurrect rows. Broadcast below
+    * the shared tuple threshold, shuffled past it, so the address read
+    * works at any delete size. */
+  private def applyPositionalDeletes(spark: SparkSession,
       data: DataFrame, posPaths: Seq[String], dataLocation: String,
-      options: Map[String, String],
-      extraAddresses: Option[DataFrame] = None,
-      extraCount: Option[Long] = None,
-      relocatedRoots: Seq[String] = Nil): DataFrame = {
+      options: Map[String, String], extraAddresses: Option[DataFrame],
+      extraCount: Option[Long], relocatedRoots: Seq[String]): DataFrame = {
     if (posPaths.isEmpty && extraAddresses.isEmpty) return data
     import org.apache.spark.sql.functions.{broadcast, col}
     val conf = {
@@ -3677,7 +3398,7 @@ object CatalogIO {
     // 20 — judge r19 #2): the join path below captures positions via
     // `_metadata.row_index`, which Spark's file sources expose for
     // parquet ONLY — route through the SAME DSv2 counting-read lineage
-    // scan the SQL face plans (the MorRead bridge pattern), selecting
+    // scan the SQL face plans ([[graft.sources.MorTableProvider]]), selecting
     // the lineage metadata columns. The base table is only the
     // non-lineage fallback; the lineage projection always builds the
     // LineageScan, which dispatches per file format. UUID layouts

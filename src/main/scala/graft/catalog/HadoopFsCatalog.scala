@@ -59,9 +59,6 @@ final class HadoopFsCatalog(val name: String, warehouse: String,
     }.sortBy(_._1)
   }
 
-  private def latestLocalMetadata(tableDir: Path): Option[Path] =
-    localMetadataVersions(tableDir).lastOption.map(_._2)
-
   /** The pointer-less fallback, applicable ONLY to the mid-flip window of
     * a version commit on an already-committed table — which always has
     * ≥ 2 metadata versions (the committed v1 plus the in-flight vN). A

@@ -1521,8 +1521,8 @@ object WriteQueries {
     * through BOTH faces: the DSv2 SQL face ([[graft.sources
     * .GraftMorTable]] over Spark's OrcScan — whole-file counting reads,
     * data filters withheld for counting soundness and re-applied above)
-    * and the library DataFrame face ([[graft.sources.MorRead]] — ORC has
-    * no `_metadata.row_index`, so it shares the SAME DSv2 machinery).
+    * and the library DataFrame face, which plans the SAME DSv2 table
+    * ([[graft.sources.LayoutTables.reader]]).
     * Relationally a per-parity ROW_NUMBER filter plus a NOT IN,
     * replayed once per face. */
   def w21(spark: SparkSession, dir: String): DataFrame =

@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -32,9 +31,8 @@ import graft.catalog.CatalogIO.TableLayout
   * ([[AvroRead.openSlice]]; no spark-avro jar exists here). Files no
   * positional state addresses keep their sync-marker SPLITS (equality
   * probes are per-row, position-free). Both faces plan this scan: the
-  * SQL face routes delete-live avro layouts here from
-  * [[GraftSparkCatalog]], the DataFrame face through
-  * [[AvroMorRead.dataFrame]] (the [[MorTableProvider]] registry), and
+  * SQL face and the DataFrame face route delete-live avro layouts here
+  * through [[LayoutTables.reader]], and
   * a delete-live MIXED layout's avro group rides a group-restricted
   * instance ([[GraftMixedFormatTable]]).
   *
@@ -402,18 +400,4 @@ private final class AvroMorReaderFactory(widened: StructType,
       override def close(): Unit = inner.close()
     }
   }
-}
-
-/** The DataFrame face of a delete-live AVRO layout: the SAME DSv2
-  * merge-on-read scan the SQL face plans, handed to
-  * `spark.read.format(...)` through [[MorTableProvider]]'s one-shot
-  * registry — the [[MorRead.dataFrame]] / [[AvroRead.dataFrame]]
-  * bridge pattern. */
-object AvroMorRead {
-  def dataFrame(spark: SparkSession, layout: TableLayout,
-      options: Map[String, String]): DataFrame =
-    MorTableProvider.loadDataFrame(spark,
-      new GraftAvroMorTable(spark,
-        s"graft-avro-mor-df(${layout.dataFiles.map(_.size).getOrElse(0)} files)",
-        layout, options))
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.types._
@@ -36,7 +36,7 @@ import graft.catalog.CatalogIO.TableLayout
   * the format's own split contract, so a 1 GB avro file fans out
   * across tasks exactly like parquet row groups. Since round 15 the
   * DataFrame face is the SAME DSv2 scan (served through
-  * [[AvroTableProvider]]'s driver-side plan handoff), so both faces
+  * [[MorTableProvider]]'s driver-side plan handoff), so both faces
   * share splits, pruning, and decode. Records decode STRAIGHT to
   * catalyst internal values (UTF8String / days-int / micros-long /
   * unscaled Decimal) — one conversion, no external-row detour. Values
@@ -92,27 +92,16 @@ object AvroRead {
   }
 
   /** The DataFrame face: the SAME DSv2 table as the SQL face, handed to
-    * `spark.read.format(...)` through [[AvroTableProvider]]'s plan
+    * `spark.read.format(...)` through [[MorTableProvider]]'s plan
     * registry — sync-marker splits, manifest-bounds pruning, and column
     * pruning all apply identically on both faces. */
   def dataFrame(spark: SparkSession, schema: StructType,
       files: Seq[(String, Long)], options: Map[String, String],
       statsByPath: Map[String, String] = Map.empty): DataFrame = {
     val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
-    val table = new GraftAvroTable(spark, s"graft-avro-df(${files.size} files)",
-      nullable, files, statsByPath, options)
-    val key = AvroTableProvider.register(table)
-    // a load() failure between register and the provider's one-shot
-    // take() would strand the entry (table + file list + session ref)
-    // in the registry for the life of the driver (advisor r15 #4) —
-    // deregister on the failure path; success consumed the key already
-    try spark.read.format(classOf[AvroTableProvider].getName)
-      .option(AvroTableProvider.PlanKey, key).load()
-    catch {
-      case e: Throwable =>
-        AvroTableProvider.deregister(key)
-        throw e
-    }
+    MorTableProvider.loadDataFrame(spark, new GraftAvroTable(spark,
+      s"graft-avro-df(${files.size} files)", nullable, files, statsByPath,
+      options))
   }
 
   /** Converter for one top-level (or nested) field: resolves the avro
@@ -278,68 +267,6 @@ object AvroRead {
       }
       case _ => refuse()
     }
-  }
-}
-
-/** DSv2 TableProvider that serves a driver-side [[GraftAvroTable]] by
-  * registry key — the bridge that lets the DataFrame face
-  * (`spark.read.format(...)`) reuse the exact DSv2 scan the SQL face
-  * plans (same sync-marker splits, same internal-row decode), with no
-  * layout re-parse and no file list squeezed through string options.
-  * Keys are one-shot: [[AvroRead.dataFrame]] registers, `load()`
-  * consumes (planning is driver-side; executors only ever see the
-  * serialized [[AvroScan]]). */
-final class AvroTableProvider extends TableProvider {
-  import AvroTableProvider._
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    lookup(options).schema()
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    take(new CaseInsensitiveStringMap(properties))
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
-object AvroTableProvider {
-  /** Option key carrying the registry handle. */
-  val PlanKey = "graft.avro.plan"
-
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, GraftAvroTable]()
-
-  private[sources] def register(t: GraftAvroTable): String = {
-    val k = java.util.UUID.randomUUID().toString
-    registry.put(k, t)
-    k
-  }
-
-  /** Failure-path cleanup for [[AvroRead.dataFrame]] (idempotent —
-    * `load()` may already have consumed the key before failing). */
-  private[sources] def deregister(key: String): Unit = registry.remove(key)
-
-  /** Test-only visibility: is the key still registered? */
-  private[sources] def registered(key: String): Boolean =
-    registry.containsKey(key)
-
-  private[sources] def registrySize: Int = registry.size()
-
-  private def lookup(options: CaseInsensitiveStringMap): GraftAvroTable = {
-    val k = options.get(PlanKey)
-    val t = if (k == null) null else registry.get(k)
-    if (t == null) throw new IllegalStateException(
-      "AvroTableProvider is driver-internal: construct reads through " +
-        "graft.sources.AvroRead.dataFrame, not spark.read.format(...)")
-    t
-  }
-
-  /** `getTable` consumes the key (one `load()` per registration) so the
-    * registry never accumulates file lists across a long session. */
-  private def take(options: CaseInsensitiveStringMap): GraftAvroTable = {
-    val t = lookup(options)
-    registry.remove(options.get(PlanKey))
-    t
   }
 }
 

@@ -268,20 +268,6 @@ private final class EpochReaderFactory(inners: Array[PartitionReaderFactory])
   }
 }
 
-/** The DataFrame face of a renamed non-parquet layout (round 16): the
-  * SAME epoch machinery the SQL face plans, handed to `spark.read` via
-  * [[MorTableProvider]]'s one-shot registry. Parquet layouts keep
-  * CatalogIO's per-group `spark.read.parquet` path (equivalent plans);
-  * this route exists for ORC rename epochs, which that path cannot
-  * serve. */
-object EpochRead {
-  def dataFrame(spark: SparkSession,
-      layout: graft.catalog.CatalogIO.TableLayout,
-      options: Map[String, String]): org.apache.spark.sql.DataFrame =
-    MorTableProvider.loadDataFrame(spark, new GraftEpochTable(spark,
-      s"graft-epoch-df(${layout.dataFormat})", layout, options))
-}
-
 /** RENAMES + LIVE DELETES composed (round 20 — judge r19 #6): one
   * merge-on-read table per rename EPOCH, concatenated — epochs below,
   * probes above. Sound because engine tables put renames and deletes
@@ -520,15 +506,4 @@ private final class EpochMorReaderFactory(
     val ep = p.asInstanceOf[EpochMorPartition]
     inners(ep.epoch).supportColumnarReads(ep.inner)
   }
-}
-
-/** The DataFrame face of a renamed delete-live layout (round 20): the
-  * SAME per-epoch MOR composition the SQL face plans, via the one-shot
-  * registry bridge. */
-object EpochMorRead {
-  def dataFrame(spark: SparkSession,
-      layout: graft.catalog.CatalogIO.TableLayout,
-      options: Map[String, String]): org.apache.spark.sql.DataFrame =
-    MorTableProvider.loadDataFrame(spark, new GraftEpochMorTable(spark,
-      s"graft-epoch-mor-df(${layout.dataFormat})", layout, options))
 }

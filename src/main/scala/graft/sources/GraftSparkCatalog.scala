@@ -8,11 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, NamespaceChange, SupportsNamespaces, SupportsRead, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.functions.UnboundFunction
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileTable
-import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -130,104 +126,30 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
       }
     }
     val layout = CatalogIO.readLayout(metaLoc, hadoopConfOverlay)
-    // FileTable merges these options into its Hadoop conf
-    // (newHadoopConfWithOptions), so the overlay reaches the parquet scan.
-    // The metadata-recorded schema (when present) skips parquet-footer
-    // inference — at scale that's a file listing + footer read on every
-    // table resolution the catalog already has the answer to. Manifest
-    // versions hand the scan their exact file list (no directory
-    // listing); basePath anchors partition discovery to the segment tree.
-    val (paths, pathOpts) = tablePaths(layout)
-    lazy val table = baseTableFor(ref.toString, layout, paths, pathOpts)
-    val readTable =
-      // uuid columns (round 18): the string-serving conversion seam.
-      // uuid + FILLS with no deletes (round 19) takes the fill route
-      // below: GraftFillTable wraps each group's builder in the same
-      // uuid seam (per-group pruning stays). uuid + DELETES — with or
-      // without fills, the round-20 TRIPLE — takes this route: the MOR
-      // wrapper plans INSIDE the seam over the physical schema and
-      // injects fill constants below its probes.
-      if (layout.uuidColumns.nonEmpty &&
-          (layout.deleteFiles.nonEmpty || !layout.hasFills))
-        new GraftUuidTable(SparkSession.active, ref.toString, layout,
+    val spark = SparkSession.active
+    // the layout's special reader (MOR / fills / epochs / formats / uuid)
+    // is LayoutTables' one decision, shared with time travel and the
+    // library DataFrame face; only the plain fallback is this face's own
+    val readTable = LayoutTables.reader(spark, ref.toString, layout, hadoopOpts)
+      .getOrElse {
+        val table = LayoutTables.baseTableFor(spark, ref.toString, layout,
           hadoopOpts)
-      else
-      // live delete files take precedence (merge-on-read): scans must
-      // APPLY the delete tuples or deleted rows resurrect. The MOR
-      // wrapper takes precedence over SPJ bucket reporting — correctness
-      // over the shuffle-free join; compaction materializes the deletes
-      // away and restores SPJ (CatalogIO.compactTable). Planning goes
-      // through the manifest index when sizes allow. Round 16: MOR also
-      // serves layouts with per-file constant fills (identity partition
-      // values / initial-defaults) — the constants inject below the
-      // delete probes, so this branch must come before the fill branch.
-      if (layout.deleteFiles.nonEmpty)
-        // MIXED delete-live layouts (round 18 — the one-commit Flink
-        // upsert): the composite wraps each format group in its own
-        // MOR table; homogeneous AVRO rides its own counting-read scan
-        // (round 19); parquet/orc keep the direct wrap
-        // renames + live deletes (round 20): one MOR wrapper per rename
-        // epoch — probes translate delete keys to the epoch's physical
-        // names, rows pass through position-identical. Checked FIRST:
-        // the plain mixed/avro MOR routes would mis-serve names (late
-        // round 20: the epoch composition spans every format, mixed
-        // included — a per-epoch mixed composite with the key map
-        // threaded into each group's MOR)
-        (if (layout.renameOps.nonEmpty)
-          new GraftEpochMorTable(SparkSession.active, ref.toString,
-            layout, hadoopOpts)
-        else if (layout.dataFormat == "mixed")
-          new GraftMixedFormatTable(SparkSession.active, ref.toString,
-            layout, hadoopOpts)
-        else if (layout.dataFormat == "avro")
-          new GraftAvroMorTable(SparkSession.active, ref.toString,
-            layout, hadoopOpts)
-        else
-          new GraftMorTable(manifestPlanned(table, layout), layout,
-            hadoopOpts))
-      else
-      // per-file constant fills (round 16): a MIXED parquet+orc layout
-      // with fills — the partitioned Hive-migration append shape —
-      // routes through the fill table, which groups by (fill set,
-      // format) and injects the constants per group. Layout invariants
-      // guarantee fills never coexist with avro/renames, so the
-      // branches below never see a fill-bearing layout.
-      if (layout.hasFills)
-        new GraftFillTable(SparkSession.active, ref.toString, layout, hadoopOpts)
-      else
-      // un-materialized column renames: per-epoch scans serve old files
-      // under their physical names (EpochScan.scala) — a plain scan
-      // would read renamed columns of pre-rename files as NULL. Checked
-      // BEFORE the format routes (round 20: avro and mixed epochs ride
-      // the per-epoch format dispatch)
-      if (layout.renameOps.nonEmpty &&
-          (paths.nonEmpty || layout.dataFormat == "avro" ||
-            layout.dataFormat == "mixed"))
-        new GraftEpochTable(SparkSession.active, ref.toString, layout, hadoopOpts)
-      else
-      // MIXED parquet/orc/avro data files (round 15): one stock reader
-      // stack per format group, concatenated in one DSv2 scan
-      if (layout.dataFormat == "mixed")
-        new GraftMixedFormatTable(SparkSession.active, ref.toString, layout,
-          hadoopOpts)
-      // avro data files (Iceberg-converted layouts): the engine's own
-      // sync-split avro source — Spark ships no avro DataSource here
-      else if (layout.dataFormat == "avro")
-        new GraftAvroTable(SparkSession.active, ref.toString, layout, hadoopOpts)
-      else layout.numBuckets match {
-        // a recorded bucket layout becomes a DSv2 bucket transform +
-        // key-grouped scans → storage-partitioned joins with no shuffle
-        // (BucketedScan.scala). Directory-partitioned bucketed layouts keep
-        // the plain scan: their file groups mix partition dirs and bucket
-        // ids, and only flat bucketed tables report a sound single-key
-        // KeyGroupedPartitioning. BucketedScan applies the same
-        // stats-based file skipping via statsMapOf; the one face it
-        // skips is manifest-answered aggregates (LocalScan), which only
-        // the plain StatsPrunedTable wrapper serves.
-        case Some(n) if layout.partitionColumns.isEmpty =>
-          new GraftBucketedTable(manifestPlanned(table, layout), n,
-            layout.bucketColumns, statsMapOf(layout).getOrElse(Map.empty))
-        case _ => statsPruned(table, layout)
+        layout.numBuckets match {
+          // a recorded bucket layout becomes a DSv2 bucket transform +
+          // key-grouped scans → storage-partitioned joins with no shuffle
+          // (BucketedScan.scala). Directory-partitioned bucketed layouts
+          // keep the plain scan: their file groups mix partition dirs and
+          // bucket ids, and only flat bucketed tables report a sound
+          // single-key KeyGroupedPartitioning. BucketedScan applies the
+          // same stats-based file skipping via statsMapOf; the one face
+          // it skips is manifest-answered aggregates (LocalScan), which
+          // only the plain StatsPrunedTable wrapper serves.
+          case Some(n) if layout.partitionColumns.isEmpty =>
+            new GraftBucketedTable(
+              LayoutTables.manifestPlanned(spark, table, layout, hadoopOpts),
+              n, layout.bucketColumns, statsMapOf(layout).getOrElse(Map.empty))
+          case _ => statsPruned(table, layout)
+        }
       }
     val served = cat match {
       // versioning catalogs also accept SQL writes (INSERT OVERWRITE /
@@ -246,7 +168,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
     // unchanged
     if (layout.entryFields(ManifestFieldTokens.Lineage))
       new GraftLineageTable(served.asInstanceOf[Table with SupportsRead],
-        SparkSession.active, ref.toString, layout, hadoopOpts)
+        spark, ref.toString, layout, hadoopOpts)
     else served
   }
 
@@ -304,70 +226,22 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
         }
       CatalogIO.readLayout(metaLoc, hadoopConfOverlay)
     }
-    val (paths, pathOpts) = tablePaths(vLayout)
     val label = s"$ref@v$version"
-    lazy val table = baseTableFor(label, vLayout, paths, pathOpts)
+    val spark = SparkSession.active
     // a time-traveled version applies ITS OWN seq-gated state (delete
     // set / rename epochs / stats) — every version reads with its own schema
-    val served: Table =
-      // uuid conversion seam (round 18); uuid + fills (no deletes)
-      // rides the fill route below (round 19), which wraps each group
-      // in the seam; uuid + deletes — incl. the round-20 triple with
-      // fills — plans the MOR wrap inside the seam here
-      if (vLayout.uuidColumns.nonEmpty &&
-          (vLayout.deleteFiles.nonEmpty || !vLayout.hasFills))
-        new GraftUuidTable(SparkSession.active, label, vLayout, hadoopOpts)
-      else if (vLayout.deleteFiles.nonEmpty) // MOR first — it injects fills too
-        (if (vLayout.renameOps.nonEmpty) // per-epoch MOR (round 20) —
-          // FIRST: the plain mixed/avro MOR routes would mis-serve names
-          new GraftEpochMorTable(SparkSession.active, label, vLayout,
-            hadoopOpts)
-        else if (vLayout.dataFormat == "mixed") // per-group MOR (round 18)
-          new GraftMixedFormatTable(SparkSession.active, label, vLayout,
-            hadoopOpts)
-        else if (vLayout.dataFormat == "avro") // counting-read avro MOR (round 19)
-          new GraftAvroMorTable(SparkSession.active, label, vLayout,
-            hadoopOpts)
-        else
-          new GraftMorTable(manifestPlanned(table, vLayout), vLayout,
-            hadoopOpts))
-      else if (vLayout.hasFills) // fills may ride a mixed layout
-        new GraftFillTable(SparkSession.active, label, vLayout, hadoopOpts)
-      else if (vLayout.renameOps.nonEmpty &&
-          (paths.nonEmpty || vLayout.dataFormat == "avro" ||
-            vLayout.dataFormat == "mixed"))
-        // before the format routes (round 20: avro and mixed epochs)
-        new GraftEpochTable(SparkSession.active, label, vLayout, hadoopOpts)
-      else if (vLayout.dataFormat == "mixed")
-        new GraftMixedFormatTable(SparkSession.active, label, vLayout,
-          hadoopOpts)
-      else if (vLayout.dataFormat == "avro")
-        new GraftAvroTable(SparkSession.active, label, vLayout, hadoopOpts)
-      else if (vLayout.numBuckets.isEmpty) statsPruned(table, vLayout)
-      else manifestPlanned(table, vLayout) // bucketed history: no SPJ, but zero-listing planning
+    val served = LayoutTables.reader(spark, label, vLayout, hadoopOpts)
+      .getOrElse {
+        val table = LayoutTables.baseTableFor(spark, label, vLayout, hadoopOpts)
+        if (vLayout.numBuckets.isEmpty) statsPruned(table, vLayout)
+        // bucketed history: no SPJ, but zero-listing planning
+        else LayoutTables.manifestPlanned(spark, table, vLayout, hadoopOpts)
+      }
     // v3 lineage columns are snapshot-scoped, so time travel serves them
     // too (each snapshot's layout carries ITS OWN inheritance)
     if (vLayout.entryFields(ManifestFieldTokens.Lineage))
-      new GraftLineageTable(served.asInstanceOf[Table with SupportsRead],
-        SparkSession.active, label, vLayout, hadoopOpts)
+      new GraftLineageTable(served, spark, label, vLayout, hadoopOpts)
     else served
-  }
-
-  /** Spark's stock listing-backed table for `layout`, dispatched on the
-    * layout's data-file format (round 14): parquet for every
-    * engine-written table, ORC for converted Iceberg ORC tables. The
-    * metadata-recorded schema (when present) skips footer inference. */
-  private def baseTableFor(name: String, layout: CatalogIO.TableLayout,
-      paths: Seq[String], pathOpts: Map[String, String]): FileTable = {
-    val opts = new CaseInsensitiveStringMap((hadoopOpts ++ pathOpts).asJava)
-    val schema = layout.schemaDdl
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-    layout.dataFormat match {
-      case "orc" => OrcTable(name, SparkSession.active, opts, paths, schema,
-        fallbackFileFormat = classOf[OrcFileFormat])
-      case _ => ParquetTable(name, SparkSession.active, opts, paths, schema,
-        fallbackFileFormat = classOf[ParquetFileFormat])
-    }
   }
 
   /** The layout's per-file stats keyed by normalized absolute path —
@@ -381,27 +255,13 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
       .filter(m => enabled && m.nonEmpty)
   }
 
-  /** The manifest-planned twin of `table` when the layout carries
-    * complete per-file sizes (round 11 — ZERO driver filesystem calls
-    * on data files at plan time, see [[ManifestFileIndex]];
-    * `spark.graft.manifest.planning=false` is the kill-switch back to
-    * Spark's listing-based `ParquetTable`), else the listing-backed
-    * table unchanged. */
-  private def manifestPlanned(table: FileTable,
-      layout: CatalogIO.TableLayout): Table with org.apache.spark.sql.connector.catalog.SupportsRead = {
-    val enabled = SparkSession.active.conf
-      .getOption("spark.graft.manifest.planning").forall(_ == "true")
-    if (!enabled) table
-    else ManifestFileIndex.tableFor(table.name, SparkSession.active,
-      hadoopOpts, layout).getOrElse(table)
-  }
-
-  /** [[manifestPlanned]] wrapped in manifest-stats file skipping
+  /** [[LayoutTables.manifestPlanned]] wrapped in manifest-stats file skipping
     * ([[StatsPruning]]) when the layout records per-file stats — the
     * plain-scan path's full decoration. */
   private def statsPruned(table: FileTable,
       layout: CatalogIO.TableLayout): Table with org.apache.spark.sql.connector.catalog.SupportsRead = {
-    val planTable = manifestPlanned(table, layout)
+    val planTable = LayoutTables.manifestPlanned(SparkSession.active, table,
+      layout, hadoopOpts)
     statsMapOf(layout) match {
       case Some(m) => new StatsPrunedTable(planTable, m,
         layout.dataFiles.map(_.size).getOrElse(-1), ndvMapOf(layout))
@@ -422,18 +282,6 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
     }.toMap
   }
 
-  /** Scan roots for a layout: manifest versions scan exactly their
-    * recorded files (file-level snapshot isolation — several versions
-    * share one segment tree), pre-manifest versions scan the directory. */
-  private def tablePaths(layout: CatalogIO.TableLayout): (Seq[String], Map[String, String]) =
-    layout.absoluteDataFiles match {
-      case Some(Nil) => (Nil, Map.empty)
-      case Some(files) => (files,
-        if (layout.suppressBasePath) Map.empty[String, String]
-        else Map("basePath" -> layout.dataLocation))
-      case None => (Seq(layout.dataLocation), Map.empty)
-    }
-
   /** LAZY chunk-resolved table (round 14, judge r13 item 4 — Iceberg's
     * manifest-list skipping re-expressed): for a CHUNKED version with
     * per-chunk summaries and the simple scan shape, `loadTable` defers
@@ -442,7 +290,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
     * against the conjuncts and parses ONLY the chunks a predicate can
     * touch — plan-time metadata cost O(matching chunks), not O(table).
     * Surviving entries build the ordinary decorated stack
-    * ([[manifestPlanned]] + [[StatsPrunedTable]]), so file-level
+    * ([[LayoutTables.manifestPlanned]] + [[StatsPrunedTable]]), so file-level
     * pruning, manifest split planning, DPP, and CBO stats are
     * unchanged; `build()` returns that stack's scan directly. A
     * filterless scan (or an aggregate probe) resolves every chunk —
@@ -473,12 +321,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces with Functi
       val (layout, skipped, total) = CatalogIO.readLayoutChunkPruned(
         ci.metadataLocation, hadoopConfOverlay, keep)
       StatsPruning.lastChunkPlanned = Some((skipped, total))
-      val (paths, pathOpts) = tablePaths(layout)
-      val pt = ParquetTable(tableName, SparkSession.active,
-        new CaseInsensitiveStringMap((hadoopOpts ++ pathOpts).asJava), paths,
-        userSpecifiedSchema = Some(tableSchema),
-        fallbackFileFormat = classOf[ParquetFileFormat])
-      statsPruned(pt, layout).newScanBuilder(options)
+      statsPruned(LayoutTables.baseTableFor(SparkSession.active, tableName,
+        layout, hadoopOpts), layout).newScanBuilder(options)
     }
 
     override def newScanBuilder(options: CaseInsensitiveStringMap)

@@ -44,8 +44,10 @@ import graft.catalog.CatalogIO.TableLayout
   *    maintenance contract that compaction materializes deletes away)
   *    are read ONCE on the driver and broadcast; each executor filters
   *    its rows with an O(1) hash-set probe per row — the reader-level
-  *    equivalent of the broadcast anti join the DataFrame face
-  *    ([[graft.catalog.CatalogIO.applyEqualityDeletes]]) plans.
+  *    equivalent of a broadcast anti join. Both read faces plan this
+  *    scan ([[LayoutTables.reader]]); only the positional-write address
+  *    read ([[graft.catalog.CatalogIO.scanLayoutAddressed]]) keeps a
+  *    join, because it needs `_metadata.row_index`.
   *  - column pruning still reaches the parquet scan: the builder unions
   *    the delete-key columns into the pruned schema (they must be read
   *    to probe), reads the extended row, and projects back to exactly
@@ -331,9 +333,9 @@ private[sources] object MorScan {
   /** DEGRADE path for over-threshold equality deletes (round 13, judge
     * r12 item 5 — the scan used to REFUSE): convert the equality
     * deletes into POSITIONAL addresses with a genuine SHUFFLED join at
-    * plan time — the same distributed shape as the DataFrame face's
-    * anti-join escape hatch ([[graft.catalog.CatalogIO
-    * .applyEqualityDeletes]] past the threshold) — and spill the
+    * plan time — the same distributed shape as the address read's
+    * shuffled anti join past the threshold ([[graft.catalog.CatalogIO
+    * .applyEqualityDeletes]]) — and spill the
     * matched `(_file, _pos)` addresses as parquet, which the scan then
     * serves through the existing per-task positional machinery
     * ([[readPositionsFor]]). No tuple set is ever materialized on the
@@ -1381,49 +1383,14 @@ private final class MorRowReader(inner: PartitionReader[InternalRow],
   override def close(): Unit = inner.close()
 }
 
-/** The DataFrame face of a delete-live ORC layout (round 16): the SAME
-  * DSv2 merge-on-read machinery the SQL face plans — whole-file counting
-  * reads, broadcast equality probes, per-task positional/DV decode —
-  * handed to `spark.read.format(...)` through [[MorTableProvider]]'s
-  * one-shot registry (the [[AvroRead.dataFrame]] bridge pattern).
-  * Parquet layouts keep CatalogIO's join-based DataFrame path: it
-  * captures row addresses via `_metadata.row_index`, which Spark's file
-  * sources expose for parquet ONLY — this route exists precisely because
-  * ORC has no such column. */
-object MorRead {
-  def dataFrame(spark: SparkSession, layout: TableLayout,
-      options: Map[String, String]): DataFrame = {
-    val files = layout.absoluteDataFiles.getOrElse(
-      throw new IllegalStateException(
-        s"merge-on-read DataFrame read of a manifest-less layout at " +
-          layout.dataLocation))
-    val name = s"graft-mor-df(${layout.dataFormat}, ${files.size} files)"
-    // manifest-planned when sizes are complete (zero listing calls),
-    // else Spark's listing-backed table for the layout's format
-    val base: Table with SupportsRead =
-      ManifestFileIndex.tableFor(name, spark, options, layout).getOrElse {
-        val opts = new CaseInsensitiveStringMap(
-          (if (layout.suppressBasePath) options
-           else options + ("basePath" -> layout.dataLocation)).asJava)
-        val schema = layout.schemaDdl
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
-        layout.dataFormat match {
-          case "orc" => org.apache.spark.sql.execution.datasources.v2.orc
-            .OrcTable(name, spark, opts, files, schema,
-              classOf[org.apache.spark.sql.execution.datasources.orc.OrcFileFormat])
-          case other => throw new IllegalStateException(
-            s"MorRead.dataFrame serves non-parquet counting-read layouts; " +
-              s"got $other for ${layout.dataLocation}")
-        }
-      }
-    MorTableProvider.loadDataFrame(spark,
-      new GraftMorTable(base, layout, options))
-  }
-}
-
-/** DSv2 TableProvider serving a driver-side prepared table (merge-on-
-  * read, epoch, …) by one-shot registry key — see [[MorRead.dataFrame]]
-  * and [[EpochRead.dataFrame]]. */
+/** DSv2 TableProvider serving a driver-side prepared table by one-shot
+  * registry key — the bridge that lets the library DataFrame face
+  * (`spark.read.format(...)`) plan the exact DSv2 table the SQL face
+  * plans ([[LayoutTables.reader]], [[AvroRead.dataFrame]]), with no
+  * layout re-parse and no file list squeezed through string options.
+  * Keys are one-shot: [[MorTableProvider.loadDataFrame]] registers,
+  * `load()` consumes (planning is driver-side; executors only ever see
+  * the serialized scan). */
 final class MorTableProvider
   extends org.apache.spark.sql.connector.catalog.TableProvider {
   import MorTableProvider._
@@ -1455,6 +1422,10 @@ object MorTableProvider {
     * consumed the key before failing). */
   private[sources] def deregister(key: String): Unit = registry.remove(key)
 
+  /** Test-only visibility: is the key still registered? */
+  private[sources] def registered(key: String): Boolean =
+    registry.containsKey(key)
+
   private[sources] def registrySize: Int = registry.size()
 
   /** One `load()` over a driver-side prepared table, registry key
@@ -1478,12 +1449,12 @@ object MorTableProvider {
     val t = if (k == null) null else registry.get(k)
     if (t == null) throw new IllegalStateException(
       "MorTableProvider is driver-internal: construct reads through " +
-        "graft.sources.MorRead.dataFrame / EpochRead.dataFrame, not " +
-        "spark.read.format(...)")
+        "MorTableProvider.loadDataFrame, not spark.read.format(...)")
     t
   }
 
-  /** `getTable` consumes the key (one `load()` per registration). */
+  /** `getTable` consumes the key (one `load()` per registration) so the
+    * registry never accumulates file lists across a long session. */
   private def take(options: CaseInsensitiveStringMap): Table with SupportsRead = {
     val t = lookup(options)
     registry.remove(options.get(PlanKey))

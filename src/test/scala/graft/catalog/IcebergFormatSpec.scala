@@ -253,9 +253,8 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(layout.dataFormat == "orc" && layout.deleteFiles.size == 3)
     val deleted = posDeletedIds ++ eqIds
     val expected = sampleDf.filter(!col("id").isin(deleted.toSeq: _*))
-    // DataFrame face — ORC has no `_metadata.row_index`, so this routes
-    // through the DSv2 counting-read machinery (MorRead), not the
-    // parquet join path
+    // DataFrame face — routes through the same DSv2 counting-read
+    // machinery the SQL face plans
     val df = CatalogIO.scanMetadataLocation(spark, metaLoc)
     assert(df.count() == 300 - deleted.size)
     assert(df.exceptAll(expected).isEmpty && expected.exceptAll(df).isEmpty,
@@ -1858,7 +1857,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(layout.renameOps.nonEmpty, "expected synthesized rename ops")
     assert(layout.dataFileSeqs.exists(_.distinct.size == 2),
       "expected two file epochs")
-    // DataFrame face: the EpochRead bridge routes the avro decoder per
+    // DataFrame face: the shared epoch table routes the avro decoder per
     // epoch — the old file's column serves under the new name (a plain
     // avro read would NULL-fill it)
     val expected = (1L to 80L).map(i => s"$i|${i * 10}").sorted
@@ -2086,7 +2085,7 @@ class IcebergFormatSpec extends AnyFunSuite {
     assert(layout.renameOps.nonEmpty, "expected synthesized rename ops")
     assert(layout.dataFileSeqs.exists(_.distinct.size == 2),
       "expected two file epochs")
-    // DataFrame face: the EpochRead bridge serves the SAME epoch
+    // DataFrame face: the shared epoch table serves the SAME epoch
     // machinery the SQL face plans (values, not just counts)
     val expected = (1L to 80L).map(i => s"$i|${i * 10}").sorted
     val df = CatalogIO.scanMetadataLocation(spark, metaP.toString)

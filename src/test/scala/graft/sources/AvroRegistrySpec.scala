@@ -4,7 +4,7 @@ import graft.TestSpark
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round 16 (advisor r15 #4): the AvroTableProvider one-shot registry
+/** Round 16 (advisor r15 #4): the MorTableProvider one-shot registry
   * must not leak entries — success consumes the key in getTable, and a
   * load() failure between register and consumption deregisters on the
   * failure path (a long session would otherwise accumulate file lists
@@ -24,10 +24,10 @@ class AvroRegistrySpec extends AnyFunSuite {
     val layout = graft.catalog.IcebergFormat.toTableLayout(
       graft.catalog.CatalogIO.readMetadataText(meta, conf), meta, conf)
     val files = layout.absoluteSizes.get
-    val before = AvroTableProvider.registrySize
+    val before = MorTableProvider.registrySize
     val df = AvroRead.dataFrame(spark, schema, files, Map.empty)
     assert(df.count() == 10)
-    assert(AvroTableProvider.registrySize == before,
+    assert(MorTableProvider.registrySize == before,
       "the one-shot key must be consumed by load()")
   }
 
@@ -42,13 +42,13 @@ class AvroRegistrySpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("k", LongType)))
     val t = new GraftAvroTable(spark, "reg-test", schema,
       Seq(("/nonexistent.avro", 1L)), Map.empty, Map.empty)
-    val before = AvroTableProvider.registrySize
-    val key = AvroTableProvider.register(t)
-    assert(AvroTableProvider.registered(key))
-    AvroTableProvider.deregister(key)
-    assert(!AvroTableProvider.registered(key))
-    assert(AvroTableProvider.registrySize == before)
-    AvroTableProvider.deregister(key) // idempotent (load may have consumed)
-    assert(AvroTableProvider.registrySize == before)
+    val before = MorTableProvider.registrySize
+    val key = MorTableProvider.register(t)
+    assert(MorTableProvider.registered(key))
+    MorTableProvider.deregister(key)
+    assert(!MorTableProvider.registered(key))
+    assert(MorTableProvider.registrySize == before)
+    MorTableProvider.deregister(key) // idempotent (load may have consumed)
+    assert(MorTableProvider.registrySize == before)
   }
 }

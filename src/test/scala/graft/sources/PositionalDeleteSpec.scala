@@ -46,6 +46,20 @@ class PositionalDeleteSpec extends AnyFunSuite {
   private def layoutOf(hc: HadoopFsCatalog): CatalogIO.TableLayout =
     CatalogIO.readLayout(hc.loadTableMetadataLocation(TableRef.parse("db.t")))
 
+  /** The library DataFrame plans the SQL face's DSv2 scan: a
+    * `BatchScanExec` and no anti join applying the deletes. */
+  private def assertSharedScan(df: org.apache.spark.sql.DataFrame): Unit = {
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    assert(aqe.collect(plan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.nonEmpty, s"no BatchScanExec in the library plan:\n$plan")
+    assert(aqe.collect(plan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    }.isEmpty, s"the library plan anti-joins:\n$plan")
+  }
+
   test("DELETE WHERE commits one pos-delete file; scans hide exactly the matches") {
     val (cat, hc) = fixture()
     val before = layoutOf(hc)
@@ -99,9 +113,12 @@ class PositionalDeleteSpec extends AnyFunSuite {
       .filterNot(k => k >= 200 && k < 210) :+ 15L).sorted
     assert(ks(cat) == expected)
     // the DataFrame face agrees with SQL
-    val api = CatalogIO.readTable(spark, hc, TableRef.parse("db.t"))
-      .select("k").collect().map(_.getLong(0)).sorted.toSeq
+    val apiDf = CatalogIO.readTable(spark, hc, TableRef.parse("db.t"))
+    val api = apiDf.select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(api == expected)
+    assertSharedScan(apiDf)
+    assert(apiDf.collect().map(_.mkString("|")).sorted.toSeq ==
+      spark.table(s"$cat.db.t").collect().map(_.mkString("|")).sorted.toSeq)
   }
 
   test("a pos delete can address rows already matched by predicate on one file only") {
