@@ -2543,16 +2543,12 @@ object CatalogIO {
         s"graft-df(${layout.dataLocation})", layout, options) match {
       case Some(t) => graft.sources.MorTableProvider.loadDataFrame(spark, t)
       case None =>
-        val r0 = spark.read.options(options)
+        val (paths, pathOpts) = graft.sources.LayoutTables.tablePaths(layout)
+        val r0 = spark.read.options(options ++ pathOpts)
         val r = layout.schemaDdl.fold(r0)(r0.schema)
-        val (rooted, paths) = layout.absoluteDataFiles match {
-          case Some(files) => (if (layout.suppressBasePath) r
-            else r.option("basePath", layout.dataLocation), files)
-          case None => (r, Seq(layout.dataLocation))
-        }
         layout.dataFormat match {
-          case "orc" => rooted.orc(paths: _*)
-          case _ => rooted.parquet(paths: _*)
+          case "orc" => r.orc(paths: _*)
+          case _ => r.parquet(paths: _*)
         }
     }
 

@@ -85,6 +85,26 @@ object DeletionVectors {
 
     def union(a: PositionSet, b: PositionSet): PositionSet =
       if (a.isEmpty) b else if (b.isEmpty) a else new Union(a, b)
+
+    /** Positions as a growable two-level bitset: 1,024 words (65,536
+      * positions) per touched 16-bit prefix. Repeated addresses collapse
+      * on insert, so memory is bounded by the data file's row span (one
+      * bit per row), not by how many addresses name the file — the form
+      * a per-file address read switches to past
+      * `spark.graft.mor.maxDeleteTuples` addresses. */
+    final class Bits extends PositionSet {
+      private val chunks = scala.collection.mutable.LongMap.empty[Array[Long]]
+      def add(pos: Long): Unit = {
+        val words = chunks.getOrElseUpdate(pos >>> 16, new Array[Long](1024))
+        words(((pos >>> 6) & 1023).toInt) |= 1L << (pos & 63)
+      }
+      def isEmpty: Boolean = chunks.isEmpty
+      def contains(pos: Long): Boolean = {
+        val words = chunks.getOrNull(pos >>> 16)
+        words != null &&
+          (words(((pos >>> 6) & 1023).toInt) & (1L << (pos & 63))) != 0
+      }
+    }
   }
 
   // ---- roaring containers (values are the low 16 bits of a position) --
@@ -164,8 +184,8 @@ object DeletionVectors {
       false
     }
     /** Ascending deleted positions — the enumeration face the
-      * DataFrame-side delete application (compaction's read path)
-      * explodes into address rows. */
+      * join-based readers (the positional-write address read, the
+      * lineage read, the export) explode into address rows. */
     def positions: Iterator[Long] =
       prefixes.indices.iterator.flatMap(i =>
         containers(i).values.map(v => (prefixes(i) << 16) | v))

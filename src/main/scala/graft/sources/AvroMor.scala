@@ -167,9 +167,8 @@ private[sources] final case class AvroMorPartition(slice: AvroSlice,
       * untouched. */
     fills: Seq[(String, Any)] = Nil,
     /** The subset of `posDeletePaths` that is eq-overflow DEGRADE
-      * spill (round 20): engine-derived scratch bounded by the file's
-      * own row count — the per-file address gate does not apply, and
-      * the reader pushes a `_file` predicate into these reads. */
+      * spill (round 20): engine-derived scratch; the reader pushes a
+      * `_file` predicate into these reads. */
     spilledPaths: Seq[String] = Nil) extends InputPartition
 
 /** First parameter list is the scan identity (exchange reuse); layout/
@@ -328,13 +327,10 @@ private final class AvroMorReaderFactory(widened: StructType,
       import graft.catalog.DeletionVectors.PositionSet
       val fromFiles = mp.posFile match {
         case Some(rel) if mp.posDeletePaths.nonEmpty =>
-          // spilled (degrade) addresses are engine scratch bounded by
-          // the file's own row count — exempt from the per-file gate,
-          // and `_file`-predicate-pruned inside the read
-          PositionSet.sorted(MorScan.readPositionsFor(rel,
-            mp.posDeletePaths, conf.value,
-            if (mp.spilledPaths.nonEmpty) Long.MaxValue else maxTuples,
-            mp.spilledPaths.toSet))
+          // spilled (degrade) addresses are `_file`-predicate-pruned
+          // inside the read
+          MorScan.readPositionsFor(rel, mp.posDeletePaths, conf.value,
+            maxTuples, mp.spilledPaths.toSet)
         case _ => PositionSet.empty
       }
       val fromDv = mp.dvBlob.fold(PositionSet.empty) {

@@ -98,8 +98,9 @@ object LayoutTables {
     * recorded files (file-level snapshot isolation — several versions
     * share one segment tree) with `basePath` anchoring partition
     * discovery to the segment tree; pre-manifest versions scan the
-    * directory. */
-  private def tablePaths(layout: TableLayout): (Seq[String], Map[String, String]) =
+    * directory. Shared by the DSv2 base table and the library face's
+    * plain V1 read. */
+  private[graft] def tablePaths(layout: TableLayout): (Seq[String], Map[String, String]) =
     layout.absoluteDataFiles match {
       case Some(Nil) => (Nil, Map.empty)
       case Some(files) => (files,

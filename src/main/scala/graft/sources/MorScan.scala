@@ -234,12 +234,10 @@ private[sources] final case class MorFilePartition(group: Int,
     posDeletePaths: Seq[String] = Nil,
     /** The subset of `posDeletePaths` that is DEGRADE-path spill (round
       * 13): spilled addresses are engine-derived scratch produced
-      * precisely because the tuple count exceeded the threshold, and
-      * are bounded by the file's own row count (task-memory-sized by
-      * the file sizing contract) — the per-file address gate does not
-      * apply to them. The reader pushes a `_file == posFile` parquet
-      * predicate into these reads (they are `_file`-partitioned and
-      * `_file`-sorted, so row-group stats prune other files' rows). */
+      * precisely because the tuple count exceeded the threshold. The
+      * reader pushes a `_file == posFile` parquet predicate into these
+      * reads (they are `_file`-partitioned and `_file`-sorted, so
+      * row-group stats prune other files' rows). */
     spilledPaths: Seq[String] = Nil,
     /** The Iceberg v3 DELETION VECTOR addressing this partition's file:
       * (absolute Puffin path, blob offset, blob length). The task seeks
@@ -263,10 +261,11 @@ private[sources] final case class MorFilePartition(group: Int,
 private final case class MorDeleteProbe(ordinals: Array[Int],
     types: Array[DataType], tuples: Set[ArraySeq[Any]])
 
-/** Typed refusal for a merge-on-read table whose live delete tuples
-  * exceed the broadcast-safe threshold (see
-  * `spark.graft.mor.maxDeleteTuples`). A neglected table degrades into
-  * this loud, actionable error instead of a driver OOM. */
+/** Typed refusal for a merge-on-read table whose live equality-delete
+  * tuples exceed the broadcast-safe threshold (see
+  * `spark.graft.mor.maxDeleteTuples`) where no degrade path serves the
+  * layout. Such a table gets this loud, actionable error instead of a
+  * driver OOM. */
 final class MorDeleteOverflowException(msg: String)
   extends IllegalStateException(msg)
 
@@ -683,24 +682,34 @@ private[sources] object MorScan {
     * reads, replacing the old whole-table driver collect): scan this
     * partition's address files through parquet's own record reader (no
     * Spark job from inside a task), keep the positions naming
-    * `relFile`, threshold-guard PER FILE, and hand back a sorted array
-    * for the O(log n) probe. Cost is O(address files targeting this
-    * file), bounded by the recorded `targets` manifest field. */
+    * `relFile`, and hand back a sorted array for the O(log n) probe.
+    * Cost is O(address files targeting this file), bounded by the
+    * recorded `targets` manifest field.
+    *
+    * DEGRADE past `maxTuples` addresses for the file: the addresses
+    * collapse into a [[graft.catalog.DeletionVectors.PositionSet.Bits]]
+    * bitset, whose memory is bounded by the file's row span however
+    * many addresses name it — so a table past the threshold still
+    * reads (and compacts) instead of refusing. */
   def readPositionsFor(relFile: String, deletePaths: Seq[String],
       conf: org.apache.hadoop.conf.Configuration,
-      maxTuples: Long, spilled: Set[String] = Set.empty): Array[Long] = {
+      maxTuples: Long, spilled: Set[String] = Set.empty)
+      : graft.catalog.DeletionVectors.PositionSet = {
+    import graft.catalog.DeletionVectors.PositionSet
     val out = scala.collection.mutable.ArrayBuilder.make[Long]
     var n = 0L
-    def admit(pos: Long): Unit = {
-      out += pos
-      n += 1
-      if (n > maxTuples)
-        throw new MorDeleteOverflowException(
-          s"positional deletes addressing data file $relFile exceed " +
-            s"spark.graft.mor.maxDeleteTuples=$maxTuples per file; " +
-            "compact the table to materialize the deletes, or raise " +
-            "the threshold explicitly")
-    }
+    var bits: PositionSet.Bits = null
+    def admit(pos: Long): Unit =
+      if (bits != null) bits.add(pos)
+      else {
+        out += pos
+        n += 1
+        if (n > maxTuples) {
+          bits = new PositionSet.Bits
+          out.result().foreach(bits.add)
+          out.clear()
+        }
+      }
     val suffix = "/" + relFile
     // ORC address files (a real Iceberg ORC table's write.delete.format
     // — round 16) carry the Iceberg schema (file_path ABSOLUTE, pos);
@@ -777,6 +786,7 @@ private[sources] object MorScan {
         }
       } finally reader.close()
     }
+    if (bits != null) return bits
     val arr = out.result()
     java.util.Arrays.sort(arr)
     // dedupe in place (addresses may repeat across delete files)
@@ -786,7 +796,8 @@ private[sources] object MorScan {
       if (w == 0 || arr(w - 1) != arr(i)) { arr(w) = arr(i); w += 1 }
       i += 1
     }
-    if (w == arr.length) arr else java.util.Arrays.copyOf(arr, w)
+    PositionSet.sorted(
+      if (w == arr.length) arr else java.util.Arrays.copyOf(arr, w))
   }
 }
 
@@ -1089,8 +1100,9 @@ private final class MorScan(private val delegate: FileScan,
     // violation a loud, typed refusal instead of a driver OOM. The
     // pre-check is footer-count cheap (and cached — delete files are
     // immutable). POSITIONAL addresses never visit the driver at all
-    // (round 12): each task reads its own file's address files, with
-    // the same threshold applied PER FILE in the reader.
+    // (round 12): each task reads its own file's address files, and
+    // past the same threshold PER FILE collapses them into a bitset
+    // (MorScan.readPositionsFor).
     val maxTuples = session.conf.getOption("spark.graft.mor.maxDeleteTuples")
       .map(_.toLong).getOrElse(4000000L)
     val footerConf = {
@@ -1174,10 +1186,8 @@ private final class MorReaderFactory(inner: PartitionReaderFactory,
     import graft.catalog.DeletionVectors.PositionSet
     val fromParquet = mp.posFile match {
       case Some(rel) if mp.posDeletePaths.nonEmpty =>
-        PositionSet.sorted(
-          MorScan.readPositionsFor(rel, mp.posDeletePaths, hadoopConf.value,
-            if (mp.spilledPaths.nonEmpty) Long.MaxValue else maxTuples,
-            mp.spilledPaths.toSet))
+        MorScan.readPositionsFor(rel, mp.posDeletePaths, hadoopConf.value,
+          maxTuples, mp.spilledPaths.toSet)
       case _ => PositionSet.empty
     }
     val fromDv = mp.dvBlob.fold(PositionSet.empty) { case (p, off, len) =>

@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.scalatest.Assertions._
 
 /** Shared local session for all specs. */
 object TestSpark {
@@ -16,5 +21,17 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The library DataFrame plans the SQL face's DSv2 scan: a
+    * `BatchScanExec` and no anti join applying the deletes. */
+  def assertSharedScan(df: DataFrame): Unit = {
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    assert(aqe.collect(plan) { case b: BatchScanExec => b }.nonEmpty,
+      s"no BatchScanExec in the library plan:\n$plan")
+    assert(aqe.collect(plan) {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j
+    }.isEmpty, s"the library plan anti-joins:\n$plan")
   }
 }

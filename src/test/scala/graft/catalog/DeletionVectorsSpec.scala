@@ -46,6 +46,18 @@ class DeletionVectorsSpec extends AnyFunSuite {
     bos.toByteArray
   }
 
+  test("the Bits position set holds exactly the added positions, " +
+      "repeats and 16-bit chunk edges included") {
+    val added = Seq(0L, 63L, 64L, 65535L, 65536L, 131071L, 5L << 33, 7L, 7L)
+    val bits = new DeletionVectors.PositionSet.Bits
+    assert(bits.isEmpty)
+    added.foreach(bits.add)
+    assert(!bits.isEmpty)
+    added.foreach(p => assert(bits.contains(p), s"missing $p"))
+    Seq(1L, 62L, 65L, 65534L, 65537L, 131072L, (5L << 33) + 1, 1L << 40)
+      .foreach(p => assert(!bits.contains(p), s"spurious $p"))
+  }
+
   test("portable-64 encoding is byte-identical to the reference " +
     "RoaringBitmap library across container shapes") {
     val rnd = new scala.util.Random(20260815L)

@@ -35,20 +35,6 @@ class MergeOnReadSpec extends AnyFunSuite {
     ks.toDF("k")
   }
 
-  /** The library DataFrame plans the SQL face's DSv2 scan: a
-    * `BatchScanExec` and no anti join applying the deletes. */
-  private def assertSharedScan(df: org.apache.spark.sql.DataFrame): Unit = {
-    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val plan = df.queryExecution.executedPlan
-    assert(aqe.collect(plan) {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.nonEmpty, s"no BatchScanExec in the library plan:\n$plan")
-    assert(aqe.collect(plan) {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
-    }.isEmpty, s"the library plan anti-joins:\n$plan")
-  }
-
   test("MOR delete commits ONE delete file, touches no data file, and every read face applies it") {
     val (cat, hc) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.db")
@@ -68,7 +54,7 @@ class MergeOnReadSpec extends AnyFunSuite {
     // the library face agrees
     val apiDf = CatalogIO.readTable(spark, hc, ref)
     assert(apiDf.collect().map(_.mkString("|")).sorted.toSeq == Seq("1|a", "3|c"))
-    assertSharedScan(apiDf)
+    TestSpark.assertSharedScan(apiDf)
     assert(apiDf.collect().map(_.mkString("|")).sorted.toSeq == rowsOf(s"$cat.db.t"))
     // time travel: the pre-delete version still serves all four rows
     assert(spark.sql(s"SELECT * FROM $cat.db.t VERSION AS OF 2")

@@ -46,20 +46,6 @@ class PositionalDeleteSpec extends AnyFunSuite {
   private def layoutOf(hc: HadoopFsCatalog): CatalogIO.TableLayout =
     CatalogIO.readLayout(hc.loadTableMetadataLocation(TableRef.parse("db.t")))
 
-  /** The library DataFrame plans the SQL face's DSv2 scan: a
-    * `BatchScanExec` and no anti join applying the deletes. */
-  private def assertSharedScan(df: org.apache.spark.sql.DataFrame): Unit = {
-    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val plan = df.queryExecution.executedPlan
-    assert(aqe.collect(plan) {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.nonEmpty, s"no BatchScanExec in the library plan:\n$plan")
-    assert(aqe.collect(plan) {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
-    }.isEmpty, s"the library plan anti-joins:\n$plan")
-  }
-
   test("DELETE WHERE commits one pos-delete file; scans hide exactly the matches") {
     val (cat, hc) = fixture()
     val before = layoutOf(hc)
@@ -116,7 +102,7 @@ class PositionalDeleteSpec extends AnyFunSuite {
     val apiDf = CatalogIO.readTable(spark, hc, TableRef.parse("db.t"))
     val api = apiDf.select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(api == expected)
-    assertSharedScan(apiDf)
+    TestSpark.assertSharedScan(apiDf)
     assert(apiDf.collect().map(_.mkString("|")).sorted.toSeq ==
       spark.table(s"$cat.db.t").collect().map(_.mkString("|")).sorted.toSeq)
   }
@@ -159,6 +145,26 @@ class PositionalDeleteSpec extends AnyFunSuite {
     val after = layoutOf(hc)
     assert(after.deleteFiles.isEmpty, "compaction must clear delete files")
     assert(ks(cat) == expected, "row set unchanged across compaction")
+  }
+
+  test("positional deletes past the per-file threshold degrade: SQL, library " +
+      "and compaction all read the post-delete rows") {
+    val (cat, hc) = fixture()
+    val ref = TableRef.parse("db.t")
+    // 50 addresses into the first file, committed under the default
+    // threshold; the reads below run with a per-file threshold of 10
+    MergeOps.deleteWhereMergeOnRead(spark, hc, ref,
+      col("k") % 2 === 0 && col("k") < 100)
+    val expected = (0L until 300L).filterNot(k => k % 2 == 0 && k < 100)
+    spark.conf.set("spark.graft.mor.maxDeleteTuples", "10")
+    try {
+      assert(ks(cat) == expected)
+      assert(CatalogIO.readTable(spark, hc, ref).select("k").collect()
+        .map(_.getLong(0)).sorted.toSeq == expected)
+      assert(CatalogIO.compactTable(spark, hc, ref).compacted)
+      assert(layoutOf(hc).deleteFiles.isEmpty)
+      assert(ks(cat) == expected, "row set unchanged across compaction")
+    } finally spark.conf.unset("spark.graft.mor.maxDeleteTuples")
   }
 
   test("positional deletes survive later appends and eq deletes (address stability)") {
