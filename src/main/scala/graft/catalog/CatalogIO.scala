@@ -1440,8 +1440,7 @@ object CatalogIO {
     try {
       val count = typed.count()
       if (count == 0) return cat.metadataLocationForVersion(ref, n - 1)
-      val maxTuples = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-        .map(_.toLong).getOrElse(4000000L)
+      val maxTuples = graft.sources.DeleteTuples.threshold(spark)
       if (count > maxTuples)
         throw new IllegalStateException(
           s"positional delete on $ref addresses $count rows, past " +
@@ -2675,8 +2674,7 @@ object CatalogIO {
     val bySchema = deletePaths
       .groupBy(p => footer(p)._1)
       .toSeq.sortBy(_._1.mkString(","))
-    val maxBroadcast = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxBroadcast = graft.sources.DeleteTuples.threshold(spark)
     val tupleCount = deletePaths.distinct.map(p => footer(p)._2).sum
     bySchema.foldLeft(data) { case (acc, (cols, paths)) =>
       val del = readDeleteFiles(spark, options, paths, conf)
@@ -2979,8 +2977,7 @@ object CatalogIO {
         // unknown vector cardinality must only cost performance: treat
         // it as over-threshold (shuffled join), never broadcast blind
         extraAddresses.fold(0L)(_ => extraCount.getOrElse(Long.MaxValue))
-    val maxBroadcast = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxBroadcast = graft.sources.DeleteTuples.threshold(spark)
     val side = if (tupleCount >= 0 && tupleCount <= maxBroadcast)
       broadcast(addr) else addr
     val rel = relativizeFileColumn(data.col("__graft_file"), dataLocation,

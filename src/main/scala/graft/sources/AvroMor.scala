@@ -2,12 +2,10 @@ package graft.sources
 
 import java.util
 
-import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -194,17 +192,8 @@ private[sources] final case class AvroMorScan(tableName: String,
     * ([[MorScan.spillEqualityDeletes]] with the avro counting-read
     * address frame), which the scan serves through the existing
     * per-task positional machinery. Footer-count cheap and cached. */
-  private lazy val eqOverflow: Boolean = {
-    val eqPaths = layout.absoluteEqDeleteFiles.map(_._1).distinct
-    if (eqPaths.isEmpty) false
-    else {
-      val maxTuples = session.conf
-        .getOption("spark.graft.mor.maxDeleteTuples")
-        .map(_.toLong).getOrElse(4000000L)
-      eqPaths.map(p => graft.catalog.CatalogIO.DeleteFileFooters
-        .countOf(p, conf.value)).sum > maxTuples
-    }
-  }
+  private lazy val eqOverflow: Boolean =
+    DeleteTuples.overflows(layout.absoluteEqDeleteFiles.map(_._1), conf.value)
 
   /** (partitions, per-group applicable equality-delete paths) — group
     * order deterministic (sorted by path set). */
@@ -255,9 +244,7 @@ private[sources] final case class AvroMorScan(tableName: String,
   override def planInputPartitions(): Array[InputPartition] = planned._1
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val maxTuples = session.conf
-      .getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    val maxTuples = DeleteTuples.threshold(session)
     // delete-file columns carry CURRENT names; the epoch composition's
     // widened schema carries PHYSICAL ones (round 20)
     def physOf(c: String): String = keyNameMap.getOrElse(c.toLowerCase, c)
@@ -266,41 +253,22 @@ private[sources] final case class AvroMorScan(tableName: String,
         throw new IllegalStateException(
           s"equality-delete column $c missing from widened read schema " +
             widened.fieldNames.mkString("(", ", ", ")")))
-    // driver-side tuple load, threshold-bounded: past the threshold
-    // `planned` has already DEGRADED the equality deletes to spilled
-    // positional addresses (round 20 — the avro counting-read address
-    // frame), so the probe groups here are empty and no tuple ever
-    // visits the driver in that mode
-    val eqPaths = planned._2.flatten.distinct
-    val tuplesByFile: Map[String, (Vector[String], Seq[Seq[Any]])] =
-      eqPaths.map { p =>
-        val raw = graft.catalog.CatalogIO.readDeleteFiles(session,
-          Map.empty, Seq(p), conf.value)
-        val cols = raw.columns.toVector
-        val typed = cols.foldLeft(raw)((d, c) =>
-          d.withColumn(c, d.col(c).cast(keyField(c).dataType)))
-        val convs = cols.map(c =>
-          CatalystTypeConverters.createToCatalystConverter(
-            keyField(c).dataType))
-        val rows = typed.collect().map { r =>
-          cols.indices.map(i => MorScan.normalize(convs(i)(r.get(i))))
-            : Seq[Any]
-        }.toSeq
-        p -> ((cols, rows))
-      }.toMap
+    // driver-side tuple decode ([[DeleteTuples]], no Spark job),
+    // threshold-bounded: past the threshold `planned` has already
+    // DEGRADED the equality deletes to spilled positional addresses
+    // (round 20 — the avro counting-read address frame), so the probe
+    // groups here are empty and no tuple ever visits the driver in that
+    // mode
+    val tuplesByFile: Map[String, DeleteTuples] =
+      planned._2.flatten.distinct.map(p =>
+        p -> DeleteTuples.of(p, c => keyField(c).dataType, conf.value)).toMap
     def ordinalOf(c: String): Int = {
       val i = widened.fields.indexWhere(_.name.equalsIgnoreCase(physOf(c)))
       require(i >= 0, s"delete key column $c missing from widened schema")
       i
     }
-    val probesPerGroup: Array[Array[(Array[Int], Array[DataType], Set[ArraySeq[Any]])]] =
-      planned._2.map { paths =>
-        paths.map(tuplesByFile).groupBy(_._1).map { case (cols, perFile) =>
-          (cols.map(ordinalOf).toArray,
-            cols.map(c => keyField(c).dataType).toArray,
-            perFile.flatMap(_._2).map(t => ArraySeq.from(t)).toSet)
-        }.toArray
-      }
+    val probesPerGroup: Array[Array[MorDeleteProbe]] = planned._2.map(
+      paths => MorDeleteProbe.of(paths.map(tuplesByFile), ordinalOf))
     val bc = session.sparkContext.broadcast(probesPerGroup)
     val outOrdinals = out.fields.map(f => ordinalOf(f.name))
     val identity = outOrdinals.sameElements(widened.fields.indices)
@@ -313,7 +281,7 @@ private[sources] final case class AvroMorScan(tableName: String,
   * record positions on whole-file partitions, probes equality tuples,
   * and projects widened rows back to the served schema. */
 private final class AvroMorReaderFactory(widened: StructType,
-    probes: Broadcast[Array[Array[(Array[Int], Array[DataType], Set[ArraySeq[Any]])]]],
+    probes: Broadcast[Array[Array[MorDeleteProbe]]],
     conf: SerializableConfiguration, maxTuples: Long,
     outOrdinals: Array[Int], identityProjection: Boolean,
     widenedTypes: Array[DataType])
@@ -358,21 +326,6 @@ private final class AvroMorReaderFactory(widened: StructType,
     new PartitionReader[InternalRow] {
       private var rowIndex = -1L
       private var current: InternalRow = _
-      private def deleted(row: InternalRow): Boolean = {
-        if (positions.contains(rowIndex)) return true
-        var k = 0
-        while (k < groupProbes.length) {
-          val (ords, types, tuples) = groupProbes(k)
-          val key = ArraySeq.tabulate(ords.length) { j =>
-            val o = ords(j)
-            if (row.isNullAt(o)) null
-            else MorScan.normalize(row.get(o, types(j)))
-          }
-          if (tuples.contains(key)) return true
-          k += 1
-        }
-        false
-      }
       private def project(row: InternalRow): InternalRow = {
         if (identityProjection) return row
         val vals = new Array[Any](outOrdinals.length)
@@ -388,7 +341,10 @@ private final class AvroMorReaderFactory(widened: StructType,
         while (inner.next()) {
           rowIndex += 1
           val row = inner.get()
-          if (!deleted(row)) { current = project(row); return true }
+          if (!MorDeleteProbe.deleted(groupProbes, positions, rowIndex, row)) {
+            current = project(row)
+            return true
+          }
         }
         false
       }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.catalog.CatalogIO.{DataFile, TableLayout}
+import graft.catalog.CatalogIO.{DataFile, DeleteFile, TableLayout}
 import graft.catalog.LayoutCodec.ManifestFieldTokens
 
 /** SQL-face v3 ROW LINEAGE (round 16 — judge r15 #3): wraps the table
@@ -267,20 +267,15 @@ private final class LineageScan(spark: SparkSession, label: String,
   // BEFORE any read like MorScan), the key columns ride the widened
   // inner read, and the reader drops a row whose key matches a delete
   // whose seq postdates the row's file data seq — survivors keep their
-  // counted positions, exactly the DV rule. The load is CACHED per
-  // (segment, delete-file set) — delete files are immutable, and every
-  // build() (explain + execute each construct a scan) would otherwise
-  // re-run one Spark job per delete file (round-16 review).
-  private val eqDeletes: Seq[LineageEqDelete] =
-    if (layout.eqDeleteFiles.isEmpty) Nil
-    else LineageScan.eqCache.getOrElseUpdate(
-      (layout.dataLocation,
-        layout.eqDeleteFiles.map(d => (d.path, d.seq, d.targets))),
-      loadEqDeletes())
+  // counted positions, exactly the DV rule. The decode is the shared
+  // driver-side one ([[DeleteTuples]]: no Spark job, cached per JVM), so
+  // the scans every build() constructs (explain + execute) re-decode
+  // nothing.
+  private val eqDeletes: Seq[(DeleteFile, DeleteTuples)] =
+    if (layout.eqDeleteFiles.isEmpty) Nil else loadEqDeletes()
 
-  private def loadEqDeletes(): Seq[LineageEqDelete] = {
-    val maxTuples = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+  private def loadEqDeletes(): Seq[(DeleteFile, DeleteTuples)] = {
+    val maxTuples = DeleteTuples.threshold(spark)
     val footerConf = {
       val c = new org.apache.hadoop.conf.Configuration()
       hadoopOpts.foreach { case (k, v) => c.set(k, v) }
@@ -293,38 +288,23 @@ private final class LineageScan(spark: SparkSession, label: String,
     if (totalTuples > maxTuples)
       refuse(s"$totalTuples live equality-delete tuples (over the " +
         s"broadcast-safe $maxTuples)")
-    paths.map { case (del, abs) =>
-      // format-dispatched (round 17): a real Iceberg ORC table's
-      // write.delete.format lands ORC delete files; the parquet-only
-      // read would die on their bytes
-      val raw = graft.catalog.CatalogIO.readDeleteFiles(spark,
-        hadoopOpts, Seq(abs), footerConf)
-      val cols = raw.columns.toVector
-      // uuid key columns resolve to their PHYSICAL binary form: engine
-      // delete files on adopted uuid tables store the 16-byte value
-      // (a foreign fixed16-annotated key fails the load loudly — the
-      // GraftUuidTable contract)
-      val fields = cols.map(c => physicalTable.find(_.name.equalsIgnoreCase(c))
-        .getOrElse(throw new IllegalStateException(
+    // uuid key columns resolve to their PHYSICAL binary form: engine
+    // delete files on adopted uuid tables store the 16-byte value (a
+    // foreign fixed16-annotated key fails the decode loudly — the
+    // GraftUuidTable contract)
+    def keyType(c: String): DataType =
+      physicalTable.find(_.name.equalsIgnoreCase(c)).getOrElse(
+        throw new IllegalStateException(
           s"equality-delete column $c not in table schema " +
-            physicalTable.fieldNames.mkString("(", ", ", ")"))))
-      val typed = cols.zip(fields).foldLeft(raw) { case (d, (c, f)) =>
-        d.withColumn(c, d.col(c).cast(f.dataType))
-      }
-      val convs = fields.map(f => org.apache.spark.sql.catalyst
-        .CatalystTypeConverters.createToCatalystConverter(f.dataType))
-      val tuples = typed.collect().map { r =>
-        scala.collection.immutable.ArraySeq.from(
-          cols.indices.map(i => MorScan.normalize(convs(i)(r.get(i)))))
-      }.toSet
-      LineageEqDelete(del.seq.toLong, cols, fields.map(_.dataType), tuples,
-        if (del.targets.isEmpty) None else Some(del.targets.toSet))
+            physicalTable.fieldNames.mkString("(", ", ", ")"))).dataType
+    paths.map { case (del, abs) =>
+      del -> DeleteTuples.of(abs, keyType, footerConf)
     }
   }
   // the key columns the probes need beyond the projection, appended to
   // the inner read and never served
   private val extraKeyFields: Array[org.apache.spark.sql.types.StructField] =
-    eqDeletes.flatMap(_.cols).distinct
+    eqDeletes.flatMap(_._2.cols).distinct
       .filterNot(c => dataFields.exists(_.name.equalsIgnoreCase(c)))
       .map(c => physicalTable.find(_.name.equalsIgnoreCase(c)).get)
       .toArray
@@ -360,12 +340,13 @@ private final class LineageScan(spark: SparkSession, label: String,
   // per required field: convert the physical 16-byte value to its
   // canonical uuid text at emit (round 20)
   private val uuidOut: Array[Boolean] = required.fields.map(f => uuidCols(f.name))
-  // per delete: (delete seq, key ordinals into the inner row, key types,
-  // tuple set) — resolved once, shipped to every reader
-  private val eqProbes: Array[LineageEqProbe] = eqDeletes.map { d =>
-    LineageEqProbe(d.seq,
-      d.cols.map(c => innerFields.indexWhere(_.name.equalsIgnoreCase(c))).toArray,
-      d.types.toArray, d.tuples, d.targets)
+  // per delete: (delete seq, probe over the inner row, targets) —
+  // resolved once, shipped to every reader
+  private val eqProbes: Array[LineageEqProbe] = eqDeletes.map { case (del, t) =>
+    LineageEqProbe(del.seq.toLong,
+      MorDeleteProbe(t.cols.map(c =>
+        innerFields.indexWhere(_.name.equalsIgnoreCase(c))).toArray, t.types.toArray, t.tuples),
+      if (del.targets.isEmpty) None else Some(del.targets.toSet))
   }.toArray
 
   override def readSchema(): StructType = required
@@ -474,33 +455,15 @@ private final class LineageScan(spark: SparkSession, label: String,
   }
 }
 
-private object LineageScan {
-  /** Loaded eq-delete tuple sets keyed by (segment, delete-file set) —
-    * delete files are immutable, so content-keyed reuse is sound; the
-    * JVM-lifetime footprint is bounded by the broadcast-safe tuple cap
-    * per live layout. */
-  val eqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[(String, Int, Seq[String])]), Seq[LineageEqDelete]]
-}
-
-/** One loaded equality-delete file: its commit seq, key column names,
-  * key types, and normalized catalyst tuple set. */
-private final case class LineageEqDelete(seq: Long, cols: Vector[String],
-    types: Vector[DataType],
-    tuples: Set[scala.collection.immutable.ArraySeq[Any]],
-    /** Partition-scoped deletes (round 17): the exact applicable data
-      * files; None = global (seq-gated). */
-    targets: Option[Set[String]])
-
 /** The reader-side probe: key ordinals resolved into the widened inner
   * row. A GLOBAL probe applies to a file iff the file's data seq
   * predates the delete's (`fileSeq < seq` — a re-inserted key stays
   * visible); a partition-SCOPED probe (round 17) applies iff the file
   * is in its target set (spec id + tuple + seq gate folded in at
   * conversion). */
-private final case class LineageEqProbe(seq: Long, ordinals: Array[Int],
-    types: Array[DataType],
-    tuples: Set[scala.collection.immutable.ArraySeq[Any]],
+private final case class LineageEqProbe(seq: Long, probe: MorDeleteProbe,
+    /** Partition-scoped deletes (round 17): the exact applicable data
+      * files; None = global (seq-gated). */
     targets: Option[Set[String]])
 
 private final class LineageReaderFactory(
@@ -541,7 +504,7 @@ private final class LineageReaderFactory(
     new LineageRowReader(base, lp.firstRowId,
       lp.dataSeq, deleted, fieldPlan, fieldTypes,
       eqProbes.filter(p =>
-        p.targets.fold(lp.dataSeq < p.seq)(_.contains(lp.rel))),
+        p.targets.fold(lp.dataSeq < p.seq)(_.contains(lp.rel))).map(_.probe),
       matRowIdOrd, matSeqOrd, uuidOut)
   }
 
@@ -558,58 +521,41 @@ private final class LineageRowReader(inner: PartitionReader[InternalRow],
     firstRowId: Option[Long], dataSeq: Long,
     deleted: graft.catalog.DeletionVectors.PositionSet,
     fieldPlan: Array[Int], fieldTypes: Array[DataType],
-    probes: Array[LineageEqProbe], matRowIdOrd: Int, matSeqOrd: Int,
+    probes: Array[MorDeleteProbe], matRowIdOrd: Int, matSeqOrd: Int,
     uuidOut: Array[Boolean])
   extends PartitionReader[InternalRow] {
 
   private var pos = -1L
   private var current: InternalRow = _
 
-  private def equalityDeleted(row: InternalRow): Boolean = {
-    var k = 0
-    while (k < probes.length) {
-      val p = probes(k)
-      val key = scala.collection.immutable.ArraySeq.tabulate(p.ordinals.length) { j =>
-        val o = p.ordinals(j)
-        if (row.isNullAt(o)) null
-        else MorScan.normalize(row.get(o, p.types(j)))
-      }
-      if (p.tuples.contains(key)) return true
-      k += 1
-    }
-    false
-  }
-
   override def next(): Boolean = {
     while (inner.next()) {
       pos += 1
-      if (!deleted.contains(pos)) {
-        val row = inner.get()
-        if (probes.isEmpty || !equalityDeleted(row)) {
-          val vals = new Array[Any](fieldPlan.length)
-          var i = 0
-          while (i < fieldPlan.length) {
-            val o = fieldPlan(i)
-            vals(i) =
-              if (o == -1) {
-                // a MATERIALIZED id (compacted file) overrides the
-                // inheritance value; NULL column = ordinary file
-                if (!row.isNullAt(matRowIdOrd)) row.getLong(matRowIdOrd)
-                else firstRowId.map(f => (f + pos): java.lang.Long).orNull
-              }
-              else if (o == -2) {
-                if (!row.isNullAt(matSeqOrd)) row.getLong(matSeqOrd)
-                else dataSeq
-              }
-              else if (row.isNullAt(o)) null
-              // uuid columns: physical 16 bytes → canonical text
-              else if (uuidOut(i)) UuidScan.text(row.getBinary(o))
-              else row.get(o, fieldTypes(o))
-            i += 1
-          }
-          current = new GenericInternalRow(vals)
-          return true
+      val row = inner.get()
+      if (!MorDeleteProbe.deleted(probes, deleted, pos, row)) {
+        val vals = new Array[Any](fieldPlan.length)
+        var i = 0
+        while (i < fieldPlan.length) {
+          val o = fieldPlan(i)
+          vals(i) =
+            if (o == -1) {
+              // a MATERIALIZED id (compacted file) overrides the
+              // inheritance value; NULL column = ordinary file
+              if (!row.isNullAt(matRowIdOrd)) row.getLong(matRowIdOrd)
+              else firstRowId.map(f => (f + pos): java.lang.Long).orNull
+            }
+            else if (o == -2) {
+              if (!row.isNullAt(matSeqOrd)) row.getLong(matSeqOrd)
+              else dataSeq
+            }
+            else if (row.isNullAt(o)) null
+            // uuid columns: physical 16 bytes → canonical text
+            else if (uuidOut(i)) UuidScan.text(row.getBinary(o))
+            else row.get(o, fieldTypes(o))
+          i += 1
         }
+        current = new GenericInternalRow(vals)
+        return true
       }
     }
     false

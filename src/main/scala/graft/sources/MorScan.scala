@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -42,7 +42,8 @@ import graft.catalog.CatalogIO.TableLayout
   *    post-delete appends.
   *  - the delete tuples (key-only, batch-sized, bounded by the
   *    maintenance contract that compaction materializes deletes away)
-  *    are read ONCE on the driver and broadcast; each executor filters
+  *    are decoded on the driver with no Spark job, once per JVM
+  *    ([[DeleteTuples]]), and broadcast; each executor filters
   *    its rows with an O(1) hash-set probe per row — the reader-level
   *    equivalent of a broadcast anti join. Both read faces plan this
   *    scan ([[LayoutTables.reader]]); only the positional-write address
@@ -116,15 +117,9 @@ final class GraftMorTable(delegate: Table with SupportsRead,
   // pushFilters: the degraded read is a counting read, so data filters
   // may not reach parquet.
   private def eqOverflow: Boolean = {
-    val eqPaths = layout.absoluteEqDeleteFiles.map(_._1).distinct
-    if (eqPaths.isEmpty) return false
-    val spark = SparkSession.active
-    val maxTuples = spark.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
     val conf = new org.apache.hadoop.conf.Configuration()
     hadoopOpts.foreach { case (k, v) => conf.set(k, v) }
-    eqPaths.map(p => graft.catalog.CatalogIO.DeleteFileFooters.countOf(p, conf))
-      .sum > maxTuples
+    DeleteTuples.overflows(layout.absoluteEqDeleteFiles.map(_._1), conf)
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -258,8 +253,43 @@ private[sources] final case class MorFilePartition(group: Int,
 /** One delete column-set's probe recipe for one group: the ordinals (in
   * the widened read schema) and types of the key columns, plus the
   * deleted tuple set. Travels to executors inside a broadcast. */
-private final case class MorDeleteProbe(ordinals: Array[Int],
-    types: Array[DataType], tuples: Set[ArraySeq[Any]])
+private[sources] final case class MorDeleteProbe(ordinals: Array[Int],
+    types: Array[DataType], tuples: Set[ArraySeq[Any]]) {
+
+  /** Is this row's key tuple among the deleted ones? Values are read
+    * transiently from the row (set membership hashes by content). */
+  def matches(row: InternalRow): Boolean =
+    tuples.contains(ArraySeq.tabulate(ordinals.length) { j =>
+      val o = ordinals(j)
+      if (row.isNullAt(o)) null else MorScan.normalize(row.get(o, types(j)))
+    })
+}
+
+private[sources] object MorDeleteProbe {
+  /** One probe per key-column set of `files`: files sharing a column
+    * set union their tuples. `ordinalOf` resolves a delete column in the
+    * reader's row. */
+  def of(files: Seq[DeleteTuples], ordinalOf: String => Int): Array[MorDeleteProbe] =
+    files.groupBy(_.cols).toSeq.map { case (cols, same) =>
+      MorDeleteProbe(cols.map(ordinalOf).toArray, same.head.types.toArray,
+        same.map(_.tuples).reduce(_ ++ _))
+    }.toArray
+
+  /** The row test every merge-on-read reader applies: its position
+    * (the row index of a whole-file, in-order read) is deleted, or its
+    * key tuple matches one of the probes. */
+  def deleted(probes: Array[MorDeleteProbe],
+      positions: graft.catalog.DeletionVectors.PositionSet,
+      rowIndex: Long, row: InternalRow): Boolean = {
+    if (positions.contains(rowIndex)) return true
+    var i = 0
+    while (i < probes.length) {
+      if (probes(i).matches(row)) return true
+      i += 1
+    }
+    false
+  }
+}
 
 /** Typed refusal for a merge-on-read table whose live equality-delete
   * tuples exceed the broadcast-safe threshold (see
@@ -1078,9 +1108,9 @@ private final class MorScan(private val delegate: FileScan,
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val session = delegate.sparkSession
-    // read each delete file's tuples once (driver, batch-sized by the
-    // maintenance contract), normalized to catalyst values with the
-    // TABLE's types so executor-side probes compare like with like
+    // each delete file's tuples come from the driver-side, JVM-cached
+    // decoder (no Spark job), cast to the TABLE's types so
+    // executor-side probes compare like with like
     val tableSchema = layout.schemaDdl.map(StructType.fromDDL).getOrElse(
       throw new IllegalStateException(
         s"merge-on-read layout without a recorded schema at ${layout.dataLocation}"))
@@ -1093,18 +1123,12 @@ private final class MorScan(private val delegate: FileScan,
           s"equality-delete column $c not in table schema " +
             tableSchema.fieldNames.mkString("(", ", ", ")")))
     }
-    // hard broadcast-safety gate for the EQUALITY tuples: the per-row
-    // probe design holds ONLY while that set is driver- and
-    // executor-memory-sized. The maintenance contract ("compaction
-    // materializes deletes away") is a convention; this makes its
-    // violation a loud, typed refusal instead of a driver OOM. The
-    // pre-check is footer-count cheap (and cached — delete files are
-    // immutable). POSITIONAL addresses never visit the driver at all
-    // (round 12): each task reads its own file's address files, and
-    // past the same threshold PER FILE collapses them into a bitset
-    // (MorScan.readPositionsFor).
-    val maxTuples = session.conf.getOption("spark.graft.mor.maxDeleteTuples")
-      .map(_.toLong).getOrElse(4000000L)
+    // the EQUALITY tuples reach the driver only while their footer
+    // count is under the threshold (`eqOverflow`); POSITIONAL addresses
+    // never visit the driver at all (round 12): each task reads its own
+    // file's address files, and past the same threshold PER FILE
+    // collapses them into a bitset (MorScan.readPositionsFor).
+    val maxTuples = DeleteTuples.threshold(session)
     val footerConf = {
       val c = new org.apache.hadoop.conf.Configuration()
       hadoopOpts.foreach { case (k, v) => c.set(k, v) }
@@ -1117,21 +1141,9 @@ private final class MorScan(private val delegate: FileScan,
     // the driver in that mode.
     val probePaths =
       if (eqOverflow) Nil else layout.absoluteEqDeleteFiles
-    val tuplesByFile: Map[String, (Vector[String], Vector[Any => Any], Seq[Seq[Any]])] =
-      probePaths.map(_._1).distinct.map { p =>
-        val raw = graft.catalog.CatalogIO.readDeleteFiles(session,
-          hadoopOpts, Seq(p), footerConf)
-        val cols = raw.columns.toVector
-        val typed = cols.foldLeft(raw) { (d, c) =>
-          d.withColumn(c, d.col(c).cast(keyField(c).dataType))
-        }
-        val convs = cols.map(c =>
-          CatalystTypeConverters.createToCatalystConverter(keyField(c).dataType))
-        val rows = typed.collect().map { r =>
-          cols.indices.map(i => MorScan.normalize(convs(i)(r.get(i)))): Seq[Any]
-        }.toSeq
-        p -> ((cols, convs, rows))
-      }.toMap
+    val tuplesByFile: Map[String, DeleteTuples] =
+      probePaths.map(_._1).distinct.map(p =>
+        p -> DeleteTuples.of(p, c => keyField(c).dataType, footerConf)).toMap
     def ordinalOf(c0: String): Int = {
       val c = keyNameMap.getOrElse(c0.toLowerCase, c0)
       val i = readSchemaWide.fields.indexWhere(_.name.equalsIgnoreCase(c))
@@ -1139,14 +1151,8 @@ private final class MorScan(private val delegate: FileScan,
         readSchemaWide.fieldNames.mkString("(", ", ", ")"))
       i
     }
-    val probesPerGroup: Array[Array[MorDeleteProbe]] = planned._2.map { delPaths =>
-      delPaths.map(tuplesByFile).groupBy(_._1).map { case (cols, perFile) =>
-        MorDeleteProbe(
-          cols.map(ordinalOf).toArray,
-          cols.map(c => keyField(c).dataType).toArray,
-          perFile.flatMap(_._3).map(t => ArraySeq.from(t)).toSet)
-      }.toArray
-    }.toArray
+    val probesPerGroup: Array[Array[MorDeleteProbe]] = planned._2.map(
+      delPaths => MorDeleteProbe.of(delPaths.map(tuplesByFile), ordinalOf)).toArray
     val bc = session.sparkContext.broadcast(probesPerGroup)
     val outOrdinals = out.fields.map(f => ordinalOf(f.name))
     val identity = outOrdinals.sameElements(readSchemaWide.fields.indices)
@@ -1247,24 +1253,6 @@ private final class MorColumnarReader(
   private var current: ColumnarBatch = _
   private var fileRowOffset: Long = 0L
 
-  private def deletedAt(batch: ColumnarBatch, i: Int, fileRow: Long): Boolean = {
-    if (positions.contains(fileRow)) return true
-    if (probes.isEmpty) return false
-    val row = batch.getRow(i)
-    var k = 0
-    while (k < probes.length) {
-      val p = probes(k)
-      val key = ArraySeq.tabulate(p.ordinals.length) { j =>
-        val o = p.ordinals(j)
-        if (row.isNullAt(o)) null
-        else MorScan.normalize(row.get(o, p.types(j)))
-      }
-      if (p.tuples.contains(key)) return true
-      k += 1
-    }
-    false
-  }
-
   private def served(batch: ColumnarBatch, mapping: Array[Int],
       rows: Int): ColumnarBatch = {
     if (mapping == null && identityProjection) return batch
@@ -1289,7 +1277,10 @@ private final class MorColumnarReader(
       var kept = 0
       var i = 0
       while (i < n) {
-        if (!deletedAt(batch, i, base + i)) { mapping(kept) = i; kept += 1 }
+        if (!MorDeleteProbe.deleted(probes, positions, base + i, batch.getRow(i))) {
+          mapping(kept) = i
+          kept += 1
+        }
         i += 1
       }
       if (kept == n) { current = served(batch, null, n); return true }
@@ -1361,27 +1352,11 @@ private final class MorRowReader(inner: PartitionReader[InternalRow],
   private var current: InternalRow = _
   private var rowIndex: Long = -1L
 
-  private def deleted(row: InternalRow): Boolean = {
-    if (positions.contains(rowIndex)) return true
-    var i = 0
-    while (i < probes.length) {
-      val p = probes(i)
-      val key = ArraySeq.tabulate(p.ordinals.length) { j =>
-        val o = p.ordinals(j)
-        if (row.isNullAt(o)) null
-        else MorScan.normalize(row.get(o, p.types(j)))
-      }
-      if (p.tuples.contains(key)) return true
-      i += 1
-    }
-    false
-  }
-
   override def next(): Boolean = {
     while (inner.next()) {
       rowIndex += 1
       val row = inner.get()
-      if (!deleted(row)) {
+      if (!MorDeleteProbe.deleted(probes, positions, rowIndex, row)) {
         current = if (identityProjection) row else project(row)
         return true
       }

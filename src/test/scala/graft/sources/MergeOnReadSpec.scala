@@ -66,6 +66,34 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(spark.table(s"$cat.db.t").count() == 2)
   }
 
+  test("a MOR scan's Spark-job count does not grow with its equality-delete files") {
+    val (cat, hc) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.jobs (k BIGINT, v DOUBLE) USING parquet")
+    spark.sql(s"INSERT INTO $cat.db.jobs SELECT id, id * 0.5D FROM range(100)")
+    val ref = TableRef.parse("db.jobs")
+    def scan(): (Int, Long) = {
+      var n = 0L
+      val jobs = TestSpark.jobsDuring {
+        n = spark.sql(s"SELECT count(*) FROM $cat.db.jobs WHERE k >= 10").head.getLong(0)
+      }
+      (jobs, n)
+    }
+    MergeOps.deleteMatchedMergeOnRead(spark, hc, ref, keyDf(11), Seq("k"))
+    val (jobsAt1, rowsAt1) = scan()
+    Seq(12L, 13L, 14L).foreach(k =>
+      MergeOps.deleteMatchedMergeOnRead(spark, hc, ref, keyDf(k), Seq("k")))
+    assert(layoutOf(hc, ref).deleteFiles.size == 4)
+    val (jobsAt4, rowsAt4) = scan()
+    assert((rowsAt1, rowsAt4) == ((89L, 86L)))
+    assert(jobsAt4 == jobsAt1,
+      s"a scan over 4 delete files ran $jobsAt4 Spark jobs, over 1 ran $jobsAt1")
+    val (jobsAgain, rowsAgain) = scan()
+    assert(rowsAgain == 86L)
+    assert(jobsAgain <= jobsAt1,
+      s"the repeated scan ran $jobsAgain Spark jobs, the first $jobsAt1")
+  }
+
   test("MOR scans stay VECTORIZED while deletes are live (columnar selection mapping)") {
     val (cat, hc) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.db")
