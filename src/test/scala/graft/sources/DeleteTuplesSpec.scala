@@ -129,6 +129,25 @@ class DeleteTuplesSpec extends AnyFunSuite {
       Set(7L, 8L, 9L).map(k => ArraySeq[Any](k)))
   }
 
+  test("the cache holds at most spark.graft.mor.maxDeleteTuples tuples, least recently used out first") {
+    import spark.implicits._
+    val a = deleteFile(Seq(1L, 2L).toDF("k"))
+    val b = deleteFile(Seq(3L, 4L).toDF("k"))
+    spark.conf.set(DeleteTuples.ThresholdKey, "3")
+    try {
+      val first = DeleteTuples.of(a, _ => LongType, conf)
+      assert(DeleteTuples.of(a, _ => LongType, conf) eq first)
+      // b's two tuples push the total past 3: a, the least recently used, goes
+      DeleteTuples.of(b, _ => LongType, conf)
+      val again = DeleteTuples.of(a, _ => LongType, conf)
+      assert(again ne first)
+      assert(again.tuples == first.tuples)
+      // a file larger than the bound is decoded but never cached
+      spark.conf.set(DeleteTuples.ThresholdKey, "1")
+      assert(DeleteTuples.of(b, _ => LongType, conf) ne DeleteTuples.of(b, _ => LongType, conf))
+    } finally spark.conf.unset(DeleteTuples.ThresholdKey)
+  }
+
   test("a malformed or negative spark.graft.mor.maxDeleteTuples fails naming the key") {
     val wh = Files.createTempDirectory("del-tuples-wh").toString
     val cat = s"dt${java.util.UUID.randomUUID().toString.take(8).replace("-", "")}"
